@@ -10,7 +10,7 @@ channel.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import astuple, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -33,28 +33,13 @@ class LineageHop:
     lineage_version: int = 1
 
 
-def lineage_row(spark: SparkSession, hop: LineageHop) -> DataFrame:
-    import datetime as _dt
-
-    values = [
-        hop.pipeline_name, hop.pipeline_stage, hop.source_layer, hop.source_dataset,
-        hop.dataset_layer, hop.dataset_name, hop.transformation_name,
-        hop.transformation_type, hop.created_by,
-        _dt.datetime.fromisoformat(hop.created_at), hop.is_active, hop.lineage_version,
-    ]
-    return spark.createDataFrame([values], LINEAGE_SCHEMA)
-
-
 def lineage_table(spark: SparkSession, hops: list[LineageHop]) -> DataFrame:
-    import datetime as _dt
+    """One row per hop, in one partition. The rows go to the JVM as Arrow
+    from pandas, which yields a LocalRelation: no Python worker starts, as
+    it would for ``createDataFrame`` over Python rows. ``created_at`` is
+    read in the session time zone."""
+    import pandas as pd
 
-    rows = [
-        [
-            h.pipeline_name, h.pipeline_stage, h.source_layer, h.source_dataset,
-            h.dataset_layer, h.dataset_name, h.transformation_name,
-            h.transformation_type, h.created_by,
-            _dt.datetime.fromisoformat(h.created_at), h.is_active, h.lineage_version,
-        ]
-        for h in hops
-    ]
-    return spark.createDataFrame(rows, LINEAGE_SCHEMA)
+    rows = pd.DataFrame([astuple(h) for h in hops], columns=LINEAGE_SCHEMA.fieldNames())
+    rows["created_at"] = pd.to_datetime(rows["created_at"])
+    return spark.createDataFrame(rows, LINEAGE_SCHEMA).coalesce(1)

@@ -28,6 +28,21 @@ class StageRun:
     attempts: int
     duration_s: float
     error: str | None = None
+    # Observed row counts, filled only by stages that return a StageOutput
+    # carrying them (validate: raw rows in, validated rows out, so the
+    # quarantine rate is 1 - rows_out / rows_in).
+    rows_in: int | None = None
+    rows_out: int | None = None
+
+
+@dataclass(frozen=True)
+class StageOutput:
+    """What a stage may return instead of a bare result: ``value`` goes to
+    ``ctx[stage]`` as a bare result would, the row counts to its StageRun."""
+
+    value: Any
+    rows_in: int | None = None
+    rows_out: int | None = None
 
 
 @dataclass
@@ -64,9 +79,14 @@ class Pipeline:
             while attempt < max(1, stage.retries):
                 attempt += 1
                 try:
-                    ctx[stage.name] = stage.fn(ctx)
+                    out = stage.fn(ctx)
+                    rows = (None, None)
+                    if isinstance(out, StageOutput):
+                        out, rows = out.value, (out.rows_in, out.rows_out)
+                    ctx[stage.name] = out
                     runs.append(
-                        StageRun(stage.name, "SUCCEEDED", attempt, time.perf_counter() - t0)
+                        StageRun(stage.name, "SUCCEEDED", attempt,
+                                 time.perf_counter() - t0, None, *rows)
                     )
                     err = None
                     break

@@ -19,7 +19,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import Zone, load_table, zone_path
@@ -27,13 +27,19 @@ from nyc_taxi_data_engineering_spark.operators.enrich import DimSpec, enrich_wit
 from nyc_taxi_data_engineering_spark.operators.revenue import daily_vendor_revenue
 from nyc_taxi_data_engineering_spark.operators.validate import (
     add_run_metadata,
-    split_metrics,
+    metrics_row,
+    observe_valid,
     validate_split,
 )
 from nyc_taxi_data_engineering_spark.plans.governance import governance_gate
 from nyc_taxi_data_engineering_spark.plans.lineage import LineageHop, lineage_table
-from nyc_taxi_data_engineering_spark.plans.orchestrator import Pipeline, PipelineHalt
+from nyc_taxi_data_engineering_spark.plans.orchestrator import (
+    Pipeline,
+    PipelineHalt,
+    StageOutput,
+)
 from nyc_taxi_data_engineering_spark.queries.validation import lineitem_checks
+from nyc_taxi_data_engineering_spark.schemas import RUN_METRICS_SCHEMA
 from nyc_taxi_data_engineering_spark.sources import write_json_metrics, write_parquet
 
 
@@ -63,17 +69,23 @@ def build_pipeline(spark: SparkSession, cfg: PipelineConfig) -> Pipeline:
     def stage_validate(ctx: dict[str, Any]):
         raw = load_table(spark, cfg.sf_dir, "lineitem")
         split = validate_split(raw, lineitem_checks())
-        valid = add_run_metadata(split.valid, cfg.run_id, cfg.run_date)
-        write_parquet(valid, zone_path(cfg.out_root, Zone.VALIDATED, "trips"),
-                      partition_by=["run_date"])
+        # The run counts ride the valid write (one scan-filter-sort-write
+        # stage) instead of an aggregate that would scan the input again.
+        observed = Observation()
+        valid = add_run_metadata(observe_valid(split, observed), cfg.run_id, cfg.run_date)
+        out = zone_path(cfg.out_root, Zone.VALIDATED, "trips")
+        write_parquet(valid, out, partition_by=["run_date"])
         write_parquet(split.quarantine, zone_path(cfg.out_root, Zone.QUARANTINE, "trips"))
-        metrics = split_metrics(split.flagged, cfg.run_id, "validate")
-        write_json_metrics(metrics, zone_path(cfg.out_root, Zone.AUDIT, "metrics/validate"))
+        counts = observed.get
+        write_json_metrics(metrics_row(spark, cfg.run_id, "validate", counts),
+                           zone_path(cfg.out_root, Zone.AUDIT, "metrics/validate"))
         _hop("validate", "raw", "lineitem", "validated", "trips", "validate_and_split")
-        return zone_path(cfg.out_root, Zone.VALIDATED, "trips")
+        return StageOutput(out, rows_in=counts["records_read"], rows_out=counts["records_valid"])
 
     def stage_gate(ctx: dict[str, Any]):
-        metrics = spark.read.json(zone_path(cfg.out_root, Zone.AUDIT, "metrics/validate"))
+        metrics = spark.read.schema(RUN_METRICS_SCHEMA).json(
+            zone_path(cfg.out_root, Zone.AUDIT, "metrics/validate")
+        )
         decision = governance_gate(metrics, cfg.quality_threshold).collect()[0]
         if decision["decision"] != "PASS":
             raise PipelineHalt(

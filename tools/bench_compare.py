@@ -81,15 +81,29 @@ def _regime(doc: dict, path: str) -> str:
     return "unknown"
 
 
+def _canary_ratio(kind: str, base: float | None, new: float | None) -> float | None:
+    """max/min of two recorded canaries; None when either is missing. A
+    canary recorded as <= 0 says nothing about the host window, so it is
+    reported rather than skipped silently."""
+    if any(c is not None and c <= 0 for c in (base, new)):
+        print(
+            f"WARNING: {kind} canary invalid/zero — comparability unknown "
+            f"(base {base}, new {new})"
+        )
+        return None
+    if base is None or new is None:
+        return None
+    return max(base, new) / min(base, new)
+
+
 def main() -> int:
     base_doc, new_doc = _load(sys.argv[1]), _load(sys.argv[2])
     base, new = base_doc["queries"], new_doc["queries"]
     cb, cn = base_doc.get("host_canary_s"), new_doc.get("host_canary_s")
-    # `is not None` (ADVICE r12): a recorded-but-zero canary must not
-    # silently skip the window warning.
-    if cb is not None and cn is not None and min(cb, cn) > 0 and max(cb, cn) / min(cb, cn) > 1.3:
+    ratio = _canary_ratio("host-speed", cb, cn)
+    if ratio is not None and ratio > 1.3:
         print(
-            f"WARNING: host-speed canaries differ {max(cb, cn) / min(cb, cn):.2f}x "
+            f"WARNING: host-speed canaries differ {ratio:.2f}x "
             f"(base {cb:.3f}s vs new {cn:.3f}s per 10M-iter loop) — the records "
             "were taken in different host-CPU windows (BASELINE.md documents a "
             "~2x swing); per-query ratios below reflect the host as much as the "
@@ -98,9 +112,10 @@ def main() -> int:
             "(new scaled by canary ratio)."
         )
     mb, mn = base_doc.get("host_canary_mc_s"), new_doc.get("host_canary_mc_s")
-    if mb is not None and mn is not None and min(mb, mn) > 0 and max(mb, mn) / min(mb, mn) > 1.3:
+    ratio = _canary_ratio("multi-core", mb, mn)
+    if ratio is not None and ratio > 1.3:
         print(
-            f"WARNING: MULTI-core canaries differ {max(mb, mn) / min(mb, mn):.2f}x "
+            f"WARNING: MULTI-core canaries differ {ratio:.2f}x "
             f"(base {mb:.3f}s vs new {mn:.3f}s for 8 concurrent 10M-iter loops) — "
             "multi-core throughput swings independently of the single-core canary "
             "on this VM (r12: a 0.37s 'fast' single-core window measured 2-4x slow "
