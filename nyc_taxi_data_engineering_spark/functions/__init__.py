@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 # Sentinel for open-ended SCD2 validity (reference:
@@ -75,7 +75,18 @@ def stable_sum_unscaled_long(col: Column | str, scale: int = 4, precision: int =
     ONE rounding total, so the double is identical at any magnitude.
     Use ONLY for magnitude-bounded columns (quantities, counts, flags);
     price-bearing columns overflow the bound and must stay on
-    stable_sum's decimal transport."""
+    stable_sum's decimal transport.
+
+    Requires ANSI mode (``spark.sql.ansi.enabled=true``, the Spark 4
+    default) on the active session, where a long overflow raises instead
+    of wrapping; otherwise raises ``ValueError`` when the column is
+    built, so a broken bound fails loudly rather than returning a
+    silently wrapped sum."""
+    if SparkSession.active().conf.get("spark.sql.ansi.enabled").lower() != "true":
+        raise ValueError(
+            "stable_sum_unscaled_long needs spark.sql.ansi.enabled=true: "
+            "without ANSI mode a long-sum overflow wraps silently"
+        )
     c = F.col(col) if isinstance(col, str) else col
     unscaled = F.sum((c.cast(f"decimal({precision},{scale})") * (10**scale)).cast("long"))
     return (unscaled.cast("decimal(38,0)") / F.lit(10**scale)).cast("double")

@@ -103,7 +103,7 @@ def prepare_ratings(ratings: DataFrame) -> DataFrame:
     and the serving queries' already-purchased anti-join probes the same
     in-memory table instead of re-running the ratings build.
 
-    ``persist()`` rather than ``pin``/localCheckpoint on purpose: an
+    ``session_cache`` (a persist) rather than ``pin`` on purpose: an
     InMemoryRelation keeps size stats AND outputPartitioning, so the
     planner can broadcast the small side and elide the agg exchange; a
     pinned LogicalRDD has neither (UnknownPartitioning, no stats), which

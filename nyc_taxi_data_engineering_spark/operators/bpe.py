@@ -16,7 +16,7 @@ Beyond-reference extension. Scale design:
   left-to-right pair merging inside whole-stage codegen, no Python.
 - **Per-round top-1 is a TakeOrdered** over the pair hash-agg (local
   partial top-1 per task), not a global sort.
-- **Lineage is truncated each round** (``localCheckpoint``), the same
+- **Lineage is truncated each round** (``operators.pin``), the same
   discipline as the connected-components loop — num_merges rounds of
   narrow transforms otherwise stack into an unexecutable plan.
 
@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.functions import text as T
+from nyc_taxi_data_engineering_spark.operators import pin
 
 BPE_EOW = "</w>"
 
@@ -88,9 +89,9 @@ def train_bpe(words: DataFrame, num_merges: int) -> list[tuple[str, str, int]]:
     """Learn ``num_merges`` BPE merges from a (w, wcnt) word table.
     Returns [(left, right, pair_count), ...] in merge order. Stops
     early when no adjacent pair remains (fully merged vocabulary)."""
-    syms = words.select(
-        "wcnt", F.concat(F.split("w", ""), F.array(F.lit(BPE_EOW))).alias("cs")
-    ).localCheckpoint()
+    syms = pin(
+        words.select("wcnt", F.concat(F.split("w", ""), F.array(F.lit(BPE_EOW))).alias("cs"))
+    )
     merges: list[tuple[str, str, int]] = []
     for _ in range(num_merges):
         top = (
@@ -103,7 +104,7 @@ def train_bpe(words: DataFrame, num_merges: int) -> list[tuple[str, str, int]]:
             break
         l, r, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
         merges.append((l, r, cnt))
-        syms = syms.select("wcnt", _merge_pair(F.col("cs"), l, r).alias("cs")).localCheckpoint()
+        syms = pin(syms.select("wcnt", _merge_pair(F.col("cs"), l, r).alias("cs")))
     return merges
 
 

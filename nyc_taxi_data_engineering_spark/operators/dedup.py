@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.functions import text as T
-from nyc_taxi_data_engineering_spark.operators import session_cache
+from nyc_taxi_data_engineering_spark.operators import pin, session_cache
 
 MINHASH_HASHES = 16
 LSH_BANDS = 4  # 4 bands x 4 rows: P(candidate) = 1-(1-j^4)^4
@@ -103,7 +103,7 @@ def shingle_jaccard_pairs(
     ``xxhash64(shingle)``, an 8-byte long instead of a ~20-char string,
     shrinking shuffle bytes and comparison cost (64-bit collisions are
     negligible at any realistic shingle cardinality)."""
-    sets = _shingle_sets(docs, id_col, text_col, w).cache()
+    sets = session_cache(_shingle_sets(docs, id_col, text_col, w))
     sizes = sets.select(id_col, F.size("shingles").alias("n"))
     inv = sets.select(id_col, F.explode("shingles").alias("s")).select(
         id_col, F.xxhash64("s").alias("s")
@@ -152,7 +152,7 @@ def shingle_containment_pairs(
     union — no second self-join. Emits (inner_id, outer_id,
     common_shingles, containment) rows with containment ≥ threshold;
     a mutual near-dup pair yields both directions."""
-    sets = _shingle_sets(docs, id_col, text_col, w).cache()
+    sets = session_cache(_shingle_sets(docs, id_col, text_col, w))
     sizes = sets.select(id_col, F.size("shingles").alias("n"))
     inv = sets.select(id_col, F.explode("shingles").alias("s")).select(
         id_col, F.xxhash64("s").alias("s")
@@ -610,7 +610,7 @@ def connected_components(
     the alternating-star algorithm (Kiveris et al., CC-MR) achieves,
     at two keyed equi-joins per round. ``max_iter`` stays as the
     safety valve (raises if not converged; 25 rounds covers diameters
-    beyond any real corpus). Each round localCheckpoints the labels:
+    beyond any real corpus). Each round pins the labels (operators.pin):
     without it the iterated join lineage grows quadratically and the
     driver, not the data, becomes the bottleneck.
     """
@@ -638,7 +638,7 @@ def connected_components(
     ids = sym.select(F.col("src").alias("id")).distinct()
     if nodes is not None:
         ids = ids.unionByName(nodes.select(F.col(node_col).alias("id"))).distinct()
-    labels = ids.withColumn("component", F.col("id")).localCheckpoint(eager=True)
+    labels = pin(ids.withColumn("component", F.col("id")))
     for _ in range(max_iter):
         nbr_min = (
             sym.join(labels.withColumnRenamed("id", "src"), "src")
@@ -659,14 +659,12 @@ def connected_components(
         parents = propagated.select(
             F.col("id").alias("component"), F.col("component").alias("_parent")
         )
-        new_labels = (
-            propagated.join(parents, "component", "left")
-            .select(
+        new_labels = pin(
+            propagated.join(parents, "component", "left").select(
                 "id",
                 F.coalesce(F.col("_parent"), F.col("component")).alias("component"),
                 "_old",
             )
-            .localCheckpoint(eager=True)
         )
         # Convergence probe off the just-checkpointed round output —
         # carrying _old through the round replaces a third keyed join
@@ -715,7 +713,7 @@ def prefix_filter_jaccard_pairs(
     IEEE doubles vs DuckDB decimals). The final jaccard filter uses
     the same rounded-value comparison as shingle_jaccard_pairs."""
     threshold = threshold_num / threshold_den
-    sets = _shingle_sets(docs, id_col, text_col, w).cache()
+    sets = session_cache(_shingle_sets(docs, id_col, text_col, w))
     sizes = sets.select(id_col, F.size("shingles").alias("n"))
     inv = sets.select(id_col, F.explode("shingles").alias("tok")).select(
         id_col, F.col("tok"), F.xxhash64("tok").alias("s")

@@ -58,8 +58,9 @@ def prepare_probe_corpus(x: DataFrame) -> DataFrame:
 
     Deliberately recompute-over-cache (optimization r13, measured):
     three persist variants of this corpus were A/B'd at sf0.1 —
-    ``repartition("vec_id").persist()`` (the r12 ALS-ratings lever),
-    plain ``persist()``, and per-round lazy residual caches — and every
+    ``session_cache(corpus.repartition("vec_id"))`` (the r12
+    ALS-ratings lever), a plain ``session_cache``, and per-round lazy
+    residual caches — and every
     one measured 1.1-1.4x SLOWER than re-deriving the projection from
     the columnar scan, because the exploded corpus is a cheap
     scan+posexplode while a cached copy pays materialization plus

@@ -172,7 +172,7 @@ def top2_components(x: DataFrame, iters: int = PCA_ITERS) -> DataFrame:
     power iteration, pc2 by re-iterating on the deflated corpus. The
     deflated corpus is exactly orthogonal to pc1 up to the 12-dp grid,
     so pc1·pc2 ≈ 0 (asserted in tests)."""
-    # localCheckpoint(): cent feeds every round of both chains, v1
+    # pin(): cent feeds every round of both chains, v1
     # feeds the deflation AND the output, cent2 feeds every round of
     # chain 2. Caching alone is not enough — the LOGICAL plan still
     # embeds the full upstream tree once per reference, and the
@@ -183,9 +183,9 @@ def top2_components(x: DataFrame, iters: int = PCA_ITERS) -> DataFrame:
     # executor storage).
     cent, mean = _centered(x)
     dims = mean.select("pos")
-    cent = cent.localCheckpoint()
-    v1 = _power_rounds(cent, iters, dims).localCheckpoint()
-    cent2 = _deflated(cent, v1).localCheckpoint()
+    cent = pin(cent)
+    v1 = pin(_power_rounds(cent, iters, dims))
+    cent2 = pin(_deflated(cent, v1))
     v2 = _power_rounds(cent2, iters, dims)
     p1 = _signed(v1).withColumnRenamed("component", "pc1")
     p2 = _signed(v2).withColumnRenamed("component", "pc2")

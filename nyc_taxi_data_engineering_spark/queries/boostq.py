@@ -47,6 +47,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table
+from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
 ROUNDS = 3
@@ -216,7 +217,7 @@ def _train_df(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         "o_orderkey", "o_totalprice", "o_orderdate", "o_orderpriority"
     )
     base = orders.select(*[F.expr(c) for c in _base_cols()])
-    base = base.cache()  # boosting re-reads the matrix once per round
+    base = session_cache(base)  # boosting re-reads the matrix once per round
     state: DataFrame | None = None
     src = base
     for t in range(1, ROUNDS + 1):

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from nyc_taxi_data_engineering_spark.catalog import load_table_parallel as load_table
 from nyc_taxi_data_engineering_spark.functions import text as T
 from nyc_taxi_data_engineering_spark.operators import dedup as D
+from nyc_taxi_data_engineering_spark.operators import pin
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
 QUALITY_MIN = 0.65
@@ -78,11 +79,10 @@ def q_corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage-4 count) would otherwise each re-run the lang+quality+
     # window pipeline. Survivors are the narrowed set — the cheap
     # thing to persist, exactly what a production funnel stages.
-    d3 = (
+    d3 = pin(
         d2.withColumn("_canon", F.min("doc_id").over(w))
         .filter(F.col("doc_id") == F.col("_canon"))
         .drop("_canon")
-        .localCheckpoint(eager=True)
     )
     edges = D.shingle_jaccard_pairs(d3, threshold=0.8).select("a_id", "b_id")
     comp = D.connected_components(edges, nodes=d3, node_col="doc_id")

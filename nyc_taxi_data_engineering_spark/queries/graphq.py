@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 # fan_out vs 1.3-1.4 s without; at cluster scale fan_out is a no-op for
 # multi-row-group inputs, so this only removes local overhead).
 from nyc_taxi_data_engineering_spark.catalog import load_table
+from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.operators.cooccur import cooccurrence_pairs_sql
 from nyc_taxi_data_engineering_spark.operators.graph import pagerank, pagerank_sql
 from nyc_taxi_data_engineering_spark.queries.registry import query
@@ -238,7 +239,10 @@ def _knn_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase NEIGHBOR graph: pair mining with the degree_cap lever,
     then a per-node top-K window (partitioned by node — never global),
     union-symmetrized and deduped. The bounded-degree similarity-graph
-    input the triangle and community queries share."""
+    input the eight triangle and community queries share: session-cached,
+    so until the caller's ``release_session_caches()`` every later query
+    over the same tier reads the first one's cached edges (the
+    CacheManager matches the identical plan)."""
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -266,59 +270,11 @@ def _knn_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= TRIANGLE_TOPK)
         .select("node", "partner")
     )
-    return topk.select(
-        F.least("node", "partner").alias("a"), F.greatest("node", "partner").alias("b")
-    ).distinct()
-
-
-# One materialized kNN edge list per (session, dataset), shared by the
-# eight graph queries over the same co-purchase graph (triangles, LPA,
-# k-core, link prediction, modularity, conductance, harmonic,
-# assortativity). Each of those pins internally so its OWN loop doesn't
-# replay the build, but without the memo every query still pays the
-# fact-fact join + top-K window once — at sf10 that build dominates the
-# trio the judge flagged (hits/kcore/linkpred). localCheckpoint blocks
-# live on the session's executors, so entries are keyed by applicationId
-# and dropped when the session changes. The key also carries a dataset
-# FINGERPRINT (mtime_ns+size of every parquet under sf_dir — ADVICE r9):
-# if a tool rewrites a tier's files within one session, the stale entry
-# stops matching and is evicted instead of silently serving old edges.
-_KNN_EDGE_MEMO: dict[tuple[str, str], tuple[str, DataFrame]] = {}
-
-
-def _dataset_fingerprint(sf_dir: str) -> str:
-    import os
-
-    parts = []
-    try:
-        for e in sorted(os.scandir(sf_dir), key=lambda e: e.name):
-            if e.name.endswith(".parquet"):
-                st = e.stat()
-                parts.append(f"{e.name}:{st.st_mtime_ns}:{st.st_size}")
-    except FileNotFoundError:
-        pass
-    return ";".join(parts)
-
-
-def _knn_copurchase_edges_pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.abspath(sf_dir))
-    fp = _dataset_fingerprint(sf_dir)
-    hit = _KNN_EDGE_MEMO.get(key)
-    if hit is None or hit[0] != fp:
-        # Drop entries from dead sessions AND any stale-fingerprint
-        # entry for this key; the localCheckpoint blocks are freed by
-        # the ContextCleaner once the DataFrame is unreachable.
-        for stale in [k for k in _KNN_EDGE_MEMO if k[0] != app or k == key]:
-            del _KNN_EDGE_MEMO[stale]
-        from nyc_taxi_data_engineering_spark.operators import pin
-
-        df = pin(_knn_copurchase_edges(spark, sf_dir))
-        _KNN_EDGE_MEMO[key] = (fp, df)
-        return df
-    return hit[1]
+    return session_cache(
+        topk.select(
+            F.least("node", "partner").alias("a"), F.greatest("node", "partner").alias("b")
+        ).distinct()
+    )
 
 
 @query(
@@ -345,7 +301,7 @@ def q_triangle_copurchase_suppliers(spark: SparkSession, sf_dir: str) -> DataFra
     Plan: pair mining (keyed self-join with the degree_cap lever) ->
     per-node top-K window (partitioned by node — never global) ->
     distinct undirected edges -> two keyed equi-joins + hash aggs."""
-    return triangle_counts(_knn_copurchase_edges_pinned(spark, sf_dir))
+    return triangle_counts(_knn_copurchase_edges(spark, sf_dir))
 
 
 from nyc_taxi_data_engineering_spark.operators.graph import bfs_hops, bfs_hops_sql
@@ -435,7 +391,7 @@ def q_lpa_copurchase_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same order as a row_number window. Bounded-degree input (kNN
     sparsification, like the triangle query) keeps each round's vote
     join linear in nodes."""
-    return label_propagation(_knn_copurchase_edges_pinned(spark, sf_dir))
+    return label_propagation(_knn_copurchase_edges(spark, sf_dir))
 
 
 from nyc_taxi_data_engineering_spark.operators.graph import (
@@ -543,7 +499,7 @@ def q_kcore_copurchase_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     each peel is one degree hash agg + two semi joins against the
     shrinking survivor set, which at cluster scale broadcasts."""
     return kcore(
-        _knn_copurchase_edges_pinned(spark, sf_dir), k=KCORE_K, rounds=KCORE_ROUNDS
+        _knn_copurchase_edges(spark, sf_dir), k=KCORE_K, rounds=KCORE_ROUNDS
     )
 
 
@@ -562,7 +518,7 @@ def q_linkpred_copurchase_suppliers(spark: SparkSession, sf_dir: str) -> DataFra
     edges, TakeOrderedAndProject top-k; Jaccard divides two exact
     integers so the doubles match cross-engine."""
     return link_predictions(
-        _knn_copurchase_edges_pinned(spark, sf_dir), topk=LINKPRED_TOPK
+        _knn_copurchase_edges(spark, sf_dir), topk=LINKPRED_TOPK
     )
 
 
@@ -737,7 +693,7 @@ def q_modularity_copurchase_communities(spark: SparkSession, sf_dir: str) -> Dat
     # the kNN edge build feeds m, the degree union (x2), both label
     # joins, AND LPA's own symmetrization — pin it once (measured at
     # sf0.1: 11.8 s -> 6.5 s end-to-end)
-    edges = _knn_copurchase_edges_pinned(spark, sf_dir)
+    edges = _knn_copurchase_edges(spark, sf_dir)
     labels = label_propagation(edges)
     return modularity(edges, labels)
 
@@ -766,7 +722,7 @@ def q_harmonic_centrality_suppliers(spark: SparkSession, sf_dir: str) -> DataFra
     symmetrized edge list, with per-source frontiers bounded by the
     kNN degree cap — sum_h k^h nodes, not V."""
     return harmonic_centrality(
-        _knn_copurchase_edges_pinned(spark, sf_dir), max_hops=HARMONIC_HOPS
+        _knn_copurchase_edges(spark, sf_dir), max_hops=HARMONIC_HOPS
     )
 
 
@@ -796,7 +752,7 @@ def q_conductance_copurchase_communities(spark: SparkSession, sf_dir: str) -> Da
 
     # same multi-consumer shape as the modularity query: pin the edge
     # build once for the cut/volume joins and LPA's rounds
-    edges = _knn_copurchase_edges_pinned(spark, sf_dir)
+    edges = _knn_copurchase_edges(spark, sf_dir)
     labels = label_propagation(edges)
     return conductance(edges, labels)
 
@@ -822,4 +778,4 @@ def q_assortativity_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the edge build feeds the symmetrized list twice and both degree
     # joins — pin like the community-scoring queries
-    return assortativity(_knn_copurchase_edges_pinned(spark, sf_dir))
+    return assortativity(_knn_copurchase_edges(spark, sf_dir))

@@ -9,6 +9,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 
 from nyc_taxi_data_engineering_spark.catalog import load_table
+from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.operators.profiling import profile, sql_profile_oracle
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
@@ -280,10 +281,12 @@ def q_mi_order_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution multiplies the QUANTIZED pmi so both engines sum
     identical terms."""
     orders = load_table(spark, sf_dir, "orders")
-    xy = orders.groupBy(
-        F.col("o_orderpriority").alias("priority"),
-        F.col("o_orderstatus").alias("status"),
-    ).agg(F.count(F.lit(1)).alias("nxy")).cache()
+    xy = session_cache(
+        orders.groupBy(
+            F.col("o_orderpriority").alias("priority"),
+            F.col("o_orderstatus").alias("status"),
+        ).agg(F.count(F.lit(1)).alias("nxy"))
+    )
     mx = xy.groupBy("priority").agg(F.sum("nxy").alias("nx"))
     my = xy.groupBy("status").agg(F.sum("nxy").alias("ny"))
     tot = xy.agg(F.sum("nxy").alias("n_tot"))
@@ -352,10 +355,12 @@ def q_psi_split_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bin"),
         hash_bucket(F.col("o_orderkey"), "psi", 2).alias("arm"),
     )
-    cells = binned.groupBy("bin").agg(
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-    ).cache()
+    cells = session_cache(
+        binned.groupBy("bin").agg(
+            F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
+            F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
+        )
+    )
     tot = cells.agg(F.sum("n_a").alias("ta"), F.sum("n_b").alias("tb"))
     p_a = (F.col("n_a") + 1).cast("double") / (F.col("ta") + _PSI_BINS)
     p_b = (F.col("n_b") + 1).cast("double") / (F.col("tb") + _PSI_BINS)
@@ -406,7 +411,7 @@ def q_key_skew_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. Entropy terms are 6-dp-quantized pre-sum (decimal transport)
     so both engines add identical numbers."""
     li = load_table(spark, sf_dir, "lineitem")
-    per = li.groupBy("l_suppkey").agg(F.count(F.lit(1)).alias("cnt")).cache()
+    per = session_cache(li.groupBy("l_suppkey").agg(F.count(F.lit(1)).alias("cnt")))
     tot = per.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("cnt").alias("n_rows"),

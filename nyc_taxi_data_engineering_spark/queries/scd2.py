@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table
+from nyc_taxi_data_engineering_spark.operators import pin
 from nyc_taxi_data_engineering_spark.operators.scd2 import scd2_apply, scd2_rollback, scd2_verify
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
@@ -143,14 +144,14 @@ def q_scd2_rollback_current(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rollback the changed keys to version 1 (re-inserted as version 3,
     original acctbal restored) and show the current snapshot.
 
-    The merged table is materialized (localCheckpoint) before the
+    The merged table is materialized (operators.pin) before the
     rollback: ``scd2_rollback`` branches over its input ~7 times
     (affected/untouched/expired/re-inserted legs), and without a
     materialization each branch re-executes the whole two-batch merge
     pipeline — measured 12.5 s → 1.5 s at sf0.1. In production the
     rollback input is a stored table, so this checkpoint reproduces
     the real access pattern, not a local-mode hack."""
-    merged = _merged(spark, sf_dir).localCheckpoint(eager=True)
+    merged = pin(_merged(spark, sf_dir))
     changed_keys = merged.filter(F.col("version_no") == 2).select(KEY)
     rolled = scd2_rollback(merged, changed_keys, KEY, to_version=1, effective_ts=T3)
     return rolled.filter(F.col("is_current")).select(

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table_parallel as load_table
 from nyc_taxi_data_engineering_spark.functions import portable_round, portable_round_sql
+from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
 
@@ -559,7 +560,7 @@ def q_semantic_dedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sides of the pairwise join) — cache it once instead of
     # re-deriving norms from the parquet scan per branch; at cluster
     # scale swap for persist(DISK_ONLY), same as the shingle-set cache
-    corpus = _planted_corpus(spark, sf_dir).cache()
+    corpus = session_cache(_planted_corpus(spark, sf_dir))
     cent = corpus.filter(
         F.col("vec_id").between(N_QUERIES, N_QUERIES + k - 1)
     ).select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm"))
@@ -912,10 +913,10 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (cluster_id, dim, centroid, n_members) — k·64 rows."""
     from nyc_taxi_data_engineering_spark.operators.kmeans import lloyd_kmeans
 
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .cache()
+    emb = session_cache(
+        load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        )
     )
     assign, cent_long = lloyd_kmeans(emb, k=8, iters=2)
     counts = assign.groupBy("c_id").agg(F.count(F.lit(1)).alias("n_members"))
@@ -1387,10 +1388,10 @@ def q_kmeans_silhouette_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
     its vector IS its centroid; documented variant semantics.)"""
     from nyc_taxi_data_engineering_spark.operators.kmeans import lloyd_kmeans
 
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .cache()
+    emb = session_cache(
+        load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        )
     )
     assign, cent_long = lloyd_kmeans(emb, k=8, iters=2)
     cent = (

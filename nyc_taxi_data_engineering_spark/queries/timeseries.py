@@ -14,6 +14,7 @@ from nyc_taxi_data_engineering_spark.functions import (
     stable_sum,
     stable_sum_sql,
 )
+from nyc_taxi_data_engineering_spark.operators import pin, session_cache
 from nyc_taxi_data_engineering_spark.operators.timeseries import forward_fill, gap_fill
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
@@ -664,11 +665,13 @@ def q_revenue_seasonal_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep's one real finding). Bound: |dow_avg| < 2^53/1e6 ≈ 9e9,
     holds through ~sf50."""
     orders = load_table(spark, sf_dir, "orders")
-    daily = orders.groupBy(F.col("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-        .cast("decimal(14,2)")
-        .alias("x")
-    ).cache()
+    daily = session_cache(
+        orders.groupBy(F.col("o_orderdate").alias("d")).agg(
+            F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
+            .cast("decimal(14,2)")
+            .alias("x")
+        )
+    )
     glob = daily.agg(F.count("x").alias("n"), F.sum("x").alias("s"))
     dow = daily.groupBy(F.weekday("d").alias("dow")).agg(
         F.count(F.lit(1)).alias("n_days"), F.sum("x").alias("sd")
@@ -846,7 +849,6 @@ FROM nd, np, vs, med, med_i
 def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil–Sen median slope + intercept and the Mann–Kendall S/z
     trend statistics for daily order revenue. One row."""
-    from nyc_taxi_data_engineering_spark.operators import session_cache
 
     orders = load_table(spark, sf_dir, "orders")
     daily = session_cache(
@@ -882,8 +884,6 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row numbering order-dependent but the VALUE at the median
     # position is unique, which is all this extracts.
     from nyc_taxi_data_engineering_spark.operators.distrank import global_row_number
-
-    from nyc_taxi_data_engineering_spark.operators import pin
 
     # pin(): the 1-row median is referenced by the residual chain (which
     # itself ranks -> several plan branches) AND the terminal projection;

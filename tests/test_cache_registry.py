@@ -1,7 +1,9 @@
-"""Session-cache lifecycle (optimization r13, VERDICT r12 task 8):
-operators that persist() reusable layouts register them with
-operators.session_cache so callers can release executor storage at
-query boundaries — the contract bench.py drains between reps."""
+"""Session-cache lifecycle: operators.session_cache is the engine's only
+persist mechanism — every operator and query that keeps a reusable
+intermediate registers it there, so callers release all executor storage
+at query boundaries with release_session_caches() (bench.py and perfbench
+drain it between operations; test_oracle_parity checks that the drain
+leaves the CacheManager empty after every registered query)."""
 
 from __future__ import annotations
 
@@ -38,9 +40,9 @@ def test_release_is_idempotent_and_lifo(spark):
 
 
 def test_operators_register_their_persists(spark):
-    """The three r12 persist sites (ALS ratings, CC edge list, simhash
-    proxy) must flow through the registry so a session can release
-    them (VERDICT r12: they previously leaked for the session's life)."""
+    """Operator persists (here ALS ratings, the CC edge list and the
+    simhash proxy) flow through the registry so a session can release
+    them instead of leaking them for the session's life."""
     from nyc_taxi_data_engineering_spark.operators.als import prepare_ratings
     from nyc_taxi_data_engineering_spark.operators.dedup import (
         connected_components,
@@ -64,3 +66,26 @@ def test_operators_register_their_persists(spark):
     assert len(_SESSION_CACHES) >= 3
     assert release_session_caches() >= 3
     assert not _SESSION_CACHES
+
+
+def test_no_persist_outside_the_registry():
+    """session_cache is the only persist and pin() the only eager lineage
+    cut: no engine module may call .cache(), .persist( or
+    .localCheckpoint( itself, or its storage would escape
+    release_session_caches()."""
+    import pathlib
+    import re
+
+    import nyc_taxi_data_engineering_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    owner = root / "operators" / "__init__.py"
+    call = re.compile(r"\.(cache\(\)|persist\(|localCheckpoint\()")
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted(root.rglob("*.py"))
+        if p != owner
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if call.search(line)
+    ]
+    assert not hits, hits

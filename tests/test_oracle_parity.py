@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from nyc_taxi_data_engineering_spark.operators import release_session_caches
 from nyc_taxi_data_engineering_spark.queries import registry
 from tools.oracle_check import compare
 
@@ -28,6 +29,14 @@ def test_rotation_window_is_explicit():
 def test_oracle_parity(name, spark, sf_dir, duck):
     spec = _REG[name]
     spark_pdf = spec.fn(spark, sf_dir).toPandas()
+    # one persist lifecycle: releasing the session registry at the query
+    # boundary must leave no cached plan behind
+    release_session_caches()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    leaked = not cache_manager.isEmpty()
+    if leaked:
+        spark.catalog.clearCache()  # keep the leak attributed to this query
+    assert not leaked, f"{name}: cached data left after release_session_caches()"
     if spec.oracle is None:
         assert len(spark_pdf) >= 0  # rows-only check: it ran
         return

@@ -162,3 +162,19 @@ def test_stable_sum_unscaled_long_matches_stable_sum(spark):
         .collect()[0]
     )
     assert nul["dec"] is None and nul["lng"] is None
+
+
+def test_stable_sum_unscaled_long_requires_ansi(spark):
+    """Without ANSI mode a long-sum overflow wraps silently, so the
+    unscaled-long transport must refuse to build there."""
+    from nyc_taxi_data_engineering_spark.functions import stable_sum_unscaled_long
+
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(ValueError, match="ansi"):
+            stable_sum_unscaled_long("q")
+    finally:
+        spark.conf.set(key, before)
+    assert stable_sum_unscaled_long("q") is not None

@@ -126,6 +126,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
+    from nyc_taxi_data_engineering_spark.operators import release_session_caches
     from nyc_taxi_data_engineering_spark.queries import registry
     from nyc_taxi_data_engineering_spark.session import get_spark
 
@@ -147,6 +148,8 @@ def main() -> int:
             failed.append(name)
             print(f"FAIL {name}: spark error: {e}")
             continue
+        finally:
+            release_session_caches()  # query boundary: free its caches
         if spec.oracle is None:
             print(f"SKIP {name}: no oracle (rows-only) — spark rows={len(spark_pdf)}")
             continue

@@ -24,6 +24,7 @@ import contextlib
 import io
 import json
 import os
+import re
 import sys
 import time
 import traceback
@@ -33,7 +34,23 @@ sys.path.insert(0, REPO)
 
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
-from tools.profile_bench import plan_summary  # noqa: E402
+PLAN_FEATURES = {
+    "exchanges": re.compile(r"^\s*[+:*-]*\s*\(?\d+\)?\s*Exchange", re.M),
+    "broadcast_exch": re.compile(r"BroadcastExchange", re.M),
+    "smj": re.compile(r"SortMergeJoin", re.M),
+    "bhj": re.compile(r"BroadcastHashJoin", re.M),
+    "shj": re.compile(r"ShuffledHashJoin", re.M),
+    "bnlj": re.compile(r"BroadcastNestedLoopJoin", re.M),
+    "cartesian": re.compile(r"CartesianProduct", re.M),
+    "py_eval": re.compile(r"BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas|FlatMapGroupsIn", re.M),
+    "sorts": re.compile(r"^\s*[+:*-]*\s*\(?\d+\)?\s*Sort\b", re.M),
+    "windows": re.compile(r"\bWindow\b", re.M),
+    "scan_rdd": re.compile(r"Scan ExistingRDD", re.M),
+}
+
+
+def plan_summary(text: str) -> dict[str, int]:
+    return {k: len(rx.findall(text)) for k, rx in PLAN_FEATURES.items()}
 
 
 def main() -> None:
