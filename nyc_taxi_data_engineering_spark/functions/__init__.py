@@ -128,11 +128,6 @@ def exact_dec(col: Column | str, precision: int = 12, scale: int = 2) -> Column:
     return c.cast(f"decimal({precision},{scale})")
 
 
-def exact_dec_sql(expr: str, precision: int = 12, scale: int = 2) -> str:
-    """DuckDB twin of :func:`exact_dec`."""
-    return f"CAST({expr} AS DECIMAL({precision},{scale}))"
-
-
 def dec_sum(col: Column | str) -> Column:
     """Exact SUM of an already-decimal expression, cast to double with NO
     intermediate rescale — safe at any magnitude (the sub-ULP quantization
@@ -221,10 +216,6 @@ def record_hash_md5(cols: Sequence[str], sep: str = "|") -> Column:
     return F.md5(F.concat_ws(sep, *parts))
 
 
-def open_end_ts() -> Column:
-    return F.lit(OPEN_END_TS).cast("timestamp")
-
-
 def normalize_text(col: Column | str) -> Column:
     """MDM canonicalization (reference F8: normalize.py:7-13): lowercase,
     strip non-[a-z0-9 ], collapse whitespace, trim — all native exprs."""
@@ -265,9 +256,3 @@ def pct(numerator: Column, denominator: Column, digits: int = 2) -> Column:
     return F.when(denominator == 0, F.lit(None).cast("double")).otherwise(
         F.round(numerator * 100.0 / denominator, digits)
     )
-
-
-def formatted_id(prefix: str, n: Column, width: int = 5) -> Column:
-    """Formatted surrogate id, e.g. MV-00001 (reference F15:
-    lifecycle_management.py:47-52)."""
-    return F.format_string(f"{prefix}-%0{width}d", n)

@@ -165,11 +165,6 @@ def golden_records(
     )
 
 
-def steward_queue(scored_pairs: DataFrame) -> DataFrame:
-    """Rows routed to human review (reference fuzzy_match.py:109)."""
-    return scored_pairs.filter(F.col("action") == "STEWARD_REVIEW")
-
-
 def mdm_scorecard(records: DataFrame, scored_pairs: DataFrame) -> DataFrame:
     """Governance scorecard (reference A8: fuzzy_match.py:181-194) in
     two small aggregates + a cross join of the 1-row results."""

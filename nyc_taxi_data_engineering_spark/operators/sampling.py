@@ -259,7 +259,7 @@ def temperature_rates(
     to ≤|strata| rows per partition) plus an all-strata window over
     that tiny aggregate — broadcast it back for the filter."""
     cnt = df.groupBy(stratum).agg(F.count(F.lit(1)).alias("n_total"))
-    w = Window.partitionBy()  # global-window-ok: strata grain, bounded by |strata|
+    w = Window.partitionBy()  # strata grain, bounded by |strata|
     share = F.col("n_total") / F.sum("n_total").over(w)
     raw = F.pow(share, F.lit(alpha - 1.0))
     return cnt.select(

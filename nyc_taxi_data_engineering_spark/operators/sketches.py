@@ -84,27 +84,6 @@ def kmv_distinct(df: DataFrame, group: str, value: str, k: int = KMV_K) -> DataF
     )
 
 
-def kmv_distinct_sql(table: str, group: str, value: str, k: int = KMV_K) -> str:
-    """DuckDB twin of :func:`kmv_distinct`."""
-    u = hash_fraction_sql(value)
-    return f"""
-WITH hashed AS (
-    SELECT DISTINCT {group}, {u} AS u FROM {table}
-),
-kept AS (
-    SELECT {group}, u FROM (
-        SELECT {group}, u, row_number() OVER (PARTITION BY {group} ORDER BY u) AS rnk
-        FROM hashed
-    ) WHERE rnk <= {k}
-)
-SELECT {group},
-       COUNT(*) AS n_hashes_kept,
-       round(MAX(u), 9) AS kth_min,
-       round(CASE WHEN COUNT(*) < {k} THEN CAST(COUNT(*) AS DOUBLE)
-                  ELSE ({k} - 1) / MAX(u) END, 3) AS est_distinct
-FROM kept GROUP BY {group}"""
-
-
 def cms_bucket(c: Column, row: int, width: int = CMS_WIDTH) -> Column:
     """Counter column for hash row ``row``: md5(row|value) prefix mod width."""
     h = F.md5(F.concat_ws("|", F.lit(str(row)), c.cast("string")))
@@ -196,7 +175,7 @@ def histogram_quantiles(
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    w = Window.orderBy("bucket")  # global-window-ok: sketch register grain, fixed 2^p buckets
+    w = Window.orderBy("bucket")  # sketch register grain, fixed 2^p buckets
     cum = hist.select(
         "bucket",
         "cnt",

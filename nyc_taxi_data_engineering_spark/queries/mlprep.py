@@ -555,7 +555,7 @@ def q_histogram_auc_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    wb = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)  # global-window-ok: fixed histogram-bin grid
+    wb = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)  # fixed histogram-bin grid
     tp_row = h.agg(F.sum("np").cast("bigint").alias("tp"))
     c = h.select(
         "np",
@@ -697,7 +697,7 @@ def q_auc_bootstrap_ci_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("a")
     )
     r = auc.select(
-        "a", F.row_number().over(Window.orderBy("a", "b")).alias("rn")  # global-window-ok: bootstrap grain, AUC_BOOT_B rows
+        "a", F.row_number().over(Window.orderBy("a", "b")).alias("rn")  # bootstrap grain, AUC_BOOT_B rows
     )
     return r.agg(
         F.lit(AUC_BOOT_B).cast("bigint").alias("n_resamples"),
@@ -776,7 +776,7 @@ def q_gains_curve_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    wcum = Window.orderBy(F.col("decile").desc()).rowsBetween(  # global-window-ok: 10-row decile grid
+    wcum = Window.orderBy(F.col("decile").desc()).rowsBetween(  # 10-row decile grid
         Window.unboundedPreceding, 0
     )
     return (

@@ -256,7 +256,7 @@ def q_kaplan_meier_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("c"), F.sum("event").cast("long").alias("d")
     )
     total = spans.agg(F.count(F.lit(1)).alias("n_total"))
-    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)  # global-window-ok: distinct-duration grain, calendar-bounded
+    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)  # distinct-duration grain, calendar-bounded
     risk = (
         by_t.crossJoin(F.broadcast(total))
         .withColumn(
@@ -265,7 +265,7 @@ def q_kaplan_meier_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter((F.col("d") > 0) & (F.col("d") < F.col("n_at_risk")))
     )
-    w_cum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)  # global-window-ok: distinct-duration grain, calendar-bounded
+    w_cum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)  # distinct-duration grain, calendar-bounded
     factor = F.round(
         F.log(F.lit(1.0) - F.col("d").cast("double") / F.col("n_at_risk")), 6
     ).cast("decimal(18,6)")
@@ -425,7 +425,7 @@ def q_revenue_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg((F.lit(2.0) * stable_sum("o_totalprice")).alias("stat"))
     )
     ranked = stats.withColumn(
-        "rn", F.row_number().over(Window.orderBy("stat", "b"))  # global-window-ok: bootstrap grain, BOOT_B rows
+        "rn", F.row_number().over(Window.orderBy("stat", "b"))  # bootstrap grain, BOOT_B rows
     )
     # Both order statistics from ONE aggregate over the 32-row ranked
     # table — separate lo/hi filter branches would re-execute the whole
@@ -498,7 +498,7 @@ def q_ab_bootstrap_diff_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("diff")
         )
     )
-    ranked = stats.withColumn("rn", F.row_number().over(Window.orderBy("diff", "b")))  # global-window-ok: bootstrap grain, BOOT_B rows
+    ranked = stats.withColumn("rn", F.row_number().over(Window.orderBy("diff", "b")))  # bootstrap grain, BOOT_B rows
     # One aggregate over the 32-row ranked table yields both order
     # statistics AND the sign-stability count — separate filter
     # branches would re-execute the stats subtree (a fact scan each).
@@ -822,7 +822,7 @@ def q_nelson_aalen_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("c"), F.sum("event").cast("long").alias("d")
     )
     total = spans.agg(F.count(F.lit(1)).alias("n_total"))
-    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)  # global-window-ok: distinct-duration grain, calendar-bounded
+    w_prev = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)  # distinct-duration grain, calendar-bounded
     risk = (
         by_t.crossJoin(F.broadcast(total))
         .withColumn(
@@ -831,7 +831,7 @@ def q_nelson_aalen_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("d") > 0)
     )
-    w_cum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)  # global-window-ok: distinct-duration grain, calendar-bounded
+    w_cum = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)  # distinct-duration grain, calendar-bounded
     h_inc = F.round(F.col("d").cast("double") / F.col("n_at_risk"), 6).cast("decimal(18,6)")
     hv_inc = F.round(
         F.col("d").cast("double") / (F.col("n_at_risk").cast("double") * F.col("n_at_risk")), 9
@@ -2130,7 +2130,7 @@ def q_runs_test_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("x")
     )
-    w = Window.orderBy("d")  # global-window-ok: day grain, calendar-bounded
+    w = Window.orderBy("d")  # day grain, calendar-bounded
     chg = daily.select(
         "d",
         F.when(F.col("x") > F.lag("x").over(w), 1).otherwise(0).alias("up"),
@@ -2219,7 +2219,7 @@ def q_cramers_v_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     wr = Window.partitionBy("r")
     wc = Window.partitionBy("c")
-    wa = Window.orderBy(F.lit(1)).rowsBetween(  # global-window-ok: day-series grain, calendar-bounded
+    wa = Window.orderBy(F.lit(1)).rowsBetween(  # day-series grain, calendar-bounded
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     marg = cells.select(
@@ -2388,7 +2388,7 @@ def q_bh_fdr_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "abs_z",
         F.row_number()
-        .over(Window.orderBy(F.col("abs_z").desc(), "event_type"))  # global-window-ok: event-type grain, closed 5-value domain
+        .over(Window.orderBy(F.col("abs_z").desc(), "event_type"))  # event-type grain, closed 5-value domain
         .cast("bigint")
         .alias("rnk"),
     )

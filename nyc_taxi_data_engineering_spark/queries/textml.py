@@ -265,7 +265,7 @@ def q_zipf_fit_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = freq.orderBy(F.col("f").desc(), "w").limit(ZIPF_TOPK)
     ranked = (
         topk.withColumn(
-            "rnk", F.row_number().over(Window.orderBy(F.col("f").desc(), "w"))  # global-window-ok: ZIPF_TOPK-row table after TakeOrderedAndProject
+            "rnk", F.row_number().over(Window.orderBy(F.col("f").desc(), "w"))  # ZIPF_TOPK-row table after TakeOrderedAndProject
         )
         .select(
             F.round(F.log(F.col("rnk").cast("double")), 6).cast("decimal(18,6)").alias("x"),

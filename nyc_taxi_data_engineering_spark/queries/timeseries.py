@@ -137,7 +137,7 @@ def q_events_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .select(F.col("w.start").alias("hour"), "c")
     )
-    win = Window.orderBy("hour").rowsBetween(-ANOMALY_LOOKBACK, -1)  # global-window-ok: hour grain, calendar-bounded
+    win = Window.orderBy("hour").rowsBetween(-ANOMALY_LOOKBACK, -1)  # hour grain, calendar-bounded
     w = hours.select(
         "hour",
         "c",
@@ -222,7 +222,7 @@ def q_events_ewma_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .select(F.col("w.start").alias("hour"), "c")
     )
-    win = Window.orderBy("hour")  # global-window-ok: hour grain, calendar-bounded
+    win = Window.orderBy("hour")  # hour grain, calendar-bounded
     zero = F.lit(0.0)
     num = zero
     den = zero
@@ -309,8 +309,8 @@ def q_events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = hours.agg(
         F.count(F.lit(1)).alias("n"), F.sum("c").alias("total")
     )
-    w = Window.orderBy("hour").rowsBetween(Window.unboundedPreceding, Window.currentRow)  # global-window-ok: hour grain, calendar-bounded
-    rn = F.row_number().over(Window.orderBy("hour"))  # global-window-ok: hour grain, calendar-bounded
+    w = Window.orderBy("hour").rowsBetween(Window.unboundedPreceding, Window.currentRow)  # hour grain, calendar-bounded
+    rn = F.row_number().over(Window.orderBy("hour"))  # hour grain, calendar-bounded
     p = (
         hours.crossJoin(F.broadcast(tot))
         .select(
@@ -592,7 +592,7 @@ def q_revenue_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("decimal(14,2)")
         .alias("x")
     )
-    w = Window.orderBy("d")  # global-window-ok: day grain, calendar-bounded
+    w = Window.orderBy("d")  # day grain, calendar-bounded
     leads = daily.select(
         "x", *[F.lead("x", k).over(w).alias(f"x{k}") for k in range(1, _ACF_MAX_LAG + 1)]
     )
@@ -1153,7 +1153,7 @@ def q_revenue_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("x")
     )
-    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)  # global-window-ok: day grain, calendar-bounded
+    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)  # day grain, calendar-bounded
     cum = daily.withColumn("equity", F.sum(F.col("x").cast("decimal(18,2)")).over(w))
     dd = cum.select(
         "d",
@@ -1391,7 +1391,7 @@ def q_stl_decompose_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("x")
     )
-    w = Window.orderBy("d")  # global-window-ok: day grain, calendar-bounded
+    w = Window.orderBy("d")  # day grain, calendar-bounded
     wma = w.rowsBetween(-3, 3)
     t = daily.select(
         "d",
@@ -1399,7 +1399,7 @@ def q_stl_decompose_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.datediff(F.col("d"), F.lit("1970-01-01").cast("date")) % 7).alias("dow"),
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(
-            Window.orderBy(F.lit(1)).rowsBetween(  # global-window-ok: fixed forecast-horizon frame over day series
+            Window.orderBy(F.lit(1)).rowsBetween(  # fixed forecast-horizon frame over day series
                 Window.unboundedPreceding, Window.unboundedFollowing
             )
         )
@@ -1513,7 +1513,7 @@ def q_conformal_forecast_interval(spark: SparkSession, sf_dir: str) -> DataFrame
         .cast("double")
         .alias("x")
     )
-    w = Window.orderBy("d")  # global-window-ok: day grain, calendar-bounded
+    w = Window.orderBy("d")  # day grain, calendar-bounded
     f = daily.select("d", "x", F.lag("x", 7).over(w).alias("pred"))
     r = f.filter(F.col("pred").isNotNull()).select(
         "d",
@@ -1521,7 +1521,7 @@ def q_conformal_forecast_interval(spark: SparkSession, sf_dir: str) -> DataFrame
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1))
         .over(
-            Window.orderBy(F.lit(1)).rowsBetween(  # global-window-ok: fixed forecast-horizon frame over day series
+            Window.orderBy(F.lit(1)).rowsBetween(  # fixed forecast-horizon frame over day series
                 Window.unboundedPreceding, Window.unboundedFollowing
             )
         )
@@ -1535,10 +1535,10 @@ def q_conformal_forecast_interval(spark: SparkSession, sf_dir: str) -> DataFrame
     cal = split.filter(F.col("rn") <= F.col("n_cal")).select(
         "ae",
         "d",
-        F.row_number().over(Window.orderBy("ae", "d")).alias("qr"),  # global-window-ok: day grain, calendar-bounded
+        F.row_number().over(Window.orderBy("ae", "d")).alias("qr"),  # day grain, calendar-bounded
         F.max("n_cal")
         .over(
-            Window.orderBy(F.lit(1)).rowsBetween(  # global-window-ok: fixed quantile frame over day series
+            Window.orderBy(F.lit(1)).rowsBetween(  # fixed quantile frame over day series
                 Window.unboundedPreceding, Window.unboundedFollowing
             )
         )
@@ -1640,7 +1640,7 @@ def q_haar_decompose_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     half = F.lit(0.5).cast("decimal(2,1)")
     s = (
         daily.select(
-            F.row_number().over(Window.orderBy("d")).alias("rn"),  # global-window-ok: day grain, calendar-bounded
+            F.row_number().over(Window.orderBy("d")).alias("rn"),  # day grain, calendar-bounded
             F.col("x").cast("decimal(14,2)").alias("v"),
         )
         .filter(F.col("rn") <= HAAR_N)

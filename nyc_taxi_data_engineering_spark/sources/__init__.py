@@ -72,11 +72,6 @@ def read_delta(spark: SparkSession, path: str, version_as_of: int | None = None)
     )
 
 
-def from_rows(spark: SparkSession, rows: Sequence, schema) -> DataFrame:
-    """S6: in-memory table constructor (metrics, scorecards)."""
-    return spark.createDataFrame(rows, schema)
-
-
 # -- sinks (S7–S14) ---------------------------------------------------
 
 def write_parquet(
@@ -98,13 +93,6 @@ def write_json_metrics(df: DataFrame, path: str, mode: str = "overwrite") -> Non
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """S14: header CSV sink (steward queues, scorecards)."""
     df.write.mode(mode).option("header", True).csv(path)
-
-
-def export_table(df: DataFrame, path: str) -> None:
-    """S13: 'export to warehouse' modeled as a parquet export — the
-    reference's Redshift COPY moves parquet files server-side; the
-    Spark-side contract is identical to a parquet sink."""
-    write_parquet(df, path, mode="overwrite")
 
 
 def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "overwrite", **options) -> None:

@@ -2016,13 +2016,6 @@ def _cm_protocol(prior: dict | None) -> dict:
     }
 
 
-def _cm_guard(meta: dict, op: str) -> None:
-    if _cm_enabled(meta):
-        raise DeltaLogError(
-            f"{op} on a column-mapped table is not supported by this engine"
-        )
-
-
 def enable_column_mapping(table_path: str) -> int:
     """ALTER TABLE ... SET TBLPROPERTIES delta.columnMapping.mode=name:
     every schema field gains a stable column id and a PHYSICAL name

@@ -145,19 +145,3 @@ def delta_upsert_batch(
         txn=(app_id, batch_id),
     )
     return True
-
-
-def delta_upsert_sink(
-    result: DataFrame,
-    checkpoint_dir: str,
-    table_path: str,
-    app_id: str,
-    on: str | list[str],
-) -> StreamingQuery:
-    """Drain ``result`` (availableNow) into a Delta table as per-batch
-    MERGE upserts, exactly-once via the txn watermark."""
-
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        delta_upsert_batch(batch, batch_id, table_path, app_id, on)
-
-    return foreach_batch_sink(result, checkpoint_dir, _sink)

@@ -15,16 +15,19 @@ from nyc_taxi_data_engineering_spark.session import get_spark  # noqa: E402
 TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-@pytest.fixture(scope="session")
-def spark(tmp_path_factory):
-    warehouse = str(tmp_path_factory.mktemp("warehouse"))
-    s = get_spark(
+def build_session(warehouse: str):
+    """The suite's session; ``tools/plan_audit.py`` pins its golden in the same one."""
+    return get_spark(
         "tests",
         master="local[4]",
         shuffle_partitions=4,
         extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
-    yield s
+
+
+@pytest.fixture(scope="session")
+def spark(tmp_path_factory):
+    yield build_session(str(tmp_path_factory.mktemp("warehouse")))
 
 
 @pytest.fixture(scope="session")
