@@ -6,26 +6,17 @@ happens in plans/ (pipelines) and queries/ (the correctness surface).
 
 import threading
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def pin(df: DataFrame) -> DataFrame:
     """Eagerly materialize ``df`` and TRUNCATE its lineage
-    (``localCheckpoint(eager=True)``) — the shared lever for the
-    fixed-point operators (graph analytics, Lloyd k-means, GD probe
-    training, BPE, pointer-doubling CC).
-
-    Iterative loops re-reference loop-invariant inputs and per-round
-    state 2-3x per round; lazily the logical plan grows by a full round
-    every iteration (branching where state has multiple consumers), so
-    round r re-executes the whole chain back to round 0 once per
-    consumer — and per-round ``.cache()`` does NOT stop it (the cache
-    manager's plan-matching itself walks the exponentially-growing
-    tree; measured on the sf0.1 co-purchase graph it made HITS >10x
-    slower while the uncached k-core peel spent 207 s re-deriving its
-    kNN edge build 3^rounds times). An eager local checkpoint computes
-    the state once, keeps the partitions, and hands every consumer a
-    flat scan (k-core 207 -> ~8 s, HITS 43 -> ~9 s at sf0.1).
+    (``localCheckpoint(eager=True)``) — the engine's one eager lineage
+    cut. A frame read several times re-executes its whole lineage once
+    per read; pinned, it is computed once and every reader gets a flat
+    scan. Used on inputs that an operator reads repeatedly and, through
+    :func:`iterate`, on the state a fixed-point loop carries.
 
     Cluster note: ``localCheckpoint`` stores partitions on executors —
     the right single-job trade. On a long-lived 1000-executor pipeline
@@ -34,6 +25,44 @@ def pin(df: DataFrame) -> DataFrame:
     semantics, HDFS-backed). Values are unchanged either way, so the
     decimal-grid determinism contracts are untouched."""
     return df.localCheckpoint(eager=True)
+
+
+def iterate(state, step, rounds: int, *, until: Column | None = None):
+    """Run ``state = step(state, i)`` for ``i`` in ``0..rounds-1``: the
+    engine's one fixed-point driver and the one place that decides which
+    rounds are pinned. ``state`` is a DataFrame or a tuple of
+    DataFrames; ``step`` may itself pin an intermediate it reads twice.
+
+    Why pin: a round reads the previous state 2-3 times, so lazily the
+    plan grows by a round per iteration and round r re-executes the
+    chain back to round 0 once per consumer. Per-round ``.cache()`` does
+    not stop it: the cache manager's plan matching walks the growing
+    tree. Measured at sf0.1 on the co-purchase graph: an unpinned k-core
+    peel took 207 s (its kNN edge build re-derived 3^rounds times)
+    against ~8 s pinned, and HITS 43 s against ~9 s.
+
+    Fixed rounds (``until`` None): rounds 1..n-1 are pinned and round n
+    comes back lazy, so the result keeps one round's plan shape visible
+    to ``.explain`` and the plan-property tests. A caller that reads the
+    result twice pins it once.
+
+    Convergence (``until`` a boolean Column, true on a row this round
+    changed; ``state`` one DataFrame): every round is pinned, the
+    changed-row count is read from an ``Observation`` on that pin (no
+    probe job), and the first round that changes nothing is returned.
+    Raises if ``rounds`` pass without one."""
+    for i in range(rounds):
+        state = step(state, i)
+        if until is not None:
+            changed = Observation()
+            state = pin(state.observe(changed, F.count(F.when(until, 1)).alias("n")))
+            if changed.get["n"] == 0:
+                return state
+        elif i < rounds - 1:
+            state = tuple(map(pin, state)) if isinstance(state, tuple) else pin(state)
+    if until is not None:
+        raise RuntimeError(f"fixed point did not converge in {rounds} rounds")
+    return state
 
 
 # ---------------------------------------------------------------------------

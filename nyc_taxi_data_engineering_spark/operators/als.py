@@ -33,8 +33,8 @@ Scale shape per half-iteration: one shuffle of ratings on the fixed
 key for the join (at cluster scale pre-partition ratings once per
 side and every sweep reuses both layouts), one hash agg keyed on the
 solved side. Factor tables are O(entities) rows of 2 doubles — never
-collected, never densified. Per-sweep state is pinned
-(operators.pin) so the driver loop's lineage stays one sweep deep.
+collected, never densified. Sweeps run through ``operators.iterate``,
+so the lineage stays one sweep deep.
 
 Reference scope note: the reference pipeline has no recommender; this
 is a beyond-reference extension following its MDM/scoring idiom
@@ -51,7 +51,7 @@ from nyc_taxi_data_engineering_spark.functions import (
     portable_round,
     portable_round_sql,
 )
-from nyc_taxi_data_engineering_spark.operators import pin, session_cache
+from nyc_taxi_data_engineering_spark.operators import iterate, pin, session_cache
 
 ALS_ITERS = 2  # full alternations (user sweep + item sweep each)
 ALS_LAMBDA = 0.125  # exact binary fraction -> bit-identical regularizer
@@ -178,22 +178,23 @@ def als_factors(
     # per distinct item in ratings). See ALS_BROADCAST_MAX_ITEMS.
     broadcast_items = item_f.count() <= ALS_BROADCAST_MAX_ITEMS
     user_f = None
-    for t in range(iters):
+
+    def sweep(item_f: DataFrame, _: int) -> DataFrame:
         # item side broadcast (when it fits): streaming the
         # u-partitioned ratings through a broadcast join leaves
-        # groupBy("u") exchange-free (see prepare_ratings).
-        user_f = _solve_side(
-            ratings.withColumnRenamed("i", "fk"), item_f, "u", "fk",
-            broadcast_fixed=broadcast_items,
+        # groupBy("u") exchange-free (see prepare_ratings). The user
+        # side is pinned here: the item solve reads it, and after the
+        # last sweep so does the caller.
+        nonlocal user_f
+        user_f = pin(
+            _solve_side(
+                ratings.withColumnRenamed("i", "fk"), item_f, "u", "fk",
+                broadcast_fixed=broadcast_items,
+            )
         )
-        user_f = pin(user_f)
-        item_f = _solve_side(
-            ratings.withColumnRenamed("u", "fk"), user_f, "i", "fk"
-        )
-        # keep the last sweep lazy so .explain still shows one solve's
-        # plan shape (join + 5-stat hash agg, no window)
-        if t < iters - 1:
-            item_f = pin(item_f)
+        return _solve_side(ratings.withColumnRenamed("u", "fk"), user_f, "i", "fk")
+
+    item_f = iterate(item_f, sweep, iters)
     return user_f, item_f
 
 

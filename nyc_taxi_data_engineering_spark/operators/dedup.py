@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.functions import text as T
-from nyc_taxi_data_engineering_spark.operators import pin, session_cache
+from nyc_taxi_data_engineering_spark.operators import iterate, pin, session_cache
 
 MINHASH_HASHES = 16
 LSH_BANDS = 4  # 4 bands x 4 rows: P(candidate) = 1-(1-j^4)^4
@@ -610,9 +610,9 @@ def connected_components(
     the alternating-star algorithm (Kiveris et al., CC-MR) achieves,
     at two keyed equi-joins per round. ``max_iter`` stays as the
     safety valve (raises if not converged; 25 rounds covers diameters
-    beyond any real corpus). Each round pins the labels (operators.pin):
-    without it the iterated join lineage grows quadratically and the
-    driver, not the data, becomes the bottleneck.
+    beyond any real corpus). Rounds run through ``operators.iterate``,
+    which pins each round's labels and stops at the first round that
+    changes no label, read from that pin without a probe job.
     """
     # Materialize the symmetric edge list ONCE: ``edges`` is typically the
     # output of an expensive candidate-pair pipeline (shingle inverted-index
@@ -638,8 +638,8 @@ def connected_components(
     ids = sym.select(F.col("src").alias("id")).distinct()
     if nodes is not None:
         ids = ids.unionByName(nodes.select(F.col(node_col).alias("id"))).distinct()
-    labels = pin(ids.withColumn("component", F.col("id")))
-    for _ in range(max_iter):
+
+    def cc_round(labels: DataFrame, _: int) -> DataFrame:
         nbr_min = (
             sym.join(labels.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
@@ -659,21 +659,17 @@ def connected_components(
         parents = propagated.select(
             F.col("id").alias("component"), F.col("component").alias("_parent")
         )
-        new_labels = pin(
-            propagated.join(parents, "component", "left").select(
-                "id",
-                F.coalesce(F.col("_parent"), F.col("component")).alias("component"),
-                "_old",
-            )
+        # _old rides through the round so convergence is a filter over
+        # the round's own rows, not a third keyed join
+        return propagated.join(parents, "component", "left").select(
+            "id",
+            F.coalesce(F.col("_parent"), F.col("component")).alias("component"),
+            "_old",
         )
-        # Convergence probe off the just-checkpointed round output —
-        # carrying _old through the round replaces a third keyed join
-        # (new vs previous labels) with a filter over local blocks.
-        changed = new_labels.filter(F.col("component") != F.col("_old")).limit(1).count()
-        labels = new_labels.drop("_old")
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+
+    labels = pin(ids.withColumn("component", F.col("id")))
+    changed = F.col("component") != F.col("_old")
+    return iterate(labels, cc_round, max_iter, until=changed).drop("_old")
 
 
 def prefix_filter_jaccard_pairs(

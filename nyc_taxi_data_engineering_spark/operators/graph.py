@@ -23,12 +23,11 @@ Scale shape per iteration: one keyed equi-join (ranks ⋈ edges on src,
 both shuffled on the same key — at cluster scale pre-partition edges
 by src once and every iteration reuses the layout) + one hash agg on
 dst with map-side combine + one 1-row broadcast aggregate for the
-dangling mass (nothing per-node crosses the driver). Iterations are a
-fixed driver loop over lazy plans, like Lloyd k-means
-(operators/kmeans.py); no collect anywhere. Sinks (nodes with no
-out-edges — the common case in link/citation graphs) are handled by
-the standard dangling-mass redistribution; graphs without sinks pay
-only a sum over an empty set.
+dangling mass (nothing per-node crosses the driver). Rounds run
+through ``operators.iterate``, like Lloyd k-means; no collect
+anywhere. Sinks (nodes with no out-edges — the common case in
+link/citation graphs) are handled by the standard dangling-mass
+redistribution; graphs without sinks pay only a sum over an empty set.
 """
 
 from __future__ import annotations
@@ -42,7 +41,7 @@ from nyc_taxi_data_engineering_spark.functions import (
 )
 from pyspark.sql.types import IntegralType
 
-from nyc_taxi_data_engineering_spark.operators import pin as _pin, session_cache
+from nyc_taxi_data_engineering_spark.operators import iterate, pin as _pin, session_cache
 
 PAGERANK_DAMPING = 0.85
 PAGERANK_ITERS = 3
@@ -112,20 +111,25 @@ def pagerank(
         # evaluates it — caught by the empty adversarial tier). The
         # personalized walk never uses |V| and skips the count entirely.
         n = float(nodes.count())
-        inv_n = 1.0 / n if n else 0.0
-        ranks = nodes.select("node", F.lit(inv_n).alias("rank"))
+        ranks = nodes.select("node", F.lit(1.0 / n if n else 0.0).alias("rank"))
+        # (1.0 - 0.85) then the divide, both as IEEE doubles — identical
+        # to the previous constant-folded (lit(1.0)-lit(0.85)) / col(n).
+        base = F.lit((1.0 - PAGERANK_DAMPING) / n if n else 0.0)
+        # n == 0 leaves no node row to evaluate this on; lit(1.0) only
+        # dodges the plan-time foldability of x/0 (the divide by the
+        # true n is preserved bit-for-bit when rows exist)
+        dm_share = F.col("dm").cast("double") / F.lit(n if n else 1.0)
     else:
         ind = (
             F.when(F.col("node") == F.lit(personalize), F.lit(1.0))
             .otherwise(F.lit(0.0))
         )
         ranks = nodes.select("node", ind.alias("rank"))
-    if personalize is None:
-        # (1.0 - 0.85) then the divide, both as IEEE doubles — identical
-        # to the previous constant-folded (lit(1.0)-lit(0.85)) / col(n).
-        teleport = F.lit((1.0 - PAGERANK_DAMPING) / n if n else 0.0)
+        base = (F.lit(1.0) - F.lit(PAGERANK_DAMPING)) * ind
+        dm_share = F.col("dm").cast("double") * ind
     zero_dm = F.lit(0).cast(f"decimal(28,{_SCALE})")
-    for it in range(iters):
+
+    def rank_round(ranks: DataFrame, _: int) -> DataFrame:
         contrib = ranks.join(ew, ranks["node"] == ew["src"]).select(
             F.col("dst").alias("node"),
             portable_round(F.col("rank") * F.col("w") / F.col("strength"), _SCALE)
@@ -140,20 +144,7 @@ def pagerank(
                 F.sum(F.col("rank").cast(f"decimal(28,{_SCALE})")), zero_dm
             ).alias("dm")
         )
-        if personalize is None:
-            base = teleport
-            # n == 0 leaves no node row to evaluate this on; lit(1.0)
-            # only dodges the plan-time foldability of x/0 (the divide
-            # by the true n is preserved bit-for-bit when rows exist)
-            dm_share = F.col("dm").cast("double") / F.lit(n if n else 1.0)
-        else:
-            ind = (
-                F.when(F.col("node") == F.lit(personalize), F.lit(1.0))
-                .otherwise(F.lit(0.0))
-            )
-            base = (F.lit(1.0) - F.lit(PAGERANK_DAMPING)) * ind
-            dm_share = F.col("dm").cast("double") * ind
-        ranks = (
+        return (
             nodes.join(in_sum, "node", "left")
             .crossJoin(F.broadcast(dm_row))
             .select(
@@ -169,15 +160,8 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        # ranks has THREE consumers next round (contribution join,
-        # dangling-mass sum, and the rank-update base): pin so each
-        # round starts from a flat node-sized scan. The LAST round
-        # stays lazy — the returned plan keeps one full round's shape
-        # (hash aggs, broadcast mass terms) visible to .explain and
-        # the plan-property tests.
-        if it < iters - 1:
-            ranks = _pin(ranks)
-    return ranks
+
+    return iterate(ranks, rank_round, iters)
 
 
 _CTE_HEADER_RE = None
@@ -512,8 +496,8 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
             edges.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
         )
     )
-    labels = sym.select("node").distinct().select("node", F.col("node").alias("label"))
-    for it in range(iters):
+
+    def vote(labels: DataFrame, _: int) -> DataFrame:
         # labels derives from sym, so qualify the self-join by renaming
         # the label side's key instead of relying on column lineage
         votes = (
@@ -522,14 +506,14 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
             .select("node", "label")
         )
         counts = votes.groupBy("node", "label").agg(F.count(F.lit(1)).alias("cnt"))
-        labels = (
+        return (
             counts.groupBy("node")
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("best"))
             .select("node", (-F.col("best.neg")).alias("label"))
         )
-        if it < iters - 1:  # keep the per-round plan flat; last stays lazy
-            labels = _pin(labels)
-    return labels.select("node", F.col("label").alias("community"))
+
+    labels = sym.select("node").distinct().select("node", F.col("node").alias("label"))
+    return iterate(labels, vote, iters).select("node", F.col("label").alias("community"))
 
 
 def lpa_ctes(iters: int = LPA_ITERS) -> str:
@@ -761,7 +745,7 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     Scale shape per round: two keyed equi-joins (scores ⋈ edges on
     src, then on dst — pre-partition edges once at cluster scale and
     both reuse the layout), two hash aggs with map-side combine, two
-    1-row broadcast norm aggregates. Fixed driver loop, no collect.
+    1-row broadcast norm aggregates. Rounds run through iterate; no collect.
     """
     # Pin the loop-invariant inputs: every round probes edges twice
     # and nodes twice, and for the purchase graph the caller's edge
@@ -774,10 +758,8 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
         .distinct()
     )
     dec = f"decimal(28,{_SCALE})"
-    scores = nodes.select(
-        "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-    )
-    for it in range(iters):
+
+    def hits_round(scores: DataFrame, _: int) -> DataFrame:
         # auth'(v) = sum over in-edges (u -> v) of hub(u).  Pinned:
         # consumed by both the norm aggregate and the auth join.
         a_in = _pin(
@@ -828,10 +810,12 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
                 ).alias("hub"),
             )
         )
-        scores = hub.join(auth, "node")
-        if it < iters - 1:  # next round's flat state; last stays lazy
-            scores = _pin(scores)
-    return scores.select("node", "hub", "auth")
+        return hub.join(auth, "node")
+
+    scores = nodes.select(
+        "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
+    )
+    return iterate(scores, hits_round, iters).select("node", "hub", "auth")
 
 
 def hits_sql(edges_cte: str, iters: int = HITS_ITERS) -> str:
@@ -910,12 +894,8 @@ def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     edges on ``a`` once and the semi joins broadcast the shrinking
     survivor set."""
     # Each peel reads the previous round's edge set three times (the
-    # degree union twice, then as the semi-join probe); pinning every
-    # round's survivors keeps the plan flat — uncached, round r
-    # re-derives the caller's edge build 3^r times (measured 207 s at
-    # sf0.1 on the co-purchase kNN graph; ~8 s pinned — see _pin).
-    e = _pin(edges.select("a", "b"))
-    for _ in range(rounds):
+    # degree union twice, then as the semi-join probe) — see iterate.
+    def peel(e: DataFrame, _: int) -> DataFrame:
         deg = (
             e.select(F.col("a").alias("node"))
             .unionAll(e.select(F.col("b").alias("node")))
@@ -923,10 +903,11 @@ def kcore(edges: DataFrame, k: int, rounds: int) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.filter(F.col("deg") >= k).select("node")
-        e = _pin(
-            e.join(keep.select(F.col("node").alias("a")), "a", "left_semi")
-            .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
+        return e.join(keep.select(F.col("node").alias("a")), "a", "left_semi").join(
+            keep.select(F.col("node").alias("b")), "b", "left_semi"
         )
+
+    e = iterate(_pin(edges.select("a", "b")), peel, rounds)
     return (
         e.select(F.col("a").alias("node"))
         .unionAll(e.select(F.col("b").alias("node")))
@@ -1085,23 +1066,22 @@ def harmonic_centrality(edges: DataFrame, max_hops: int) -> DataFrame:
     dist = sym.select("node").distinct().select(
         F.col("node").alias("src"), "node", F.lit(0).cast("int").alias("hops")
     )
-    for h in range(1, max_hops + 1):
+
+    def hop(dist: DataFrame, i: int) -> DataFrame:
         # dist derives from sym, so qualify the self-join by renaming
         # the frontier's key instead of relying on column lineage (the
         # label_propagation pattern).
-        frontier = dist.filter(F.col("hops") == h - 1).withColumnRenamed(
-            "node", "fnode"
-        )
+        frontier = dist.filter(F.col("hops") == i).withColumnRenamed("node", "fnode")
         nxt = frontier.join(sym, F.col("fnode") == F.col("node")).select(
-            "src", F.col("nbr").alias("node"), F.lit(h).cast("int").alias("hops")
+            "src", F.col("nbr").alias("node"), F.lit(i + 1).cast("int").alias("hops")
         )
-        dist = (
+        return (
             dist.unionByName(nxt)
             .groupBy("src", "node")
             .agg(F.min("hops").alias("hops"))
         )
-        if h < max_hops:
-            dist = _pin(dist)
+
+    dist = iterate(dist, hop, max_hops)
     wexpr = F.when(F.col("hops") == 1, F.lit(scale // 1))
     for h in range(2, max_hops + 1):
         wexpr = wexpr.when(F.col("hops") == h, F.lit(scale // h))

@@ -20,11 +20,11 @@ Determinism contract (what makes an exact DuckDB oracle possible):
   engines.
 
 Scale shape per iteration: one broadcast crossJoin (k rows) + one
-hash agg (assignment) + one posexplode hash agg (update). Iterations
-are a driver-side Python loop over LAZY plans — Catalyst fuses each
-round; ``iters`` is small and fixed, the Lloyd norm for production
-quantizer training. An empty cluster simply drops out of the next
-round's codebook (documented Lloyd behavior, identical in the oracle).
+hash agg (assignment) + one posexplode hash agg (update). Rounds run
+through ``operators.iterate``; ``iters`` is small and fixed, the Lloyd
+norm for production quantizer training. An empty cluster simply drops
+out of the next round's codebook (documented Lloyd behavior, identical
+in the oracle).
 """
 
 from __future__ import annotations
@@ -118,17 +118,16 @@ def lloyd_kmeans(
     under the FINAL centroids and centroids-long is (c_id, pos, val).
     ``corpus`` must be (vec_id, v: array<double>); caching it is the
     caller's choice (it feeds 2·iters consumers)."""
-    from nyc_taxi_data_engineering_spark.operators import pin
+    from nyc_taxi_data_engineering_spark.operators import iterate, pin
 
-    cent = seed_centroids(corpus, k)
-    for _ in range(iters):
-        assign = assign_clusters(corpus, cent)
-        # cent is k rows but its lineage is the whole previous round;
-        # pinning it keeps every round's plan one-round deep (see pin).
-        cent = pin(update_centroids(corpus, assign))
+    cent = iterate(
+        seed_centroids(corpus, k),
+        lambda cent, _: update_centroids(corpus, assign_clusters(corpus, cent)),
+        iters,
+    )
     # One closing assignment so the returned labels really are under the
-    # FINAL centroids (inside the loop, update runs after assign, so the
-    # last loop assignment is one round stale).
+    # FINAL centroids; it and the long form both read cent, so pin it once.
+    cent = pin(cent)
     assign = assign_clusters(corpus, cent)
     long = cent.select("c_id", F.posexplode("cv").alias("pos", "val"))
     return assign, long

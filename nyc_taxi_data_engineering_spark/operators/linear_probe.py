@@ -39,7 +39,7 @@ from nyc_taxi_data_engineering_spark.functions import (
     portable_round,
     portable_round_sql,
 )
-from nyc_taxi_data_engineering_spark.operators import pin, session_cache
+from nyc_taxi_data_engineering_spark.operators import iterate, pin
 
 PROBE_ITERS = 3
 PROBE_LR = 0.1
@@ -69,8 +69,9 @@ def prepare_probe_corpus(x: DataFrame) -> DataFrame:
     scan-bound: the exploded corpus is O(n·d) rows — the one thing a
     curation pipeline should NOT hold in executor storage (the same
     recompute-over-cache call as crossdoc's gram table). The layout
-    lever that DID land instead: per-round model pins in
-    train_linear_probe keep every corpus pass executed exactly once."""
+    lever that DID land instead: the per-round model pins of
+    train_linear_probe (operators.iterate) keep every corpus pass
+    executed exactly once."""
     return x.select("vec_id", "pos", "val")
 
 
@@ -100,7 +101,9 @@ def train_linear_probe(
         x.select("pos").distinct().select("pos", F.lit(0.0).alias("w"))
     )
     b = y.sparkSession.range(1).select(F.lit(0.0).alias("b"))
-    for _ in range(iters):
+
+    def gd_round(model: tuple[DataFrame, DataFrame], _: int):
+        w, b = model
         pred = (
             x.join(F.broadcast(w), "pos")
             .groupBy("vec_id")
@@ -109,9 +112,8 @@ def train_linear_probe(
             .select("vec_id", (F.col("xw") + F.col("b")).alias("pred"))
         )
         # residuals feed BOTH the gradient join and the bias sum; pin
-        # (operators.pin) so the second consumer is a flat scan instead
-        # of a second full x-pass, and so per-round lineage stays one
-        # round deep. (r13 measured the lazy session_cache alternative:
+        # so the second consumer is a flat scan instead of a second
+        # full x-pass. (r13 measured the lazy session_cache alternative:
         # without the eager truncation the composed calibration plans
         # re-inline the round tree per consumer — probe_calibration_ece
         # ballooned to 2.9k broadcast-exchange nodes and 2x the wall —
@@ -127,19 +129,10 @@ def train_linear_probe(
             .agg(_dec_sum(F.col("val") * F.col("r")).alias("gs"))
             .select("pos", portable_round(F.col("gs") / F.lit(n), _S).alias("g"))
         )
-        # pin the d-row model and 1-row bias each GD round — r13: left
-        # lazy, w_t chained back through every g_1..g_t, so materializing
-        # the NEXT round's prediction broadcast re-ran all earlier gradient
-        # passes — t corpus passes per round, quadratic in iters, instead
-        # of one. Eagerly truncating the 65-row state keeps every corpus
-        # pass executed exactly once; the pins themselves are bounded by
-        # the model dimension, not the data (guide §2.4).
-        w = pin(
-            w.join(g, "pos").select(
-                "pos", portable_round(F.col("w") - F.lit(lr) * F.col("g"), _S).alias("w")
-            )
+        w = w.join(g, "pos").select(
+            "pos", portable_round(F.col("w") - F.lit(lr) * F.col("g"), _S).alias("w")
         )
-        b = pin(
+        b = (
             r.agg(_dec_sum(F.col("r")).alias("rs"))
             .crossJoin(F.broadcast(b))
             .select(
@@ -150,6 +143,9 @@ def train_linear_probe(
                 ).alias("b")
             )
         )
+        return w, b
+
+    w, b = iterate((w, b), gd_round, iters)
     bias_row = b.select(F.lit(0).cast("int").alias("dim"), F.col("b").alias("weight"))
     return bias_row.unionByName(
         w.select((F.col("pos") + 1).cast("int").alias("dim"), F.col("w").alias("weight"))

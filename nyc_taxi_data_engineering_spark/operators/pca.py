@@ -44,7 +44,7 @@ from nyc_taxi_data_engineering_spark.functions import (
     portable_round,
     portable_round_sql,
 )
-from nyc_taxi_data_engineering_spark.operators import pin
+from nyc_taxi_data_engineering_spark.operators import iterate, pin
 
 PCA_ITERS = 3
 _S = 12  # dp per summed term / per component
@@ -91,35 +91,37 @@ def _power_rounds(cent: DataFrame, iters: int, dims: DataFrame) -> DataFrame:
     v = dims.crossJoin(F.broadcast(d_row)).select(
         "pos", (F.lit(1.0) / F.sqrt(F.col("d"))).alias("vv")
     )
-    for _ in range(iters):
+
+    def power_round(u: DataFrame, i: int) -> DataFrame:
+        # the carried state is the previous round's unnormalized u, read
+        # twice by _unit (round 0 starts from v itself)
+        v = _unit(u) if i else u
         w = (
             cent.join(F.broadcast(v), "pos")
             .groupBy("vec_id")
             .agg(_dec_sum(F.col("cv") * F.col("vv")).alias("w"))
         )
-        # pin the d-row u each round — optimization r13, the linear-probe
-        # lever: u feeds BOTH the norm aggregate and the new v, and the
-        # v chain feeds the next round twice more — left lazy, the
-        # per-round tree doubles and every reference re-runs the two
-        # corpus passes (plan before: 382 Exchange nodes for 3 rounds).
-        # One eager pin bounded by the dimension keeps each round's two
-        # corpus passes executed exactly once.
-        u = pin(
+        return (
             cent.join(w, "vec_id")
             .groupBy("pos")
             .agg(_dec_sum(F.col("cv") * F.col("w")).alias("u"))
         )
-        n_row = u.agg(F.sqrt(_dec_sum(F.col("u") * F.col("u"))).alias("nrm"))
-        # Zero norm (constant corpus) → NULL components, not a crash
-        # (ANSI divide-by-zero) and not a wrong vector; same CASE guard
-        # in the SQL twin.
-        v = u.crossJoin(F.broadcast(n_row)).select(
-            "pos",
-            portable_round(
-                F.when(F.col("nrm") != 0, F.col("u") / F.col("nrm")), _S
-            ).alias("vv"),
-        )
-    return v
+
+    return _unit(iterate(v, power_round, iters)) if iters else v
+
+
+def _unit(u: DataFrame) -> DataFrame:
+    """(pos, vv): ``u`` (pos, u) divided by its L2 norm, on the grid."""
+    n_row = u.agg(F.sqrt(_dec_sum(F.col("u") * F.col("u"))).alias("nrm"))
+    # Zero norm (constant corpus) → NULL components, not a crash
+    # (ANSI divide-by-zero) and not a wrong vector; same CASE guard
+    # in the SQL twin.
+    return u.crossJoin(F.broadcast(n_row)).select(
+        "pos",
+        portable_round(
+            F.when(F.col("nrm") != 0, F.col("u") / F.col("nrm")), _S
+        ).alias("vv"),
+    )
 
 
 def _signed(v: DataFrame) -> DataFrame:
@@ -161,8 +163,8 @@ def power_iteration_component(x: DataFrame, iters: int = PCA_ITERS) -> DataFrame
     The centered corpus is deliberately NOT materialized (recompute-
     over-cache, same call as prepare_probe_corpus): each of the two
     passes per round re-derives it as scan + d-row broadcast join —
-    scan-bound, no shuffle — while the per-round d-row pins keep every
-    pass executed exactly once."""
+    scan-bound, no shuffle — while the per-round d-row pins
+    (operators.iterate) keep every pass executed exactly once."""
     cent, mean = _centered(x)
     return _signed(_power_rounds(cent, iters, mean.select("pos")))
 

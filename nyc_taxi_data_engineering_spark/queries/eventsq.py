@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table
 from nyc_taxi_data_engineering_spark.functions import stable_sum, stable_sum_sql
-from nyc_taxi_data_engineering_spark.operators import pin, session_cache
+from nyc_taxi_data_engineering_spark.operators import iterate, session_cache
 from nyc_taxi_data_engineering_spark.operators.skew import salted_agg
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
@@ -967,20 +967,24 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     tm = session_cache(tm)
-    k_row = tm.agg(F.countDistinct("prev_type").cast("double").alias("k"))
-    pi = (
-        tm.select(F.col("prev_type").alias("state"))
-        .distinct()
-        .crossJoin(F.broadcast(k_row))
-        .select("state", (F.lit(1.0) / F.col("k")).alias("pi"))
-    )
-    for _ in range(MARKOV_POWER_ITERS):
+
+    def renorm(raw: DataFrame) -> DataFrame:
         # Renormalize each iteration: dangling states (next_type-only)
         # shed mass on the join with tm; dividing by the surviving total
         # keeps pi summing to 1 in both engines. Exact no-op (divisor 1
         # on the decimal grid) when the chain is fully connected.
-        raw = pin(
-            pi.withColumnRenamed("state", "prev_type")
+        total = raw.agg(F.sum("pi_dec").alias("pi_total"))
+        return raw.crossJoin(F.broadcast(total)).select(
+            "state",
+            (F.col("pi_dec").cast("double") / F.col("pi_total").cast("double")).alias(
+                "pi"
+            ),
+        )
+
+    def power_round(raw: DataFrame, _: int) -> DataFrame:
+        return (
+            renorm(raw)
+            .withColumnRenamed("state", "prev_type")
             .join(tm, "prev_type")
             .groupBy(F.col("next_type").alias("state"))
             .agg(
@@ -989,19 +993,14 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("pi_dec")
             )
         )
-        # pin() (ADVICE r9): the total crossJoin makes raw a 2-consumer
-        # node, so lazily the plan re-embeds the previous round's
-        # subtree 2x/round (2^ITERS leaf copies of the events scan) —
-        # the same growth pagerank/HITS pin away; the checkpoint keeps
-        # it linear in iterations (state is |event_type|-sized, tiny).
-        total = raw.agg(F.sum("pi_dec").alias("pi_total"))
-        pi = raw.crossJoin(F.broadcast(total)).select(
-            "state",
-            (F.col("pi_dec").cast("double") / F.col("pi_total").cast("double")).alias(
-                "pi"
-            ),
-        )
-    return pi.orderBy("state")
+
+    # The carried state is the unnormalized mass: renorm reads it twice
+    # (the total and the divide). A unit mass on every state renormalizes
+    # to exactly 1.0 / k, the uniform start.
+    raw = tm.select(F.col("prev_type").alias("state")).distinct().select(
+        "state", F.lit(1).cast("decimal(28,12)").alias("pi_dec")
+    )
+    return renorm(iterate(raw, power_round, MARKOV_POWER_ITERS)).orderBy("state")
 
 
 PATHDIST_USERS = 12  # most-active users, deterministic tiebreak

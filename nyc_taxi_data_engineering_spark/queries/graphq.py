@@ -688,11 +688,6 @@ def q_modularity_copurchase_communities(spark: SparkSession, sf_dir: str) -> Dat
     boundaries. Same bounded-degree kNN edges as the triangle and LPA
     queries (one edge build shared across the family); the label join
     is two keyed equi-joins + hash aggs — linear in |E|."""
-    from nyc_taxi_data_engineering_spark.operators import pin
-
-    # the kNN edge build feeds m, the degree union (x2), both label
-    # joins, AND LPA's own symmetrization — pin it once (measured at
-    # sf0.1: 11.8 s -> 6.5 s end-to-end)
     edges = _knn_copurchase_edges(spark, sf_dir)
     labels = label_propagation(edges)
     return modularity(edges, labels)
@@ -748,10 +743,6 @@ def q_conductance_copurchase_communities(spark: SparkSession, sf_dir: str) -> Da
     terminal division; the LPA rounds come from the same shared CTE
     fragment as the community query itself, so the assignment being
     scored is definitionally the one LPA produced."""
-    from nyc_taxi_data_engineering_spark.operators import pin
-
-    # same multi-consumer shape as the modularity query: pin the edge
-    # build once for the cut/volume joins and LPA's rounds
     edges = _knn_copurchase_edges(spark, sf_dir)
     labels = label_propagation(edges)
     return conductance(edges, labels)
@@ -774,8 +765,4 @@ def q_assortativity_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree caps the candidate generators rely on. Integer degree
     moments as DECIMAL(38,0), one pinned Pearson chain with an
     IEEE-exact sqrt; one degree agg + two keyed joins, edge-linear."""
-    from nyc_taxi_data_engineering_spark.operators import pin
-
-    # the edge build feeds the symmetrized list twice and both degree
-    # joins — pin like the community-scoring queries
     return assortativity(_knn_copurchase_edges(spark, sf_dir))

@@ -30,23 +30,33 @@ _REGISTRY: dict[str, QuerySpec] = {}
 # entries of ``queries()`` in dict order, so registration order decides which
 # queries earn a driver CORRECTNESS row each round. This list pins the front
 # of that window explicitly instead of leaving it to module-import order.
-# Queries whose plans changed since they were last sampled lead: the seven
-# r13 plan-touched queries (tpch_pricing_summary, the pinned PCA and
-# linear-probe chains, probe calibration and the parallel triplog write;
-# OPTIMIZATION_r13.md), then the r12 window in its previous order: the
-# distrank global-window conversions, the r12 plan rewrites (graph long-id
-# transport, ALS ratings layout, connected components), the dedup/ANN/
-# k-means families and the earlier rounds' names. Queries pushed past the
-# window keep full local coverage via tests/test_oracle_parity.py
-# (bit-exact comparator, plan record) and the adversarial tiers
-# (pytest -m adversarial).
+# Queries whose plans changed since they were last sampled lead: the
+# thirteen whose plan record moved when the fixed-point loops moved onto
+# operators.iterate (connected components lost its per-round probe job;
+# the k-core, Markov, PCA and linear-probe final rounds run in the
+# terminal plan), then the previous window in its previous order: the
+# r13 plan-touched queries (tpch_pricing_summary, probe calibration and
+# the parallel triplog write; OPTIMIZATION_r13.md), the distrank
+# global-window conversions, the r12 plan rewrites (graph long-id
+# transport, ALS ratings layout), the dedup/ANN/k-means families and the
+# earlier rounds' names. Queries pushed past the window keep full local
+# coverage via tests/test_oracle_parity.py (bit-exact comparator, plan
+# record) and the adversarial tiers (pytest -m adversarial).
 ROTATION: list[str] = [
-    "tpch_pricing_summary",
+    "dedup_clusters_docs",
+    "neardup_canonical_docs",
+    "image_dedup_clusters",
+    "embedding_dedup_clusters",
+    "corpus_curation_funnel",
+    "kcore_copurchase_suppliers",
+    "markov_stationary_events",
     "embedding_top_eigvec",
     "embedding_top2_pca",
     "linear_probe_weights",
     "linear_probe_class_scores",
     "probe_calibration_brier",
+    "probe_calibration_ece",
+    "tpch_pricing_summary",
     "triplog_roundtrip_trips",
     "mann_whitney_events",
     "kruskal_wallis_events",
@@ -67,11 +77,6 @@ ROTATION: list[str] = [
     "trade_bfs_hops",
     "trade_cheapest_costs",
     "als_ranking_eval",
-    "dedup_clusters_docs",
-    "neardup_canonical_docs",
-    "image_dedup_clusters",
-    "embedding_dedup_clusters",
-    "corpus_curation_funnel",
     "ann_cosine_topk",
     "ann_lsh_topk",
     "ann_ivf_topk",
@@ -80,7 +85,6 @@ ROTATION: list[str] = [
     "embedding_neardup_pairs",
     "similar_docs_to_anchor",
     "semantic_dedup_prune",
-    "probe_calibration_ece",
     "kmeans_embeddings",
     "kmeans_silhouette_embeddings",
     "funnel_time_to_convert",
@@ -325,7 +329,6 @@ ROTATION: list[str] = [
     "media_byte_histogram_arrow",
     "auc_bootstrap_ci_orders",
     "proximity_search_docs",
-    "markov_stationary_events",
     "gains_curve_orders",
     "feature_hashing_collisions",
     "runs_test_revenue",
@@ -363,7 +366,6 @@ ROTATION: list[str] = [
     "tpch_brand_quantity_revenue",
     "tpch_promo_part_suppliers",
     "tpch_dormant_rich_customers",
-    "kcore_copurchase_suppliers",
     "linkpred_copurchase_suppliers",
     "feature_scaling_customers",
 ]

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table_parallel as load_table
 from nyc_taxi_data_engineering_spark.functions import portable_round, portable_round_sql
-from nyc_taxi_data_engineering_spark.operators import session_cache
+from nyc_taxi_data_engineering_spark.operators import pin, session_cache
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
 
@@ -1104,7 +1104,8 @@ def q_linear_probe_class_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One prepared corpus layout serves training (2 reads/round) AND the
     # scoring pass (optimization r13 — see prepare_probe_corpus).
     x = prepare_probe_corpus(x)
-    model = train_linear_probe(x, y, prepared=True)
+    # bias_row and wpos both read the model: pin it once
+    model = pin(train_linear_probe(x, y, prepared=True))
     bias_row = model.filter(F.col("dim") == 0).select(F.col("weight").alias("bias"))
     wpos = model.filter(F.col("dim") > 0).select(
         (F.col("dim") - 1).alias("pos"), F.col("weight").alias("w")
@@ -1224,7 +1225,8 @@ def q_probe_calibration_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # One prepared corpus layout serves training AND scoring (r13).
     x = prepare_probe_corpus(x)
-    model = train_linear_probe(x, y, prepared=True)
+    # bias_row and wpos both read the model: pin it once
+    model = pin(train_linear_probe(x, y, prepared=True))
     bias_row = model.filter(F.col("dim") == 0).select(F.col("weight").alias("bias"))
     wpos = model.filter(F.col("dim") > 0).select(
         (F.col("dim") - 1).alias("pos"), F.col("weight").alias("w")

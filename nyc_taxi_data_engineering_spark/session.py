@@ -17,6 +17,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """Heap for the single local-mode JVM (driver + executors), applied
+    only when this process launches the JVM. ``SPARK_GRAFT_DRIVER_MEM``
+    wins (``SPARK_DRIVER_MEMORY`` is honored as a fallback name; a second
+    ``.config()`` for the same key would silently win over this one).
+    Otherwise half of this host's physical memory, capped at 16g: Spark's
+    1g default is far too small for multi-GB shuffles and checkpoints,
+    and the other half is left to Python workers, the OS and a second
+    session."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM", os.environ.get("SPARK_DRIVER_MEMORY"))
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(phys_mb // 2, 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "nyc_taxi_data_engineering_spark",
     master: str | None = None,
@@ -35,19 +51,10 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus and cpus.isdigit() else 32
 
-    # Heap for the single local-mode JVM (driver+executors). Spark's
-    # 1g default is far too small for multi-GB shuffles/checkpoints on
-    # a 128 GiB box; applied only when this process launches the JVM.
-    # (SPARK_DRIVER_MEMORY is honored as a fallback name; a second
-    # .config() for the same key would silently win over this one.)
-    driver_mem = os.environ.get(
-        "SPARK_GRAFT_DRIVER_MEM", os.environ.get("SPARK_DRIVER_MEMORY", "16g")
-    )
-
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.driver.memory", driver_mem)
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
