@@ -108,7 +108,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(table_path(sf_dir, name))
 
 
-def fan_out(df: DataFrame, spark: SparkSession, min_partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Round-robin repartition when the scan yields fewer partitions
     than cores. Single-row-group parquet files (like the small test
     tables) cannot split at scan time, which serializes per-row
@@ -124,7 +124,7 @@ def fan_out(df: DataFrame, spark: SparkSession, min_partitions: int | None = Non
     the case this guards; a single LARGE multi-row-group file would be
     repartitioned unnecessarily, which is still the right call for
     per-row-compute-bound queries."""
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    target = spark.sparkContext.defaultParallelism
     n_files = len(df.inputFiles())
     if n_files and n_files < target:
         return df.repartition(target)

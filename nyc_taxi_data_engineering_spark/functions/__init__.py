@@ -56,7 +56,7 @@ def stable_sum_sql(expr: str, scale: int = 4, precision: int = 18) -> str:
     return dec_to_double_sql(f"SUM(CAST({expr} AS DECIMAL({precision},{scale})))")
 
 
-def stable_sum_unscaled_long(col: Column | str, scale: int = 4, precision: int = 18) -> Column:
+def stable_sum_unscaled_long(col: Column | str) -> Column:
     """:func:`stable_sum` with an unscaled-LONG accumulator — the sum
     buffer is a primitive long instead of a >18-precision decimal
     (BigDecimal-backed), which is the dominant per-row aggregate cost in
@@ -64,13 +64,13 @@ def stable_sum_unscaled_long(col: Column | str, scale: int = 4, precision: int =
     measured −10% on the TPC-H Q1 shape at sf0.1).
 
     Bit-identical to stable_sum, PROVABLY, in two steps: (1) the per-row
-    ``decimal(p,s) * 10^s -> long`` is the exact unscaled value, and the
+    ``decimal(18,4) * 10^4 -> long`` is the exact unscaled value, and the
     long sum is exact as long as it cannot overflow — the caller must
-    guarantee ``max|col| * 10^s * rows_per_group < 2^63`` (e.g.
+    guarantee ``max|col| * 10^4 * rows_per_group < 2^63`` (e.g.
     l_quantity <= 50 -> 5e5 unscaled; even at SF 130,000 ≈ 100 TB a Q1
     group holds ~2e11 rows -> 1e17 << 9.2e18); (2) the terminal
-    ``long -> decimal / 10^s -> double`` is one exact decimal division
-    (the value has only ``s`` fractional digits) followed by the same
+    ``long -> decimal / 10^4 -> double`` is one exact decimal division
+    (the value has only 4 fractional digits) followed by the same
     correctly-rounded decimal->double conversion stable_sum ends with —
     ONE rounding total, so the double is identical at any magnitude.
     Use ONLY for magnitude-bounded columns (quantities, counts, flags);
@@ -88,18 +88,18 @@ def stable_sum_unscaled_long(col: Column | str, scale: int = 4, precision: int =
             "without ANSI mode a long-sum overflow wraps silently"
         )
     c = F.col(col) if isinstance(col, str) else col
-    unscaled = F.sum((c.cast(f"decimal({precision},{scale})") * (10**scale)).cast("long"))
-    return (unscaled.cast("decimal(38,0)") / F.lit(10**scale)).cast("double")
+    unscaled = F.sum((c.cast("decimal(18,4)") * (10**4)).cast("long"))
+    return (unscaled.cast("decimal(38,0)") / F.lit(10**4)).cast("double")
 
 
-def stable_avg(col: Column | str, scale: int = 4, precision: int = 18) -> Column:
+def stable_avg(col: Column | str, scale: int = 4) -> Column:
     """Order-independent AVG: exact decimal sum ÷ count, both as double."""
     c = F.col(col) if isinstance(col, str) else col
-    return stable_sum(c, scale, precision) / F.count(c)
+    return stable_sum(c, scale) / F.count(c)
 
 
-def stable_avg_sql(expr: str, scale: int = 4, precision: int = 18) -> str:
-    return f"{stable_sum_sql(expr, scale, precision)} / COUNT({expr})"
+def stable_avg_sql(expr: str, scale: int = 4) -> str:
+    return f"{stable_sum_sql(expr, scale)} / COUNT({expr})"
 
 
 # ---------------------------------------------------------------------------
@@ -118,16 +118,6 @@ def stable_avg_sql(expr: str, scale: int = 4, precision: int = 18) -> str:
 # ---------------------------------------------------------------------------
 
 
-def exact_dec(col: Column | str, precision: int = 12, scale: int = 2) -> Column:
-    """Cast a double that holds an exact scale-`scale` decimal value onto
-    the decimal grid. Deterministic across engines because the nearest
-    double to an on-grid value is ~15 significant digits away from the
-    next half-boundary; only use on source columns known to be on the
-    grid (prices, rates) — never on computed products."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast(f"decimal({precision},{scale})")
-
-
 def dec_sum(col: Column | str) -> Column:
     """Exact SUM of an already-decimal expression, cast to double with NO
     intermediate rescale — safe at any magnitude (the sub-ULP quantization
@@ -144,6 +134,22 @@ def dec_sum_sql(expr: str) -> str:
     decimal→double conversion correctly rounded, see
     :func:`dec_to_double_sql`)."""
     return dec_to_double_sql(f"SUM({expr})")
+
+
+def grid_dec_sum(term: Column) -> Column:
+    """Exact SUM of a double term on the 12-dp grid, as double: the term
+    is ``portable_round``-ed to 12 dp, cast to DECIMAL(38,12) and summed
+    exactly. The iterative operators (ALS, PCA, linear probe) accumulate
+    every product through it.
+
+    portable_round BEFORE the decimal cast and a correctly-rounded
+    terminal decimal->double: the sf1 exact sweep (round 10) caught a
+    single 12-dp grid flip in one ALS factor — native round(double,12)
+    half-tie semantics and DuckDB's two-step decimal->double are the two
+    known engine-divergence classes, and an iterative chain cascades
+    either one into its output. |term| must stay inside portable_round's
+    2^53/10^12 bound (ALS terms are O(r·f) ≈ 1e3)."""
+    return F.sum(portable_round(term, 12).cast("decimal(38,12)")).cast("double")
 
 
 def portable_round(col: Column | str, scale: int) -> Column:
@@ -189,7 +195,7 @@ def assert_quantum_above_ulp(max_abs: float, scale: int) -> None:
         raise ValueError(
             f"round(·,{scale}) below ULP at magnitude {max_abs:g}: "
             f"quantum {quantum:g} <= 2*ulp {2 * ulp:g} — use decimal-domain "
-            "arithmetic (exact_dec/dec_sum) instead"
+            "arithmetic (a DECIMAL source cast and dec_sum) instead"
         )
 
 
@@ -200,20 +206,20 @@ def assert_quantum_above_ulp(max_abs: float, scale: int) -> None:
 NULL_HASH_MARKER = "\x00NULL"
 
 
-def record_hash(cols: Sequence[str], sep: str = "||") -> Column:
+def record_hash(cols: Sequence[str]) -> Column:
     """sha2-256 change hash over a column subset (reference F1:
     glue_jobs/scd2_delta_vendors.py:36-56). Cast-to-string first so any
     type participates; NULL encodes as NULL_HASH_MARKER, distinct from
     the empty string (deliberate fix of the reference's coalesce-to-''
     blindness)."""
     parts = [F.coalesce(F.col(c).cast("string"), F.lit(NULL_HASH_MARKER)) for c in cols]
-    return F.sha2(F.concat_ws(sep, *parts), 256)
+    return F.sha2(F.concat_ws("||", *parts), 256)
 
 
-def record_hash_md5(cols: Sequence[str], sep: str = "|") -> Column:
+def record_hash_md5(cols: Sequence[str]) -> Column:
     """md5 variant (reference F2: sql/scd/02_scd_procedures.sql:36-41)."""
     parts = [F.coalesce(F.col(c).cast("string"), F.lit(NULL_HASH_MARKER)) for c in cols]
-    return F.md5(F.concat_ws(sep, *parts))
+    return F.md5(F.concat_ws("|", *parts))
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -226,11 +232,11 @@ def normalize_text(col: Column | str) -> Column:
     return F.trim(c)
 
 
-def confidence_bucket(score: Column, high: float = 95.0, medium: float = 80.0) -> Column:
+def confidence_bucket(score: Column) -> Column:
     """Score → HIGH/MEDIUM/LOW bucket (reference F11: fuzzy_match.py:72-89)."""
     return (
-        F.when(score >= high, F.lit("HIGH"))
-        .when(score >= medium, F.lit("MEDIUM"))
+        F.when(score >= 95.0, F.lit("HIGH"))
+        .when(score >= 80.0, F.lit("MEDIUM"))
         .otherwise(F.lit("LOW"))
     )
 
@@ -250,9 +256,9 @@ def longest_string(a: Column, b: Column) -> Column:
     return F.when(F.length(F.coalesce(a, F.lit(""))) >= F.length(F.coalesce(b, F.lit(""))), a).otherwise(b)
 
 
-def pct(numerator: Column, denominator: Column, digits: int = 2) -> Column:
+def pct(numerator: Column, denominator: Column) -> Column:
     """Ratio metric as a rounded percentage (reference A8:
     glue_jobs/glue_mdm.py:63-65); NULL-safe on zero denominators."""
     return F.when(denominator == 0, F.lit(None).cast("double")).otherwise(
-        F.round(numerator * 100.0 / denominator, digits)
+        F.round(numerator * 100.0 / denominator, 2)
     )

@@ -84,10 +84,9 @@ def distinct_token_count(c: Column) -> Column:
     return F.size(F.array_distinct(tokens(c)))
 
 
-def stopword_count(c: Column, words: list[str] | None = None) -> Column:
+def stopword_count(c: Column) -> Column:
     """Number of tokens (with multiplicity) in the stopword list."""
-    ws = words if words is not None else STOPWORDS_EN
-    arr = F.array(*[F.lit(w) for w in ws])
+    arr = F.array(*[F.lit(w) for w in STOPWORDS_EN])
     return F.size(F.filter(tokens(c), lambda t: F.array_contains(arr, t)))
 
 
@@ -169,23 +168,23 @@ def quality_bucket(score: Column) -> Column:
     )
 
 
-def char_shingles(col_name: str, k: int = FINGERPRINT_CHAR_K) -> Column:
-    """All k-char shingles (1-based substr, shorter text → whole text)."""
+def char_shingles(col_name: str) -> Column:
+    """All FINGERPRINT_CHAR_K-char shingles (1-based substr, shorter text → whole text)."""
     return F.expr(
-        f"transform(sequence(1, greatest(char_length({col_name}) - {k - 1}, 1)),"
-        f" i -> substr({col_name}, i, {k}))"
+        f"transform(sequence(1, greatest(char_length({col_name}) - {FINGERPRINT_CHAR_K - 1}, 1)),"
+        f" i -> substr({col_name}, i, {FINGERPRINT_CHAR_K}))"
     )
 
 
-def fingerprint(col_name: str, k: int = FINGERPRINT_CHAR_K) -> Column:
+def fingerprint(col_name: str) -> Column:
     """Rolling-hash document fingerprint = min(md5(char k-shingle)).
 
     Equals a 1-permutation MinHash over char shingles: stable under
     small edits anywhere but the minimizing window."""
-    return F.array_min(F.transform(char_shingles(col_name, k), F.md5))
+    return F.array_min(F.transform(char_shingles(col_name), F.md5))
 
 
-def word_shingles(col_name: str, w: int = SHINGLE_WORDS) -> Column:
+def word_shingles(col_name: str) -> Column:
     """Distinct word w-gram shingle set (the jaccard/minhash unit).
 
     PERF: this single-expression form inlines the regex ``split`` into
@@ -199,8 +198,8 @@ def word_shingles(col_name: str, w: int = SHINGLE_WORDS) -> Column:
     # backslash must itself be escaped in the expr text.
     toks = f"split(trim({col_name}), '\\\\s+')"
     return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size({toks}) - {w - 1}, 1)),"
-        f" i -> array_join(slice({toks}, i, {w}), ' ')))"
+        f"array_distinct(transform(sequence(1, greatest(size({toks}) - {SHINGLE_WORDS - 1}, 1)),"
+        f" i -> array_join(slice({toks}, i, {SHINGLE_WORDS}), ' ')))"
     )
 
 
@@ -276,9 +275,8 @@ def sql_punct_count(col: str) -> str:
     return f"len(regexp_extract_all({col}, '{PUNCT_RE}'))"
 
 
-def sql_stopword_count(col: str, words: list[str] | None = None) -> str:
-    ws = words if words is not None else STOPWORDS_EN
-    lst = ", ".join(f"'{w}'" for w in ws)
+def sql_stopword_count(col: str) -> str:
+    lst = ", ".join(f"'{w}'" for w in STOPWORDS_EN)
     return f"len(list_filter({sql_tokens(col)}, t -> t IN ({lst})))"
 
 
@@ -296,19 +294,20 @@ def sql_lang_id(col: str) -> str:
     return "CASE " + " ".join(cases) + f" ELSE '{LANG_MARKERS[-1][0]}' END"
 
 
-def sql_char_shingles(col: str, k: int = FINGERPRINT_CHAR_K) -> str:
+def sql_char_shingles(col: str) -> str:
     return (
-        f"list_transform(range(1, greatest(length({col}) - {k - 1}, 1) + 1),"
-        f" i -> substring({col}, i, {k}))"
+        f"list_transform(range(1, greatest(length({col}) - {FINGERPRINT_CHAR_K - 1}, 1) + 1),"
+        f" i -> substring({col}, i, {FINGERPRINT_CHAR_K}))"
     )
 
 
-def sql_fingerprint(col: str, k: int = FINGERPRINT_CHAR_K) -> str:
-    return f"list_min(list_transform({sql_char_shingles(col, k)}, s -> md5(s)))"
+def sql_fingerprint(col: str) -> str:
+    return f"list_min(list_transform({sql_char_shingles(col)}, s -> md5(s)))"
 
 
-def sql_word_shingles(col: str, w: int = SHINGLE_WORDS) -> str:
+def sql_word_shingles(col: str) -> str:
     toks = sql_tokens(col)
+    w = SHINGLE_WORDS
     return (
         f"list_distinct(list_transform(range(1, greatest(len({toks}) - {w - 1}, 1) + 1),"
         f" i -> array_to_string(list_slice({toks}, i, i + {w - 1}), ' ')))"
@@ -322,7 +321,7 @@ def sql_minhash_signature(shingles_expr: str, num_hashes: int) -> list[str]:
     ]
 
 
-def sql_simhash(col: str, bits: int = SIMHASH_BITS) -> str:
+def sql_simhash(col: str) -> str:
     """DuckDB twin of operators/dedup.simhash: per-bit ±1 token sums
     assembled into a signed BIGINT. Bit b of a token's contribution is
     bit (3 - b%4) of hex nibble b//4 of its md5 — the same mapping the
@@ -332,7 +331,7 @@ def sql_simhash(col: str, bits: int = SIMHASH_BITS) -> str:
     fine at oracle scale; the Spark side hashes each token once."""
     toks = sql_tokens(col)
     terms = []
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         nib = f"(strpos('0123456789abcdef', substring(md5(t), {b // 4 + 1}, 1)) - 1)"
         bit_sum = (
             f"list_sum(list_transform({toks}, t -> CASE WHEN (({nib} >> {3 - b % 4}) & 1) = 1"

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.functions import (
     dec_to_double_sql,
+    grid_dec_sum,
     portable_round,
     portable_round_sql,
 )
@@ -65,7 +66,6 @@ ALS_LAMBDA = 0.125  # exact binary fraction -> bit-identical regularizer
 # bit-identical either way.
 ALS_BROADCAST_MAX_ITEMS = 20_000_000
 _S = 12
-_DEC = f"decimal(38,{_S})"
 
 
 def _init_item_factors(ratings: DataFrame) -> DataFrame:
@@ -81,17 +81,6 @@ def _init_item_factors(ratings: DataFrame) -> DataFrame:
             (F.lit(0.25) + (F.col("i") % 11).cast("double") * F.lit(0.0625)).alias("f2"),
         )
     )
-
-
-def _dec_sum(term):
-    # portable_round BEFORE the decimal cast and a correctly-rounded
-    # terminal decimal->double: the sf1 exact sweep (round 10) caught a
-    # single 12-dp grid flip in one factor — native round(double,12)
-    # half-tie semantics and DuckDB's two-step decimal->double are the
-    # two known engine-divergence classes, and an iterative chain
-    # cascades either one into the served scores. |term| here is
-    # O(r·f) ≈ 1e3, far inside portable_round's 2^53/10^12 bound.
-    return F.sum(portable_round(term, _S).cast(_DEC)).cast("double")
 
 
 def prepare_ratings(ratings: DataFrame) -> DataFrame:
@@ -136,11 +125,11 @@ def _solve_side(
         ratings.join(f, fixed_key)
         .groupBy(solve_key)
         .agg(
-            _dec_sum(F.col("f1") * F.col("f1")).alias("a11"),
-            _dec_sum(F.col("f1") * F.col("f2")).alias("a12"),
-            _dec_sum(F.col("f2") * F.col("f2")).alias("a22"),
-            _dec_sum(F.col("r") * F.col("f1")).alias("b1"),
-            _dec_sum(F.col("r") * F.col("f2")).alias("b2"),
+            grid_dec_sum(F.col("f1") * F.col("f1")).alias("a11"),
+            grid_dec_sum(F.col("f1") * F.col("f2")).alias("a12"),
+            grid_dec_sum(F.col("f2") * F.col("f2")).alias("a22"),
+            grid_dec_sum(F.col("r") * F.col("f1")).alias("b1"),
+            grid_dec_sum(F.col("r") * F.col("f2")).alias("b2"),
         )
     )
     L = F.lit(ALS_LAMBDA)
@@ -154,15 +143,13 @@ def _solve_side(
     )
 
 
-def als_factors(
-    ratings: DataFrame, iters: int = ALS_ITERS, prepared: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """(user_factors, item_factors) after ``iters`` alternations over
+def als_factors(ratings: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(user_factors, item_factors) after ``ALS_ITERS`` alternations over
     ``ratings`` (u, i, r) with INTEGER ratings; each factor table is
     (i, f1, f2) keyed by the entity id. Raises on non-integer ratings
-    (the 12-dp transport needs exact b-vector terms). ``prepared=True``
-    asserts the caller already ran :func:`prepare_ratings` (and reuses
-    that layout for its own consumers, e.g. the serving anti-join)."""
+    (the 12-dp transport needs exact b-vector terms). ``ratings`` is
+    the :func:`prepare_ratings` layout, which the caller also reuses
+    for its own consumers (e.g. the serving anti-join)."""
     from pyspark.sql.types import IntegralType
 
     if not isinstance(ratings.schema["r"].dataType, IntegralType):
@@ -170,8 +157,6 @@ def als_factors(
             "als_factors needs an integer rating column r (exact normal-"
             f"equation sums); got {ratings.schema['r'].dataType.simpleString()}"
         )
-    if not prepared:
-        ratings = prepare_ratings(ratings)
     item_f = pin(_init_item_factors(ratings))
     # One cheap count over the pinned init factors gates the broadcast
     # hint (every sweep's item side has the same cardinality — one row
@@ -179,29 +164,30 @@ def als_factors(
     broadcast_items = item_f.count() <= ALS_BROADCAST_MAX_ITEMS
     user_f = None
 
-    def sweep(item_f: DataFrame, _: int) -> DataFrame:
+    def sweep(item_f: DataFrame, i: int) -> DataFrame:
         # item side broadcast (when it fits): streaming the
         # u-partitioned ratings through a broadcast join leaves
-        # groupBy("u") exchange-free (see prepare_ratings). The user
-        # side is pinned here: the item solve reads it, and after the
-        # last sweep so does the caller.
+        # groupBy("u") exchange-free (see prepare_ratings). Only the
+        # last sweep's user side is pinned: the item solve and then the
+        # caller both read it. Before that the item solve is its only
+        # reader, and the next sweep's pin of the item side cuts it.
         nonlocal user_f
-        user_f = pin(
-            _solve_side(
-                ratings.withColumnRenamed("i", "fk"), item_f, "u", "fk",
-                broadcast_fixed=broadcast_items,
-            )
+        user_f = _solve_side(
+            ratings.withColumnRenamed("i", "fk"), item_f, "u", "fk",
+            broadcast_fixed=broadcast_items,
         )
+        if i == ALS_ITERS - 1:
+            user_f = pin(user_f)
         return _solve_side(ratings.withColumnRenamed("u", "fk"), user_f, "i", "fk")
 
-    item_f = iterate(item_f, sweep, iters)
+    item_f = iterate(item_f, sweep, ALS_ITERS)
     return user_f, item_f
 
 
-def als_sql(ratings_cte: str, iters: int = ALS_ITERS) -> tuple[str, str]:
+def als_sql(ratings_cte: str) -> tuple[str, str]:
     """DuckDB twin: returns (with_clauses, final_names) where
-    ``with_clauses`` is a CTE chain defining ``uf{iters}`` (user
-    factors, columns i/f1/f2 keyed by user) and ``if{2*iters}`` (item
+    ``with_clauses`` is a CTE chain defining ``uf{ALS_ITERS}`` (user
+    factors, columns i/f1/f2 keyed by user) and ``if{ALS_ITERS}`` (item
     factors) from a CTE named ``ratings`` with (u, i, r) that
     ``ratings_cte`` must define. Every sweep is written term-for-term
     against the Spark side."""
@@ -213,11 +199,11 @@ def als_sql(ratings_cte: str, iters: int = ALS_ITERS) -> tuple[str, str]:
     ]
 
     def _stat(term: str) -> str:
-        # Twin of the Spark _dec_sum: portable_round the term onto the
-        # 12-dp grid, exact decimal sum, STRING-hopped terminal
+        # Twin of the Spark grid_dec_sum: portable_round the term onto
+        # the 12-dp grid, exact decimal sum, STRING-hopped terminal
         # decimal->double (correctly rounded at any magnitude).
         return dec_to_double_sql(
-            f"SUM(CAST({portable_round_sql(term, _S)} AS {_DEC.upper()}))"
+            f"SUM(CAST({portable_round_sql(term, _S)} AS DECIMAL(38,{_S})))"
         )
 
     def solve(src: str, key: str, out: str) -> str:
@@ -249,7 +235,7 @@ def als_sql(ratings_cte: str, iters: int = ALS_ITERS) -> tuple[str, str]:
 
     prev_items = "if0"
     uf = ""
-    for t in range(1, iters + 1):
+    for t in range(1, ALS_ITERS + 1):
         uf = f"uf{t}"
         parts.append(solve(prev_items, "u", uf))
         prev_items = f"if{t}"

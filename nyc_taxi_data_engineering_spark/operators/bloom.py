@@ -5,7 +5,7 @@ AQE; this operator is the portable, testable version for pipelines
 that must prune a 100 TB probe side BEFORE its shuffle).
 
 Scale story: the build side's keys are folded into an ``m``-bit filter
-represented as a DataFrame of DISTINCT set bit positions (≤ m rows —
+(m = BLOOM_BITS, k = BLOOM_HASHES) represented as a DataFrame of DISTINCT set bit positions (≤ m rows —
 thousands, never data-scale), which broadcasts everywhere. The probe
 side then survives ``k`` consecutive **broadcast left-semi joins**
 (one per hash function) — zero shuffles on the probe, no distinct, no
@@ -30,46 +30,33 @@ BLOOM_BITS = 1 << 17  # m: 131072 bits ≈ 16 KiB — broadcast-trivial
 BLOOM_HASHES = 3  # k
 
 
-def _positions(key: Column, m_bits: int, seed: str, k: int) -> list[Column]:
-    return [hash_bucket(key, f"{seed}#{i}", m_bits) for i in range(k)]
+def _positions(key: Column) -> list[Column]:
+    return [hash_bucket(key, f"bloom#{i}", BLOOM_BITS) for i in range(BLOOM_HASHES)]
 
 
-def bloom_build(
-    keys: DataFrame,
-    key_col: str,
-    m_bits: int = BLOOM_BITS,
-    seed: str = "bloom",
-    k: int = BLOOM_HASHES,
-) -> DataFrame:
+def bloom_build(keys: DataFrame, key_col: str) -> DataFrame:
     """Set-bit positions of the filter over the build side's keys: one
-    ``bit`` int column, DISTINCT, ≤ m_bits rows. One small shuffle on
-    the bit value (cardinality m, never data-scale)."""
-    pos = _positions(F.col(key_col), m_bits, seed, k)
+    ``bit`` int column, DISTINCT, ≤ BLOOM_BITS rows. One small shuffle
+    on the bit value (cardinality m, never data-scale)."""
+    pos = _positions(F.col(key_col))
     return keys.select(F.explode(F.array(*pos)).alias("bit")).distinct()
 
 
-def bloom_prefilter(
-    probe: DataFrame,
-    key_col: str,
-    bits: DataFrame,
-    m_bits: int = BLOOM_BITS,
-    seed: str = "bloom",
-    k: int = BLOOM_HASHES,
-) -> DataFrame:
-    """Probe rows that pass the filter: ``k`` broadcast left-semi
-    joins, one per hash position — the probe side never shuffles and
-    never explodes. Seed/m/k MUST match the build call."""
+def bloom_prefilter(probe: DataFrame, key_col: str, bits: DataFrame) -> DataFrame:
+    """Probe rows that pass the filter: ``BLOOM_HASHES`` broadcast
+    left-semi joins, one per hash position — the probe side never
+    shuffles and never explodes."""
     out = probe
-    for i, p in enumerate(_positions(F.col(key_col), m_bits, seed, k)):
+    for i, p in enumerate(_positions(F.col(key_col))):
         out = out.withColumn(f"__b{i}", p).join(
             F.broadcast(bits), F.col(f"__b{i}") == F.col("bit"), "left_semi"
         )
-    return out.drop(*[f"__b{i}" for i in range(k)])
+    return out.drop(*[f"__b{i}" for i in range(BLOOM_HASHES)])
 
 
-def bloom_positions_sql(key_expr: str, m_bits: int = BLOOM_BITS, seed: str = "bloom", k: int = BLOOM_HASHES) -> list[str]:
+def bloom_positions_sql(key_expr: str) -> list[str]:
     """DuckDB twins of the k bit-position expressions."""
-    return [hash_bucket_sql(key_expr, f"{seed}#{i}", m_bits) for i in range(k)]
+    return [hash_bucket_sql(key_expr, f"bloom#{i}", BLOOM_BITS) for i in range(BLOOM_HASHES)]
 
 # ---------------------------------------------------------------------------
 # PACKED-WORD Bloom filter (membership gate with an auditable FP rate)

@@ -37,11 +37,11 @@ from nyc_taxi_data_engineering_spark.operators import pin
 BPE_EOW = "</w>"
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """(w, wcnt) distinct-word frequency table — the one corpus-sized
     pass; everything after works on this."""
     return (
-        docs.select(F.explode(T.tokens(F.col(text_col))).alias("w"))
+        docs.select(F.explode(T.tokens(F.col("text"))).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wcnt"))
@@ -108,8 +108,8 @@ def train_bpe(words: DataFrame, num_merges: int) -> list[tuple[str, str, int]]:
     return merges
 
 
-def apply_bpe(docs: DataFrame, merges: list[tuple[str, str, int]], text_col: str = "text") -> DataFrame:
-    """Tokenize text with a learned merge list: per-word symbol arrays
+def apply_bpe(docs: DataFrame, merges: list[tuple[str, str, int]]) -> DataFrame:
+    """Tokenize ``text`` with a learned merge list: per-word symbol arrays
     folded through every merge in order (the standard apply — merges
     replay in priority order). Adds ``bpe_tokens`` (array<string>) and
     ``n_bpe_tokens``.
@@ -125,7 +125,7 @@ def apply_bpe(docs: DataFrame, merges: list[tuple[str, str, int]], text_col: str
     it once. Vocabulary tables broadcast by construction in practice
     (a tokenizer's vocab is bounded); swap the hint for a keyed join
     if yours does not."""
-    words_col = F.filter(T.tokens(F.col(text_col)), lambda w: F.length(w) > 0)
+    words_col = F.filter(T.tokens(F.col("text")), lambda w: F.length(w) > 0)
     with_id = docs.select(
         F.struct(*[F.col(c) for c in docs.columns]).alias("_row"),
         F.monotonically_increasing_id().alias("_rid"),
@@ -137,12 +137,7 @@ def apply_bpe(docs: DataFrame, merges: list[tuple[str, str, int]], text_col: str
     vocab = exploded.select(F.col("_w").alias("w")).filter(F.col("w").isNotNull()).distinct()
     syms: Column = F.concat(F.split("w", ""), F.array(F.lit(BPE_EOW)))
     for left, right, _cnt in merges:
-        # Separate scope per merge: PySpark reads the lambda's arity,
-        # so default-arg capture of the loop variables is not an option.
-        def _fold(c: Column, lft: str = left, rgt: str = right) -> Column:
-            return _merge_pair(c, lft, rgt)
-
-        syms = _fold(syms)
+        syms = _merge_pair(syms, left, right)
     mapping = vocab.select("w", syms.alias("_wtoks"))
     joined = exploded.join(
         F.broadcast(mapping), exploded["_w"] == mapping["w"], "left"

@@ -28,14 +28,9 @@ from pyspark.sql import functions as F
 OP_INSERT, OP_UPDATE, OP_DELETE = "I", "U", "D"
 
 
-def latest_changes(
-    changes: DataFrame, key: str, seq_col: str, tiebreak: Sequence[str] = ()
-) -> DataFrame:
-    """One surviving change per key: highest ``seq_col`` wins; optional
-    extra tie-break columns make reruns deterministic when sequence
-    numbers can collide (e.g. same-transaction rows)."""
-    order = [F.col(seq_col).desc()] + [F.col(c).desc() for c in tiebreak]
-    w = Window.partitionBy(key).orderBy(*order)
+def latest_changes(changes: DataFrame, key: str, seq_col: str) -> DataFrame:
+    """One surviving change per key: highest ``seq_col`` wins."""
+    w = Window.partitionBy(key).orderBy(F.col(seq_col).desc())
     return (
         changes.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -50,7 +45,6 @@ def apply_cdc(
     seq_col: str,
     op_col: str,
     payload_cols: Sequence[str],
-    broadcast_changes: bool = True,
 ) -> DataFrame:
     """Apply a CDC batch to ``base``; returns the post-merge snapshot
     with columns (key, *payload_cols).
@@ -61,9 +55,7 @@ def apply_cdc(
     untouched by the batch pass through unchanged.
     """
     latest = latest_changes(changes, key, seq_col)
-    changed_keys = latest.select(key)
-    if broadcast_changes:
-        changed_keys = F.broadcast(changed_keys)
+    changed_keys = F.broadcast(latest.select(key))
     untouched = base.select(key, *payload_cols).join(changed_keys, key, "left_anti")
     survivors = latest.filter(F.col(op_col) != OP_DELETE).select(key, *payload_cols)
     return untouched.unionByName(survivors)

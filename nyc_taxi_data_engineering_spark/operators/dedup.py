@@ -55,37 +55,34 @@ def content_hash(c: Column) -> Column:
     return F.md5(c)
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup via hash-groupBy: every doc tagged with its content
     hash, the canonical (minimum-id) doc of its group, and a duplicate
     flag. One shuffle on the hash; at scale this is the cheapest pass
     and always runs before the probabilistic family."""
     w = Window.partitionBy("content_hash")
     return (
-        docs.select(id_col, content_hash(F.col(text_col)).alias("content_hash"))
-        .withColumn("canonical_doc_id", F.min(id_col).over(w))
-        .withColumn("is_duplicate", F.col(id_col) != F.col("canonical_doc_id"))
+        docs.select("doc_id", content_hash(F.col("text")).alias("content_hash"))
+        .withColumn("canonical_doc_id", F.min("doc_id").over(w))
+        .withColumn("is_duplicate", F.col("doc_id") != F.col("canonical_doc_id"))
     )
 
 
-def _shingle_sets(docs: DataFrame, id_col: str, text_col: str, w: int) -> DataFrame:
+def _shingle_sets(docs: DataFrame) -> DataFrame:
     # Two-phase on purpose: tokenize once per row into an attribute,
     # then shingle from the array — inlining the split into the
     # transform lambda would re-split the text once per shingle.
-    toksed = docs.select(id_col, T.tokens(F.col(text_col)).alias("_toks"))
-    return toksed.select(id_col, T.word_shingles_of(F.col("_toks"), w).alias("shingles"))
+    toksed = docs.select("doc_id", T.tokens(F.col("text")).alias("_toks"))
+    return toksed.select("doc_id", T.word_shingles_of(F.col("_toks"), T.SHINGLE_WORDS).alias("shingles"))
 
 
 def shingle_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    w: int = T.SHINGLE_WORDS,
     threshold: float = 0.8,
     df_cap: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via an inverted shingle
-    index: explode distinct word w-grams, equi-join docs sharing a
+    index: explode distinct word w-grams (``T.SHINGLE_WORDS``), equi-join docs sharing a
     shingle, count common shingles per pair, then
     ``jaccard = common / (|A| + |B| - common)``.
 
@@ -103,10 +100,10 @@ def shingle_jaccard_pairs(
     ``xxhash64(shingle)``, an 8-byte long instead of a ~20-char string,
     shrinking shuffle bytes and comparison cost (64-bit collisions are
     negligible at any realistic shingle cardinality)."""
-    sets = session_cache(_shingle_sets(docs, id_col, text_col, w))
-    sizes = sets.select(id_col, F.size("shingles").alias("n"))
-    inv = sets.select(id_col, F.explode("shingles").alias("s")).select(
-        id_col, F.xxhash64("s").alias("s")
+    sets = session_cache(_shingle_sets(docs))
+    sizes = sets.select("doc_id", F.size("shingles").alias("n"))
+    inv = sets.select("doc_id", F.explode("shingles").alias("s")).select(
+        "doc_id", F.xxhash64("s").alias("s")
     )
     if df_cap is not None:
         hot = inv.groupBy("s").count().filter(F.col("count") > df_cap).select("s")
@@ -114,12 +111,12 @@ def shingle_jaccard_pairs(
     a = inv.alias("a")
     b = inv.alias("b")
     common = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .agg(F.count("*").alias("common_shingles"))
     )
-    na = sizes.select(F.col(id_col).alias("a_id"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("b_id"), F.col("n").alias("nb"))
+    na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
     jac = F.col("common_shingles") / (F.col("na") + F.col("nb") - F.col("common_shingles"))
     return (
         common.join(na, "a_id")
@@ -131,9 +128,6 @@ def shingle_jaccard_pairs(
 
 def shingle_containment_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    w: int = T.SHINGLE_WORDS,
     threshold: float = 0.8,
     df_cap: int | None = None,
 ) -> DataFrame:
@@ -152,10 +146,10 @@ def shingle_containment_pairs(
     union — no second self-join. Emits (inner_id, outer_id,
     common_shingles, containment) rows with containment ≥ threshold;
     a mutual near-dup pair yields both directions."""
-    sets = session_cache(_shingle_sets(docs, id_col, text_col, w))
-    sizes = sets.select(id_col, F.size("shingles").alias("n"))
-    inv = sets.select(id_col, F.explode("shingles").alias("s")).select(
-        id_col, F.xxhash64("s").alias("s")
+    sets = session_cache(_shingle_sets(docs))
+    sizes = sets.select("doc_id", F.size("shingles").alias("n"))
+    inv = sets.select("doc_id", F.explode("shingles").alias("s")).select(
+        "doc_id", F.xxhash64("s").alias("s")
     )
     if df_cap is not None:
         hot = inv.groupBy("s").count().filter(F.col("count") > df_cap).select("s")
@@ -163,12 +157,12 @@ def shingle_containment_pairs(
     a = inv.alias("a")
     b = inv.alias("b")
     common = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .agg(F.count("*").alias("common_shingles"))
     )
-    na = sizes.select(F.col(id_col).alias("a_id"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("b_id"), F.col("n").alias("nb"))
+    na = sizes.select(F.col("doc_id").alias("a_id"), F.col("n").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias("b_id"), F.col("n").alias("nb"))
     sized = common.join(na, "a_id").join(nb, "b_id")
     fwd = sized.select(
         F.col("a_id").alias("inner_id"),
@@ -185,53 +179,38 @@ def shingle_containment_pairs(
     return fwd.unionByName(rev).filter(F.col("containment") >= threshold)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = MINHASH_HASHES,
-) -> DataFrame:
-    """Per-doc MinHash signature as ``num_hashes`` columns s0..sN-1
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """Per-doc MinHash signature as ``MINHASH_HASHES`` columns s0..sN-1
     (min md5 over seed-prefixed shingles). Shingles are materialized
     in one projection then referenced by every hash column — Spark's
     CollapseProject keeps multi-referenced expensive expressions from
     being inlined, so shingling happens once per row."""
-    sets = _shingle_sets(docs, id_col, text_col, T.SHINGLE_WORDS)
-    mins = [T.seeded_min_hash(F.col("shingles"), i).alias(f"s{i}") for i in range(num_hashes)]
-    return sets.select(id_col, *mins)
+    sets = _shingle_sets(docs)
+    mins = [T.seeded_min_hash(F.col("shingles"), i).alias(f"s{i}") for i in range(MINHASH_HASHES)]
+    return sets.select("doc_id", *mins)
 
 
-def lsh_band_keys(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = MINHASH_HASHES,
-    bands: int = LSH_BANDS,
-) -> DataFrame:
+def lsh_band_keys(sig: DataFrame) -> DataFrame:
     """``(id, band, bucket)`` LSH keys from a signature frame: each
-    band of ``r = num_hashes // bands`` signature columns hashes to one
+    band of ``r = MINHASH_HASHES // LSH_BANDS`` signature columns hashes to one
     bucket key. This is the joinable form of a signature — self-join it
     for within-corpus pairs (:func:`lsh_candidate_pairs`) or join
     batch-side keys against a persisted corpus-side index for
     incremental dedup (:func:`incremental_dedup_status`)."""
-    r = num_hashes // bands
+    r = MINHASH_HASHES // LSH_BANDS
     band_structs = [
         F.struct(
             F.lit(i).alias("band"),
             F.md5(F.concat_ws("|", *[f"s{i * r + j}" for j in range(r)])).alias("bucket"),
         )
-        for i in range(bands)
+        for i in range(LSH_BANDS)
     ]
-    return sig.select(id_col, F.explode(F.array(*band_structs)).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket")
+    return sig.select("doc_id", F.explode(F.array(*band_structs)).alias("bk")).select(
+        "doc_id", F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket")
     )
 
 
-def lsh_candidate_pairs(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = MINHASH_HASHES,
-    bands: int = LSH_BANDS,
-) -> DataFrame:
+def lsh_candidate_pairs(sig: DataFrame) -> DataFrame:
     """MinHash-LSH candidate pairs: hash each band of the signature to
     a bucket key, equi-join on (band, bucket), dedupe pairs, and score
     each candidate by signature agreement (estimated Jaccard).
@@ -239,38 +218,34 @@ def lsh_candidate_pairs(
     The band join is the scale path: a pair shuffles together only if
     it collides in ≥1 band, so candidate volume follows the S-curve
     ``1-(1-j^r)^b`` instead of n²."""
-    banded = lsh_band_keys(sig, id_col, num_hashes, bands)
+    banded = lsh_band_keys(sig)
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
+        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .distinct()
     )
-    sa = sig.select(F.col(id_col).alias("a_id"), *[F.col(f"s{i}").alias(f"a_s{i}") for i in range(num_hashes)])
-    sb = sig.select(F.col(id_col).alias("b_id"), *[F.col(f"s{i}").alias(f"b_s{i}") for i in range(num_hashes)])
+    sa = sig.select(F.col("doc_id").alias("a_id"), *[F.col(f"s{i}").alias(f"a_s{i}") for i in range(MINHASH_HASHES)])
+    sb = sig.select(F.col("doc_id").alias("b_id"), *[F.col(f"s{i}").alias(f"b_s{i}") for i in range(MINHASH_HASHES)])
     matches = reduce(
         add,
-        [F.when(F.col(f"a_s{i}") == F.col(f"b_s{i}"), 1).otherwise(0) for i in range(num_hashes)],
+        [F.when(F.col(f"a_s{i}") == F.col(f"b_s{i}"), 1).otherwise(0) for i in range(MINHASH_HASHES)],
     )
     return (
         pairs.join(sa, "a_id")
         .join(sb, "b_id")
-        .select("a_id", "b_id", (matches / F.lit(float(num_hashes))).alias("est_similarity"))
+        .select("a_id", "b_id", (matches / F.lit(float(MINHASH_HASHES))).alias("est_similarity"))
     )
 
 
 def incremental_dedup_status(
     batch: DataFrame,
     corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = MINHASH_HASHES,
-    bands: int = LSH_BANDS,
     neardup_min: float = 0.5,
 ) -> DataFrame:
     """Incremental (batch-vs-corpus) dedup: classify every incoming
@@ -293,49 +268,49 @@ def incremental_dedup_status(
     persisted once per snapshot and only the batch side is computed
     fresh, so per-refresh cost is proportional to the batch, not the
     corpus. No stage is ever all-pairs."""
-    bh = batch.select(id_col, content_hash(F.col(text_col)).alias("h"))
-    ch = corpus.select(content_hash(F.col(text_col)).alias("h")).distinct()
+    bh = batch.select("doc_id", content_hash(F.col("text")).alias("h"))
+    ch = corpus.select(content_hash(F.col("text")).alias("h")).distinct()
     flags = (
         bh.join(ch.withColumn("in_corpus", F.lit(True)), "h", "left")
         .withColumn("in_corpus", F.coalesce("in_corpus", F.lit(False)))
-        .withColumn("canon", F.min(id_col).over(Window.partitionBy("h")))
+        .withColumn("canon", F.min("doc_id").over(Window.partitionBy("h")))
     )
-    survivors = flags.filter(~F.col("in_corpus") & (F.col(id_col) == F.col("canon"))).select(id_col)
-    bsig = minhash_signatures(batch.join(survivors, id_col), id_col, text_col, num_hashes)
-    csig = minhash_signatures(corpus, id_col, text_col, num_hashes)
-    bband = lsh_band_keys(bsig, id_col, num_hashes, bands)
-    cband = lsh_band_keys(csig, id_col, num_hashes, bands)
+    survivors = flags.filter(~F.col("in_corpus") & (F.col("doc_id") == F.col("canon"))).select("doc_id")
+    bsig = minhash_signatures(batch.join(survivors, "doc_id"))
+    csig = minhash_signatures(corpus)
+    bband = lsh_band_keys(bsig)
+    cband = lsh_band_keys(csig)
     cand = (
         bband.alias("a")
         .join(
             cband.alias("b"),
             (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket")),
         )
-        .select(F.col(f"a.{id_col}").alias("b_id"), F.col(f"b.{id_col}").alias("c_id"))
+        .select(F.col("a.doc_id").alias("b_id"), F.col("b.doc_id").alias("c_id"))
         .distinct()
     )
     sa = bsig.select(
-        F.col(id_col).alias("b_id"), *[F.col(f"s{i}").alias(f"a_s{i}") for i in range(num_hashes)]
+        F.col("doc_id").alias("b_id"), *[F.col(f"s{i}").alias(f"a_s{i}") for i in range(MINHASH_HASHES)]
     )
     sb = csig.select(
-        F.col(id_col).alias("c_id"), *[F.col(f"s{i}").alias(f"b_s{i}") for i in range(num_hashes)]
+        F.col("doc_id").alias("c_id"), *[F.col(f"s{i}").alias(f"b_s{i}") for i in range(MINHASH_HASHES)]
     )
     matches = reduce(
         add,
-        [F.when(F.col(f"a_s{i}") == F.col(f"b_s{i}"), 1).otherwise(0) for i in range(num_hashes)],
+        [F.when(F.col(f"a_s{i}") == F.col(f"b_s{i}"), 1).otherwise(0) for i in range(MINHASH_HASHES)],
     )
     near = (
         cand.join(sa, "b_id")
         .join(sb, "c_id")
-        .filter(matches / F.lit(float(num_hashes)) >= neardup_min)
-        .select(F.col("b_id").alias(id_col))
+        .filter(matches / F.lit(float(MINHASH_HASHES)) >= neardup_min)
+        .select(F.col("b_id").alias("doc_id"))
         .distinct()
         .withColumn("is_near", F.lit(True))
     )
-    return flags.join(near, id_col, "left").select(
-        id_col,
+    return flags.join(near, "doc_id", "left").select(
+        "doc_id",
         F.when(F.col("in_corpus"), "exact_dup_corpus")
-        .when(F.col(id_col) != F.col("canon"), "exact_dup_batch")
+        .when(F.col("doc_id") != F.col("canon"), "exact_dup_batch")
         .when(F.coalesce("is_near", F.lit(False)), "neardup_corpus")
         .otherwise("kept")
         .alias("status"),
@@ -345,15 +320,10 @@ def incremental_dedup_status(
 OPH_BINS = 16  # one permutation, 16 bins -> same 4x4 banding as MinHash(16)
 
 
-def oph_minhash_bins(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bins: int = OPH_BINS,
-) -> DataFrame:
+def oph_minhash_bins(docs: DataFrame) -> DataFrame:
     """One-Permutation Hashing signature (Li/Owen/Zhang, NIPS 2012) as
     dense ``(id, bin, sig)`` rows: each distinct shingle is hashed
-    ONCE, the hash space is cut into ``n_bins`` bins, and the
+    ONCE, the hash space is cut into ``OPH_BINS`` bins, and the
     signature is the per-bin minimum — k-permutation MinHash's
     accuracy at 1/k of the hash compute. The k-hash variant
     (minhash_signatures) evaluates k md5s per shingle, and the sf10
@@ -370,29 +340,29 @@ def oph_minhash_bins(
     Scale shape: one explode + hash per distinct shingle, one
     (id, bin) hash agg with map-side combine, one per-doc window over
     16-row partitions. Every stage is keyed — no pairwise anything."""
-    sets = _shingle_sets(docs, id_col, text_col, T.SHINGLE_WORDS)
+    sets = _shingle_sets(docs)
     mins = (
-        sets.select(id_col, F.explode("shingles").alias("sh"))
-        .select(id_col, F.md5(F.concat(F.lit("oph:"), F.col("sh"))).alias("h"))
+        sets.select("doc_id", F.explode("shingles").alias("sh"))
+        .select("doc_id", F.md5(F.concat(F.lit("oph:"), F.col("sh"))).alias("h"))
         .select(
-            id_col,
-            (F.conv(F.substring("h", 1, 4), 16, 10).cast("int") % n_bins).alias("bin"),
+            "doc_id",
+            (F.conv(F.substring("h", 1, 4), 16, 10).cast("int") % OPH_BINS).alias("bin"),
             "h",
         )
-        .groupBy(id_col, "bin")
+        .groupBy("doc_id", "bin")
         .agg(F.min("h").alias("m"))
     )
     dense = sets.select(
-        id_col, F.explode(F.sequence(F.lit(0), F.lit(n_bins - 1))).alias("bin")
-    ).join(mins, [id_col, "bin"], "left")
-    fwd = Window.partitionBy(id_col).orderBy("bin").rowsBetween(
+        "doc_id", F.explode(F.sequence(F.lit(0), F.lit(OPH_BINS - 1))).alias("bin")
+    ).join(mins, ["doc_id", "bin"], "left")
+    fwd = Window.partitionBy("doc_id").orderBy("bin").rowsBetween(
         Window.currentRow, Window.unboundedFollowing
     )
-    wrap = Window.partitionBy(id_col).orderBy("bin").rowsBetween(
+    wrap = Window.partitionBy("doc_id").orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     return dense.select(
-        id_col,
+        "doc_id",
         "bin",
         F.coalesce(
             F.first("m", ignorenulls=True).over(fwd),
@@ -401,12 +371,7 @@ def oph_minhash_bins(
     )
 
 
-def oph_lsh_pairs(
-    bins_df: DataFrame,
-    id_col: str = "doc_id",
-    n_bins: int = OPH_BINS,
-    bands: int = LSH_BANDS,
-) -> DataFrame:
+def oph_lsh_pairs(bins_df: DataFrame) -> DataFrame:
     """LSH candidate pairs over OPH signatures: band = ``r`` adjacent
     bins hashed to one bucket key, candidates equi-join on
     (band, bucket), each pair scored by the fraction of agreeing bins
@@ -414,10 +379,10 @@ def oph_lsh_pairs(
     bin's min is a uniform min-hash of the set restricted to that
     partition of hash space). Same S-curve 1-(1-j^r)^b as the k-hash
     banding."""
-    r = n_bins // bands
+    r = OPH_BINS // LSH_BANDS
     banded = (
-        bins_df.select(id_col, (F.col("bin") / r).cast("int").alias("band"), "bin", "sig")
-        .groupBy(id_col, "band")
+        bins_df.select("doc_id", (F.col("bin") / r).cast("int").alias("band"), "bin", "sig")
+        .groupBy("doc_id", "band")
         .agg(
             F.md5(
                 F.array_join(
@@ -436,13 +401,13 @@ def oph_lsh_pairs(
             b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
+        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .distinct()
     )
-    sa = bins_df.select(F.col(id_col).alias("a_id"), "bin", F.col("sig").alias("a_sig"))
-    sb = bins_df.select(F.col(id_col).alias("b_id"), "bin", F.col("sig").alias("b_sig"))
+    sa = bins_df.select(F.col("doc_id").alias("a_id"), "bin", F.col("sig").alias("a_sig"))
+    sb = bins_df.select(F.col("doc_id").alias("b_id"), "bin", F.col("sig").alias("b_sig"))
     return (
         pairs.join(sa, "a_id")
         .join(sb, ["b_id", "bin"])
@@ -450,13 +415,13 @@ def oph_lsh_pairs(
         .agg(
             (
                 F.sum(F.when(F.col("a_sig") == F.col("b_sig"), 1).otherwise(0))
-                / F.lit(float(n_bins))
+                / F.lit(float(OPH_BINS))
             ).alias("est_similarity")
         )
     )
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """Per-doc 64-bit SimHash over whitespace tokens (with
     multiplicity): md5 each token once, aggregate per-bit sums in ONE
     hash aggregation (map-side partial combine applies), then assemble
@@ -474,11 +439,11 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     range; Hamming distance via xor+bit_count is sign-agnostic. The
     explode+agg formulation keeps work proportional to total tokens
     and parallel by (doc, token)."""
-    toks = docs.select(id_col, F.explode(T.tokens(F.col(text_col))).alias("tok")).select(
-        id_col, F.md5("tok").alias("h")
+    toks = docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("tok")).select(
+        "doc_id", F.md5("tok").alias("h")
     )
     ints = toks.select(
-        id_col,
+        "doc_id",
         *[
             F.conv(F.substring("h", 8 * k + 1, 8), 16, 10).cast("long").alias(f"v{k}")
             for k in range(T.SIMHASH_BITS // 32)
@@ -497,7 +462,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
             return F.lit(-9223372036854775807) - F.lit(1)
         return F.lit(1 << b)
 
-    sums = ints.groupBy(id_col).agg(
+    sums = ints.groupBy("doc_id").agg(
         F.count("*").alias("n"),
         *[F.sum(bit(b)).alias(f"c{b}") for b in range(T.SIMHASH_BITS)],
     )
@@ -508,7 +473,7 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
             for b in range(T.SIMHASH_BITS)
         ],
     )
-    return sums.select(id_col, value.cast("long").alias("simhash"))
+    return sums.select("doc_id", value.cast("long").alias("simhash"))
 
 
 def _simhash_block(c: Column, i: int) -> Column:
@@ -519,9 +484,7 @@ def _simhash_block(c: Column, i: int) -> Column:
     )
 
 
-def simhash_neardup_pairs(
-    sim: DataFrame, id_col: str = "doc_id", max_hamming: int = 3
-) -> DataFrame:
+def simhash_neardup_pairs(sim: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs via Manku block combinations: split the
     64-bit hash into 6 blocks; a pair within Hamming distance
     ``max_hamming`` agrees on at least ``6 - max_hamming`` whole blocks
@@ -542,7 +505,7 @@ def simhash_neardup_pairs(
     # 17.6 -> 5.1 s on image_dedup_clusters at sf0.01. The persisted
     # proxy is (id, simhash): 16 bytes/row at ANY corpus scale, the
     # canonical fingerprints-only intermediate.
-    sim = session_cache(sim.select(id_col, "simhash"))
+    sim = session_cache(sim.select("doc_id", "simhash"))
     combos = list(combinations(range(SIMHASH_BLOCKS), SIMHASH_BLOCKS - max_hamming))
     pack_shift = max(SIMHASH_BLOCK_SIZES)
     blocks = [
@@ -558,8 +521,8 @@ def simhash_neardup_pairs(
         )
         for p, combo in enumerate(combos)
     ]
-    blocked = sim.select(id_col, "simhash", F.explode(F.array(*blocks)).alias("blk")).select(
-        id_col, "simhash", F.col("blk.pos").alias("pos"), F.col("blk.key").alias("key")
+    blocked = sim.select("doc_id", "simhash", F.explode(F.array(*blocks)).alias("blk")).select(
+        "doc_id", "simhash", F.col("blk.pos").alias("pos"), F.col("blk.key").alias("key")
     )
     a, b = blocked.alias("a"), blocked.alias("b")
     pairs = (
@@ -567,11 +530,11 @@ def simhash_neardup_pairs(
             b,
             (F.col("a.pos") == F.col("b.pos"))
             & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("a_id"),
-            F.col(f"b.{id_col}").alias("b_id"),
+            F.col("a.doc_id").alias("a_id"),
+            F.col("b.doc_id").alias("b_id"),
             F.col("a.simhash").alias("a_sim"),
             F.col("b.simhash").alias("b_sim"),
         )
@@ -586,8 +549,6 @@ def simhash_neardup_pairs(
 
 def connected_components(
     edges: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
     nodes: DataFrame | None = None,
     node_col: str | None = None,
     max_iter: int = 25,
@@ -629,8 +590,8 @@ def connected_components(
     # fresh edge shuffle every round. Loop-invariant with a flat plan, so
     # the pin() cache-manager caveat for per-round state does not apply.
     sym = (
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
+        .unionByName(edges.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
         .distinct()
         .repartition("src")
     )
@@ -674,9 +635,6 @@ def connected_components(
 
 def prefix_filter_jaccard_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    w: int = T.SHINGLE_WORDS,
     threshold_num: int = 4,
     threshold_den: int = 5,
 ) -> DataFrame:
@@ -709,30 +667,30 @@ def prefix_filter_jaccard_pairs(
     IEEE doubles vs DuckDB decimals). The final jaccard filter uses
     the same rounded-value comparison as shingle_jaccard_pairs."""
     threshold = threshold_num / threshold_den
-    sets = session_cache(_shingle_sets(docs, id_col, text_col, w))
-    sizes = sets.select(id_col, F.size("shingles").alias("n"))
-    inv = sets.select(id_col, F.explode("shingles").alias("tok")).select(
-        id_col, F.col("tok"), F.xxhash64("tok").alias("s")
+    sets = session_cache(_shingle_sets(docs))
+    sizes = sets.select("doc_id", F.size("shingles").alias("n"))
+    inv = sets.select("doc_id", F.explode("shingles").alias("tok")).select(
+        "doc_id", F.col("tok"), F.xxhash64("tok").alias("s")
     )
     dfreq = inv.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    order = Window.partitionBy(id_col).orderBy("df", "s")
+    order = Window.partitionBy("doc_id").orderBy("df", "s")
     alpha = F.expr(f"({threshold_num} * n + {threshold_den - 1}) DIV {threshold_den}")
     prefix = (
         inv.join(dfreq, "s")
         .withColumn("rn", F.row_number().over(order))
-        .join(sizes, id_col)
+        .join(sizes, "doc_id")
         .filter(F.col("rn") <= F.col("n") - alpha + F.lit(1))
-        .select(id_col, "s")
+        .select("doc_id", "s")
     )
     a = prefix.alias("a")
     b = prefix.alias("b")
     cand = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("a_id"), F.col(f"b.{id_col}").alias("b_id"))
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
         .distinct()
     )
-    sa = sets.select(F.col(id_col).alias("a_id"), F.col("shingles").alias("sha"))
-    sb = sets.select(F.col(id_col).alias("b_id"), F.col("shingles").alias("shb"))
+    sa = sets.select(F.col("doc_id").alias("a_id"), F.col("shingles").alias("sha"))
+    sb = sets.select(F.col("doc_id").alias("b_id"), F.col("shingles").alias("shb"))
     verified = (
         cand.join(sa, "a_id")
         .join(sb, "b_id")

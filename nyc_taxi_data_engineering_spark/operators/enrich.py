@@ -34,12 +34,12 @@ def role_play(dim: DataFrame, dim_key: str, prefix: str, carry: tuple[str, ...])
     )
 
 
-def enrich_with_dims(fact: DataFrame, specs: list[DimSpec], how: str = "left") -> DataFrame:
+def enrich_with_dims(fact: DataFrame, specs: list[DimSpec]) -> DataFrame:
     """Left-join each role-played dim (broadcast)."""
     out = fact
     for s in specs:
         rp = role_play(s.dim, s.dim_key, s.prefix, s.carry)
-        out = out.join(F.broadcast(rp), on=out[s.fact_key] == rp[s.dim_key], how=how).drop(
+        out = out.join(F.broadcast(rp), on=out[s.fact_key] == rp[s.dim_key], how="left").drop(
             rp[s.dim_key]
         )
     return out

@@ -38,28 +38,23 @@ SPAN_K = 32  # window width: spans shorter than this are not reported
 SPAN_MIN_DOCS = 2  # a gram must appear in >= this many distinct docs
 
 
-def crossdoc_repeated_spans(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = SPAN_K,
-    min_docs: int = SPAN_MIN_DOCS,
-) -> DataFrame:
-    """Maximal character spans (>= k chars) appearing verbatim in
-    >= min_docs distinct documents: one row per (doc, span) with the
+def crossdoc_repeated_spans(docs: DataFrame) -> DataFrame:
+    """Maximal character spans (>= SPAN_K chars) appearing verbatim in
+    >= SPAN_MIN_DOCS distinct documents: one row per (doc, span) with the
     0-based start offset, length, number of k-gram windows merged, and
     the md5 of the span text (the cross-engine-checkable identity of
     the duplicated content)."""
-    base = docs.select("doc_id", F.col(text_col).alias("text")).filter(
-        F.length("text") >= k
+    base = docs.select("doc_id", "text").filter(
+        F.length("text") >= SPAN_K
     )
     grams = base.select(
         "doc_id",
-        F.explode(F.sequence(F.lit(0), F.length("text") - k)).alias("p"),
+        F.explode(F.sequence(F.lit(0), F.length("text") - SPAN_K)).alias("p"),
         "text",
-    ).select("doc_id", "p", F.expr(f"substring(text, p + 1, {k})").alias("gram"))
+    ).select("doc_id", "p", F.expr(f"substring(text, p + 1, {SPAN_K})").alias("gram"))
 
     # Two-level dup filter: the corpus-wide shuffle carries an 8-byte
-    # xxhash64 key instead of the k-char gram (~3x lighter at 100 TB);
+    # xxhash64 key instead of the SPAN_K-char gram (~3x lighter at 100 TB);
     # hash collisions can only ADD candidates, and the exact regroup on
     # the (tiny) surviving subset removes them — output is identical to
     # a direct group-by-gram, collision or not.
@@ -67,14 +62,14 @@ def crossdoc_repeated_spans(
     cand = (
         hashed.groupBy("gh")
         .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .filter(F.col("nd") >= SPAN_MIN_DOCS)
         .select("gh")
     )
     survivors = hashed.join(cand, "gh").select("doc_id", "p", "gram")
     dup = (
         survivors.groupBy("gram")
         .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .filter(F.col("nd") >= SPAN_MIN_DOCS)
         .select("gram")
     )
     hits = survivors.join(dup, "gram").select("doc_id", "p")
@@ -83,34 +78,32 @@ def crossdoc_repeated_spans(
     isl = hits.withColumn("grp", F.col("p") - F.row_number().over(w))
     spans = isl.groupBy("doc_id", "grp").agg(
         F.min("p").alias("span_start"),
-        (F.max("p") - F.min("p") + k).alias("span_len"),
+        (F.max("p") - F.min("p") + SPAN_K).alias("span_len"),
         F.count("*").alias("n_grams"),
     )
     return (
-        spans.join(docs.select("doc_id", text_col), "doc_id")
+        spans.join(docs.select("doc_id", "text"), "doc_id")
         .select(
             "doc_id",
             F.col("span_start").cast("int").alias("span_start"),
             F.col("span_len").cast("int").alias("span_len"),
             "n_grams",
-            F.md5(F.expr(f"substring({text_col}, span_start + 1, span_len)")).alias(
+            F.md5(F.expr("substring(text, span_start + 1, span_len)")).alias(
                 "span_md5"
             ),
         )
     )
 
 
-def crossdoc_repeated_spans_sql(
-    k: int = SPAN_K, min_docs: int = SPAN_MIN_DOCS
-) -> str:
+def crossdoc_repeated_spans_sql() -> str:
     """DuckDB twin: same windows, same island merge, same md5."""
     return f"""
 WITH pos AS (
-    SELECT doc_id, text, unnest(range(0, length(text) - {k} + 1)) AS p
-    FROM documents WHERE length(text) >= {k}
+    SELECT doc_id, text, unnest(range(0, length(text) - {SPAN_K} + 1)) AS p
+    FROM documents WHERE length(text) >= {SPAN_K}
 ),
-g AS (SELECT doc_id, p, substr(text, CAST(p AS INT) + 1, {k}) AS gram FROM pos),
-dup AS (SELECT gram FROM g GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= {min_docs}),
+g AS (SELECT doc_id, p, substr(text, CAST(p AS INT) + 1, {SPAN_K}) AS gram FROM pos),
+dup AS (SELECT gram FROM g GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= {SPAN_MIN_DOCS}),
 hits AS (SELECT g.doc_id, g.p FROM g JOIN dup USING (gram)),
 isl AS (
     SELECT doc_id, p,
@@ -118,7 +111,7 @@ isl AS (
     FROM hits
 ),
 spans AS (
-    SELECT doc_id, MIN(p) AS s, MAX(p) - MIN(p) + {k} AS span_len, COUNT(*) AS n_grams
+    SELECT doc_id, MIN(p) AS s, MAX(p) - MIN(p) + {SPAN_K} AS span_len, COUNT(*) AS n_grams
     FROM isl GROUP BY doc_id, grp
 )
 SELECT s.doc_id,
@@ -130,12 +123,7 @@ FROM spans s JOIN documents d USING (doc_id)
 """
 
 
-def crossdoc_span_scrub(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = SPAN_K,
-    min_docs: int = SPAN_MIN_DOCS,
-) -> DataFrame:
+def crossdoc_span_scrub(docs: DataFrame) -> DataFrame:
     """ExactSubstr REMEDIATION (Lee et al. 2022 §3.2): for every
     duplicated span, one canonical document keeps it (min doc_id over
     the span's content hash) and every other holder has the span CUT
@@ -151,7 +139,7 @@ def crossdoc_span_scrub(
     DIFFERENT gram islands can overlap char-wise (islands are disjoint
     in *positions*, but each extends k-1 chars past its last position),
     hence the explicit interval-merge step before cutting."""
-    spans = crossdoc_repeated_spans(docs, text_col=text_col, k=k, min_docs=min_docs)
+    spans = crossdoc_repeated_spans(docs)
     # the span table feeds three consumers (keeper choice, cut list,
     # stats) — cache it so the corpus-wide detection pipeline runs once
     # (tiny: one row per duplicated span; at corpus scale swap for
@@ -194,7 +182,7 @@ def crossdoc_span_scrub(
         F.coalesce(F.lag("e").over(w_lag), F.lit(0)).alias("gs"),
         F.col("s").alias("ge"),
     )
-    doc_txt = docs.select("doc_id", F.col(text_col).alias("text"))
+    doc_txt = docs.select("doc_id", "text")
     tail = (
         merged.groupBy("doc_id")
         .agg(F.max("e").alias("gs"))
@@ -245,16 +233,16 @@ def crossdoc_span_scrub(
     return out
 
 
-def crossdoc_span_scrub_sql(k: int = SPAN_K, min_docs: int = SPAN_MIN_DOCS) -> str:
+def crossdoc_span_scrub_sql() -> str:
     """DuckDB twin: same spans, same keeper choice, same interval
     merge, same lag-complement rebuild."""
     return f"""
 WITH pos AS (
-    SELECT doc_id, text, unnest(range(0, length(text) - {k} + 1)) AS p
-    FROM documents WHERE length(text) >= {k}
+    SELECT doc_id, text, unnest(range(0, length(text) - {SPAN_K} + 1)) AS p
+    FROM documents WHERE length(text) >= {SPAN_K}
 ),
-g AS (SELECT doc_id, p, substr(text, CAST(p AS INT) + 1, {k}) AS gram FROM pos),
-dup AS (SELECT gram FROM g GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= {min_docs}),
+g AS (SELECT doc_id, p, substr(text, CAST(p AS INT) + 1, {SPAN_K}) AS gram FROM pos),
+dup AS (SELECT gram FROM g GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= {SPAN_MIN_DOCS}),
 hits AS (SELECT g.doc_id, g.p FROM g JOIN dup USING (gram)),
 isl AS (
     SELECT doc_id, p,
@@ -262,7 +250,7 @@ isl AS (
     FROM hits
 ),
 spans AS (
-    SELECT doc_id, MIN(p) AS s, MAX(p) + {k} AS e
+    SELECT doc_id, MIN(p) AS s, MAX(p) + {SPAN_K} AS e
     FROM isl GROUP BY doc_id, grp
 ),
 sp AS (

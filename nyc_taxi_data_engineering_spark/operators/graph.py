@@ -50,11 +50,10 @@ _SCALE = 12  # dp kept per contribution / rank
 
 def pagerank(
     edges: DataFrame,
-    iters: int = PAGERANK_ITERS,
     weight: str | None = None,
     personalize=None,
 ) -> DataFrame:
-    """(node, rank) after ``iters`` rounds from a uniform start over
+    """(node, rank) after ``PAGERANK_ITERS`` rounds from a uniform start over
     the distinct nodes of ``edges`` (src, dst[, weight]) — nodes that
     only appear as a ``dst`` (sinks) are ranked too, their mass
     redistributed uniformly each round (the standard dangling-mass
@@ -161,7 +160,7 @@ def pagerank(
             )
         )
 
-    return iterate(ranks, rank_round, iters)
+    return iterate(ranks, rank_round, PAGERANK_ITERS)
 
 
 _CTE_HEADER_RE = None
@@ -202,7 +201,6 @@ def materialize_ctes(sql: str) -> str:
 
 def pagerank_sql(
     edges_cte: str,
-    iters: int = PAGERANK_ITERS,
     weighted: bool = False,
     personalize_literal: str | None = None,
 ) -> str:
@@ -236,7 +234,7 @@ def pagerank_sql(
         "outdeg AS (SELECT src, SUM(w) AS strength FROM we GROUP BY src)",
         r0,
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, PAGERANK_ITERS + 1):
         parts.append(
             f"""c{i} AS (
     SELECT e.dst AS node,
@@ -278,7 +276,7 @@ def pagerank_sql(
       ON s.node = n.node
 )"""
         )
-    return materialize_ctes("WITH " + ",\n".join(parts) + f"\nSELECT node, rank FROM r{iters}")
+    return materialize_ctes("WITH " + ",\n".join(parts) + f"\nSELECT node, rank FROM r{PAGERANK_ITERS}")
 
 
 # ---------------------------------------------------------------------------
@@ -465,8 +463,8 @@ SELECT node, CAST(MIN(hops) AS INT) AS hops FROM walk GROUP BY node"""
 LPA_ITERS = 3
 
 
-def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
-    """(node, community) after ``iters`` rounds of synchronous label
+def label_propagation(edges: DataFrame) -> DataFrame:
+    """(node, community) after ``LPA_ITERS`` rounds of synchronous label
     propagation over an UNDIRECTED simple edge list (a, b) — the
     community-detection workhorse (Raghavan et al. 2007) in the same
     keyed-join/agg formulation as PageRank. Labels start as the node's
@@ -474,7 +472,7 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
     its neighbors, ties broken by the SMALLEST label — integer counts
     and an integer tie-break, so the fixed round count is bit-exactly
     replayable (synchronous LPA can oscillate on bipartite structures;
-    a fixed ``iters`` makes that a non-issue for determinism).
+    a fixed ``LPA_ITERS`` makes that a non-issue for determinism).
 
     Labels must be integers (node ids): the per-node argmax folds into
     ONE hash aggregate via ``max(struct(cnt, -label))`` — partial
@@ -513,12 +511,12 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
         )
 
     labels = sym.select("node").distinct().select("node", F.col("node").alias("label"))
-    return iterate(labels, vote, iters).select("node", F.col("label").alias("community"))
+    return iterate(labels, vote, LPA_ITERS).select("node", F.col("label").alias("community"))
 
 
-def lpa_ctes(iters: int = LPA_ITERS) -> str:
+def lpa_ctes() -> str:
     """The LPA rounds as a reusable CTE-list fragment (no WITH, no
-    final SELECT): defines ``sym`` and ``l0``..``l{iters}`` on top of
+    final SELECT): defines ``sym`` and ``l0``..``l{LPA_ITERS}`` on top of
     a CTE named ``edges`` the caller must have defined with integer
     columns (a, b). ``label_propagation_sql`` and the modularity
     oracle both build on this so the round semantics can never drift
@@ -528,7 +526,7 @@ def lpa_ctes(iters: int = LPA_ITERS) -> str:
         "UNION ALL SELECT b AS node, a AS nbr FROM edges)",
         "l0 AS (SELECT DISTINCT node, node AS label FROM sym)",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, LPA_ITERS + 1):
         parts.append(
             f"""c{i} AS (
   SELECT s.node, l.label, COUNT(*) AS cnt
@@ -548,7 +546,7 @@ def lpa_ctes(iters: int = LPA_ITERS) -> str:
     return ",\n".join(parts)
 
 
-def label_propagation_sql(edges_cte: str, iters: int = LPA_ITERS) -> str:
+def label_propagation_sql(edges_cte: str) -> str:
     """DuckDB twin: the same synchronous rounds as nested CTEs, the
     argmax expressed as the row_number window it replaces (highest
     count, then smallest label — identical tie order). ``edges_cte``
@@ -557,8 +555,8 @@ def label_propagation_sql(edges_cte: str, iters: int = LPA_ITERS) -> str:
         "WITH "
         + edges_cte
         + ",\n"
-        + lpa_ctes(iters)
-        + f"\nSELECT node, label AS community FROM l{iters}"
+        + lpa_ctes()
+        + f"\nSELECT node, label AS community FROM l{LPA_ITERS}"
     )
 
 
@@ -725,8 +723,8 @@ SELECT node, MIN(cost) AS cost FROM walk GROUP BY node"""
 HITS_ITERS = 3
 
 
-def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
-    """(node, hub, auth) after ``iters`` rounds of Kleinberg's HITS
+def hits(edges: DataFrame) -> DataFrame:
+    """(node, hub, auth) after ``HITS_ITERS`` rounds of Kleinberg's HITS
     over directed edges (src, dst) — hubs score by pointing at good
     authorities, authorities by being pointed at by good hubs. The
     natural fit for bipartite interaction graphs (customer→supplier,
@@ -815,10 +813,10 @@ def hits(edges: DataFrame, iters: int = HITS_ITERS) -> DataFrame:
     scores = nodes.select(
         "node", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
     )
-    return iterate(scores, hits_round, iters).select("node", "hub", "auth")
+    return iterate(scores, hits_round, HITS_ITERS).select("node", "hub", "auth")
 
 
-def hits_sql(edges_cte: str, iters: int = HITS_ITERS) -> str:
+def hits_sql(edges_cte: str) -> str:
     """DuckDB twin of :func:`hits`: the same rounds as nested CTEs,
     term-for-term — 12-dp rounded DECIMAL(28,12) transfer sums, exact
     L1 norms, double divisions re-rounded to the grid. ``edges_cte``
@@ -831,7 +829,7 @@ def hits_sql(edges_cte: str, iters: int = HITS_ITERS) -> str:
         "s0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS hub, "
         "CAST(1.0 AS DOUBLE) AS auth FROM nodes)",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, HITS_ITERS + 1):
         p = i - 1
         parts.append(
             f"""ain{i} AS (
@@ -870,7 +868,7 @@ def hits_sql(edges_cte: str, iters: int = HITS_ITERS) -> str:
     JOIN auth{i} a ON a.node = n.node
 )"""
         )
-    return materialize_ctes("WITH " + ",\n".join(parts) + f"\nSELECT node, hub, auth FROM s{iters}")
+    return materialize_ctes("WITH " + ",\n".join(parts) + f"\nSELECT node, hub, auth FROM s{HITS_ITERS}")
 
 
 # ---------------------------------------------------------------------------
@@ -951,10 +949,10 @@ GROUP BY node"""
 # Link prediction (common neighbors / Jaccard / preferential attachment)
 # ---------------------------------------------------------------------------
 
-def link_predictions(edges: DataFrame, topk: int, min_common: int = 1) -> DataFrame:
+def link_predictions(edges: DataFrame, topk: int) -> DataFrame:
     """Top-``topk`` predicted links over an UNDIRECTED simple edge
     list (a, b), a < b, distinct: for every NON-adjacent pair with at
-    least ``min_common`` shared neighbors, the three classic
+    least one shared neighbor, the three classic
     neighborhood scores — common-neighbor count, Jaccard of the
     neighbor sets, preferential attachment deg(a)*deg(b) — ranked by
     (common desc, jaccard desc, pair). Jaccard divides two exact
@@ -979,7 +977,6 @@ def link_predictions(edges: DataFrame, topk: int, min_common: int = 1) -> DataFr
         .filter(F.col("u") < F.col("v"))
         .groupBy(F.col("u").alias("a"), F.col("v").alias("b"))
         .agg(F.count(F.lit(1)).alias("common_neighbors"))
-        .filter(F.col("common_neighbors") >= min_common)
         .join(e, ["a", "b"], "left_anti")
     )
     return (
@@ -1000,7 +997,7 @@ def link_predictions(edges: DataFrame, topk: int, min_common: int = 1) -> DataFr
     )
 
 
-def link_predictions_sql(edges_select: str, topk: int, min_common: int = 1) -> str:
+def link_predictions_sql(edges_select: str, topk: int) -> str:
     """DuckDB twin of :func:`link_predictions`."""
     return materialize_ctes(f"""
 WITH e AS (SELECT a, b FROM ({edges_select})),
@@ -1010,7 +1007,6 @@ cand AS (
   SELECT l.b AS a, r.b AS b, COUNT(*) AS common_neighbors
   FROM sym l JOIN sym r ON l.a = r.a AND l.b < r.b
   GROUP BY l.b, r.b
-  HAVING COUNT(*) >= {min_common}
 ),
 new_pairs AS (
   SELECT c.* FROM cand c

@@ -28,7 +28,6 @@ def ri_gate(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    broadcast_dim: bool = True,
 ) -> RIGateResult:
     """Split fact into FK-satisfying rows vs orphans.
 
@@ -37,17 +36,13 @@ def ri_gate(
     (Glue Job.py:48-52) while keeping identical semantics on unique
     dims. Both sides broadcast the same projected dim.
     """
-    keys = dim.select(F.col(dim_key).alias(fact_key)).distinct()
-    if broadcast_dim:
-        keys = F.broadcast(keys)
+    keys = F.broadcast(dim.select(F.col(dim_key).alias(fact_key)).distinct())
     kept = fact.join(keys, on=fact_key, how="left_semi")
     orphans = fact.join(keys, on=fact_key, how="left_anti")
     return RIGateResult(kept=kept, orphans=orphans)
 
 
-def fk_null_audit(
-    fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str
-) -> DataFrame:
+def fk_null_audit(fact: DataFrame, dim: DataFrame, fact_key: str, dim_key: str) -> DataFrame:
     """Count of fact rows with no dim match (reference J5:
     sql/quality_checks/qc_vendor_fk.sql:26-30), as a 1-row DataFrame."""
     orphans = ri_gate(fact, dim, fact_key, dim_key).orphans

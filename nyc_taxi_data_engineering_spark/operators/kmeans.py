@@ -21,7 +21,7 @@ Determinism contract (what makes an exact DuckDB oracle possible):
 
 Scale shape per iteration: one broadcast crossJoin (k rows) + one
 hash agg (assignment) + one posexplode hash agg (update). Rounds run
-through ``operators.iterate``; ``iters`` is small and fixed, the Lloyd
+through ``operators.iterate``; ``KMEANS_ITERS`` is small and fixed, the Lloyd
 norm for production quantizer training. An empty cluster simply drops
 out of the next round's codebook (documented Lloyd behavior, identical
 in the oracle).
@@ -45,8 +45,8 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def seed_centroids(corpus: DataFrame, k: int = KMEANS_K) -> DataFrame:
-    """The k smallest-id vectors as (c_id, cv) — c_id re-numbered
+def seed_centroids(corpus: DataFrame) -> DataFrame:
+    """The ``KMEANS_K`` smallest-id vectors as (c_id, cv) — c_id re-numbered
     0..k-1 by id order so cluster ids are dense and stable.
 
     The id→c_id map is a control-plane collect of the k seed ids
@@ -55,7 +55,7 @@ def seed_centroids(corpus: DataFrame, k: int = KMEANS_K) -> DataFrame:
     was re-evaluated on every kmeans iteration — no repeated
     recompute either. Values identical to the windowed form (dense
     rank by vec_id order)."""
-    ids = [r[0] for r in corpus.select("vec_id").orderBy("vec_id").limit(k).collect()]
+    ids = [r[0] for r in corpus.select("vec_id").orderBy("vec_id").limit(KMEANS_K).collect()]
     if not ids:
         return corpus.select(
             F.lit(0).cast("int").alias("c_id"), F.col("v").alias("cv")
@@ -110,20 +110,18 @@ def update_centroids(corpus: DataFrame, assign: DataFrame) -> DataFrame:
     )
 
 
-def lloyd_kmeans(
-    corpus: DataFrame, k: int = KMEANS_K, iters: int = KMEANS_ITERS
-) -> tuple[DataFrame, DataFrame]:
-    """``iters`` Lloyd rounds from the deterministic seeds; returns
+def lloyd_kmeans(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``KMEANS_ITERS`` Lloyd rounds from the deterministic seeds; returns
     (assignments, centroids-long) where assignments is (vec_id, c_id)
     under the FINAL centroids and centroids-long is (c_id, pos, val).
     ``corpus`` must be (vec_id, v: array<double>); caching it is the
-    caller's choice (it feeds 2·iters consumers)."""
+    caller's choice (it feeds 2·KMEANS_ITERS consumers)."""
     from nyc_taxi_data_engineering_spark.operators import iterate, pin
 
     cent = iterate(
-        seed_centroids(corpus, k),
+        seed_centroids(corpus),
         lambda cent, _: update_centroids(corpus, assign_clusters(corpus, cent)),
-        iters,
+        KMEANS_ITERS,
     )
     # One closing assignment so the returned labels really are under the
     # FINAL centroids; it and the long form both read cent, so pin it once.

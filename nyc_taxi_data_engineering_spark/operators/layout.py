@@ -32,10 +32,10 @@ from pyspark.sql import functions as F
 Z_BITS = 16  # per-column resolution: 2^16 cells per dimension
 
 
-def _normalize_to_grid(col: Column, lo: Column, hi: Column, bits: int) -> Column:
-    """Map a numeric column onto the [0, 2^bits) integer grid by global
+def _normalize_to_grid(col: Column, lo: Column, hi: Column) -> Column:
+    """Map a numeric column onto the [0, 2^Z_BITS) integer grid by global
     min/max scaling (constant columns collapse to cell 0)."""
-    cells = (1 << bits) - 1
+    cells = (1 << Z_BITS) - 1
     span = (hi - lo).cast("double")
     frac = F.when(span > 0, (col.cast("double") - lo.cast("double")) / span).otherwise(
         F.lit(0.0)
@@ -43,24 +43,19 @@ def _normalize_to_grid(col: Column, lo: Column, hi: Column, bits: int) -> Column
     return F.least(F.floor(frac * cells).cast("long"), F.lit(cells))
 
 
-def zvalue(grid_cols: list[Column], bits: int = Z_BITS) -> Column:
+def zvalue(grid_cols: list[Column]) -> Column:
     """Morton code: interleave the bits of pre-gridded integer columns
     (col i contributes bit b to output bit b*n + i)."""
     n = len(grid_cols)
     z = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(Z_BITS):
         for i, g in enumerate(grid_cols):
             bit = F.shiftright(g, b).bitwiseAND(F.lit(1))
             z = z + F.shiftleft(bit, b * n + i)
     return z
 
 
-def zorder_cluster(
-    df: DataFrame,
-    cols: list[str],
-    n_files: int,
-    bits: int = Z_BITS,
-) -> DataFrame:
+def zorder_cluster(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
     """``df`` range-partitioned into ``n_files`` tasks by the Z-order
     of ``cols`` and sorted within each — every output file then covers
     a tight min/max range on EVERY clustered column, so any stats-aware
@@ -70,14 +65,9 @@ def zorder_cluster(
         *[f(c).alias(f"_{tag}_{c}") for c in cols for tag, f in (("lo", F.min), ("hi", F.max))]
     )
     with_bounds = df.crossJoin(F.broadcast(bounds))  # 1-row bounds side
-    grids = [
-        _normalize_to_grid(
-            F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), bits
-        )
-        for c in cols
-    ]
+    grids = [_normalize_to_grid(F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}")) for c in cols]
     return (
-        with_bounds.withColumn("_z", zvalue(grids, bits))
+        with_bounds.withColumn("_z", zvalue(grids))
         .drop(*[f"_{tag}_{c}" for c in cols for tag in ("lo", "hi")])
         .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
@@ -85,17 +75,11 @@ def zorder_cluster(
     )
 
 
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    n_files: int,
-    bits: int = Z_BITS,
-) -> None:
+def zorder_write(df: DataFrame, path: str, cols: list[str], n_files: int) -> None:
     """Cluster ``df`` by the Z-order of ``cols`` into ``n_files``
     roughly equal range partitions and write parquet. Readers filtering
     on ANY of ``cols`` skip most files via parquet min/max stats."""
-    zorder_cluster(df, cols, n_files, bits).write.mode("overwrite").parquet(path)
+    zorder_cluster(df, cols, n_files).write.mode("overwrite").parquet(path)
 
 
 def compact_parquet(
@@ -125,18 +109,18 @@ def compact_parquet(
     return n
 
 
-def hilbert_step(
-    df: DataFrame, b: int, bits: int, x: str = "_hx", y: str = "_hy", d: str = "_hd"
-) -> DataFrame:
+def hilbert_step(df: DataFrame, b: int, bits: int) -> DataFrame:
     """One bit-level of the Hilbert curve transform (classic xy2d:
-    quadrant digit + rotation/reflection), as a PROJECTION producing
-    fresh columns. Chained projections keep the expression tree linear
-    — inlining the step into one nested Column would duplicate x/y
-    three times per level (3^bits nodes). CollapseProject leaves the
+    quadrant digit + rotation/reflection) over ``_hx``/``_hy`` into
+    ``_hd``, as a PROJECTION producing fresh columns. Chained
+    projections keep the expression tree linear — inlining the step
+    into one nested Column would duplicate x/y three times per level
+    (3^bits nodes). CollapseProject leaves the
     chain alone because each alias is referenced more than once by
     non-cheap expressions."""
     s = 1 << b
     n1 = (1 << bits) - 1
+    x, y, d = "_hx", "_hy", "_hd"
     rx = F.shiftright(F.col(x), b).bitwiseAND(F.lit(1))
     ry = F.shiftright(F.col(y), b).bitwiseAND(F.lit(1))
     digit = (rx * 3).bitwiseXOR(ry)
@@ -151,29 +135,25 @@ def hilbert_step(
     return df.withColumns({d: new_d, x: new_x, y: new_y})
 
 
-def with_hilbert(
-    df: DataFrame, xcol: Column, ycol: Column, bits: int = Z_BITS, out: str = "_hd"
-) -> DataFrame:
+def with_hilbert(df: DataFrame, xcol: Column, ycol: Column, bits: int = Z_BITS) -> DataFrame:
     """Add the Hilbert-curve distance of two pre-gridded integer
-    columns as ``out``. Pure native bit arithmetic in codegen (no
+    columns as ``_hd``. Pure native bit arithmetic in codegen (no
     UDF); ``bits`` chained projections."""
     work = df.withColumns(
-        {"_hx": xcol.cast("long"), "_hy": ycol.cast("long"), out: F.lit(0).cast("long")}
+        {"_hx": xcol.cast("long"), "_hy": ycol.cast("long"), "_hd": F.lit(0).cast("long")}
     )
     for b in range(bits - 1, -1, -1):
-        work = hilbert_step(work, b, bits, d=out)
+        work = hilbert_step(work, b, bits)
     return work.drop("_hx", "_hy")
 
 
-def hilbert_cluster(
-    df: DataFrame, cols: list[str], n_files: int, bits: int = Z_BITS
-) -> DataFrame:
+def hilbert_cluster(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
     """Two-dimensional Hilbert clustering — same contract as
     :func:`zorder_cluster` but along the Hilbert curve, which never
     takes the Morton curve's long diagonal jumps: every unit step on
     the curve is a unit step in the grid, so file min/max boxes are
     tighter on average and stats-based skipping prunes at least as
-    well. Hilbert costs ``bits`` chained projections instead of
+    well. Hilbert costs ``Z_BITS`` chained projections instead of
     Morton's one, which only matters at write time."""
     if len(cols) != 2:
         raise ValueError("hilbert_cluster is 2-D; use zorder_cluster for other arities")
@@ -182,11 +162,10 @@ def hilbert_cluster(
     )
     with_bounds = df.crossJoin(F.broadcast(bounds))
     gx, gy = [
-        _normalize_to_grid(F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), bits)
-        for c in cols
+        _normalize_to_grid(F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}")) for c in cols
     ]
     return (
-        with_hilbert(with_bounds, gx, gy, bits)
+        with_hilbert(with_bounds, gx, gy)
         .drop(*[f"_{tag}_{c}" for c in cols for tag in ("lo", "hi")])
         .repartitionByRange(n_files, "_hd")
         .sortWithinPartitions("_hd")

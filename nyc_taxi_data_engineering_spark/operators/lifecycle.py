@@ -2,7 +2,8 @@
 lifecycle_management.py:105-268).
 
 States PROPOSED → ACTIVE → DEPRECATED → RETIRED with guarded
-transitions; invalid transitions raise. The reference mutates a pandas
+transitions: a row whose state may not move to the target is left
+as it is, and an unknown target state raises. The reference mutates a pandas
 frame row-by-row; here a transition is one vectorized conditional
 update over the master DataFrame plus append-only history / change-log
 rows (reference T2) — no driver-side iteration, so a transition over a
@@ -44,30 +45,15 @@ def lifecycle_transition(
     new_state: str,
     actor: str,
     ts: str,
-    state_col: str = "lifecycle_state",
-    strict: bool = True,
 ) -> TransitionResult:
-    """Move every row matching ``predicate`` to ``new_state``.
-
-    strict=True raises if ANY matched row sits in a state that may not
-    transition to ``new_state`` (the reference's guard errors);
-    strict=False skips those rows (no-op) instead.
-    """
+    """Move every row matching ``predicate`` to ``new_state``. Matched
+    rows in a state that may not transition to ``new_state`` are
+    skipped (no-op), where the reference's guard raised."""
     if new_state not in STATES:
         raise InvalidTransition(f"unknown state {new_state!r}; states: {STATES}")
     legal_sources = [s for s, dests in ALLOWED.items() if new_state in dests]
     matched = master.filter(predicate)
-
-    if strict:
-        bad = matched.filter(~F.col(state_col).isin(legal_sources))
-        bad_rows = bad.select(key, state_col).limit(5).collect()
-        if bad_rows:
-            detail = ", ".join(f"{r[key]}:{r[state_col]}" for r in bad_rows)
-            raise InvalidTransition(
-                f"illegal transition to {new_state} from [{detail}] "
-                f"(allowed sources: {legal_sources})"
-            )
-
+    state_col = "lifecycle_state"
     move = predicate & F.col(state_col).isin(legal_sources)
     updated = master.withColumn(
         state_col, F.when(move, F.lit(new_state)).otherwise(F.col(state_col))
@@ -92,7 +78,7 @@ def lifecycle_transition(
     return TransitionResult(master=updated, history=history)
 
 
-def lifecycle_tally(master: DataFrame, state_col: str = "lifecycle_state") -> DataFrame:
+def lifecycle_tally(master: DataFrame) -> DataFrame:
     """State-population metrics (reference A9:
     lifecycle_management.py:256-268)."""
-    return master.groupBy(state_col).agg(F.count(F.lit(1)).alias("record_count"))
+    return master.groupBy("lifecycle_state").agg(F.count(F.lit(1)).alias("record_count"))

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.functions import (
+    grid_dec_sum,
     portable_round,
     portable_round_sql,
 )
@@ -44,11 +45,6 @@ from nyc_taxi_data_engineering_spark.operators import iterate, pin
 PROBE_ITERS = 3
 PROBE_LR = 0.1
 _S = 12
-_DEC = f"decimal(38,{_S})"
-
-
-def _dec_sum(term):
-    return F.sum(portable_round(term, _S).cast(_DEC)).cast("double")
 
 
 def prepare_probe_corpus(x: DataFrame) -> DataFrame:
@@ -75,22 +71,14 @@ def prepare_probe_corpus(x: DataFrame) -> DataFrame:
     return x.select("vec_id", "pos", "val")
 
 
-def train_linear_probe(
-    x: DataFrame,
-    y: DataFrame,
-    iters: int = PROBE_ITERS,
-    lr: float = PROBE_LR,
-    prepared: bool = False,
-) -> DataFrame:
-    """(dim, weight) after ``iters`` full-batch GD rounds from the
-    all-zero start: dim 0 is the bias, dim k (1-based) the weight of
-    feature pos k-1. ``x`` is the long-form corpus (vec_id, pos,
-    val: double); ``y`` is (vec_id, y: double) targets.
-    ``prepared=True`` asserts the caller already ran
-    :func:`prepare_probe_corpus` on ``x`` (scoring consumers should
-    pass the SAME prepared frame so they reuse the layout)."""
-    if not prepared:
-        x = prepare_probe_corpus(x)
+def train_linear_probe(x: DataFrame, y: DataFrame) -> DataFrame:
+    """(dim, weight) after ``PROBE_ITERS`` full-batch GD rounds at rate
+    ``PROBE_LR`` from the all-zero start: dim 0 is the bias, dim k
+    (1-based) the weight of feature pos k-1. ``x`` is the long-form
+    corpus (vec_id, pos, val: double) as :func:`prepare_probe_corpus`
+    projects it (scoring consumers pass the SAME frame so they reuse the
+    layout); ``y`` is (vec_id, y: double) targets."""
+    lr = PROBE_LR
     # |targets| is a loop-invariant bounded scalar: count it once and
     # fold the literal into every iteration's gradient/bias expressions
     # instead of crossJoin-broadcasting a 1-row aggregate twice per
@@ -107,7 +95,7 @@ def train_linear_probe(
         pred = (
             x.join(F.broadcast(w), "pos")
             .groupBy("vec_id")
-            .agg(_dec_sum(F.col("val") * F.col("w")).alias("xw"))
+            .agg(grid_dec_sum(F.col("val") * F.col("w")).alias("xw"))
             .crossJoin(F.broadcast(b))
             .select("vec_id", (F.col("xw") + F.col("b")).alias("pred"))
         )
@@ -126,14 +114,14 @@ def train_linear_probe(
         g = (
             x.join(r, "vec_id")
             .groupBy("pos")
-            .agg(_dec_sum(F.col("val") * F.col("r")).alias("gs"))
+            .agg(grid_dec_sum(F.col("val") * F.col("r")).alias("gs"))
             .select("pos", portable_round(F.col("gs") / F.lit(n), _S).alias("g"))
         )
         w = w.join(g, "pos").select(
             "pos", portable_round(F.col("w") - F.lit(lr) * F.col("g"), _S).alias("w")
         )
         b = (
-            r.agg(_dec_sum(F.col("r")).alias("rs"))
+            r.agg(grid_dec_sum(F.col("r")).alias("rs"))
             .crossJoin(F.broadcast(b))
             .select(
                 portable_round(
@@ -145,19 +133,18 @@ def train_linear_probe(
         )
         return w, b
 
-    w, b = iterate((w, b), gd_round, iters)
+    w, b = iterate((w, b), gd_round, PROBE_ITERS)
     bias_row = b.select(F.lit(0).cast("int").alias("dim"), F.col("b").alias("weight"))
     return bias_row.unionByName(
         w.select((F.col("pos") + 1).cast("int").alias("dim"), F.col("w").alias("weight"))
     )
 
 
-def train_linear_probe_sql(
-    corpus_cte: str, target_cte: str, iters: int = PROBE_ITERS, lr: float = PROBE_LR
-) -> str:
+def train_linear_probe_sql(corpus_cte: str, target_cte: str) -> str:
     """DuckDB twin: the same GD rounds as nested CTEs. ``corpus_cte``
     must define ``x`` (vec_id, pos, val), ``target_cte`` must define
     ``y`` (vec_id, y)."""
+    iters, lr = PROBE_ITERS, PROBE_LR
     dec = f"DECIMAL(38,{_S})"
     parts = [
         corpus_cte,

@@ -79,7 +79,7 @@ def candidate_pairs(
     id_col: str,
     block_cols: list[str],
     payload_cols: list[str],
-    max_block_size: int | None = 10_000,
+    max_block_size: int = 10_000,
 ) -> DataFrame:
     """Blocked self-join producing unordered candidate pairs
     (reference J9: fuzzy_match.py:29-33). ``a_<id> < b_<id>`` keeps one
@@ -91,15 +91,14 @@ def candidate_pairs(
     shingles) — a block that big is a useless blocking key anyway, and
     the bound keeps every task's pair count ≤ max_block_size²/2.
     Inspect the skipped blocks with ``oversized_blocks`` and re-block
-    them on a tighter key. Pass ``None`` to disable."""
-    if max_block_size is not None:
-        ok = (
-            records.groupBy(*block_cols)
-            .agg(F.count(F.lit(1)).alias("_blk_n"))
-            .filter(F.col("_blk_n") <= max_block_size)
-            .drop("_blk_n")
-        )
-        records = records.join(ok, on=block_cols, how="left_semi")
+    them on a tighter key."""
+    ok = (
+        records.groupBy(*block_cols)
+        .agg(F.count(F.lit(1)).alias("_blk_n"))
+        .filter(F.col("_blk_n") <= max_block_size)
+        .drop("_blk_n")
+    )
+    records = records.join(ok, on=block_cols, how="left_semi")
     cols = [id_col, *payload_cols]
     a = records.select(*block_cols, *[F.col(c).alias(f"a_{c}") for c in cols])
     b = records.select(*block_cols, *[F.col(c).alias(f"b_{c}") for c in cols])
@@ -123,8 +122,6 @@ def score_pairs(
     id_col: str,
     name_col: str,
     addr_col: str,
-    name_weight: float = 0.7,
-    addr_weight: float = 0.3,
 ) -> DataFrame:
     """Weighted fuzzy score + confidence bucket + governance action
     (reference F9–F11: fuzzy_match.py:44-89). Normalization happens
@@ -136,7 +133,7 @@ def score_pairs(
         .withColumn("addr_score", _token_sort_ratio_once(aa, ba))
         .withColumn(
             "match_score",
-            F.round(name_weight * F.col("name_score") + addr_weight * F.col("addr_score"), 2),
+            F.round(0.7 * F.col("name_score") + 0.3 * F.col("addr_score"), 2),
         )
         .withColumn("confidence", confidence_bucket(F.col("match_score")))
         .withColumn("action", governance_action(F.col("confidence")))

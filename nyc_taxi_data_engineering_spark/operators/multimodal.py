@@ -80,17 +80,17 @@ FRAMES_SCHEMA = T.StructType(
 )
 
 
-def attach_media(docs: DataFrame, text_col: str = "text", fmt: str = "fake/raw") -> DataFrame:
+def attach_media(docs: DataFrame) -> DataFrame:
     """Deterministic fake media table: the document's UTF-8 bytes act
     as the opaque payload (stands in for image/audio bytes), with the
     typed metadata struct a real media table would carry. Native
     expressions only — the payload never leaves the JVM here."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
         "doc_id",
         payload.alias("payload"),
         F.struct(
-            F.lit(fmt).alias("format"),
+            F.lit("fake/raw").alias("format"),
             F.octet_length(payload).cast("long").alias("n_bytes"),
             F.lit(64).alias("width"),
             F.lit(64).alias("height"),
@@ -99,14 +99,15 @@ def attach_media(docs: DataFrame, text_col: str = "text", fmt: str = "fake/raw")
     )
 
 
-def _byte_histogram(buf: bytes, bins: int = FEATURE_BINS) -> np.ndarray:
+def _byte_histogram(buf: bytes) -> np.ndarray:
     """STUB feature extractor (deterministic fake): normalized
     histogram of the payload's bytes. A real pipeline would decode and
     embed here; the Spark-side contract is identical."""
     arr = np.frombuffer(buf, dtype=np.uint8)
     if arr.size == 0:
-        return np.zeros(bins, dtype=np.float32)
-    hist = np.bincount(arr >> int(8 - np.log2(bins)), minlength=bins).astype(np.float64)
+        return np.zeros(FEATURE_BINS, dtype=np.float32)
+    hist = np.bincount(arr >> int(8 - np.log2(FEATURE_BINS)), minlength=FEATURE_BINS)
+    hist = hist.astype(np.float64)
     return (hist / hist.sum()).astype(np.float32)
 
 
@@ -127,9 +128,9 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """mapInPandas frame sampling: one input row fans out to
-    ceil(n_frames / every) frame rows (the 1:N contract a video
+    ceil(n_frames / 2) frame rows (the 1:N contract a video
     pipeline needs). Frames here are deterministic byte slices of the
     payload — the stub for real frame extraction."""
 
@@ -139,7 +140,7 @@ def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
             for doc_id, payload, meta in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
                 n_frames = int(meta["n_frames"])
                 size = max(len(payload) // max(n_frames, 1), 1)
-                for frame_no in range(0, n_frames, every):
+                for frame_no in range(0, n_frames, 2):
                     out_ids.append(doc_id)
                     out_nos.append(frame_no)
                     out_payloads.append(bytes(payload[frame_no * size : (frame_no + 1) * size]))
@@ -184,31 +185,26 @@ THUMBNAIL_SCHEMA = T.StructType(
 )
 
 
-def attach_ppm_images(
-    docs: DataFrame,
-    text_col: str = "text",
-    width: int = PPM_WIDTH,
-    height: int = PPM_HEIGHT,
-) -> DataFrame:
+def attach_ppm_images(docs: DataFrame) -> DataFrame:
     """Deterministic REAL-format image table: each document becomes a
-    width x height binary PPM (P6) whose pixel byte k is byte
+    PPM_WIDTH x PPM_HEIGHT binary PPM (P6) whose pixel byte k is byte
     (k mod len) of the doc's UTF-8 text — a closed form the SQL oracle
     can recompute per pixel. Unlike ``attach_media``'s opaque bytes,
     these payloads are valid images any PPM reader decodes."""
 
-    n = width * height * 3
+    n = PPM_WIDTH * PPM_HEIGHT * 3
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 raw = text.encode("utf-8") or b"\x00"
                 reps = -(-n // len(raw))
-                px = np.frombuffer((raw * reps)[:n], dtype=np.uint8).reshape(height, width, 3)
+                px = np.frombuffer((raw * reps)[:n], dtype=np.uint8).reshape(PPM_HEIGHT, PPM_WIDTH, 3)
                 payloads.append(encode_ppm(px))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    return docs.select("doc_id", text_col).mapInPandas(run, schema=IMAGES_SCHEMA)
+    return docs.select("doc_id", "text").mapInPandas(run, schema=IMAGES_SCHEMA)
 
 
 def decoded_image_stats(images: DataFrame) -> DataFrame:
@@ -239,7 +235,7 @@ def decoded_image_stats(images: DataFrame) -> DataFrame:
     return images.mapInPandas(run, schema=DECODED_STATS_SCHEMA)
 
 
-def thumbnail_stats(images: DataFrame, width: int = 4, height: int = 4) -> DataFrame:
+def thumbnail_stats(images: DataFrame) -> DataFrame:
     """mapInPandas thumbnail pipeline: decode → nearest-neighbor
     ``resize`` → re-encode as PPM → decode the thumbnail back and emit
     its container size + per-channel sums. Exercises the full
@@ -249,7 +245,7 @@ def thumbnail_stats(images: DataFrame, width: int = 4, height: int = 4) -> DataF
         for pdf in batches:
             n_bytes, sums = [], []
             for payload in pdf["payload"]:
-                thumb = resize(bytes(payload), width, height)
+                thumb = resize(bytes(payload), 4, 4)
                 px = decode_ppm(thumb)
                 n_bytes.append(len(thumb))
                 sums.append(px.reshape(-1, 3).sum(axis=0, dtype=np.int64))
@@ -258,8 +254,8 @@ def thumbnail_stats(images: DataFrame, width: int = 4, height: int = 4) -> DataF
                 {
                     "doc_id": pdf["doc_id"],
                     "thumb_n_bytes": pd.Series(n_bytes, dtype="int64"),
-                    "width": pd.Series([width] * len(pdf), dtype="int32"),
-                    "height": pd.Series([height] * len(pdf), dtype="int32"),
+                    "width": pd.Series([4] * len(pdf), dtype="int32"),
+                    "height": pd.Series([4] * len(pdf), dtype="int32"),
                     "r_sum": sums_arr[:, 0],
                     "g_sum": sums_arr[:, 1],
                     "b_sum": sums_arr[:, 2],
@@ -279,13 +275,13 @@ DHASH_SCHEMA = T.StructType(
 )
 
 
-def dhash_images(images: DataFrame, hash_size: int = DHASH_SIZE) -> DataFrame:
+def dhash_images(images: DataFrame) -> DataFrame:
     """64-bit perceptual difference hash (dHash) per image — the
     standard near-duplicate fingerprint for image corpora (Krawetz's
     dHash; same family as pHash): decode → integer channel-sum
     luminance (NOT the BT.601 float weights, so both engines stay in
     exact integer arithmetic) → nearest-neighbor resample to
-    ``hash_size x (hash_size+1)`` with the same floor index map as
+    ``DHASH_SIZE x (DHASH_SIZE+1)`` with the same floor index map as
     :func:`resize` → bit (y, x) set iff gray(y, x) < gray(y, x+1).
     Neighboring-pixel *comparisons* make the hash robust to uniform
     brightness/contrast shifts, which byte hashes are not.
@@ -300,7 +296,7 @@ def dhash_images(images: DataFrame, hash_size: int = DHASH_SIZE) -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             hashes = [
-                _dhash_int(decode_image(bytes(payload)), hash_size)
+                _dhash_int(decode_image(bytes(payload)))
                 for payload in pdf["payload"]
             ]
             yield pd.DataFrame(
@@ -310,12 +306,12 @@ def dhash_images(images: DataFrame, hash_size: int = DHASH_SIZE) -> DataFrame:
     return images.mapInPandas(run, schema=DHASH_SCHEMA)
 
 
-def _dhash_int(px: np.ndarray, hash_size: int = DHASH_SIZE) -> int:
+def _dhash_int(px: np.ndarray) -> int:
     """The dHash core over one HxWx3 raster, as a signed 64-bit int."""
     gray = px.sum(axis=2, dtype=np.int64)  # H x W, 0..765
     h_, w_ = gray.shape
-    rows = (np.arange(hash_size) * h_) // hash_size
-    cols = (np.arange(hash_size + 1) * w_) // (hash_size + 1)
+    rows = (np.arange(DHASH_SIZE) * h_) // DHASH_SIZE
+    cols = (np.arange(DHASH_SIZE + 1) * w_) // (DHASH_SIZE + 1)
     grid = gray[rows][:, cols]
     bits = (grid[:, :-1] < grid[:, 1:]).flatten()  # row-major, bit y*8+x
     val = 0
@@ -437,29 +433,28 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def attach_audio(docs: DataFrame, text_col: str = "text", sample_rate: int = 8000) -> DataFrame:
+def attach_audio(docs: DataFrame) -> DataFrame:
     """Deterministic fake audio table: the document's UTF-8 bytes act
     as unsigned 8-bit PCM samples (stands in for a real decoder), with
     the typed metadata struct an audio table carries. Native
     expressions only — payloads never leave the JVM here."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
         "doc_id",
         payload.alias("payload"),
         F.struct(
             F.lit("pcm_u8/fake").alias("format"),
-            F.lit(sample_rate).alias("sample_rate"),
+            F.lit(8000).alias("sample_rate"),
             F.octet_length(payload).cast("long").alias("n_samples"),
         ).alias("meta"),
     )
 
 
-def audio_frame_features(
-    audio: DataFrame, frame: int = AUDIO_FRAME, hop: int = AUDIO_HOP
-) -> DataFrame:
+def audio_frame_features(audio: DataFrame) -> DataFrame:
     """Arrow-batched frame analysis over the PCM payload — the audio
     half of the multimodal column model: each row fans out to
-    floor((n - frame) / hop) + 1 overlapping frames (n >= frame; short
+    floor((n - frame) / hop) + 1 overlapping frames (``frame`` =
+    AUDIO_FRAME, ``hop`` = AUDIO_HOP; n >= frame; short
     clips yield no frames), each with INTEGER-exact features so the
     SQL oracle replays every value from the stored bytes:
 
@@ -478,12 +473,12 @@ def audio_frame_features(
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 s = np.frombuffer(bytes(payload), dtype=np.uint8).astype(np.int64)
                 n = s.size
-                if n < frame:
+                if n < AUDIO_FRAME:
                     continue
-                for f_no in range((n - frame) // hop + 1):
-                    w = s[f_no * hop : f_no * hop + frame]
+                for f_no in range((n - AUDIO_FRAME) // AUDIO_HOP + 1):
+                    w = s[f_no * AUDIO_HOP : f_no * AUDIO_HOP + AUDIO_FRAME]
                     tot = int(w.sum())
-                    dev = w * frame - tot  # deviation from mean, x frame
+                    dev = w * AUDIO_FRAME - tot  # deviation from mean, x frame
                     zc = int(np.count_nonzero(dev[:-1] * dev[1:] < 0))
                     ids.append(doc_id)
                     nos.append(f_no)
@@ -536,7 +531,7 @@ SCENE_CUTS_SCHEMA = T.StructType(
 )
 
 
-def attach_video(docs: DataFrame, text_col: str = "text", n_frames: int = VIDEO_FRAMES) -> DataFrame:
+def attach_video(docs: DataFrame) -> DataFrame:
     """Deterministic fake video table: frame f's raster byte k is text
     byte ((k + f*{stride}) mod len) — a closed form the SQL oracle can
     recompute per pixel — with a PLANTED SCENE CHANGE: frames >=
@@ -552,11 +547,11 @@ def attach_video(docs: DataFrame, text_col: str = "text", n_frames: int = VIDEO_
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 raw = text.encode("utf-8") or b"\x00"
                 L = len(raw)
                 buf = bytearray()
-                for f in range(n_frames):
+                for f in range(VIDEO_FRAMES):
                     reps = -(-(nb + f * VIDEO_STRIDE) // L) + 1
                     ext = (raw * reps)
                     start = (f * VIDEO_STRIDE) % L
@@ -567,7 +562,7 @@ def attach_video(docs: DataFrame, text_col: str = "text", n_frames: int = VIDEO_
                 payloads.append(bytes(buf))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    base = docs.select("doc_id", text_col).mapInPandas(
+    base = docs.select("doc_id", "text").mapInPandas(
         run, schema=T.StructType(
             [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
         )
@@ -579,7 +574,7 @@ def attach_video(docs: DataFrame, text_col: str = "text", n_frames: int = VIDEO_
             F.lit("rawvideo/fake").alias("format"),
             F.lit(PPM_WIDTH).alias("width"),
             F.lit(PPM_HEIGHT).alias("height"),
-            F.lit(n_frames).alias("n_frames"),
+            F.lit(VIDEO_FRAMES).alias("n_frames"),
         ).alias("meta"),
     )
 
@@ -633,7 +628,7 @@ FRAME_DHASH_SCHEMA = T.StructType(
 )
 
 
-def video_frame_dhashes(video: DataFrame, hash_size: int = DHASH_SIZE) -> DataFrame:
+def video_frame_dhashes(video: DataFrame) -> DataFrame:
     """Per-frame perceptual hashes for video clips — the standard video
     fingerprint (frame-sampled dHash, the same family YouTube-style
     content-ID systems build on): each PRE-CUT frame of the clip
@@ -654,7 +649,7 @@ def video_frame_dhashes(video: DataFrame, hash_size: int = DHASH_SIZE) -> DataFr
                     px = arr[f * nb : (f + 1) * nb].reshape(PPM_HEIGHT, PPM_WIDTH, 3)
                     ids.append(doc_id)
                     frames.append(f)
-                    hashes.append(_dhash_int(px, hash_size))
+                    hashes.append(_dhash_int(px))
             yield pd.DataFrame(
                 {
                     "doc_id": pd.Series(ids, dtype="int64"),

@@ -30,48 +30,35 @@ DEFAULT_N_SHARDS = 16
 PACK_SEED = "pack"
 
 
-def pack_positions(
-    df: DataFrame,
-    token_count: Column,
-    order_key: str = "doc_id",
-    group: str = "source",
-    ctx_tokens: int = DEFAULT_CTX_TOKENS,
-    n_shards: int = DEFAULT_N_SHARDS,
-) -> DataFrame:
+def pack_positions(df: DataFrame, token_count: Column) -> DataFrame:
     """Add shard / start-offset / bin columns to every row.
 
     ``bin_id = floor(start_offset / ctx_tokens)`` where start_offset is
     the running token count of all earlier docs in the same
     (group, shard), ordered by ``order_key``."""
-    shard = hash_bucket(F.col(order_key), PACK_SEED, n_shards)
+    shard = hash_bucket(F.col("doc_id"), PACK_SEED, DEFAULT_N_SHARDS)
     with_shard = df.withColumn("shard", shard).withColumn("n_tokens", token_count)
     w = (
-        Window.partitionBy(group, "shard")
-        .orderBy(order_key)
+        Window.partitionBy("source", "shard")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     cum = F.sum("n_tokens").over(w)
     return with_shard.withColumn("start_offset", (cum - F.col("n_tokens")).cast("long")).withColumn(
-        "bin_id", (F.col("start_offset") / F.lit(ctx_tokens)).cast("long")
+        "bin_id", (F.col("start_offset") / F.lit(DEFAULT_CTX_TOKENS)).cast("long")
     )
 
 
-def pack_positions_sql(
-    token_count_expr: str,
-    order_key: str = "doc_id",
-    group: str = "source",
-    ctx_tokens: int = DEFAULT_CTX_TOKENS,
-    n_shards: int = DEFAULT_N_SHARDS,
-) -> str:
+def pack_positions_sql(token_count_expr: str) -> str:
     """DuckDB SELECT-list fragment matching :func:`pack_positions`
     (same md5 shard hash, same running-frame arithmetic)."""
-    shard = hash_bucket_sql(order_key, PACK_SEED, n_shards)
+    shard = hash_bucket_sql("doc_id", PACK_SEED, DEFAULT_N_SHARDS)
     cum = (
-        f"SUM({token_count_expr}) OVER (PARTITION BY {group}, {shard} ORDER BY {order_key} "
+        f"SUM({token_count_expr}) OVER (PARTITION BY source, {shard} ORDER BY doc_id "
         f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     return (
         f"{shard} AS shard, CAST({token_count_expr} AS BIGINT) AS n_tokens, "
         f"CAST({cum} - {token_count_expr} AS BIGINT) AS start_offset, "
-        f"CAST(FLOOR((CAST({cum} AS BIGINT) - {token_count_expr}) / {ctx_tokens}) AS BIGINT) AS bin_id"
+        f"CAST(FLOOR((CAST({cum} AS BIGINT) - {token_count_expr}) / {DEFAULT_CTX_TOKENS}) AS BIGINT) AS bin_id"
     )

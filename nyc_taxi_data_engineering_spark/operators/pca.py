@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.functions import (
+    grid_dec_sum,
     portable_round,
     portable_round_sql,
 )
@@ -48,11 +49,6 @@ from nyc_taxi_data_engineering_spark.operators import iterate, pin
 
 PCA_ITERS = 3
 _S = 12  # dp per summed term / per component
-_DEC = f"decimal(38,{_S})"
-
-
-def _dec_sum(term):
-    return F.sum(portable_round(term, _S).cast(_DEC)).cast("double")
 
 
 def _centered(x: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -81,8 +77,8 @@ def _centered(x: DataFrame) -> tuple[DataFrame, DataFrame]:
     return cent, mean
 
 
-def _power_rounds(cent: DataFrame, iters: int, dims: DataFrame) -> DataFrame:
-    """(pos, vv) after ``iters`` rounds from the uniform unit start
+def _power_rounds(cent: DataFrame, dims: DataFrame) -> DataFrame:
+    """(pos, vv) after ``PCA_ITERS`` rounds from the uniform unit start
     over a centered corpus (vec_id, pos, cv). ``dims`` is the d-row
     (pos) table (the pinned mean's keys — same set as
     ``cent.select("pos").distinct()``). The start 1/sqrt(d) must
@@ -99,20 +95,20 @@ def _power_rounds(cent: DataFrame, iters: int, dims: DataFrame) -> DataFrame:
         w = (
             cent.join(F.broadcast(v), "pos")
             .groupBy("vec_id")
-            .agg(_dec_sum(F.col("cv") * F.col("vv")).alias("w"))
+            .agg(grid_dec_sum(F.col("cv") * F.col("vv")).alias("w"))
         )
         return (
             cent.join(w, "vec_id")
             .groupBy("pos")
-            .agg(_dec_sum(F.col("cv") * F.col("w")).alias("u"))
+            .agg(grid_dec_sum(F.col("cv") * F.col("w")).alias("u"))
         )
 
-    return _unit(iterate(v, power_round, iters)) if iters else v
+    return _unit(iterate(v, power_round, PCA_ITERS))
 
 
 def _unit(u: DataFrame) -> DataFrame:
     """(pos, vv): ``u`` (pos, u) divided by its L2 norm, on the grid."""
-    n_row = u.agg(F.sqrt(_dec_sum(F.col("u") * F.col("u"))).alias("nrm"))
+    n_row = u.agg(F.sqrt(grid_dec_sum(F.col("u") * F.col("u"))).alias("nrm"))
     # Zero norm (constant corpus) → NULL components, not a crash
     # (ANSI divide-by-zero) and not a wrong vector; same CASE guard
     # in the SQL twin.
@@ -142,7 +138,7 @@ def _deflated(cent: DataFrame, v: DataFrame) -> DataFrame:
     proj = (
         cent.join(F.broadcast(v), "pos")
         .groupBy("vec_id")
-        .agg(_dec_sum(F.col("cv") * F.col("vv")).alias("dv"))
+        .agg(grid_dec_sum(F.col("cv") * F.col("vv")).alias("dv"))
     )
     return (
         cent.join(proj, "vec_id")
@@ -155,10 +151,10 @@ def _deflated(cent: DataFrame, v: DataFrame) -> DataFrame:
     )
 
 
-def power_iteration_component(x: DataFrame, iters: int = PCA_ITERS) -> DataFrame:
+def power_iteration_component(x: DataFrame) -> DataFrame:
     """(dim, component) — the dominant eigenvector of the mean-centered
     covariance of a long-form corpus ``x`` (vec_id, pos, val: double),
-    after ``iters`` power-iteration rounds. ``dim`` is 1-based.
+    after ``PCA_ITERS`` power-iteration rounds. ``dim`` is 1-based.
 
     The centered corpus is deliberately NOT materialized (recompute-
     over-cache, same call as prepare_probe_corpus): each of the two
@@ -166,10 +162,10 @@ def power_iteration_component(x: DataFrame, iters: int = PCA_ITERS) -> DataFrame
     scan-bound, no shuffle — while the per-round d-row pins
     (operators.iterate) keep every pass executed exactly once."""
     cent, mean = _centered(x)
-    return _signed(_power_rounds(cent, iters, mean.select("pos")))
+    return _signed(_power_rounds(cent, mean.select("pos")))
 
 
-def top2_components(x: DataFrame, iters: int = PCA_ITERS) -> DataFrame:
+def top2_components(x: DataFrame) -> DataFrame:
     """(dim, pc1, pc2) — the two dominant principal directions: pc1 by
     power iteration, pc2 by re-iterating on the deflated corpus. The
     deflated corpus is exactly orthogonal to pc1 up to the 12-dp grid,
@@ -186,9 +182,9 @@ def top2_components(x: DataFrame, iters: int = PCA_ITERS) -> DataFrame:
     cent, mean = _centered(x)
     dims = mean.select("pos")
     cent = pin(cent)
-    v1 = pin(_power_rounds(cent, iters, dims))
+    v1 = pin(_power_rounds(cent, dims))
     cent2 = pin(_deflated(cent, v1))
-    v2 = _power_rounds(cent2, iters, dims)
+    v2 = _power_rounds(cent2, dims)
     p1 = _signed(v1).withColumnRenamed("component", "pc1")
     p2 = _signed(v2).withColumnRenamed("component", "pc2")
     return p1.join(p2, "dim")
@@ -215,15 +211,15 @@ def _sql_centered(parts: list[str], corpus_cte: str) -> None:
     )
 
 
-def _sql_rounds(parts: list[str], cent: str, p: str, iters: int) -> str:
-    """Append ``iters`` power rounds over centered table ``cent``,
+def _sql_rounds(parts: list[str], cent: str, p: str) -> str:
+    """Append ``PCA_ITERS`` power rounds over centered table ``cent``,
     CTE names prefixed ``p``; returns the final vector CTE name."""
     dec = f"DECIMAL(38,{_S})"
     parts.append(f"{p}dd AS (SELECT CAST(COUNT(DISTINCT pos) AS DOUBLE) AS d FROM {cent})")
     parts.append(
         f"{p}v0 AS (SELECT DISTINCT pos, 1.0 / sqrt((SELECT d FROM {p}dd)) AS vv FROM {cent})"
     )
-    for i in range(1, iters + 1):
+    for i in range(1, PCA_ITERS + 1):
         parts.append(
             f"""{p}w{i} AS MATERIALIZED (
     SELECT vec_id,
@@ -253,7 +249,7 @@ def _sql_rounds(parts: list[str], cent: str, p: str, iters: int) -> str:
             )
             + f" AS vv FROM {p}u{i})"
         )
-    return f"{p}v{iters}"
+    return f"{p}v{PCA_ITERS}"
 
 
 def _sql_signed(parts: list[str], vname: str, p: str) -> str:
@@ -269,23 +265,23 @@ def _sql_signed(parts: list[str], vname: str, p: str) -> str:
     return f"{p}out"
 
 
-def power_iteration_sql(corpus_cte: str, iters: int = PCA_ITERS) -> str:
+def power_iteration_sql(corpus_cte: str) -> str:
     """DuckDB twin of :func:`power_iteration_component`. ``corpus_cte``
     must define a CTE named ``x`` with (vec_id, pos, val) — pos
     0-based, val DOUBLE widened from the stored FLOAT."""
     parts: list[str] = []
     _sql_centered(parts, corpus_cte)
-    v = _sql_rounds(parts, "cent", "a", iters)
+    v = _sql_rounds(parts, "cent", "a")
     out = _sql_signed(parts, v, "a")
     return "WITH " + ",\n".join(parts) + f"\nSELECT dim, component FROM {out}"
 
 
-def top2_components_sql(corpus_cte: str, iters: int = PCA_ITERS) -> str:
+def top2_components_sql(corpus_cte: str) -> str:
     """DuckDB twin of :func:`top2_components`."""
     dec = f"DECIMAL(38,{_S})"
     parts: list[str] = []
     _sql_centered(parts, corpus_cte)
-    v1 = _sql_rounds(parts, "cent", "a", iters)
+    v1 = _sql_rounds(parts, "cent", "a")
     parts.append(
         f"""proj AS MATERIALIZED (
     SELECT vec_id,
@@ -300,7 +296,7 @@ def top2_components_sql(corpus_cte: str, iters: int = PCA_ITERS) -> str:
     JOIN {v1} v ON v.pos = c.pos
 )"""
     )
-    v2 = _sql_rounds(parts, "cent2", "b", iters)
+    v2 = _sql_rounds(parts, "cent2", "b")
     o1 = _sql_signed(parts, v1, "a")
     o2 = _sql_signed(parts, v2, "b")
     return (

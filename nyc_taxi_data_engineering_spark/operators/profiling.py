@@ -44,15 +44,13 @@ def _stringify(col: Column, dt: Ty.DataType) -> Column:
     return col.cast("string")
 
 
-def profile(df: DataFrame, cols: list[str] | None = None, exact_distinct: bool = True) -> DataFrame:
-    """Profile ``cols`` (default: all columns) of ``df``.
+def profile(df: DataFrame, cols: list[str], exact_distinct: bool = True) -> DataFrame:
+    """Profile ``cols`` of ``df``.
 
     Returns one row per column:
     (column_name, n_rows, n_nulls, n_distinct, min_value, max_value,
     null_pct) — null_pct rounded to 2, min/max as portable strings.
     """
-    if cols is None:
-        cols = df.columns
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:

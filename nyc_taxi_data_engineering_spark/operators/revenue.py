@@ -27,10 +27,10 @@ def daily_vendor_revenue(
     vendor_key: str,
     ts_col: str,
     amount_col: Column | str,
-    active_pred: Column | None = None,
     amount_pred: Column | None = None,
 ) -> DataFrame:
-    """Revenue per (vendor, day) over active vendors.
+    """Revenue per (vendor, day) over active vendors (positive
+    ``s_acctbal``).
 
     ``amount_col`` may be a derived Column (e.g. extendedprice*(1-disc)).
     Output columns: <vendor_key>, trip_date, total_revenue, trip_count.
@@ -44,10 +44,7 @@ def daily_vendor_revenue(
         F.to_date(F.col(ts_col)).alias("trip_date"),
         amount.alias("_amount"),
     )
-    dim = vendors
-    if active_pred is not None:
-        dim = dim.filter(active_pred)
-    dim = dim.select(vendor_key).distinct()
+    dim = vendors.filter(F.col("s_acctbal") > 0).select(vendor_key).distinct()
 
     return (
         base.join(F.broadcast(dim), on=vendor_key, how="inner")

@@ -66,11 +66,10 @@ def assign_split(
     key: str,
     splits: Mapping[str, float],
     seed: str = "",
-    out_col: str = "split",
 ) -> DataFrame:
     """Label every row with a deterministic split name (e.g.
     train/val/test) by hash bucket of ``key``. Pure projection —
-    no shuffle; write with ``partitionBy(out_col)`` to materialize
+    no shuffle; write with ``partitionBy("split")`` to materialize
     split-per-directory."""
     bucket = hash_bucket(F.col(key), seed)
     edges = _split_edges(splits)
@@ -78,7 +77,7 @@ def assign_split(
     for name, _lo, hi in edges[1:-1]:
         expr = expr.when(bucket < F.lit(hi), F.lit(name))
     expr = expr.otherwise(F.lit(edges[-1][0]))
-    return df.withColumn(out_col, expr)
+    return df.withColumn("split", expr)
 
 
 def assign_split_sql(key_expr: str, splits: Mapping[str, float], seed: str = "") -> str:
@@ -94,7 +93,6 @@ def stratified_sample(
     key: str,
     stratum: str,
     fractions: Mapping[str, float],
-    default: float = 0.0,
     seed: str = "",
 ) -> DataFrame:
     """Keep a deterministic per-stratum fraction of rows (hash-bucket
@@ -109,7 +107,7 @@ def stratified_sample(
         if not 0.0 <= frac <= 1.0:
             raise ValueError(f"fraction for stratum {name!r} must be in [0,1], got {frac}")
     bucket = hash_bucket(F.col(key), seed)
-    rate: Column = F.lit(default)
+    rate: Column = F.lit(0.0)
     for name, frac in fractions.items():
         rate = F.when(F.col(stratum) == name, F.lit(frac)).otherwise(rate)
     return df.filter(bucket < (rate * N_BUCKETS))
@@ -119,12 +117,11 @@ def stratified_sample_sql(
     key_expr: str,
     stratum_expr: str,
     fractions: Mapping[str, float],
-    default: float = 0.0,
     seed: str = "",
 ) -> str:
     """DuckDB WHERE predicate matching :func:`stratified_sample`."""
     bucket = hash_bucket_sql(key_expr, seed)
-    rate = f"{default}"
+    rate = "0.0"
     for name, frac in fractions.items():
         rate = f"CASE WHEN {stratum_expr} = '{name}' THEN {frac} ELSE {rate} END"
     return f"{bucket} < ({rate}) * {N_BUCKETS}"
@@ -147,9 +144,7 @@ def uniform_from_hash_sql(key_expr: str, seed: str = "") -> str:
     return f"((('0x' || substr(md5({concat}), 1, 8))::BIGINT + 1) / {_U_DENOM})"
 
 
-def weighted_sample(
-    df: DataFrame, key: str, weight_col: str, k: int, seed: str = ""
-) -> DataFrame:
+def weighted_sample(df: DataFrame, key: str, weight_col: str, k: int, seed: str = "") -> DataFrame:
     """Weighted sampling WITHOUT replacement, k rows, selection
     probability proportional to ``weight_col`` — the
     Efraimidis–Spirakis A-Res scheme: rank by -ln(u)/w ascending and
@@ -190,12 +185,7 @@ ORDER BY -ln({u}) / {weight_expr}, {key_expr}
 LIMIT {k}"""
 
 
-def shuffle_shards(
-    df: DataFrame,
-    key: str,
-    n_shards: int,
-    seed: str = "",
-) -> DataFrame:
+def shuffle_shards(df: DataFrame, key: str, n_shards: int) -> DataFrame:
     """Deterministic global shuffle into ``n_shards`` output shards —
     the shuffle-and-shard step every pretraining run does before
     writing token streams. Shard = hash bucket of the key; position
@@ -220,8 +210,8 @@ def shuffle_shards(
             f"shuffle_shards adds output columns {clash} but the input "
             "already has them — rename or drop those columns first"
         )
-    shard = hash_bucket(F.col(key), seed + "#shard", n_shards).alias("shard")
-    order_h = F.md5(F.concat_ws("|", F.lit(seed + "#order"), F.col(key).cast("string")))
+    shard = hash_bucket(F.col(key), "r5#shard", n_shards).alias("shard")
+    order_h = F.md5(F.concat_ws("|", F.lit("r5#order"), F.col(key).cast("string")))
     w = Window.partitionBy("shard").orderBy(order_h, F.col(key))
     return df.select("*", shard).withColumn("pos", F.row_number().over(w))
 
@@ -231,22 +221,17 @@ def shuffle_shards_sql(
     key_expr: str,
     n_shards: int,
     cols: str,
-    seed: str = "",
 ) -> str:
     """DuckDB twin of :func:`shuffle_shards`."""
-    shard = hash_bucket_sql(key_expr, seed + "#shard", n_shards)
-    order_h = f"md5('{seed}#order' || '|' || CAST({key_expr} AS VARCHAR))"
+    shard = hash_bucket_sql(key_expr, "r5#shard", n_shards)
+    order_h = f"md5('r5#order' || '|' || CAST({key_expr} AS VARCHAR))"
     return f"""
 SELECT {cols}, {shard} AS shard,
        CAST(row_number() OVER (PARTITION BY {shard} ORDER BY {order_h}, {key_expr}) AS INT) AS pos
 FROM {table}"""
 
 
-def temperature_rates(
-    df: DataFrame,
-    stratum: str,
-    alpha: float,
-) -> DataFrame:
+def temperature_rates(df: DataFrame, stratum: str, alpha: float) -> DataFrame:
     """Per-stratum keep-rates for temperature-scaled mixture sampling
     (the multilingual-rebalance scheme of mBERT/XLM-R/mT5: sample
     stratum s with probability ∝ p_s^alpha, alpha < 1 flattening the
@@ -274,7 +259,6 @@ def temperature_sample(
     key: str,
     stratum: str,
     alpha: float,
-    seed: str = "",
 ) -> DataFrame:
     """Deterministic temperature-alpha mixture sample: join the
     ≤|strata|-row rate table back (broadcast) and keep rows whose md5
@@ -284,12 +268,12 @@ def temperature_sample(
     thresh = F.round(F.col("keep_rate") * N_BUCKETS).cast("int")
     return (
         df.join(F.broadcast(rates.select(stratum, "keep_rate")), stratum)
-        .filter(hash_bucket(F.col(key), seed) < thresh)
+        .filter(hash_bucket(F.col(key), "") < thresh)
         .drop("keep_rate")
     )
 
 
-def temperature_rates_sql(stratum: str, alpha: float, from_table: str = "documents") -> str:
+def temperature_rates_sql(stratum: str, alpha: float) -> str:
     """DuckDB CTE body matching :func:`temperature_rates` (two nesting
     levels: DuckDB rejects a window call inside another window's
     argument)."""
@@ -297,5 +281,5 @@ def temperature_rates_sql(stratum: str, alpha: float, from_table: str = "documen
         f"SELECT {stratum}, n_total, round(raw / MAX(raw) OVER (), 6) AS keep_rate\n"
         f"FROM (SELECT {stratum}, n_total,"
         f" pow(n_total * 1.0 / SUM(n_total) OVER (), {alpha} - 1.0) AS raw\n"
-        f"      FROM (SELECT {stratum}, COUNT(*) AS n_total FROM {from_table} GROUP BY {stratum}))"
+        f"      FROM (SELECT {stratum}, COUNT(*) AS n_total FROM documents GROUP BY {stratum}))"
     )

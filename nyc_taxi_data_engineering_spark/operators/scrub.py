@@ -25,7 +25,7 @@ Scale design:
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,8 +35,8 @@ from pyspark.sql import functions as F
 # precision/recall at "good enough to gate a corpus" (e.g. the phone
 # detector covers NANP dash/dot/space/paren layouts but not +1
 # country codes; octet-checked ipv4 still accepts non-routable
-# addresses). Swap in stricter patterns via the `patterns` argument
-# where a deployment needs them.
+# addresses). A deployment that needs stricter patterns edits
+# PII_PATTERNS (the Spark side and the DuckDB twin both read it).
 # Octets accept leading zeros ('007.0.0.1') — for a redaction gate,
 # recall beats strictness: a leading-zero IP is still an IP to a log
 # parser, and dropping it would silently leak it past the scrub.
@@ -66,25 +66,19 @@ def _escape_replacement(token: str) -> str:
     return token.replace("\\", "\\\\").replace("$", "\\$")
 
 
-def pattern_counts(col: Column, patterns: Mapping[str, str] | None = None) -> dict[str, Column]:
+def pattern_counts(col: Column) -> dict[str, Column]:
     """Per-pattern match counts (``{name: Column}``), one
     ``regexp_count`` each — all JVM-side."""
-    pats = PII_PATTERNS if patterns is None else patterns
-    return {name: F.regexp_count(col, F.lit(pat)) for name, pat in pats.items()}
+    return {name: F.regexp_count(col, F.lit(pat)) for name, pat in PII_PATTERNS.items()}
 
 
-def scrub(
-    col: Column,
-    patterns: Mapping[str, str] | None = None,
-    token: str = REDACTION_TOKEN,
-) -> Column:
+def scrub(col: Column, token: str = REDACTION_TOKEN) -> Column:
     """Redact every match of every pattern with ``token``. Patterns are
     applied in dict order (stable), each as one global
     ``regexp_replace`` pass."""
-    pats = PII_PATTERNS if patterns is None else patterns
     out = col
     escaped = _escape_replacement(token)
-    for pat in pats.values():
+    for pat in PII_PATTERNS.values():
         out = F.regexp_replace(out, pat, escaped)
     return out
 
@@ -137,30 +131,24 @@ def blocklist_hits(col: Column, words: Sequence[str]) -> Column:
     return F.regexp_count(col, F.lit(blocklist_pattern(words)))
 
 
-def scrub_audit(
-    df: DataFrame,
-    text_col: str,
-    blockwords: Sequence[str],
-    patterns: Mapping[str, str] | None = None,
-    max_hits: int = 0,
-) -> DataFrame:
+def scrub_audit(df: DataFrame, text_col: str, blockwords: Sequence[str]) -> DataFrame:
     """Curation-gate audit: per-row PII counts, blocklist hits, the
-    C4-style keep/drop action (drop when blocklist hits exceed
-    ``max_hits``), and the post-redaction length. Adds columns
+    C4-style keep/drop action (drop on any blocklist hit), and the
+    post-redaction length. Adds columns
     ``<name>_count`` per pattern, ``blocklist_hits``, ``action``,
     ``scrubbed_chars``."""
     c = F.col(text_col)
     out = df
-    for name, cnt in pattern_counts(c, patterns).items():
+    for name, cnt in pattern_counts(c).items():
         out = out.withColumn(f"{name}_count", cnt)
     hits = blocklist_hits(c, blockwords)
     return (
         out.withColumn("blocklist_hits", hits)
         .withColumn(
             "action",
-            F.when(hits > max_hits, F.lit("drop")).otherwise(F.lit("keep")),
+            F.when(hits > 0, F.lit("drop")).otherwise(F.lit("keep")),
         )
-        .withColumn("scrubbed_chars", F.length(scrub(c, patterns)))
+        .withColumn("scrubbed_chars", F.length(scrub(c)))
     )
 
 
@@ -178,18 +166,13 @@ def pattern_count_sql(text_expr: str, pattern: str) -> str:
     return f"len(regexp_extract_all({text_expr}, {_sql_quote(pattern)}))"
 
 
-def scrub_sql(
-    text_expr: str,
-    patterns: Mapping[str, str] | None = None,
-    token: str = REDACTION_TOKEN,
-) -> str:
-    pats = PII_PATTERNS if patterns is None else patterns
+def scrub_sql(text_expr: str, token: str = REDACTION_TOKEN) -> str:
     out = text_expr
     # RE2 replacement strings treat '\' as the group-reference escape
     # ('\1'); '$' is literal. Quote-escape via _sql_quote so a token
     # containing a single quote can't break the generated SQL.
     duck_token = _sql_quote(token.replace("\\", "\\\\"))
-    for pat in pats.values():
+    for pat in PII_PATTERNS.values():
         out = f"regexp_replace({out}, {_sql_quote(pat)}, {duck_token}, 'g')"
     return out
 

@@ -34,13 +34,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: list[tuple[str, str]],
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, queries: list[tuple[str, str]], k: int = 5) -> DataFrame:
     """Okapi BM25 top-k per query. ``queries`` is a small driver-side
     list of (query_id, query_text); duplicate query terms count once.
 
@@ -48,9 +42,9 @@ def bm25_topk(
     variant; contribution = idf * (tf*(k1+1)) / (tf + k1*(1-b+b*dl/avgdl)).
     """
     spark = docs.sparkSession
-    toks = docs.select(id_col, F.explode(T.tokens(F.col(text_col))).alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    dl = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("dl"))
+    toks = docs.select("doc_id", F.explode(T.tokens(F.col("text"))).alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
@@ -73,16 +67,16 @@ def bm25_topk(
         F.broadcast(qt)
         .join(tf, "term")  # inverted-index probe: only queried terms shuffle
         .join(F.broadcast(dfreq), "term")
-        .join(dl, id_col)
+        .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
-        .select("query_id", id_col, contrib.alias("_c"))
-        .groupBy("query_id", id_col)
+        .select("query_id", "doc_id", contrib.alias("_c"))
+        .groupBy("query_id", "doc_id")
         # exact decimal sum -> order-independent, engine-portable score
         .agg(F.sum(F.col("_c").cast("decimal(18,9)")).cast("double").alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, F.col("rank").cast("int").alias("rank"), "score")
+        .select("query_id", "doc_id", F.col("rank").cast("int").alias("rank"), "score")
     )

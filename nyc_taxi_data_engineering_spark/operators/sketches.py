@@ -53,7 +53,7 @@ def hash_fraction_sql(expr: str) -> str:
     )
 
 
-def kmv_distinct(df: DataFrame, group: str, value: str, k: int = KMV_K) -> DataFrame:
+def kmv_distinct(df: DataFrame, group: str, value: str) -> DataFrame:
     """Per-group KMV distinct-count estimate: (group, n_hashes_kept,
     kth_min, est_distinct). Groups with fewer than k distinct values
     report the EXACT count (the sketch holds every hash — the standard
@@ -66,7 +66,7 @@ def kmv_distinct(df: DataFrame, group: str, value: str, k: int = KMV_K) -> DataF
     pre-sketch and union."""
     hashed = df.select(F.col(group), hash_fraction(F.col(value)).alias("u")).distinct()
     w = Window.partitionBy(group).orderBy("u")
-    kept = hashed.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    kept = hashed.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= KMV_K)
     return (
         kept.groupBy(group)
         .agg(F.count(F.lit(1)).alias("n_hashes_kept"), F.max("u").alias("kth_min"))
@@ -75,8 +75,8 @@ def kmv_distinct(df: DataFrame, group: str, value: str, k: int = KMV_K) -> DataF
             "n_hashes_kept",
             F.round("kth_min", 9).alias("kth_min"),
             F.round(
-                F.when(F.col("n_hashes_kept") < k, F.col("n_hashes_kept").cast("double")).otherwise(
-                    (k - 1) / F.col("kth_min")
+                F.when(F.col("n_hashes_kept") < KMV_K, F.col("n_hashes_kept").cast("double")).otherwise(
+                    (KMV_K - 1) / F.col("kth_min")
                 ),
                 3,
             ).alias("est_distinct"),
@@ -84,27 +84,25 @@ def kmv_distinct(df: DataFrame, group: str, value: str, k: int = KMV_K) -> DataF
     )
 
 
-def cms_bucket(c: Column, row: int, width: int = CMS_WIDTH) -> Column:
-    """Counter column for hash row ``row``: md5(row|value) prefix mod width."""
+def cms_bucket(c: Column, row: int) -> Column:
+    """Counter column for hash row ``row``: md5(row|value) prefix mod CMS_WIDTH."""
     h = F.md5(F.concat_ws("|", F.lit(str(row)), c.cast("string")))
-    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % width).cast("int")
+    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % CMS_WIDTH).cast("int")
 
 
-def cms_bucket_sql(expr: str, row: int, width: int = CMS_WIDTH) -> str:
+def cms_bucket_sql(expr: str, row: int) -> str:
     concat = f"'{row}' || '|' || CAST({expr} AS VARCHAR)"
-    return f"CAST(('0x' || substr(md5({concat}), 1, 8))::BIGINT % {width} AS INT)"
+    return f"CAST(('0x' || substr(md5({concat}), 1, 8))::BIGINT % {CMS_WIDTH} AS INT)"
 
 
-def cms_counters(
-    df: DataFrame, value: str, depth: int = CMS_DEPTH, width: int = CMS_WIDTH
-) -> DataFrame:
+def cms_counters(df: DataFrame, value: str) -> DataFrame:
     """The d×w counter table (hash_row, bucket, cnt): one explode of
     depth bucket assignments per input row, then a hash agg whose
     output is at most d·w rows — broadcastable no matter the corpus."""
     rows = F.array(
         *[
-            F.struct(F.lit(j).alias("hash_row"), cms_bucket(F.col(value), j, width).alias("bucket"))
-            for j in range(depth)
+            F.struct(F.lit(j).alias("hash_row"), cms_bucket(F.col(value), j).alias("bucket"))
+            for j in range(CMS_DEPTH)
         ]
     )
     return (
@@ -114,38 +112,27 @@ def cms_counters(
     )
 
 
-def cms_estimate(
-    candidates: DataFrame,
-    counters: DataFrame,
-    value: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def cms_estimate(candidates: DataFrame, counters: DataFrame, value: str) -> DataFrame:
     """Point-query the sketch for every candidate row: join each of
     the d (hash_row, bucket) keys against the broadcast counter table
     and take the min. Adds ``cms_est``."""
     est = None
-    for j in range(depth):
+    for j in range(CMS_DEPTH):
         cj = counters.filter(F.col("hash_row") == j).select(
             F.col("bucket").alias(f"b{j}"), F.col("cnt").alias(f"c{j}")
         )
         candidates = candidates.join(
-            F.broadcast(cj), cms_bucket(F.col(value), j, width) == F.col(f"b{j}")
+            F.broadcast(cj), cms_bucket(F.col(value), j) == F.col(f"b{j}")
         ).drop(f"b{j}")
         col_j = F.col(f"c{j}")
         est = col_j if est is None else F.least(est, col_j)
-    return candidates.withColumn("cms_est", est).drop(*[f"c{j}" for j in range(depth)])
+    return candidates.withColumn("cms_est", est).drop(*[f"c{j}" for j in range(CMS_DEPTH)])
 
 
 HIST_BUCKETS = 256
 
 
-def histogram_quantiles(
-    df: DataFrame,
-    value: str,
-    quantiles: list[float],
-    width_buckets: int = HIST_BUCKETS,
-) -> DataFrame:
+def histogram_quantiles(df: DataFrame, value: str, quantiles: list[float]) -> DataFrame:
     """Single-pass mergeable quantile estimation from a fixed-grid
     histogram: bucket every value on an equi-width [min, max] grid
     (one scan after a min/max/count pre-pass), cumulate the ≤W-row
@@ -163,11 +150,11 @@ def histogram_quantiles(
         F.max(value).alias("hi"),
         F.count(F.lit(1)).alias("n"),
     )
-    width = (F.col("hi") - F.col("lo")) / width_buckets
+    width = (F.col("hi") - F.col("lo")) / HIST_BUCKETS
     # degenerate grid (all values equal): every row lands in bucket 0
     # rather than dividing by a zero width
     bucket = F.when(F.col("hi") == F.col("lo"), F.lit(0)).otherwise(
-        F.least(F.floor((F.col(value) - F.col("lo")) / width), F.lit(width_buckets - 1))
+        F.least(F.floor((F.col(value) - F.col("lo")) / width), F.lit(HIST_BUCKETS - 1))
     ).cast("int")
     hist = (
         df.crossJoin(F.broadcast(stats))
@@ -194,16 +181,14 @@ def histogram_quantiles(
         .groupBy("quantile", "lo", "hi", "n", "t")
         .agg(F.min(F.struct("bucket", "cnt", "cum_before")).alias("b"))
     )
-    width_v = (F.col("hi") - F.col("lo")) / width_buckets
+    width_v = (F.col("hi") - F.col("lo")) / HIST_BUCKETS
     est = F.col("lo") + width_v * (
         F.col("b.bucket") + (F.col("t") - F.col("b.cum_before")) / F.col("b.cnt")
     )
     return pick.select("quantile", F.round(est, 6).alias("est_value")).orderBy("quantile")
 
 
-def histogram_quantiles_sql(
-    table: str, value: str, quantiles: list[float], width_buckets: int = HIST_BUCKETS
-) -> str:
+def histogram_quantiles_sql(table: str, value: str, quantiles: list[float]) -> str:
     """DuckDB twin of :func:`histogram_quantiles`."""
     qlist = ", ".join(str(float(q)) for q in quantiles)
     return f"""
@@ -212,7 +197,7 @@ WITH stats AS (
 ),
 hist AS (
     SELECT CASE WHEN hi = lo THEN 0
-                ELSE LEAST(FLOOR(({value} - lo) / ((hi - lo) / {width_buckets})), {width_buckets - 1}) END::INT AS bucket,
+                ELSE LEAST(FLOOR(({value} - lo) / ((hi - lo) / {HIST_BUCKETS})), {HIST_BUCKETS - 1}) END::INT AS bucket,
            COUNT(*) AS cnt
     FROM {table}, stats GROUP BY 1
 ),
@@ -232,7 +217,7 @@ pick AS (
     GROUP BY quantile, lo, hi, n
 )
 SELECT quantile,
-       round(lo + ((hi - lo) / {width_buckets}) * (b.bucket + (t - b.cum_before) / b.cnt), 6) AS est_value
+       round(lo + ((hi - lo) / {HIST_BUCKETS}) * (b.bucket + (t - b.cum_before) / b.cnt), 6) AS est_value
 FROM pick ORDER BY quantile"""
 
 

@@ -49,7 +49,7 @@ def salted_join(
     dim: DataFrame,
     on: str | Sequence[str],
     salt_n: int,
-    fingerprint_cols: Sequence[str] | None = None,
+    fingerprint_cols: Sequence[str],
     how: str = "inner",
 ) -> DataFrame:
     """Equi-join where the shuffle key is (join keys + salt), spreading
@@ -67,8 +67,7 @@ def salted_join(
             "(right/full would keep unmatched dim rows once per salt replica)"
         )
     keys = [on] if isinstance(on, str) else list(on)
-    fp = list(fingerprint_cols) if fingerprint_cols is not None else fact.columns
-    f = with_salt(fact, fp, salt_n)
+    f = with_salt(fact, fingerprint_cols, salt_n)
     d = explode_salt(dim, salt_n)
     return f.join(d, keys + [SALT_COL], how).drop(SALT_COL)
 
@@ -81,7 +80,7 @@ def salted_agg(
     keys: Sequence[str],
     aggs: dict[str, tuple[str, Column]],
     salt_n: int,
-    fingerprint_cols: Sequence[str] | None = None,
+    fingerprint_cols: Sequence[str],
 ) -> DataFrame:
     """Two-phase hot-key aggregation for algebraic aggregates:
     partial on (keys + salt), final on keys.
@@ -94,14 +93,13 @@ def salted_agg(
     from the Column without private-API introspection — and the caller
     knows it anyway: count partials merge by sum, everything else by
     itself. avg must be decomposed by the caller into sum + count."""
-    fp = list(fingerprint_cols) if fingerprint_cols is not None else list(df.columns)
     bad = {name: m for name, (m, _) in aggs.items() if m not in _MERGES}
     if bad:
         raise ValueError(
             f"unknown merge kinds {bad}; expected one of {sorted(_MERGES)} "
             "(count partials merge by 'sum'; avg is not mergeable — decompose it)"
         )
-    salted = with_salt(df, fp, salt_n)
+    salted = with_salt(df, fingerprint_cols, salt_n)
     partial = salted.groupBy(*keys, SALT_COL).agg(
         *[c.alias(f"_p_{name}") for name, (_, c) in aggs.items()]
     )

@@ -31,19 +31,16 @@ def point_in_time_join(
     left_key: str,
     right_key: str,
     left_ts: str,
-    start_col: str = "effective_start_ts",
-    end_col: str = "effective_end_ts",
-    how: str = "inner",
 ) -> DataFrame:
     """Join each left row to the right-side version whose validity
     interval contains the left timestamp: start <= ts < end."""
     lft, rgt = left.alias("l"), right.alias("r")
     cond = (
         (F.col(f"l.{left_key}") == F.col(f"r.{right_key}"))
-        & (F.col(f"r.{start_col}") <= F.col(f"l.{left_ts}"))
-        & (F.col(f"l.{left_ts}") < F.col(f"r.{end_col}"))
+        & (F.col("r.effective_start_ts") <= F.col(f"l.{left_ts}"))
+        & (F.col(f"l.{left_ts}") < F.col("r.effective_end_ts"))
     )
-    return lft.join(rgt, cond, how)
+    return lft.join(rgt, cond, "inner")
 
 
 def asof_join(

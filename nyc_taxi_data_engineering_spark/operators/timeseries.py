@@ -44,15 +44,13 @@ def gap_fill(df: DataFrame, key: str, date_col: str, value_cols: list[str]) -> D
     )
 
 
-def forward_fill(
-    df: DataFrame, key: str, order_col: str, cols: list[str], suffix: str = "_ff"
-) -> DataFrame:
+def forward_fill(df: DataFrame, key: str, order_col: str, cols: list[str]) -> DataFrame:
     """Per-key forward fill: each NULL takes the most recent non-NULL
     value in ``order_col`` order (leading NULLs stay NULL)."""
     w = Window.partitionBy(key).orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
     out = df
     for c in cols:
-        out = out.withColumn(f"{c}{suffix}", F.last(c, ignorenulls=True).over(w))
+        out = out.withColumn(f"{c}_ff", F.last(c, ignorenulls=True).over(w))
     return out
 
 

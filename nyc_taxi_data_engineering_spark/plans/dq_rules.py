@@ -179,19 +179,15 @@ class DQJobFailure(RuntimeError):
     glue_mdm.py:104-108)."""
 
 
-def apply_rules(df: DataFrame, rules: list[Rule], enforce_fail_job: bool = True) -> RuleOutcome:
+def apply_rules(df: DataFrame, rules: list[Rule]) -> RuleOutcome:
     """Route rows by rule action: QUARANTINE rules split the dataset,
     FAIL_JOB rules raise when violated beyond threshold, WARN rules only
     report. Returns valid/quarantine frames + the metrics table."""
     metrics = evaluate_rules(df, rules)
-    if enforce_fail_job:
-        failing = [
-            row
-            for row in metrics.filter((F.col("action") == "FAIL_JOB") & ~F.col("passed")).collect()
-        ]
-        if failing:
-            names = [r["rule_name"] for r in failing]
-            raise DQJobFailure(f"FAIL_JOB rules below threshold: {names}")
+    failing = metrics.filter((F.col("action") == "FAIL_JOB") & ~F.col("passed")).collect()
+    if failing:
+        names = [r["rule_name"] for r in failing]
+        raise DQJobFailure(f"FAIL_JOB rules below threshold: {names}")
     q_rules = {r.name: r.predicate() for r in rules if r.action == "QUARANTINE" and r.kind in ROW_KINDS}
     if q_rules:
         split = validate_split(df, q_rules)

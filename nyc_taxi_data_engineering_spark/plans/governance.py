@@ -40,11 +40,13 @@ def governance_gate(run_metrics: DataFrame, quality_threshold: float = 95.0) -> 
     )
 
 
-def freshness_gate(
-    df: DataFrame, ts_col: str, dataset: str, as_of: str, max_age_days: int = 30
-) -> DataFrame:
+FRESH_MAX_AGE_DAYS = 30
+
+
+def freshness_gate(df: DataFrame, ts_col: str, dataset: str, as_of: str) -> DataFrame:
     """Reference-data staleness check (reference lambda.py:21-28,96-108:
-    newest reference file older than N days ⇒ stale alert), re-expressed
+    newest reference file older than FRESH_MAX_AGE_DAYS days ⇒ stale
+    alert), re-expressed
     over a timestamp/date column: one row with the newest timestamp, its
     age in days as of ``as_of`` (injected clock — determinism per SURVEY
     §7.4.1), and a FRESH/STALE decision. An aggregate-only plan: the
@@ -56,17 +58,17 @@ def freshness_gate(
             F.lit(dataset).alias("dataset"),
             F.date_format("newest_ts", "yyyy-MM-dd HH:mm:ss").alias("newest_ts"),
             age.cast("int").alias("age_days"),
-            F.lit(int(max_age_days)).alias("max_age_days"),
-            F.when(age <= int(max_age_days), F.lit("FRESH"))
+            F.lit(FRESH_MAX_AGE_DAYS).alias("max_age_days"),
+            F.when(age <= FRESH_MAX_AGE_DAYS, F.lit("FRESH"))
             .otherwise(F.lit("STALE"))
             .alias("decision"),
         )
     )
 
 
-def latest_run_decision(run_metrics: DataFrame, quality_threshold: float = 95.0) -> DataFrame:
+def latest_run_decision(run_metrics: DataFrame) -> DataFrame:
     """Gate only the latest run (reference O4: the Lambda lists metric
     prefixes and picks the newest, dq-governance-gate/lambda_function.py:30-34)
     — here max(run_id) via a broadcast 1-row join, no driver round-trip."""
     latest = run_metrics.agg(F.max("run_id").alias("run_id"))
-    return governance_gate(run_metrics.join(F.broadcast(latest), "run_id"), quality_threshold)
+    return governance_gate(run_metrics.join(F.broadcast(latest), "run_id"), 95.0)

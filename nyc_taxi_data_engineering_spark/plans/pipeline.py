@@ -122,7 +122,6 @@ def build_pipeline(spark: SparkSession, cfg: PipelineConfig) -> Pipeline:
             vendor_key="l_suppkey",
             ts_col="l_shipdate",
             amount_col=F.col("l_extendedprice") * (1 - F.col("l_discount")),
-            active_pred=F.col("s_acctbal") > 0,
         )
         out = zone_path(cfg.out_root, Zone.ANALYTICS, "daily_revenue")
         write_parquet(agg, out)
@@ -132,7 +131,7 @@ def build_pipeline(spark: SparkSession, cfg: PipelineConfig) -> Pipeline:
 
     def stage_lineage(ctx: dict[str, Any]):
         out = zone_path(cfg.out_root, Zone.GOVERNANCE, "lineage")
-        write_parquet(lineage_table(spark, hops), out, mode="overwrite")
+        write_parquet(lineage_table(spark, hops), out)
         return out
 
     return (

@@ -16,10 +16,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 
-class SqlCheckFailure(RuntimeError):
-    pass
-
-
 @dataclass(frozen=True)
 class SqlStep:
     name: str
@@ -35,13 +31,11 @@ class SqlStepResult:
     violations: int = 0
 
 
-def run_sql_workflow(
-    spark: SparkSession, steps: list[SqlStep], fail_fast: bool = True
-) -> list[SqlStepResult]:
+def run_sql_workflow(spark: SparkSession, steps: list[SqlStep]) -> list[SqlStepResult]:
     """Execute steps in order. transform: run each ';'-separated
     statement (results registered by the SQL itself via CREATE TEMP
     VIEW). quality/test: fetch the scalar violation count; > 0 means
-    the contract is broken (raise under fail_fast, else record).
+    the contract is broken, recorded as a VIOLATIONS result.
 
     Transforms are ordered barriers (a later check may read the view a
     transform defines), but a maximal run of CONSECUTIVE check steps is
@@ -50,11 +44,10 @@ def run_sql_workflow(
     on a cluster the small check jobs fill the executors instead of
     draining them one at a time). Error identity keeps workflow order:
     each check captures its own outcome (result OR exception), and the
-    batch is then examined in step order, raising the FIRST failure —
+    batch is then examined in step order, raising the FIRST exception —
     so the surfaced error is the same one serial execution would
-    report even when a later check in the batch threw (e.g. a missing
-    view) while an earlier one merely had violations. Checks after the
-    failing step merely ran (harmless: checks are reads)."""
+    report even when a later check in the batch threw too. Checks
+    after the failing step merely ran (harmless: checks are reads)."""
     results: list[SqlStepResult] = []
     for step in steps:
         if step.kind not in ("transform", "quality", "test"):
@@ -77,10 +70,6 @@ def run_sql_workflow(
             if exc is not None:
                 raise exc
             results.append(r)
-            if r.status == "VIOLATIONS" and fail_fast:
-                raise SqlCheckFailure(
-                    f"{r.kind} step {r.name!r}: {r.violations} violations"
-                )
         batch.clear()
 
     pending: list[SqlStep] = []

@@ -680,7 +680,7 @@ def q_similar_docs_to_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered. Same tokenizer/shingle width as the dedup family;
     integer intersections, one division per candidate."""
     docs = load_table(spark, sf_dir, "documents")
-    sets = D._shingle_sets(docs, "doc_id", "text", T.SHINGLE_WORDS)
+    sets = D._shingle_sets(docs)
     inv = sets.select("doc_id", F.explode("shingles").alias("s"))
     sizes = sets.select("doc_id", F.size("shingles").alias("n"))
     anchor = inv.filter(F.col("doc_id") == MLT_ANCHOR_DOC).select("s")

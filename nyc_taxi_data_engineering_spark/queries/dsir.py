@@ -50,11 +50,11 @@ DSIR_SEED = "dsir1"
 DSIR_TARGET_SOURCE = "src1"  # the curated-domain proxy slice
 
 
-def doc_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def doc_features(docs: DataFrame) -> DataFrame:
     """(doc_id, source, bucket) hashed unigram+bigram feature stream,
     with multiplicity. Tokenization happens once per row; both n-gram
     orders explode from the same token array."""
-    toksed = docs.select("doc_id", "source", T.tokens(F.col(text_col)).alias("_toks"))
+    toksed = docs.select("doc_id", "source", T.tokens(F.col("text")).alias("_toks"))
     unis = toksed.select(
         "doc_id", "source", F.explode("_toks").alias("f")
     ).filter(F.length("f") > 0)

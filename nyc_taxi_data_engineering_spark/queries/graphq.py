@@ -65,12 +65,12 @@ def _enc_s_id(node: str) -> int:
     return int(node[1:]) * 2 + 1
 
 
-def _decode_node(col: str = "node"):
-    n = F.col(col)
+def _decode_node():
+    n = F.col("node")
     return F.concat(
         F.when(n % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
         F.shiftright(n, 1).cast("string"),
-    ).alias(col)
+    ).alias("node")
 
 
 @query("pagerank_trade_graph", oracle=pagerank_sql(_EDGES_CTE))
@@ -93,7 +93,7 @@ def q_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(F.col("c_node").alias("src"), F.col("s_node").alias("dst")).unionByName(
         pairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst"))
     )
-    return pagerank(edges).select(_decode_node("node"), "rank")
+    return pagerank(edges).select(_decode_node(), "rank")
 
 
 _SINK_EDGES_CTE = """edges AS (
@@ -122,7 +122,7 @@ def q_pagerank_purchase_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(_enc_c("o_custkey").alias("src"), _enc_s("l_suppkey").alias("dst"))
         .distinct()
     )
-    return pagerank(edges).select(_decode_node("node"), "rank")
+    return pagerank(edges).select(_decode_node(), "rank")
 
 
 _COPURCHASE_LINKS = """links AS (
@@ -197,7 +197,7 @@ def q_pagerank_weighted_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = wpairs.select(
         F.col("c_node").alias("src"), F.col("s_node").alias("dst"), "w"
     ).unionByName(wpairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst"), "w"))
-    return pagerank(edges, weight="w").select(_decode_node("node"), "rank")
+    return pagerank(edges, weight="w").select(_decode_node(), "rank")
 
 
 from nyc_taxi_data_engineering_spark.operators.cooccur import cooccurrence_pairs
@@ -333,7 +333,7 @@ def q_trade_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst"))
     )
     return bfs_hops(edges, _enc_s_id(BFS_SOURCE), BFS_MAX_HOPS).select(
-        _decode_node("node"), "hops"
+        _decode_node(), "hops"
     )
 
 
@@ -371,7 +371,7 @@ def q_ppr_supplier_recommendations(spark: SparkSession, sf_dir: str) -> DataFram
         pairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst"))
     )
     return pagerank(edges, personalize=_enc_c_id(PPR_SOURCE)).select(
-        _decode_node("node"), "rank"
+        _decode_node(), "rank"
     )
 
 
@@ -447,7 +447,7 @@ def q_trade_cheapest_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
         wpairs.select(F.col("s_node").alias("src"), F.col("c_node").alias("dst"), cost)
     )
     out = cheapest_paths(edges, _enc_s_id(BFS_SOURCE), CHEAPEST_ROUNDS)
-    return out.select(_decode_node("node"), *[c for c in out.columns if c != "node"])
+    return out.select(_decode_node(), *[c for c in out.columns if c != "node"])
 
 
 from nyc_taxi_data_engineering_spark.operators.graph import (
@@ -482,7 +482,7 @@ def q_hits_purchase_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(_enc_c("o_custkey").alias("src"), _enc_s("l_suppkey").alias("dst"))
         .distinct()
     )
-    return hits(edges).select(_decode_node("node"), "hub", "auth")
+    return hits(edges).select(_decode_node(), "hub", "auth")
 
 
 @query(

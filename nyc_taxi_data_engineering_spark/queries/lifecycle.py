@@ -27,8 +27,8 @@ def _master(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _transitioned(spark: SparkSession, sf_dir: str):
     master = _master(spark, sf_dir)
-    # strict=False: PROPOSED rows matching the predicate are skipped,
-    # not an error (only ACTIVE may move to DEPRECATED).
+    # PROPOSED rows matching the predicate are skipped (only ACTIVE may
+    # move to DEPRECATED).
     return lifecycle_transition(
         master,
         key="s_suppkey",
@@ -36,7 +36,6 @@ def _transitioned(spark: SparkSession, sf_dir: str):
         new_state="DEPRECATED",
         actor="governance_job",
         ts=TS,
-        strict=False,
     )
 
 

@@ -69,7 +69,7 @@ def q_media_frame_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verifies the mapInPandas frame-sampling fan-out numerically:
     per doc, the number of sampled frames (every 2nd of n_frames) and
     their total bytes must equal the oracle's closed-form."""
-    frames = M.sample_frames(_media(spark, sf_dir), every=2)
+    frames = M.sample_frames(_media(spark, sf_dir))
     return frames.groupBy("doc_id").agg(
         F.count("*").alias("n_frames_sampled"),
         F.sum(F.octet_length("frame_payload")).alias("total_frame_bytes"),
@@ -203,7 +203,7 @@ def q_media_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form from the text; thumb_n_bytes pins the re-encoded
     container size (11-byte 'P6\\n4 4\\n255\\n' header + 48 raster
     bytes). Retires the round-4 NotImplementedError resize stub."""
-    return M.thumbnail_stats(_ppm_images(spark, sf_dir), width=4, height=4)
+    return M.thumbnail_stats(_ppm_images(spark, sf_dir))
 
 
 # -- image near-dup: dHash + Manku block pairs ------------------------------

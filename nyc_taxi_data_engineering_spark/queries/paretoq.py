@@ -38,7 +38,7 @@ from nyc_taxi_data_engineering_spark.queries.registry import query
 _SKYLINE_BUCKETS = 32
 
 
-def _skyline_pass(df: DataFrame, bucket_col, price="p_retailprice", size="p_size") -> DataFrame:
+def _skyline_pass(df: DataFrame, bucket_col) -> DataFrame:
     """One exact skyline pass within each value of ``bucket_col``.
 
     Returns the rows of ``df`` not dominated by any row in the same
@@ -54,18 +54,18 @@ def _skyline_pass(df: DataFrame, bucket_col, price="p_retailprice", size="p_size
     scan of ``df``.
     """
     tagged = df.withColumn("_b", bucket_col).withColumn(
-        "_pc", F.round(F.col(price) * 100).cast("long")
+        "_pc", F.round(F.col("p_retailprice") * 100).cast("long")
     )
     w_strict = (
         Window.partitionBy("_b").orderBy("_pc").rangeBetween(Window.unboundedPreceding, -1)
     )
     w_eq = Window.partitionBy("_b", "_pc")
     return (
-        tagged.withColumn("_prev_best", F.max(size).over(w_strict))
-        .withColumn("_best_eq", F.max(size).over(w_eq))
+        tagged.withColumn("_prev_best", F.max("p_size").over(w_strict))
+        .withColumn("_best_eq", F.max("p_size").over(w_eq))
         .filter(
-            (F.col(size) == F.col("_best_eq"))
-            & (F.col("_prev_best").isNull() | (F.col("_prev_best") < F.col(size)))
+            (F.col("p_size") == F.col("_best_eq"))
+            & (F.col("_prev_best").isNull() | (F.col("_prev_best") < F.col("p_size")))
         )
         .drop("_b", "_pc", "_prev_best", "_best_eq")
     )

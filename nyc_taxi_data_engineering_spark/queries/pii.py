@@ -50,11 +50,11 @@ PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def _planted_sql(id_col: str = "doc_id", text_col: str = "text") -> str:
+def _planted_sql() -> str:
     """SQL expression for the text with the deterministic PII block
     appended — identical syntax runs in both engines (|| concat,
     CAST, lpad, %)."""
-    d = id_col
+    d = "doc_id"
     email = (
         f"CASE WHEN {d} % 3 = 0 THEN ' contact user' || CAST({d} % 97 AS STRING)"
         f" || '@mail' || CAST({d} % 7 AS STRING) || '.com' ELSE '' END"
@@ -80,7 +80,7 @@ def _planted_sql(id_col: str = "doc_id", text_col: str = "text") -> str:
         f" || ' ' || lpad(CAST(({d} * 5) % 9000 AS STRING), 4, '0')"
         f" || ' ' || lpad(CAST(({d} * 11) % 9000 AS STRING), 4, '0') ELSE '' END"
     )
-    return f"({text_col} || {email} || {phone} || {ssn} || {ipv4} || {cc})"
+    return f"(text || {email} || {phone} || {ssn} || {ipv4} || {cc})"
 
 
 def _planted_col() -> Column:

@@ -81,7 +81,7 @@ def q_als_supplier_recommendations(spark: SparkSession, sf_dir: str) -> DataFram
         .groupBy(F.col("o_custkey").alias("u"), F.col("l_suppkey").alias("i"))
         .agg(F.count_distinct("o_orderkey").alias("r"))
     )
-    user_f, item_f = als_factors(ratings, prepared=True)
+    user_f, item_f = als_factors(ratings)
     sel = user_f.filter(F.col("i") % USER_MOD == 0).select(
         F.col("i").alias("user_id"), F.col("f1").alias("u1"), F.col("f2").alias("u2")
     )
@@ -231,7 +231,7 @@ def q_als_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .join(ratings.select("u", "i"), ["u", "i"], "left_anti")
     )
-    user_f, item_f = als_factors(ratings, prepared=True)
+    user_f, item_f = als_factors(ratings)
     eu = (
         hold.filter(F.col("u") % EVAL_USER_MOD == 0)
         .join(user_f.select(F.col("i").alias("u")), "u", "left_semi")

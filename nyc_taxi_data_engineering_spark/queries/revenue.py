@@ -38,7 +38,6 @@ def q_daily_vendor_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         vendor_key="l_suppkey",
         ts_col="l_shipdate",
         amount_col=F.col("l_extendedprice") * (1 - F.col("l_discount")),
-        active_pred=F.col("s_acctbal") > 0,
         amount_pred=F.col("l_extendedprice") > 0,
     )
 

@@ -210,7 +210,7 @@ N_SHUFFLE_SHARDS = 8
 @query(
     "corpus_shuffle_shards",
     oracle=S.shuffle_shards_sql(
-        "documents", "doc_id", N_SHUFFLE_SHARDS, "doc_id, lang, source", seed="r5"
+        "documents", "doc_id", N_SHUFFLE_SHARDS, "doc_id, lang, source"
     ),
 )
 def q_corpus_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,7 +220,7 @@ def q_corpus_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     The full assignment is the query output, so the oracle hash checks
     every row's placement, not just shard counts."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source")
-    return S.shuffle_shards(docs, "doc_id", N_SHUFFLE_SHARDS, seed="r5")
+    return S.shuffle_shards(docs, "doc_id", N_SHUFFLE_SHARDS)
 
 
 TEMP_ALPHA = 0.5  # mixture temperature (mBERT/XLM-R-style alpha)

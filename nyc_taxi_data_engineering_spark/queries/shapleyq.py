@@ -43,10 +43,10 @@ FULL = (1 << N) - 1
 W24 = [6, 2, 2, 6]
 
 
-def _bit_sql(col: str = "event_type") -> str:
+def _bit_sql() -> str:
     """Channel -> bit value; purchase and unknown types carry no bit."""
     whens = " ".join(
-        f"WHEN {col} = '{c}' THEN {1 << i}" for i, c in enumerate(CHANNELS)
+        f"WHEN event_type = '{c}' THEN {1 << i}" for i, c in enumerate(CHANNELS)
     )
     return f"CASE {whens} ELSE 0 END"
 

@@ -30,6 +30,12 @@ from pyspark.sql import functions as F
 from nyc_taxi_data_engineering_spark.catalog import load_table_parallel as load_table
 from nyc_taxi_data_engineering_spark.functions import portable_round, portable_round_sql
 from nyc_taxi_data_engineering_spark.operators import pin, session_cache
+from nyc_taxi_data_engineering_spark.operators.kmeans import (
+    KMEANS_ITERS,
+    KMEANS_K,
+    _l2sq,
+    lloyd_kmeans,
+)
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
 
@@ -65,14 +71,14 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sign_bucket(v: Column, dims: int = LSH_SIGN_DIMS) -> Column:
+def sign_bucket(v: Column) -> Column:
     """Axis-aligned hyperplane LSH: bucket id from the sign bits of
-    the first ``dims`` components."""
+    the first ``LSH_SIGN_DIMS`` components."""
     return reduce(
         add,
         [
             F.when(F.element_at(v, i + 1) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-            for i in range(dims)
+            for i in range(LSH_SIGN_DIMS)
         ],
     ).cast("int")
 
@@ -321,15 +327,15 @@ NEARDUP_BANDS = 4
 NEARDUP_BAND_DIMS = 16
 
 
-def band_bucket(v: Column, band: int, dims: int = NEARDUP_BAND_DIMS) -> Column:
+def band_bucket(v: Column, band: int) -> Column:
     """Sign-LSH bucket for one band: the sign bits of dims
-    [band*dims, band*dims + dims)."""
-    off = band * dims
+    [band*d, band*d + d), d = NEARDUP_BAND_DIMS."""
+    off = band * NEARDUP_BAND_DIMS
     return reduce(
         add,
         [
             F.when(F.element_at(v, off + i + 1) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-            for i in range(dims)
+            for i in range(NEARDUP_BAND_DIMS)
         ],
     ).cast("int")
 
@@ -608,13 +614,6 @@ def _subspaces(df: DataFrame, vcol: str, id_out: str, v_out: str) -> DataFrame:
     )
 
 
-def _l2sq(a: Column, b: Column) -> Column:
-    """Squared L2 over a subspace, folded left-to-right like dot()."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
 _SQL_SUBSPACES = " UNION ALL ".join(
     f"SELECT vec_id, {m} AS m, v[{m * PQ_DSUB + 1}:{(m + 1) * PQ_DSUB}] AS sv FROM n"
     for m in range(PQ_M)
@@ -879,27 +878,41 @@ def _km_means_cte(assign_cte: str, out: str) -> str:
 )"""
 
 
+def _km_lloyd_ctes() -> str:
+    """Twin of operators/kmeans.lloyd_kmeans over ``e`` (vec_id, v):
+    the ``KMEANS_K`` seeds, ``KMEANS_ITERS`` Lloyd rounds (means ``m{t}``,
+    centroids ``c{t}``) and the closing assignment ``a{KMEANS_ITERS+1}``."""
+    parts = [
+        f"""seeds AS (
+    SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS c_id, v AS cv
+    FROM e ORDER BY vec_id LIMIT {KMEANS_K}
+)"""
+    ]
+    prev = "seeds"
+    for t in range(1, KMEANS_ITERS + 1):
+        parts += [
+            _km_assign_cte(prev, f"a{t}"),
+            _km_means_cte(f"a{t}", f"m{t}"),
+            f"c{t} AS (SELECT c_id, list(val ORDER BY pos) AS cv FROM m{t} GROUP BY c_id)",
+        ]
+        prev = f"c{t}"
+    parts.append(_km_assign_cte(prev, f"a{KMEANS_ITERS + 1}"))
+    return ",\n".join(parts)
+
+
+_KM_M, _KM_C, _KM_A = f"m{KMEANS_ITERS}", f"c{KMEANS_ITERS}", f"a{KMEANS_ITERS + 1}"
+
 _KMEANS_ORACLE = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-seeds AS (
-    SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS c_id, v AS cv
-    FROM e ORDER BY vec_id LIMIT {{k}}
-),
-{_km_assign_cte('seeds', 'a1')},
-{_km_means_cte('a1', 'm1')},
-c1 AS (SELECT c_id, list(val ORDER BY pos) AS cv FROM m1 GROUP BY c_id),
-{_km_assign_cte('c1', 'a2')},
-{_km_means_cte('a2', 'm2')},
-c2 AS (SELECT c_id, list(val ORDER BY pos) AS cv FROM m2 GROUP BY c_id),
-{_km_assign_cte('c2', 'a3')},
-counts AS (SELECT c_id, COUNT(*) AS n_members FROM a3 GROUP BY c_id)
-SELECT m2.c_id AS cluster_id, CAST(m2.pos AS INT) AS dim,
-       m2.val AS centroid, counts.n_members
-FROM m2 JOIN counts USING (c_id)
+{_km_lloyd_ctes()},
+counts AS (SELECT c_id, COUNT(*) AS n_members FROM {_KM_A} GROUP BY c_id)
+SELECT {_KM_M}.c_id AS cluster_id, CAST({_KM_M}.pos AS INT) AS dim,
+       {_KM_M}.val AS centroid, counts.n_members
+FROM {_KM_M} JOIN counts USING (c_id)
 """
 
 
-@query("kmeans_embeddings", oracle=_KMEANS_ORACLE.format(k=8))
+@query("kmeans_embeddings", oracle=_KMEANS_ORACLE)
 def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 2-round Lloyd k-means (operators/kmeans) over the
     full embedding corpus, k=8 seeded from the smallest ids: the
@@ -911,14 +924,12 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested SQL CTEs, so assignment ties, float fold order, and the
     exact centroid doubles are all under the hash gate.
     Output: (cluster_id, dim, centroid, n_members) — k·64 rows."""
-    from nyc_taxi_data_engineering_spark.operators.kmeans import lloyd_kmeans
-
     emb = session_cache(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
     )
-    assign, cent_long = lloyd_kmeans(emb, k=8, iters=2)
+    assign, cent_long = lloyd_kmeans(emb)
     counts = assign.groupBy("c_id").agg(F.count(F.lit(1)).alias("n_members"))
     return cent_long.join(counts, "c_id").select(
         F.col("c_id").alias("cluster_id"),
@@ -1105,7 +1116,7 @@ def q_linear_probe_class_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoring pass (optimization r13 — see prepare_probe_corpus).
     x = prepare_probe_corpus(x)
     # bias_row and wpos both read the model: pin it once
-    model = pin(train_linear_probe(x, y, prepared=True))
+    model = pin(train_linear_probe(x, y))
     bias_row = model.filter(F.col("dim") == 0).select(F.col("weight").alias("bias"))
     wpos = model.filter(F.col("dim") > 0).select(
         (F.col("dim") - 1).alias("pos"), F.col("weight").alias("w")
@@ -1226,7 +1237,7 @@ def q_probe_calibration_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One prepared corpus layout serves training AND scoring (r13).
     x = prepare_probe_corpus(x)
     # bias_row and wpos both read the model: pin it once
-    model = pin(train_linear_probe(x, y, prepared=True))
+    model = pin(train_linear_probe(x, y))
     bias_row = model.filter(F.col("dim") == 0).select(F.col("weight").alias("bias"))
     wpos = model.filter(F.col("dim") > 0).select(
         (F.col("dim") - 1).alias("pos"), F.col("weight").alias("w")
@@ -1338,26 +1349,16 @@ _SIL_DIST = (
 
 _SILHOUETTE_ORACLE = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-seeds AS (
-    SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS c_id, v AS cv
-    FROM e ORDER BY vec_id LIMIT 8
-),
-{_km_assign_cte('seeds', 'a1')},
-{_km_means_cte('a1', 'm1')},
-c1 AS (SELECT c_id, list(val ORDER BY pos) AS cv FROM m1 GROUP BY c_id),
-{_km_assign_cte('c1', 'a2')},
-{_km_means_cte('a2', 'm2')},
-c2 AS (SELECT c_id, list(val ORDER BY pos) AS cv FROM m2 GROUP BY c_id),
-{_km_assign_cte('c2', 'a3')},
+{_km_lloyd_ctes()},
 dist AS (
     SELECT e.vec_id, c.c_id, {_SIL_DIST} AS d
-    FROM e CROSS JOIN c2 c
+    FROM e CROSS JOIN {_KM_C} c
 ),
 ab AS (
     SELECT d.vec_id, a.c_id,
            MIN(CASE WHEN d.c_id = a.c_id THEN d.d END) AS a_dist,
            MIN(CASE WHEN d.c_id <> a.c_id THEN d.d END) AS b_dist
-    FROM dist d JOIN a3 a ON a.vec_id = d.vec_id
+    FROM dist d JOIN {_KM_A} a ON a.vec_id = d.vec_id
     GROUP BY d.vec_id, a.c_id
 ),
 s AS (
@@ -1388,14 +1389,12 @@ def q_kmeans_silhouette_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
     SAME two Lloyd rounds + closing assignment as kmeans_embeddings.
     (A singleton cluster scores ~1 here, not full-silhouette's 0 —
     its vector IS its centroid; documented variant semantics.)"""
-    from nyc_taxi_data_engineering_spark.operators.kmeans import lloyd_kmeans
-
     emb = session_cache(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
         )
     )
-    assign, cent_long = lloyd_kmeans(emb, k=8, iters=2)
+    assign, cent_long = lloyd_kmeans(emb)
     cent = (
         cent_long.groupBy("c_id")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "val"))).alias("sv"))

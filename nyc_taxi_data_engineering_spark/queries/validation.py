@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from nyc_taxi_data_engineering_spark.catalog import load_table
 from nyc_taxi_data_engineering_spark.operators.validate import split_metrics, validate_split
 from nyc_taxi_data_engineering_spark.plans.dq_rules import evaluate_rules, load_rules
-from nyc_taxi_data_engineering_spark.plans.governance import governance_gate
+from nyc_taxi_data_engineering_spark.plans.governance import FRESH_MAX_AGE_DAYS, governance_gate
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
 # Ordered pass-predicates (order defines the quarantine reason).
@@ -170,7 +170,6 @@ def q_governance_gate_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _FRESH_AS_OF = "2024-02-05"
-_FRESH_MAX_AGE = 30
 
 
 def _freshness_oracle(table: str, ts_expr: str) -> str:
@@ -178,8 +177,8 @@ def _freshness_oracle(table: str, ts_expr: str) -> str:
     return f"""SELECT '{table}' AS dataset,
        strftime(CAST(MAX({ts_expr}) AS TIMESTAMP), '%Y-%m-%d %H:%M:%S') AS newest_ts,
        CAST({diff} AS INT) AS age_days,
-       CAST({_FRESH_MAX_AGE} AS INT) AS max_age_days,
-       CASE WHEN {diff} <= {_FRESH_MAX_AGE} THEN 'FRESH' ELSE 'STALE' END AS decision
+       CAST({FRESH_MAX_AGE_DAYS} AS INT) AS max_age_days,
+       CASE WHEN {diff} <= {FRESH_MAX_AGE_DAYS} THEN 'FRESH' ELSE 'STALE' END AS decision
 FROM {table}"""
 
 
@@ -193,10 +192,6 @@ def q_freshness_gate_datasets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (days old), orders is STALE (decades old)."""
     from nyc_taxi_data_engineering_spark.plans.governance import freshness_gate
 
-    ev = freshness_gate(
-        load_table(spark, sf_dir, "events"), "ts", "events", _FRESH_AS_OF, _FRESH_MAX_AGE
-    )
-    od = freshness_gate(
-        load_table(spark, sf_dir, "orders"), "o_orderdate", "orders", _FRESH_AS_OF, _FRESH_MAX_AGE
-    )
+    ev = freshness_gate(load_table(spark, sf_dir, "events"), "ts", "events", _FRESH_AS_OF)
+    od = freshness_gate(load_table(spark, sf_dir, "orders"), "o_orderdate", "orders", _FRESH_AS_OF)
     return ev.unionByName(od)

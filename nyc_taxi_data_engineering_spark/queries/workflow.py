@@ -2,9 +2,9 @@
 referential integrity, null validation, reconciliation, aggregate
 consistency — sql/docs/data_quality_strategy.md:5-9).
 
-The assertion suite runs through run_sql_workflow (fail_fast=False)
-over temp views, then reports per-check violation counts — the
-count-must-be-zero contract as data.
+The assertion suite runs through run_sql_workflow over temp views,
+then reports per-check violation counts — the count-must-be-zero
+contract as data.
 """
 
 from __future__ import annotations
@@ -148,7 +148,7 @@ UNION ALL SELECT 'test_rowcount_consistency', 'test',
 )
 def q_sql_workflow_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ("lineitem", "supplier"))
-    results = run_sql_workflow(spark, _STEPS, fail_fast=False)
+    results = run_sql_workflow(spark, _STEPS)
     return spark.createDataFrame(
         [(r.name, r.kind, r.status, r.violations) for r in results],
         "step_name string, kind string, status string, violations long",

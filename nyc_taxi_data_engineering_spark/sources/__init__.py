@@ -39,15 +39,10 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def read_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """S2: header CSV scan; pass an explicit schema in production paths
-    (inference costs an extra scan and is nondeterministic on dirty data)."""
-    reader = spark.read.option("header", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", True)
-    return reader.csv(path)
+def read_csv(spark: SparkSession, path: str) -> DataFrame:
+    """S2: header CSV scan with schema inference (an extra scan, and
+    nondeterministic on dirty data: round trips only)."""
+    return spark.read.option("header", True).option("inferSchema", True).csv(path)
 
 
 def read_delta(spark: SparkSession, path: str, version_as_of: int | None = None) -> DataFrame:
@@ -74,34 +69,32 @@ def read_delta(spark: SparkSession, path: str, version_as_of: int | None = None)
 
 # -- sinks (S7–S14) ---------------------------------------------------
 
-def write_parquet(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by: Sequence[str] | None = None
-) -> None:
-    """S7/S8: parquet sink, optionally Hive-partitioned."""
-    writer = df.write.mode(mode)
+def write_parquet(df: DataFrame, path: str, partition_by: Sequence[str] | None = None) -> None:
+    """S7/S8: overwriting parquet sink, optionally Hive-partitioned."""
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
 
-def write_json_metrics(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S11: single-file JSON metrics sink (coalesce(1) — metrics frames
-    are tiny by contract; never use for data tables)."""
-    df.coalesce(1).write.mode(mode).json(path)
+def write_json_metrics(df: DataFrame, path: str) -> None:
+    """S11: single-file overwriting JSON metrics sink (coalesce(1) —
+    metrics frames are tiny by contract; never use for data tables)."""
+    df.coalesce(1).write.mode("overwrite").json(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S14: header CSV sink (steward queues, scorecards)."""
-    df.write.mode(mode).option("header", True).csv(path)
+def write_csv(df: DataFrame, path: str) -> None:
+    """S14: overwriting header CSV sink (steward queues, scorecards)."""
+    df.write.mode("overwrite").option("header", True).csv(path)
 
 
-def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "overwrite", **options) -> None:
+def write_jdbc(df: DataFrame, url: str, table: str, **options) -> None:
     """S12: JDBC bulk load (untestable here — no database in the image;
     thin passthrough kept for API parity with ppcurated_rds.py:64-72)."""
     writer = df.write.format("jdbc").option("url", url).option("dbtable", table)
     for k, v in options.items():
         writer = writer.option(k, v)
-    writer.mode(mode).save()
+    writer.mode("overwrite").save()
 
 
 def write_bucketed(
@@ -109,19 +102,13 @@ def write_bucketed(
     table: str,
     bucket_cols: Sequence[str],
     n_buckets: int,
-    sort_cols: Sequence[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Hash-bucketed (optionally sorted) managed table — the Spark
-    analog of the reference's Redshift distkey/sortkey physical design
-    (Day16.md:27-34): joins and aggregations on the bucket columns
+    """Hash-bucketed managed table (overwritten) — the Spark analog of
+    the reference's Redshift distkey physical design (Day16.md:27-34): joins and aggregations on the bucket columns
     read co-located, pre-hashed files and skip the shuffle entirely
     (see tests/test_scale_mechanisms.py for the plan proof). The
     100 TB lever for repeated fact-fact joins on a stable key."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table)
+    df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols).format("parquet").saveAsTable(table)
 
 
 # -- partition discovery (S15) ---------------------------------------

@@ -38,9 +38,9 @@ def delta_ingest_batch(
     batch_id: int,
     table_path: str,
     app_id: str,
-    partition_by: list[str] | str | None = None,
 ) -> bool:
-    """Append one micro-batch as one Delta commit; returns False (and
+    """Append one micro-batch as one ``event_date``-partitioned Delta
+    commit; returns False (and
     writes nothing) when the table's txn watermark for ``app_id``
     shows this batch id already committed — the replay-after-recovery
     case."""
@@ -52,7 +52,7 @@ def delta_ingest_batch(
         table_path,
         mode="append",
         operation="STREAMING UPDATE",
-        partition_by=partition_by,
+        partition_by="event_date",
         txn=(app_id, batch_id),
     )
     return True
@@ -63,13 +63,12 @@ def delta_stream_sink(
     checkpoint_dir: str,
     table_path: str,
     app_id: str,
-    partition_by: list[str] | str | None = None,
 ) -> StreamingQuery:
     """Drain ``result`` (availableNow) into a Delta table, one commit
     per micro-batch, exactly-once via the txn watermark."""
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        delta_ingest_batch(batch, batch_id, table_path, app_id, partition_by)
+        delta_ingest_batch(batch, batch_id, table_path, app_id)
 
     return foreach_batch_sink(result, checkpoint_dir, _sink)
 
@@ -80,7 +79,6 @@ def ingest_events_to_delta(
     table_path: str,
     checkpoint_dir: str,
     app_id: str = "events-ingest",
-    max_files_per_trigger: int | None = 1,
 ) -> int:
     """File-source events stream → date-partitioned Delta table.
     ``maxFilesPerTrigger=1`` makes each staged file one micro-batch
@@ -91,12 +89,10 @@ def ingest_events_to_delta(
     from nyc_taxi_data_engineering_spark.sources.delta_log import latest_version
     from nyc_taxi_data_engineering_spark.streaming.runner import read_events_stream
 
-    stream = read_events_stream(spark, source_dir, max_files_per_trigger).withColumn(
+    stream = read_events_stream(spark, source_dir, 1).withColumn(
         "event_date", F.to_date("ts")
     )
-    delta_stream_sink(
-        stream, checkpoint_dir, table_path, app_id, partition_by="event_date"
-    )
+    delta_stream_sink(stream, checkpoint_dir, table_path, app_id)
     v = latest_version(table_path)
     if v is None:
         raise RuntimeError(f"stream drained but no Delta commit at {table_path}")

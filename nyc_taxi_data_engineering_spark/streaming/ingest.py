@@ -16,15 +16,13 @@ boundaries.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.streaming.windows import with_watermark
 
 
-def dedup_events(events: DataFrame, keys: Sequence[str] = ("event_id",)) -> DataFrame:
+def dedup_events(events: DataFrame) -> DataFrame:
     """At-least-once -> exactly-once: drop redelivered events by key.
 
     Streaming input: watermark + ``dropDuplicatesWithinWatermark`` so
@@ -32,18 +30,16 @@ def dedup_events(events: DataFrame, keys: Sequence[str] = ("event_id",)) -> Data
     real systems arrive within seconds, not days). Batch input: plain
     ``dropDuplicates`` — same semantics over a bounded set."""
     if events.isStreaming:
-        return with_watermark(events).dropDuplicatesWithinWatermark(list(keys))
-    return events.dropDuplicates(list(keys))
+        return with_watermark(events).dropDuplicatesWithinWatermark(["event_id"])
+    return events.dropDuplicates(["event_id"])
 
 
 ATTRIBUTION_HORIZON = "1 hour"
 
 
-def attribute_purchases_to_clicks(
-    clicks: DataFrame, purchases: DataFrame, horizon: str = ATTRIBUTION_HORIZON
-) -> DataFrame:
+def attribute_purchases_to_clicks(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """Stream-stream interval join: each purchase is attributed to every
-    click by the same user in the preceding ``horizon``.
+    click by the same user in the preceding ``ATTRIBUTION_HORIZON``.
 
     Streaming input: BOTH sides carry watermarks and the join condition
     bounds purchase_ts to [click_ts, click_ts + horizon], which is what
@@ -74,7 +70,7 @@ def attribute_purchases_to_clicks(
     cond = (
         (c.user_id == p.p_user_id)
         & (p.purchase_ts >= c.click_ts)
-        & (p.purchase_ts <= c.click_ts + F.expr(f"INTERVAL {horizon}"))
+        & (p.purchase_ts <= c.click_ts + F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}"))
     )
     return c.join(p, cond, "inner").select(
         "user_id",
@@ -97,9 +93,7 @@ def enrich_events_with_customers(events: DataFrame, customers: DataFrame) -> Dat
     return events.join(F.broadcast(dim), "user_id", "left")
 
 
-def attribute_clicks_left_outer(
-    clicks: DataFrame, purchases: DataFrame, horizon: str = ATTRIBUTION_HORIZON
-) -> DataFrame:
+def attribute_clicks_left_outer(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """LEFT OUTER stream-stream interval join — the attribution view
     that also reports clicks that converted to NOTHING (purchase
     columns null), the half of the funnel the inner join hides.
@@ -129,7 +123,7 @@ def attribute_clicks_left_outer(
     cond = (
         (c.user_id == p.p_user_id)
         & (p.purchase_ts >= c.click_ts)
-        & (p.purchase_ts <= c.click_ts + F.expr(f"INTERVAL {horizon}"))
+        & (p.purchase_ts <= c.click_ts + F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}"))
     )
     return c.join(p, cond, "leftOuter").select(
         "user_id",

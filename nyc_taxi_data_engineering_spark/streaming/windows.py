@@ -26,18 +26,18 @@ SESSION_GAP = "6 hours"
 WATERMARK_DELAY = "2 hours"
 
 
-def with_watermark(events: DataFrame, delay: str = WATERMARK_DELAY) -> DataFrame:
-    """Late-data contract: rows later than ``delay`` behind the max
+def with_watermark(events: DataFrame) -> DataFrame:
+    """Late-data contract: rows later than ``WATERMARK_DELAY`` behind the max
     observed ts are dropped; window state older than the horizon is
     evicted (the reference's deferred 'late-arrival adjustment logic',
     made concrete)."""
-    return events.withWatermark("ts", delay)
+    return events.withWatermark("ts", WATERMARK_DELAY)
 
 
-def tumbling_event_stats(events: DataFrame, duration: str = TUMBLE) -> DataFrame:
+def tumbling_event_stats(events: DataFrame) -> DataFrame:
     """Per-(tumbling window, event_type) count + exact value sum."""
     return (
-        events.groupBy(F.window("ts", duration).alias("w"), "event_type")
+        events.groupBy(F.window("ts", TUMBLE).alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), stable_sum("value").alias("sum_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -49,13 +49,11 @@ def tumbling_event_stats(events: DataFrame, duration: str = TUMBLE) -> DataFrame
     )
 
 
-def sliding_event_stats(
-    events: DataFrame, duration: str = SLIDE_WINDOW, slide: str = SLIDE_STEP
-) -> DataFrame:
+def sliding_event_stats(events: DataFrame) -> DataFrame:
     """Sliding (hopping) windows: each event lands in window/slide
     overlapping windows (2 here)."""
     return (
-        events.groupBy(F.window("ts", duration, slide).alias("w"), "event_type")
+        events.groupBy(F.window("ts", SLIDE_WINDOW, SLIDE_STEP).alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), stable_sum("value").alias("sum_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -67,13 +65,13 @@ def sliding_event_stats(
     )
 
 
-def session_user_stats(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
+def session_user_stats(events: DataFrame) -> DataFrame:
     """Per-user session windows (gap-based): a session extends while
-    consecutive events are within ``gap``; ``session_end`` is
-    last-event + gap (Spark's session_window semantics, mirrored by the
+    consecutive events are within ``SESSION_GAP``; ``session_end`` is
+    last-event + SESSION_GAP (Spark's session_window semantics, mirrored by the
     oracle's gaps-and-islands SQL)."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), stable_sum("value").alias("sum_value"))
         .select(
             "user_id",

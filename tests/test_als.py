@@ -8,9 +8,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.operators.als import (
+    ALS_ITERS,
     ALS_LAMBDA,
     _init_item_factors,
+    _solve_side,
     als_factors,
+    prepare_ratings,
 )
 
 
@@ -22,7 +25,7 @@ def _ratings(spark):
         rows += [(u, 10, 5), (u, 11, 4), (u, 12, 1)]
     for u in (4, 5, 6):
         rows += [(u, 12, 5), (u, 13, 4), (u, 10, 1)]
-    return spark.createDataFrame(rows, "u long, i long, r long")
+    return prepare_ratings(spark.createDataFrame(rows, "u long, i long, r long"))
 
 
 def _sse(ratings, user_f, item_f):
@@ -53,11 +56,14 @@ def _reg_norm(fdf):
 def test_als_objective_decreases(spark):
     """Each alternation's closed-form solves exactly minimize the
     REGULARIZED objective SSE + lambda*(||U||^2 + ||V||^2) (raw SSE
-    alone may tick up — that's the regularizer doing its job), so two
-    alternations can never score worse than one."""
+    alone may tick up — that's the regularizer doing its job), so the
+    ALS_ITERS >= 2 alternations can never score worse than the first
+    one alone, built here from the same half-sweep solves."""
     r = _ratings(spark)
-    uf1, if1 = als_factors(r, iters=1)
-    uf2, if2 = als_factors(r, iters=2)
+    assert ALS_ITERS >= 2
+    uf1 = _solve_side(r.withColumnRenamed("i", "fk"), _init_item_factors(r), "u", "fk")
+    if1 = _solve_side(r.withColumnRenamed("u", "fk"), uf1, "i", "fk")
+    uf2, if2 = als_factors(r)
     obj1 = _sse(r, uf1, if1) + ALS_LAMBDA * (_reg_norm(uf1) + _reg_norm(if1))
     obj2 = _sse(r, uf2, if2) + ALS_LAMBDA * (_reg_norm(uf2) + _reg_norm(if2))
     assert obj2 <= obj1 + 1e-9

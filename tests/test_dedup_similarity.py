@@ -366,23 +366,26 @@ def test_ivfpq_shape_and_recall(spark, sf_dir):
 
 
 def test_kmeans_separable_clusters(spark):
-    """Two tight blobs + k=2: after 2 Lloyd rounds every point lands
-    with its blob and centroids are the exact decimal blob means."""
+    """Two tight blobs: the KMEANS_K = 8 seeds (ids 0-7) sit four on
+    each blob centre, so ties send every point to seed 0 or seed 4.
+    After the Lloyd rounds every point lands with its blob and
+    centroids are the exact decimal blob means."""
     from nyc_taxi_data_engineering_spark.operators import kmeans as KM
 
-    rows = [
-        (0, [0.0, 0.0]), (1, [10.0, 10.0]),  # seeds: one per blob
-        (2, [0.2, -0.2]), (3, [0.4, 0.0]),
-        (4, [10.2, 9.8]), (5, [9.6, 10.0]),
+    assert KM.KMEANS_K == 8
+    rows = [(i, [0.0, 0.0]) for i in range(4)] + [(i, [10.0, 10.0]) for i in range(4, 8)]
+    rows += [
+        (8, [0.2, -0.2]), (9, [0.4, 0.0]),
+        (10, [10.2, 9.8]), (11, [9.6, 10.0]),
     ]
     corpus = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    assign, cent = KM.lloyd_kmeans(corpus, k=2, iters=2)
+    assign, cent = KM.lloyd_kmeans(corpus)
     got = {r["vec_id"]: r["c_id"] for r in assign.collect()}
-    assert got == {0: 0, 2: 0, 3: 0, 1: 1, 4: 1, 5: 1}
+    assert got == {i: 0 if i in (0, 1, 2, 3, 8, 9) else 4 for i in range(12)}
     c0 = {r["pos"]: r["val"] for r in cent.filter("c_id = 0").collect()}
     # means accumulate in DECIMAL(18,9): 0.2 and 0.4 truncate to 9 dp
     # before summing, so the sum is exactly 0.6 (not the float fold)
-    assert c0 == {0: 0.6 / 3, 1: -0.2 / 3}
+    assert c0 == {0: 0.6 / 6, 1: -0.2 / 6}
 
 
 def test_kmeans_empty_cluster_drops_out(spark):
@@ -390,14 +393,15 @@ def test_kmeans_empty_cluster_drops_out(spark):
     codebook — documented Lloyd behavior, identical in the oracle."""
     from nyc_taxi_data_engineering_spark.operators import kmeans as KM
 
-    # seeds are ids 0 and 1; id 1 sits right next to id 0, so cluster 1
-    # wins nothing once round-1 means move: all mass near the origin.
-    rows = [(0, [0.0]), (1, [0.1]), (2, [0.0]), (3, [0.05]), (4, [0.05])]
+    # seeds are ids 0-7; ids 1-7 repeat id 0's vector, so the
+    # lowest-c_id tie-break gives every point to cluster 0 and the
+    # other seven win nothing in round 1.
+    rows = [(i, [0.0]) for i in range(8)] + [(8, [0.05]), (9, [0.1])]
     corpus = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    assign, cent = KM.lloyd_kmeans(corpus, k=2, iters=2)
+    assign, cent = KM.lloyd_kmeans(corpus)
     cids = {r["c_id"] for r in assign.collect()}
     cent_ids = {r["c_id"] for r in cent.collect()}
-    assert cent_ids == cids  # centroids exist exactly for surviving clusters
+    assert cent_ids == cids == {0}  # centroids exist exactly for surviving clusters
 
 
 def test_crossdoc_repeated_spans_planted_paragraph(spark):

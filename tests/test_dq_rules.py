@@ -81,7 +81,7 @@ def test_governance_gate_pass_fail(spark):
     )
     decisions = {r["run_id"]: r["decision"] for r in governance_gate(metrics, 95.0).collect()}
     assert decisions == {"r1": "PASS", "r2": "FAIL"}
-    latest = latest_run_decision(metrics, 95.0).collect()
+    latest = latest_run_decision(metrics).collect()
     assert len(latest) == 1 and latest[0]["run_id"] == "r2" and latest[0]["decision"] == "FAIL"
 
 

@@ -32,30 +32,24 @@ def test_pagerank_hub_ranks_highest_and_mass_conserved(spark):
     assert abs(sum(ranks.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_iters_zero_is_uniform_start(spark):
-    ranks = {r["node"]: r["rank"] for r in pagerank(_edges(spark, [("a", "b"), ("b", "a")]), iters=0).collect()}
-    assert ranks == {"a": 0.5, "b": 0.5}
-
-
 def test_pagerank_dangling_mass_conserved(spark):
     """a->b, a->c, b->c: c is a SINK (never a src). Sinks must be
     ranked, their mass redistributed uniformly each round, and total
-    mass must stay 1.0 ± rounding every iteration — the dangling-mass
-    contract general link graphs depend on."""
+    mass must stay 1.0 ± rounding — the dangling-mass contract general
+    link graphs depend on."""
     edges = _edges(spark, [("a", "b"), ("a", "c"), ("b", "c")])
-    for iters in (1, 2, 3):
-        ranks = {r["node"]: r["rank"] for r in pagerank(edges, iters=iters).collect()}
-        assert set(ranks) == {"a", "b", "c"}  # the sink is ranked
-        assert abs(sum(ranks.values()) - 1.0) < 1e-9, (iters, ranks)
+    ranks = {r["node"]: r["rank"] for r in pagerank(edges).collect()}
+    assert set(ranks) == {"a", "b", "c"}  # the sink is ranked
+    assert abs(sum(ranks.values()) - 1.0) < 1e-9, ranks
     # c receives from a, b AND the redistribution; it must dominate
     assert ranks["c"] > ranks["b"] > ranks["a"]
 
 
 def test_pagerank_all_sinks_is_uniform(spark):
-    """a->b with nothing else: after any number of rounds mass keeps
-    cycling through the teleport + redistribution terms and stays
-    conserved; b (the sink target) outranks a."""
-    ranks = {r["node"]: r["rank"] for r in pagerank(_edges(spark, [("a", "b")]), iters=3).collect()}
+    """a->b with nothing else: round after round mass keeps cycling
+    through the teleport + redistribution terms and stays conserved;
+    b (the sink target) outranks a."""
+    ranks = {r["node"]: r["rank"] for r in pagerank(_edges(spark, [("a", "b")])).collect()}
     assert abs(sum(ranks.values()) - 1.0) < 1e-9
     assert ranks["b"] > ranks["a"]
 
@@ -192,13 +186,12 @@ def test_bfs_source_without_outedges_still_seeds_itself(spark):
 def test_ppr_mass_conserved_and_source_dominates(spark):
     """Random walk with restart on a path a->b->c (c a sink): teleport
     and dangling mass both return to the source, so total mass stays
-    1.0 ± rounding every round and the source keeps the largest
-    rank at this damping."""
+    1.0 ± rounding and the source keeps the largest rank at this
+    damping."""
     edges = _edges(spark, [("a", "b"), ("b", "c")])
-    for iters in (1, 2, 3):
-        ranks = {r["node"]: r["rank"] for r in pagerank(edges, iters=iters, personalize="a").collect()}
-        assert set(ranks) == {"a", "b", "c"}
-        assert abs(sum(ranks.values()) - 1.0) < 1e-9, (iters, ranks)
+    ranks = {r["node"]: r["rank"] for r in pagerank(edges, personalize="a").collect()}
+    assert set(ranks) == {"a", "b", "c"}
+    assert abs(sum(ranks.values()) - 1.0) < 1e-9, ranks
     assert ranks["a"] > ranks["b"] > ranks["c"] > 0
 
 
@@ -214,11 +207,6 @@ def test_ppr_locality_vs_global_pagerank(spark):
     assert ranks["b"] > ranks["x"] > 0 and ranks["b"] > ranks["y"] > 0
     assert ranks["a"] + ranks["b"] > ranks["x"] + ranks["y"]
     assert abs(sum(ranks.values()) - 1.0) < 1e-9
-
-
-def test_ppr_iters_zero_is_point_mass(spark):
-    ranks = {r["node"]: r["rank"] for r in pagerank(_edges(spark, [("a", "b"), ("b", "a")]), iters=0, personalize="b").collect()}
-    assert ranks == {"a": 0.0, "b": 1.0}
 
 
 # ---------------------------------------------------------------------------

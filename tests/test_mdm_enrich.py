@@ -84,9 +84,9 @@ def test_candidate_pairs_hot_block_guard(spark):
     assert got == [(100, 101)]  # hot block contributed nothing
     hot = oversized_blocks(records, ["block"], max_block_size=10).collect()
     assert [(r["block"], r["block_size"]) for r in hot] == [("megacity", 50)]
-    # unguarded keeps the quadratic blow-up (50*49/2 + 1)
+    # a cap at the hot block's size keeps its quadratic blow-up (50*49/2 + 1)
     assert candidate_pairs(
-        records, "vendor_id", ["block"], ["vendor_name"], max_block_size=None
+        records, "vendor_id", ["block"], ["vendor_name"], max_block_size=50
     ).count() == 1226
 
 

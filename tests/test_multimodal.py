@@ -44,7 +44,7 @@ def test_feature_extraction_shape_and_determinism(spark):
 def test_frame_sampling_fanout(spark):
     # payload of 12 bytes -> n_frames = 12 % 8 + 1 = 5, every=2 -> frames 0,2,4
     media = M.attach_media(_docs(spark, ["abcdefghijkl"]))
-    frames = M.sample_frames(media, every=2).collect()
+    frames = M.sample_frames(media).collect()
     assert [f["frame_no"] for f in frames] == [0, 2, 4]
     size = 12 // 5
     assert all(len(bytes(f["frame_payload"])) == size for f in frames)

@@ -73,7 +73,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     od = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    write_bucketed(li, "li_b", ["l_orderkey"], 4, sort_cols=["l_orderkey"])
+    write_bucketed(li, "li_b", ["l_orderkey"], 4)
     write_bucketed(od.withColumnRenamed("o_orderkey", "l_orderkey"), "od_b", ["l_orderkey"], 4)
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

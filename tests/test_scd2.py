@@ -70,13 +70,14 @@ def test_approve_and_audit_range(spark):
 
 
 def test_lifecycle_strict_guard(spark):
+    """An unknown target state raises; a matched row whose state may
+    not move to the target (RETIRED -> DEPRECATED) is skipped."""
     master = spark.createDataFrame(
         [(1, "RETIRED"), (2, "ACTIVE")], "id int, lifecycle_state string"
     )
-    with pytest.raises(InvalidTransition, match="illegal transition"):
-        lifecycle_transition(master, "id", F.lit(True), "DEPRECATED", "me", T1, strict=True)
-    # non-strict skips the retired row
-    res = lifecycle_transition(master, "id", F.lit(True), "DEPRECATED", "me", T1, strict=False)
+    with pytest.raises(InvalidTransition, match="unknown state"):
+        lifecycle_transition(master, "id", F.lit(True), "ARCHIVED", "me", T1)
+    res = lifecycle_transition(master, "id", F.lit(True), "DEPRECATED", "me", T1)
     states = {r["id"]: r["lifecycle_state"] for r in res.master.collect()}
     assert states == {1: "RETIRED", 2: "DEPRECATED"}
     assert res.history.count() == 1

@@ -13,16 +13,16 @@ def test_kmv_exact_below_k(spark):
     """A group with fewer than k distinct values reports the exact
     count (the sketch holds every hash)."""
     df = spark.createDataFrame([("g", f"v{i % 10}") for i in range(100)], "g string, v string")
-    row = K.kmv_distinct(df, "g", "v", k=64).first()
+    row = K.kmv_distinct(df, "g", "v").first()
     assert row["n_hashes_kept"] == 10
     assert row["est_distinct"] == 10.0
 
 
 def test_kmv_estimate_near_truth_at_scale(spark):
-    """5000 distinct values, k=64: the estimate's relative error obeys
+    """5000 distinct values, k=KMV_K=64: the estimate's relative error obeys
     the ~1/sqrt(k) bound (loose 3-sigma check)."""
     df = spark.createDataFrame([("g", f"value-{i}") for i in range(5000)], "g string, v string")
-    row = K.kmv_distinct(df, "g", "v", k=64).first()
+    row = K.kmv_distinct(df, "g", "v").first()
     assert abs(row["est_distinct"] / 5000 - 1) < 3 / (64 ** 0.5)
 
 

@@ -85,7 +85,7 @@ def test_watermark_drops_late_rows_across_restart(spark, stream_dirs, tmp_path):
     def run():
         # foreachBatch (not the memory sink) so the checkpoint is recoverable
         foreach_batch_sink(
-            tumbling_event_stats(with_watermark(read_events_stream(spark, src), "2 hours")),
+            tumbling_event_stats(with_watermark(read_events_stream(spark, src))),
             ckpt,
             lambda df, _id: df.write.mode("append").parquet(out),
         )
@@ -306,14 +306,14 @@ def test_streaming_delta_ingest_exactly_once(spark, stream_dirs, tmp_path):
     assert sorted(r["event_id"] for r in d2.collect()) == [0, 1]  # per-batch ids
     assert all("event_date=2024-01-02" in f for f in d2.inputFiles())
     # replayed batch id: nothing written, version unchanged
-    assert delta_ingest_batch(batch1, 0, tbl, "t-ingest", "event_date") is False
-    assert delta_ingest_batch(batch2, 1, tbl, "t-ingest", "event_date") is False
+    assert delta_ingest_batch(batch1, 0, tbl, "t-ingest") is False
+    assert delta_ingest_batch(batch2, 1, tbl, "t-ingest") is False
     assert D.latest_version(tbl) == 1
     # a NEW batch id commits
     batch3 = _mk_events(spark, [(2 * 24 * 60, 9, "view", 5.0)]).withColumn(
         "event_date", F.to_date("ts")
     )
-    assert delta_ingest_batch(batch3, 2, tbl, "t-ingest", "event_date") is True
+    assert delta_ingest_batch(batch3, 2, tbl, "t-ingest") is True
     assert D.latest_version(tbl) == 2
     assert D.read_delta_log(spark, tbl).count() == 5
     # restart on the same checkpoint: no new files -> no new commits

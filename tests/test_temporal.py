@@ -133,4 +133,4 @@ def test_salted_join_rejects_dim_preserving_how(spark):
     fact = spark.createDataFrame([(1, 10)], "k int, v int")
     dim = spark.createDataFrame([(1, "a")], "k int, name string")
     with pytest.raises(ValueError, match="salted_join how="):
-        salted_join(fact, dim, "k", salt_n=4, how="right")
+        salted_join(fact, dim, "k", salt_n=4, fingerprint_cols=["v"], how="right")

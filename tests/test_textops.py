@@ -48,10 +48,10 @@ def test_fingerprint_stability(spark):
 
 
 def test_word_shingles(spark):
-    got = _one(spark, "a b c d", T.word_shingles("text", 3))
+    got = _one(spark, "a b c d", T.word_shingles("text"))
     assert got == ["a b c", "b c d"]
     # text shorter than the window -> single whole-text shingle
-    assert _one(spark, "a b", T.word_shingles("text", 3)) == ["a b"]
+    assert _one(spark, "a b", T.word_shingles("text")) == ["a b"]
 
 
 def test_minhash_signature_shape(spark):

@@ -62,7 +62,7 @@ def test_profile_counts_nulls_distinct_minmax(spark):
         [("a", 1, 1.5), ("b", None, 2.5), ("a", 3, None)],
         "s string, i int, f double",
     )
-    rows = {r["column_name"]: r for r in profile(df).collect()}
+    rows = {r["column_name"]: r for r in profile(df, df.columns).collect()}
     assert rows["s"]["n_nulls"] == 0 and rows["s"]["n_distinct"] == 2
     assert rows["i"]["n_nulls"] == 1 and rows["i"]["min_value"] == "1"
     assert rows["f"]["max_value"] == "2.500000"  # decimal(24,6) rendering
