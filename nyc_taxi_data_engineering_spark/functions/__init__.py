@@ -181,24 +181,6 @@ def portable_round_sql(expr: str, scale: int) -> str:
     return f"(floor(({expr}) * 1e{scale} + 0.5) / 1e{scale})"
 
 
-def assert_quantum_above_ulp(max_abs: float, scale: int) -> None:
-    """Guard for any remaining ``round(double, scale)`` site: the decimal
-    quantum 10^-scale must exceed the double ULP at the operand's
-    magnitude, else the two engines' round() can legally disagree
-    (VERDICT r9: round(x², 6) at |x²|~1e14 has ULP ~0.016 > 1e-6).
-    Call with a proven bound on |operand|."""
-    import math
-
-    ulp = math.ulp(max_abs)
-    quantum = 10.0 ** (-scale)
-    if quantum <= 2 * ulp:
-        raise ValueError(
-            f"round(·,{scale}) below ULP at magnitude {max_abs:g}: "
-            f"quantum {quantum:g} <= 2*ulp {2 * ulp:g} — use decimal-domain "
-            "arithmetic (a DECIMAL source cast and dec_sum) instead"
-        )
-
-
 # NULL marker for change hashes. The reference coalesces NULL to ''
 # (scd2_delta_vendors.py:42), which makes NULL<->'' edits hash-invisible
 # and skips the new SCD2 version; encode NULL as a value no real string

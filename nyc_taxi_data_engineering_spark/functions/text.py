@@ -184,25 +184,6 @@ def fingerprint(col_name: str) -> Column:
     return F.array_min(F.transform(char_shingles(col_name), F.md5))
 
 
-def word_shingles(col_name: str) -> Column:
-    """Distinct word w-gram shingle set (the jaccard/minhash unit).
-
-    PERF: this single-expression form inlines the regex ``split`` into
-    the transform lambda, so the text is re-split once per shingle —
-    O(tokens²) regex work per document. Hot paths must use the
-    two-projection form instead: project ``tokens(text)`` to its own
-    column first, then apply :func:`word_shingles_of` to the attribute
-    (2–4× faster at sf0.1; kept here for tests/one-off exprs only).
-    """
-    # NB: Spark SQL string literals are escape-processed, so the regex
-    # backslash must itself be escaped in the expr text.
-    toks = f"split(trim({col_name}), '\\\\s+')"
-    return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size({toks}) - {SHINGLE_WORDS - 1}, 1)),"
-        f" i -> array_join(slice({toks}, i, {SHINGLE_WORDS}), ' ')))"
-    )
-
-
 def word_shingles_of(toks: Column, w: int = SHINGLE_WORDS) -> Column:
     """Distinct word w-grams from a PRE-TOKENIZED array column.
 
@@ -225,12 +206,6 @@ def seeded_min_hash(shingles: Column, seed: int) -> Column:
     default, silently corrupting the seed."""
     prefix = f"{seed}:"
     return F.array_min(F.transform(shingles, lambda s: F.md5(F.concat(F.lit(prefix), s))))
-
-
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """MinHash signature as an array of num_hashes md5-min strings;
-    permutation i is keyed by the seed prefix ``i:``."""
-    return F.array(*[seeded_min_hash(shingles, i) for i in range(num_hashes)])
 
 
 def word_ngrams(toks: Column, n: int) -> Column:

@@ -7,7 +7,7 @@ shared contexts per entity pair.
 The scale hazard is the classic one: a HOT context with d entities
 contributes d·(d-1)/2 pairs, so one celebrity context can dwarf the
 whole job (the same quadratic block that motivates mdm.candidate_pairs'
-``max_block_size`` and dedup's ``df_cap``). The ``degree_cap`` lever
+``max_block_size``). The ``degree_cap`` lever
 drops contexts whose entity count exceeds the cap BEFORE the self-join
 — at 100 TB this is the difference between a keyed equi-join bounded
 by cap²/2-per-context and a cluster-filling explosion. Capping is also

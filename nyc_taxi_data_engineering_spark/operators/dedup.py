@@ -14,10 +14,9 @@ Scale design (the 100 TB story):
   common-shingle counts are hash aggregations; Spark's partial
   aggregation halves shuffle volume before the exchange.
 - **Skew levers.** A stop-shingle (appearing in a huge fraction of
-  docs) makes one join key hot; ``df_cap`` drops shingles above a
-  document-frequency ceiling — the standard trick, exposed as an
-  explicit knob so callers can tune it per corpus. LSH band width
-  bounds collisions probabilistically.
+  docs) makes one join key hot; the prefix-filter Jaccard path indexes
+  only each doc's rarest shingles, so the hottest keys fall out of its
+  index. LSH band width bounds collisions probabilistically.
 - **All-native expressions.** Shingling, hashing, banding, Hamming
   distance are JVM-side Column expressions inside whole-stage codegen;
   there is no Python in any hot path.
@@ -79,7 +78,6 @@ def _shingle_sets(docs: DataFrame) -> DataFrame:
 def shingle_jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
-    df_cap: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via an inverted shingle
     index: explode distinct word w-grams (``T.SHINGLE_WORDS``), equi-join docs sharing a
@@ -87,9 +85,9 @@ def shingle_jaccard_pairs(
     ``jaccard = common / (|A| + |B| - common)``.
 
     The join key is the shingle, so work scales with collisions (the
-    candidate pairs), not |docs|². ``df_cap`` drops shingles whose
-    document frequency exceeds the cap — the skew lever for corpora
-    with boilerplate n-grams.
+    candidate pairs), not |docs|². On corpora with boilerplate n-grams,
+    :func:`prefix_filter_jaccard_pairs` keeps the hottest shingles out
+    of its index.
 
     Two physical choices, both measured end-to-end cold (the bench
     regime): the shingle sets are cached — they feed three consumers
@@ -105,9 +103,6 @@ def shingle_jaccard_pairs(
     inv = sets.select("doc_id", F.explode("shingles").alias("s")).select(
         "doc_id", F.xxhash64("s").alias("s")
     )
-    if df_cap is not None:
-        hot = inv.groupBy("s").count().filter(F.col("count") > df_cap).select("s")
-        inv = inv.join(hot, "s", "left_anti")
     a = inv.alias("a")
     b = inv.alias("b")
     common = (
@@ -129,7 +124,6 @@ def shingle_jaccard_pairs(
 def shingle_containment_pairs(
     docs: DataFrame,
     threshold: float = 0.8,
-    df_cap: int | None = None,
 ) -> DataFrame:
     """ASYMMETRIC near-dup detection: directional shingle containment
     ``|S_inner ∩ S_outer| / |S_inner|`` — the measure that catches a
@@ -140,7 +134,7 @@ def shingle_containment_pairs(
     the classic companion to resemblance).
 
     Scale shape: identical to :func:`shingle_jaccard_pairs` — inverted
-    shingle index, keyed equi-join, ``df_cap`` hot-shingle lever. The
+    shingle index, keyed equi-join. The
     common-shingle counts are computed ONCE per unordered pair (a<b),
     then fanned to the two directional rows by a cheap projection
     union — no second self-join. Emits (inner_id, outer_id,
@@ -151,9 +145,6 @@ def shingle_containment_pairs(
     inv = sets.select("doc_id", F.explode("shingles").alias("s")).select(
         "doc_id", F.xxhash64("s").alias("s")
     )
-    if df_cap is not None:
-        hot = inv.groupBy("s").count().filter(F.col("count") > df_cap).select("s")
-        inv = inv.join(hot, "s", "left_anti")
     a = inv.alias("a")
     b = inv.alias("b")
     common = (
@@ -655,7 +646,7 @@ def prefix_filter_jaccard_pairs(
     the self-join's collision volume) shrinks by ~(1-tau) per doc —
     at tau=0.8 only ~20% of shingles are indexed, and because the
     prefix keeps the RAREST shingles, the hottest join keys (the
-    boilerplate n-grams that df_cap exists to drop) fall out of the
+    boilerplate n-grams) fall out of the
     index for free on most docs. Verification joins each candidate
     pair once against the cached sets — per-candidate work, zero
     re-shuffle of the corpus.

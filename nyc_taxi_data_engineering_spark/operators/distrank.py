@@ -65,14 +65,6 @@ def string_lead(col: Column | str) -> Column:
     )
 
 
-def descending_lead(col: Column | str) -> Column:
-    """Numeric lead for a DESC-ordered leading column: negation flips
-    monotonicity, so ``ordered_prefix(..., order_cols=[F.col(c).desc(),
-    ...], lead=descending_lead(c))`` buckets correctly."""
-    c = F.col(col) if isinstance(col, str) else col
-    return -c.cast("double")
-
-
 def _bucket_col(df: DataFrame, lead: Column, n_buckets: int) -> Column:
     """Monotone bucket id from broadcast approximate quantiles of the
     numeric lead expression. Double-casting keeps ``percentile_approx``
@@ -124,8 +116,8 @@ def ordered_prefix(
     ``lead`` is a NUMERIC expression monotone non-decreasing along that
     total order, used only for bucketing; it defaults to the first
     order column cast to double (correct when that column is a plain
-    ASC numeric name — pass :func:`descending_lead` /
-    :func:`string_lead` for DESC or string leaders).
+    ASC numeric name — pass the negated column, ``-F.col(c).cast("double")``,
+    for a DESC leader and :func:`string_lead` for a string one).
     """
     spark = df.sparkSession
     if n_buckets is None:

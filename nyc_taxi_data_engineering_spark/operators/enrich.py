@@ -43,26 +43,3 @@ def enrich_with_dims(fact: DataFrame, specs: list[DimSpec]) -> DataFrame:
             rp[s.dim_key]
         )
     return out
-
-
-def enrichment_null_audit(enriched: DataFrame, probe_cols: list[str]) -> DataFrame:
-    """Unmatched-FK audit (reference C2's hard assertion,
-    nyc_validated_to_curated_etl.py:141-145): per probe column, how many
-    rows failed to enrich — single aggregate pass."""
-    aggs = [
-        F.coalesce(F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)), F.lit(0)).alias(f"null_{c}")
-        for c in probe_cols
-    ]
-    return enriched.agg(F.count(F.lit(1)).alias("total_rows"), *aggs)
-
-
-class EnrichmentIntegrityError(RuntimeError):
-    pass
-
-
-def assert_fully_enriched(enriched: DataFrame, probe_cols: list[str]) -> None:
-    """Raise if any enrichment join missed (the reference's fail-fast)."""
-    row = enrichment_null_audit(enriched, probe_cols).collect()[0]
-    bad = {c: row[f"null_{c}"] for c in probe_cols if row[f"null_{c}"] > 0}
-    if bad:
-        raise EnrichmentIntegrityError(f"unmatched FK rows: {bad}")

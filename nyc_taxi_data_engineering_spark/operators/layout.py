@@ -1,5 +1,5 @@
-"""Physical-layout operators: Z-order (Morton) clustering for
-multi-dimensional data skipping, and small-file compaction.
+"""Physical-layout operators: Z-order (Morton) and Hilbert clustering
+for multi-dimensional data skipping.
 
 Z-ordering is what makes "WHERE a BETWEEN ... AND b BETWEEN ..."
 prune files on BOTH columns: sorting by (a, b) gives perfect skipping
@@ -18,15 +18,11 @@ Scale design:
 - ``repartitionByRange(z)`` does one range shuffle (sampled bounds),
   and ``sortWithinPartitions`` keeps row groups internally ordered so
   parquet page/row-group stats are tight, not just file stats.
-- Compaction is metadata-driven: file count targets derive from the
-  source byte size, the rewrite is one round-robin shuffle.
 """
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 Z_BITS = 16  # per-column resolution: 2^16 cells per dimension
@@ -73,40 +69,6 @@ def zorder_cluster(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
         .sortWithinPartitions("_z")
         .drop("_z")
     )
-
-
-def zorder_write(df: DataFrame, path: str, cols: list[str], n_files: int) -> None:
-    """Cluster ``df`` by the Z-order of ``cols`` into ``n_files``
-    roughly equal range partitions and write parquet. Readers filtering
-    on ANY of ``cols`` skip most files via parquet min/max stats."""
-    zorder_cluster(df, cols, n_files).write.mode("overwrite").parquet(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Rewrite a fragmented parquet dataset into ~target-sized files;
-    returns the output file count. File sizing is computed from source
-    metadata (no data pass), the rewrite is one job."""
-    df = spark.read.parquet(src)
-    # Sum source bytes from the file index (driver-side metadata only).
-    from py4j.java_gateway import java_import
-
-    jvm = spark.sparkContext._jvm
-    java_import(jvm, "org.apache.hadoop.fs.Path")
-    p = jvm.Path(src)
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    total = sum(
-        s.getLen()
-        for s in fs.listStatus(p)
-        if s.getPath().getName().endswith(".parquet")
-    )
-    n = max(1, math.ceil(total / target_file_bytes))
-    df.repartition(n).write.mode("overwrite").parquet(dst)
-    return n
 
 
 def hilbert_step(df: DataFrame, b: int, bits: int) -> DataFrame:

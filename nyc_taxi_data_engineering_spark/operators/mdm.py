@@ -27,7 +27,7 @@ from __future__ import annotations
 from difflib import SequenceMatcher
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -87,11 +87,10 @@ def candidate_pairs(
 
     Skew guard: one hot block (a mega-city) would concentrate its n²
     pairs on a single task. Blocks larger than ``max_block_size`` are
-    excluded from pairing (mirroring dedup.py's df_cap on hot
-    shingles) — a block that big is a useless blocking key anyway, and
+    excluded from pairing (mirroring cooccur.py's degree_cap on hot
+    contexts) — a block that big is a useless blocking key anyway, and
     the bound keeps every task's pair count ≤ max_block_size²/2.
-    Inspect the skipped blocks with ``oversized_blocks`` and re-block
-    them on a tighter key."""
+    Re-block the skipped blocks on a tighter key."""
     ok = (
         records.groupBy(*block_cols)
         .agg(F.count(F.lit(1)).alias("_blk_n"))
@@ -103,18 +102,6 @@ def candidate_pairs(
     a = records.select(*block_cols, *[F.col(c).alias(f"a_{c}") for c in cols])
     b = records.select(*block_cols, *[F.col(c).alias(f"b_{c}") for c in cols])
     return a.join(b, on=block_cols).filter(F.col(f"a_{id_col}") < F.col(f"b_{id_col}"))
-
-
-def oversized_blocks(
-    records: DataFrame, block_cols: list[str], max_block_size: int = 10_000
-) -> DataFrame:
-    """Audit of blocks skipped by the candidate_pairs skew guard —
-    candidates for re-blocking on a tighter key."""
-    return (
-        records.groupBy(*block_cols)
-        .agg(F.count(F.lit(1)).alias("block_size"))
-        .filter(F.col("block_size") > max_block_size)
-    )
 
 
 def score_pairs(

@@ -12,9 +12,8 @@ Scale design:
   pivot happens on the 1-row result via ``stack``, which is free.
 - Exact distinct counts plan as Catalyst's Expand: the input is
   replicated once per distinct-agg column before the shuffle. Fine up
-  to a handful of columns; at 100 TB / wide profiles pass
-  ``exact_distinct=False`` to use HLL sketches
-  (``approx_count_distinct``) — one pass, no Expand, ~2% error.
+  to a handful of columns; a 100 TB or wide profile wants HLL sketches
+  (``approx_count_distinct``: one pass, no Expand, ~2% error) instead.
 - min/max stringification is type-directed (see ``_stringify``) so the
   output schema is stable regardless of profiled column types, and
   formats are engine-portable (decimal rendering, not raw double
@@ -44,7 +43,7 @@ def _stringify(col: Column, dt: Ty.DataType) -> Column:
     return col.cast("string")
 
 
-def profile(df: DataFrame, cols: list[str], exact_distinct: bool = True) -> DataFrame:
+def profile(df: DataFrame, cols: list[str]) -> DataFrame:
     """Profile ``cols`` of ``df``.
 
     Returns one row per column:
@@ -54,12 +53,9 @@ def profile(df: DataFrame, cols: list[str], exact_distinct: bool = True) -> Data
     dtypes = {f.name: f.dataType for f in df.schema.fields}
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
-        distinct = (
-            F.countDistinct(F.col(c)) if exact_distinct else F.approx_count_distinct(F.col(c))
-        )
         aggs += [
             F.count(F.col(c)).alias(f"__cnt__{c}"),
-            distinct.alias(f"__dst__{c}"),
+            F.countDistinct(F.col(c)).alias(f"__dst__{c}"),
             _stringify(F.min(F.col(c)), dtypes[c]).alias(f"__min__{c}"),
             _stringify(F.max(F.col(c)), dtypes[c]).alias(f"__max__{c}"),
         ]

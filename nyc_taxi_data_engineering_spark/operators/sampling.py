@@ -254,25 +254,6 @@ def temperature_rates(df: DataFrame, stratum: str, alpha: float) -> DataFrame:
     )
 
 
-def temperature_sample(
-    df: DataFrame,
-    key: str,
-    stratum: str,
-    alpha: float,
-) -> DataFrame:
-    """Deterministic temperature-alpha mixture sample: join the
-    ≤|strata|-row rate table back (broadcast) and keep rows whose md5
-    bucket clears the stratum's threshold. Rerun-stable and
-    cluster-size-independent like every sampler here."""
-    rates = temperature_rates(df, stratum, alpha)
-    thresh = F.round(F.col("keep_rate") * N_BUCKETS).cast("int")
-    return (
-        df.join(F.broadcast(rates.select(stratum, "keep_rate")), stratum)
-        .filter(hash_bucket(F.col(key), "") < thresh)
-        .drop("keep_rate")
-    )
-
-
 def temperature_rates_sql(stratum: str, alpha: float) -> str:
     """DuckDB CTE body matching :func:`temperature_rates` (two nesting
     levels: DuckDB rejects a window call inside another window's

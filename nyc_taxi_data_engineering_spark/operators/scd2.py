@@ -7,9 +7,10 @@ Delta jars aren't available here, so the merge is re-expressed as a pure
 DataFrame transform — hash-diff staging join, semi-join expiry, anti-join
 carry-over, unionByName — which Catalyst plans as co-partitioned
 sort-merge joins on the business key (one keyed shuffle per merge at any
-scale; no driver-side loops). Physical storage is a snapshot-versioned
-parquet table (Scd2Table) that also provides Delta-style time travel
-(S4) and history audit (S5).
+scale; no driver-side loops). Each step returns the versioned table as
+a DataFrame; storing it is the caller's choice (the registered
+``scd2_*`` queries keep it in memory; Delta time travel is the
+transaction log's, sources/delta_log.py).
 
 Determinism (SURVEY §7.4.1): every timestamp is injected by the caller,
 and batch dedup orders by record_hash instead of the reference's
@@ -18,12 +19,9 @@ nondeterministic ``orderBy(lit(1))`` (scd2_delta_vendors.py:79-85).
 
 from __future__ import annotations
 
-import json
-import os
-import time
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.functions import OPEN_END_TS, record_hash
@@ -171,235 +169,3 @@ def scd2_rollback(
         .withColumn("is_current", F.lit(True))
     )
     return untouched.unionByName(expired).unionByName(reinserted.select(*expired.columns))
-
-
-def approve_current(
-    table: DataFrame, keys: DataFrame, key: str, approved_by: str, approved_at: str, reason: str
-) -> DataFrame:
-    """Approve the current version of the given keys (reference C7:
-    sql/scd/03_version_procedures.sql:19-60; approval columns
-    01_scd_schema.sql:47-50)."""
-    keys = keys.select(key).distinct().withColumn("_hit", F.lit(True))
-    out = table.join(F.broadcast(keys), on=key, how="left")
-    mark = F.col("is_current") & F.coalesce(F.col("_hit"), F.lit(False))
-    for col_name, value in (
-        ("approval_status", F.when(mark, "APPROVED").otherwise(F.lit(None).cast("string"))),
-        ("approved_by", F.when(mark, approved_by).otherwise(F.lit(None).cast("string"))),
-        ("approved_at", F.when(mark, F.lit(approved_at).cast("timestamp")).otherwise(F.lit(None).cast("timestamp"))),
-        ("approval_reason", F.when(mark, reason).otherwise(F.lit(None).cast("string"))),
-    ):
-        existing = F.col(col_name) if col_name in table.columns else F.lit(None).cast("string" if col_name != "approved_at" else "timestamp")
-        out = out.withColumn(col_name, F.when(mark, value).otherwise(existing))
-    return out.drop("_hit")
-
-
-def audit_versions_between(table: DataFrame, key_value, key: str, lo: str, hi: str) -> DataFrame:
-    """Range-audit query (reference J10/F16:
-    sql/scd/03_version_procedures.sql:150-169): versions of one entity
-    whose effective_start_ts falls in [lo, hi]."""
-    return (
-        table.filter(F.col(key) == key_value)
-        .filter(F.col("effective_start_ts").between(lo, hi))
-        .orderBy("version_no")
-    )
-
-
-class Scd2Table:
-    """Bucket-partitioned, snapshot-versioned parquet SCD2 table with
-    Delta-style time travel and history audit (reference S4/S5/S9/S10),
-    no Delta jars.
-
-    Layout::
-
-        root/
-          _scd2_log.json      # one entry per merge: snapshot, manifest, rows
-          snap=000001/_scd2_bucket=0/*.parquet   # init: all buckets
-          snap=000002/_scd2_bucket=3/*.parquet   # merge: ONLY changed buckets
-
-    Keys are hash-assigned to ``n_buckets`` fixed buckets. A merge
-    detects which keys actually change (new key or record_hash diff),
-    rewrites only the buckets containing them, and records a manifest
-    mapping every bucket to the snapshot that owns its current data —
-    Delta's copy-on-write at file granularity, re-expressed at bucket
-    granularity. A merge of 0.1% of keys therefore writes O(changed
-    buckets), not O(table); a no-change merge writes nothing. Readers
-    resolve a manifest (latest or ``version_as_of``) to a list of
-    immutable bucket dirs, so time travel and concurrent reads need no
-    locking. Row counts are maintained incrementally from the affected
-    buckets — the full table is never re-scanned.
-    """
-
-    LOG = "_scd2_log.json"
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        key: str,
-        tracked: Sequence[str],
-        n_buckets: int = 16,
-    ):
-        self.spark = spark
-        self.root = root
-        self.key = key
-        self.tracked = list(tracked)
-        h = self.history()
-        # a table's bucket count is fixed at init time by the log
-        self.n_buckets = h[0]["n_buckets"] if h else n_buckets
-
-    def _bucket_col(self) -> F.Column:
-        return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.n_buckets)).cast("int")
-
-    # -- log helpers -------------------------------------------------
-    def _log_path(self) -> str:
-        return os.path.join(self.root, self.LOG)
-
-    def history(self) -> list[dict]:
-        """Merge audit log (reference S5: DESCRIBE HISTORY analog)."""
-        if not os.path.exists(self._log_path()):
-            return []
-        with open(self._log_path()) as f:
-            return [json.loads(line) for line in f if line.strip()]
-
-    def _append_log(self, entry: dict) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        with open(self._log_path(), "a") as f:
-            f.write(json.dumps(entry) + "\n")
-
-    def latest_snapshot(self) -> int | None:
-        h = self.history()
-        return h[-1]["snapshot"] if h else None
-
-    def _snap_dir(self, n: int) -> str:
-        return os.path.join(self.root, f"snap={n:06d}")
-
-    def _bucket_dir(self, snap: int, bucket: int) -> str:
-        return os.path.join(self._snap_dir(snap), f"_scd2_bucket={bucket}")
-
-    def _manifest(self, version_as_of: int | None = None) -> dict[int, int]:
-        """bucket -> owning snapshot, as of a snapshot (default latest)."""
-        h = self.history()
-        if not h:
-            raise FileNotFoundError(f"no snapshots at {self.root}")
-        if version_as_of is not None:
-            h = [e for e in h if e["snapshot"] <= version_as_of]
-            if not h:
-                raise FileNotFoundError(f"no snapshot <= {version_as_of} at {self.root}")
-        return {int(b): s for b, s in h[-1]["manifest"].items()}
-
-    # -- reads -------------------------------------------------------
-    def read(self, version_as_of: int | None = None) -> DataFrame:
-        """Current table, or time travel to an earlier snapshot
-        (reference S4: .option('versionAsOf', n)) — the union of each
-        bucket's owning dir per the manifest."""
-        manifest = self._manifest(version_as_of)
-        paths = [self._bucket_dir(s, b) for b, s in sorted(manifest.items())]
-        return self.spark.read.parquet(*paths)
-
-    def read_current(self) -> DataFrame:
-        return self.read().filter(F.col("is_current"))
-
-    def _read_buckets(self, manifest: dict[int, int], buckets: Sequence[int]) -> DataFrame | None:
-        paths = [self._bucket_dir(manifest[b], b) for b in buckets if b in manifest]
-        return self.spark.read.parquet(*paths) if paths else None
-
-    # -- writes ------------------------------------------------------
-    def merge(self, batch: DataFrame, effective_ts: str) -> int:
-        """Run one SCD2 merge, rewriting only the buckets whose keys
-        actually change (reference J8 MERGE semantics,
-        glue_jobs/scd2_delta_vendors.py:143-155, without the full-table
-        rewrite)."""
-        prev = self.latest_snapshot()
-        batch_h = dedup_batch(_with_hash(batch, self.tracked), self.key)
-        bucket = self._bucket_col()
-
-        if prev is None:
-            n = 1
-            out = scd2_init(batch, self.key, self.tracked, effective_ts)
-            out.withColumn("_scd2_bucket", bucket).write.partitionBy(
-                "_scd2_bucket"
-            ).parquet(self._snap_dir(n))
-            manifest = {
-                int(r[0]): n
-                for r in batch_h.select(bucket.alias("_b")).distinct().collect()
-            }
-            rows = self._count_buckets(n, sorted(manifest))
-            self._append_log(
-                {
-                    "snapshot": n,
-                    "effective_ts": effective_ts,
-                    "operation": "SCD2_INIT",
-                    "rows": rows,
-                    "n_buckets": self.n_buckets,
-                    "rewritten_buckets": sorted(manifest),
-                    "manifest": {str(b): s for b, s in manifest.items()},
-                    "wall_time": time.time(),
-                }
-            )
-            return n
-
-        manifest = self._manifest()
-        # which keys actually change? (new key, or current hash differs)
-        batch_buckets = sorted(
-            int(r[0]) for r in batch_h.select(bucket.alias("_b")).distinct().collect()
-        )
-        target_bb = self._read_buckets(manifest, batch_buckets)
-        if target_bb is None:
-            changed = batch_h
-        else:
-            cur_slim = target_bb.filter(F.col("is_current")).select(
-                F.col(self.key), F.col("record_hash").alias("_cur_hash")
-            )
-            changed = (
-                batch_h.join(cur_slim, on=self.key, how="left")
-                .filter(F.col("_cur_hash").isNull() | (F.col("record_hash") != F.col("_cur_hash")))
-            )
-        affected = sorted(
-            int(r[0]) for r in changed.select(bucket.alias("_b")).distinct().collect()
-        )
-        n = prev + 1
-        if not affected:  # no-op merge: reuse the manifest, write nothing
-            last = self.history()[-1]
-            self._append_log(
-                {
-                    "snapshot": n,
-                    "effective_ts": effective_ts,
-                    "operation": "SCD2_MERGE",
-                    "rows": last["rows"],
-                    "n_buckets": self.n_buckets,
-                    "rewritten_buckets": [],
-                    "manifest": {str(b): s for b, s in manifest.items()},
-                    "wall_time": time.time(),
-                }
-            )
-            return n
-
-        target_aff = self._read_buckets(manifest, affected)
-        old_rows = target_aff.count() if target_aff is not None else 0
-        batch_aff = batch.filter(bucket.isin(affected))
-        new_aff = scd2_apply(target_aff, batch_aff, self.key, self.tracked, effective_ts)
-        new_aff.withColumn("_scd2_bucket", bucket).write.partitionBy(
-            "_scd2_bucket"
-        ).parquet(self._snap_dir(n))
-        new_manifest = {**manifest, **{b: n for b in affected}}
-        new_rows = self._count_buckets(n, affected)
-        total = self.history()[-1]["rows"] - old_rows + new_rows
-        self._append_log(
-            {
-                "snapshot": n,
-                "effective_ts": effective_ts,
-                "operation": "SCD2_MERGE",
-                "rows": total,
-                "n_buckets": self.n_buckets,
-                "rewritten_buckets": affected,
-                "manifest": {str(b): s for b, s in new_manifest.items()},
-                "wall_time": time.time(),
-            }
-        )
-        return n
-
-    def _count_buckets(self, snap: int, buckets: Sequence[int]) -> int:
-        """Footer-metadata count over just-written bucket dirs —
-        O(affected buckets), never a full-table scan."""
-        paths = [self._bucket_dir(snap, b) for b in buckets if os.path.isdir(self._bucket_dir(snap, b))]
-        return self.spark.read.parquet(*paths).count() if paths else 0

@@ -48,6 +48,8 @@ PII_PATTERNS: dict[str, str] = {
     "ssn": r"\b\d{3}-\d{2}-\d{4}\b",
 }
 
+# Holds no replacement metacharacter ('$' or '\' in Java, '\' in
+# RE2), so both engines' regexp_replace insert it verbatim.
 REDACTION_TOKEN = "[PII]"
 
 # Metacharacters shared by Java and RE2 — escaping exactly these keeps
@@ -60,26 +62,19 @@ def _escape_word(word: str) -> str:
     return "".join("\\" + ch if ch in _REGEX_META else ch for ch in word)
 
 
-def _escape_replacement(token: str) -> str:
-    # Java's regexp_replace replacement treats '$' as a group reference
-    # and '\' as an escape — both must be literal here.
-    return token.replace("\\", "\\\\").replace("$", "\\$")
-
-
 def pattern_counts(col: Column) -> dict[str, Column]:
     """Per-pattern match counts (``{name: Column}``), one
     ``regexp_count`` each — all JVM-side."""
     return {name: F.regexp_count(col, F.lit(pat)) for name, pat in PII_PATTERNS.items()}
 
 
-def scrub(col: Column, token: str = REDACTION_TOKEN) -> Column:
-    """Redact every match of every pattern with ``token``. Patterns are
-    applied in dict order (stable), each as one global
+def scrub(col: Column) -> Column:
+    """Redact every match of every pattern with ``REDACTION_TOKEN``.
+    Patterns are applied in dict order (stable), each as one global
     ``regexp_replace`` pass."""
     out = col
-    escaped = _escape_replacement(token)
     for pat in PII_PATTERNS.values():
-        out = F.regexp_replace(out, pat, escaped)
+        out = F.regexp_replace(out, pat, REDACTION_TOKEN)
     return out
 
 
@@ -166,14 +161,10 @@ def pattern_count_sql(text_expr: str, pattern: str) -> str:
     return f"len(regexp_extract_all({text_expr}, {_sql_quote(pattern)}))"
 
 
-def scrub_sql(text_expr: str, token: str = REDACTION_TOKEN) -> str:
+def scrub_sql(text_expr: str) -> str:
     out = text_expr
-    # RE2 replacement strings treat '\' as the group-reference escape
-    # ('\1'); '$' is literal. Quote-escape via _sql_quote so a token
-    # containing a single quote can't break the generated SQL.
-    duck_token = _sql_quote(token.replace("\\", "\\\\"))
     for pat in PII_PATTERNS.values():
-        out = f"regexp_replace({out}, {_sql_quote(pat)}, {duck_token}, 'g')"
+        out = f"regexp_replace({out}, {_sql_quote(pat)}, {_sql_quote(REDACTION_TOKEN)}, 'g')"
     return out
 
 

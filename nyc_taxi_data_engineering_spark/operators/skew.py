@@ -50,26 +50,17 @@ def salted_join(
     on: str | Sequence[str],
     salt_n: int,
     fingerprint_cols: Sequence[str],
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join where the shuffle key is (join keys + salt), spreading
-    a hot join key over ``salt_n`` reducers. Result equals the unsalted
-    join (each fact row matches exactly its salt's dim replica).
-
-    ``how`` is restricted to fact-preserving joins: under right/full,
-    each unmatched dim row would survive once per salt replica —
-    salt_n× the unsalted result. For dim-preserving semantics, swap the
-    sides or run the unsalted join."""
-    allowed = {"inner", "left", "left_outer", "left_semi", "left_anti", "semi", "anti"}
-    if how not in allowed:
-        raise ValueError(
-            f"salted_join how={how!r} not supported; use one of {sorted(allowed)} "
-            "(right/full would keep unmatched dim rows once per salt replica)"
-        )
+    """Inner equi-join where the shuffle key is (join keys + salt),
+    spreading a hot join key over ``salt_n`` reducers. Result equals
+    the unsalted join (each fact row matches exactly its salt's dim
+    replica). Only an inner or fact-preserving join is exact: under
+    right/full, each unmatched dim row would survive once per salt
+    replica."""
     keys = [on] if isinstance(on, str) else list(on)
     f = with_salt(fact, fingerprint_cols, salt_n)
     d = explode_salt(dim, salt_n)
-    return f.join(d, keys + [SALT_COL], how).drop(SALT_COL)
+    return f.join(d, keys + [SALT_COL], "inner").drop(SALT_COL)
 
 
 _MERGES = {"sum": F.sum, "min": F.min, "max": F.max}

@@ -3,25 +3,18 @@ tables — the operator that makes SCD2 masters (operators/scd2.py)
 usable for training-data correctness ("what did this entity look like
 WHEN the event happened", no feature leakage from the future).
 
-Spark has no built-in as-of join; two formulations are provided:
-
-- ``point_in_time_join``: for interval tables (SCD2's
-  effective_start/end). An equi-join on the entity key plus an
-  interval predicate; because SCD2 intervals are disjoint per key,
-  each left row matches at most one version — exact, no dedup needed.
-  The equi key keeps it a hash/sort-merge join (the range predicate is
-  a post-join filter on co-partitioned data), so it scales like any
-  keyed join.
-- ``asof_join``: for point-timestamped right sides (no intervals):
-  equi-join on key, keep right rows at-or-before the left timestamp,
-  take the latest per left row via one window. Costs a join fan-out of
-  the right side's per-key history — prefer compacting the right side
-  to intervals (scd2) when history is long.
+Spark has no built-in as-of join. ``point_in_time_join`` serves
+interval tables (SCD2's effective_start/end): an equi-join on the
+entity key plus an interval predicate. Because SCD2 intervals are
+disjoint per key, each left row matches at most one version — exact,
+no dedup needed. The equi key keeps it a hash/sort-merge join (the
+range predicate is a post-join filter on co-partitioned data), so it
+scales like any keyed join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,24 +36,6 @@ def point_in_time_join(
     return lft.join(rgt, cond, "inner")
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    left_id: str,
-) -> DataFrame:
-    """Nearest-prior as-of join: latest right row with
-    right_ts <= left_ts per left row (``left_id`` must uniquely
-    identify left rows — it anchors the top-1 window)."""
-    joined = left.join(right, on, "inner").filter(F.col(right_ts) <= F.col(left_ts))
-    w = Window.partitionBy(left_id).orderBy(F.col(right_ts).desc())
-    return (
-        joined.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-    )
-
-
 def range_join(
     left: DataFrame,
     right: DataFrame,
@@ -68,7 +43,6 @@ def range_join(
     start_col: str,
     end_col: str,
     bucket_seconds: int = 3600,
-    how: str = "inner",
 ) -> DataFrame:
     """KEYLESS interval-containment join: each left row matched to
     every right interval with ``start <= ts < end`` (intervals may
@@ -88,20 +62,7 @@ def range_join(
     interval span so inflation stays O(1). Requires
     ``start <= end`` on every right row (``sequence`` would fail on a
     negative step).
-
-    ``how`` is restricted to left-preserving joins: the right side is
-    exploded per bucket, so right/full-outer would surface one
-    null-extended row PER UNMATCHED REPLICA of an interval — silently
-    wrong multiplicity. The containment predicate lives in the join
-    condition itself (not a post-join filter), so 'left' keeps
-    unmatched left rows null-extended instead of dropping them.
     """
-    allowed = {"inner", "left", "left_outer", "left_semi", "left_anti", "semi", "anti"}
-    if how not in allowed:
-        raise ValueError(
-            f"range_join how={how!r} not supported; use one of {sorted(allowed)} "
-            "(right/full would duplicate unmatched intervals per bucket replica)"
-        )
     g = int(bucket_seconds)
     lft = left.withColumn(
         "_rj_bucket", F.floor(F.unix_timestamp(F.col(left_ts)) / g)
@@ -120,4 +81,4 @@ def range_join(
         & (F.col(f"_rjr.{start_col}") <= F.col(f"_rjl.{left_ts}"))
         & (F.col(f"_rjl.{left_ts}") < F.col(f"_rjr.{end_col}"))
     )
-    return lft.join(rgt, cond, how).drop("_rj_bucket")
+    return lft.join(rgt, cond, "inner").drop("_rj_bucket")

@@ -15,50 +15,11 @@ time.
 
 from __future__ import annotations
 
-import re
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def cast_projection(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Enforce a schema by explicit cast-select (reference P1:
-    nyc_raw_to_validated_etl.py:43-62). Missing columns become typed
-    NULLs so downstream predicates see a stable shape."""
-    cols = []
-    present = {c.lower() for c in df.columns}
-    for field in schema.fields:
-        if field.name.lower() in present:
-            cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
-        else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
-
-
-def clean_column_names(df: DataFrame) -> DataFrame:
-    """Column-name normalization (reference P2:
-    nyc_validated_to_curated_etl.py:31-53): trim → non-alnum→_ →
-    collapse _ → lowercase → dedupe with _n suffix. One `toDF`, no
-    per-column rename loop (each withColumnRenamed is a new plan node)."""
-    cleaned: list[str] = []
-    seen: dict[str, int] = {}
-    for name in df.columns:
-        c = re.sub(r"[^0-9a-zA-Z]+", "_", name.strip())
-        c = re.sub(r"_+", "_", c).strip("_").lower() or "col"
-        n = seen.get(c, 0)
-        seen[c] = n + 1
-        cleaned.append(c if n == 0 else f"{c}_{n}")
-    return df.toDF(*cleaned)
-
-
-def require_columns(df: DataFrame, cols: Sequence[str]) -> None:
-    """Assertion helper (reference P3: nyc_validated_to_curated_etl.py:25-28)."""
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(f"missing required columns: {missing}; have {df.columns}")
 
 
 def validity_flag(checks: Mapping[str, Column]) -> Column:

@@ -20,8 +20,6 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_engineering_spark.operators.validate import SplitResult, validate_split
-
 try:
     import yaml
 except ImportError:  # pragma: no cover
@@ -164,32 +162,3 @@ def evaluate_rules(df: DataFrame, rules: list[Rule]) -> DataFrame:
         "rule_name", "column_name", "kind", "severity", "action", "threshold",
         "total_rows", "violations", "pass_rate", "passed",
     )
-
-
-@dataclass
-class RuleOutcome:
-    valid: DataFrame
-    quarantine: DataFrame
-    metrics: DataFrame
-
-
-class DQJobFailure(RuntimeError):
-    """Raised when a FAIL_JOB rule's pass-rate drops below threshold
-    (reference action semantics, data_quality_rules.json:17 +
-    glue_mdm.py:104-108)."""
-
-
-def apply_rules(df: DataFrame, rules: list[Rule]) -> RuleOutcome:
-    """Route rows by rule action: QUARANTINE rules split the dataset,
-    FAIL_JOB rules raise when violated beyond threshold, WARN rules only
-    report. Returns valid/quarantine frames + the metrics table."""
-    metrics = evaluate_rules(df, rules)
-    failing = metrics.filter((F.col("action") == "FAIL_JOB") & ~F.col("passed")).collect()
-    if failing:
-        names = [r["rule_name"] for r in failing]
-        raise DQJobFailure(f"FAIL_JOB rules below threshold: {names}")
-    q_rules = {r.name: r.predicate() for r in rules if r.action == "QUARANTINE" and r.kind in ROW_KINDS}
-    if q_rules:
-        split = validate_split(df, q_rules)
-        return RuleOutcome(valid=split.valid, quarantine=split.quarantine, metrics=metrics)
-    return RuleOutcome(valid=df, quarantine=df.limit(0), metrics=metrics)

@@ -64,11 +64,3 @@ def freshness_gate(df: DataFrame, ts_col: str, dataset: str, as_of: str) -> Data
             .alias("decision"),
         )
     )
-
-
-def latest_run_decision(run_metrics: DataFrame) -> DataFrame:
-    """Gate only the latest run (reference O4: the Lambda lists metric
-    prefixes and picks the newest, dq-governance-gate/lambda_function.py:30-34)
-    — here max(run_id) via a broadcast 1-row join, no driver round-trip."""
-    latest = run_metrics.agg(F.max("run_id").alias("run_id"))
-    return governance_gate(run_metrics.join(F.broadcast(latest), "run_id"), 95.0)

@@ -337,13 +337,14 @@ GROUP BY 1
 )
 def q_shingle_df_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle document-frequency histogram — the operational
-    diagnostic behind the ``df_cap`` hot-shingle lever: candidate-pair
-    volume from the inverted index is sum over shingles of C(df, 2),
+    diagnostic for hot shingles: candidate-pair volume from the
+    inverted index is sum over shingles of C(df, 2),
     so the `>100` bucket is where a corpus goes quadratic and the
     posting mass (`n_postings`) tells you how much join input each
-    bucket contributes. Run this BEFORE a 100 TB dedup pass to size
-    df_cap; a fat tail here is the early warning the sf10 probe turns
-    into a spilled join.
+    bucket contributes. Run this BEFORE a 100 TB dedup pass to choose
+    between the plain inverted index and the prefix filter, which
+    keeps the hottest shingles out of its index; a fat tail here is
+    the early warning the sf10 probe turns into a spilled join.
 
     Plan: the same explode the jaccard path uses -> shingle hash-agg
     (map-side combine) -> 4-key bucket agg. No joins."""

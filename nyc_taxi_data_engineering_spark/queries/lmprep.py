@@ -310,19 +310,18 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Pinned merge list for the apply-side tokenization query: a fixed,
-# engine-independent priority list (the shape train_bpe emits), with
+# engine-independent priority list of (left, right) symbol pairs, with
 # CHAINED merges ("t"+"h" -> "th", then "th"+"e</w>" -> "the</w>") so
-# replay ORDER is under the gate, not just membership.  Counts are
-# carried for signature compatibility with train_bpe's output.
-PINNED_BPE_MERGES: list[tuple[str, str, int]] = [
-    ("e", BPE_EOW, 0),
-    ("t", "h", 0),
-    ("th", "e" + BPE_EOW, 0),
-    ("s", BPE_EOW, 0),
-    ("i", "n", 0),
-    ("a", "n", 0),
-    ("d", BPE_EOW, 0),
-    ("an", "d" + BPE_EOW, 0),
+# replay ORDER is under the gate, not just membership.
+PINNED_BPE_MERGES: list[tuple[str, str]] = [
+    ("e", BPE_EOW),
+    ("t", "h"),
+    ("th", "e" + BPE_EOW),
+    ("s", BPE_EOW),
+    ("i", "n"),
+    ("a", "n"),
+    ("d", BPE_EOW),
+    ("an", "d" + BPE_EOW),
 ]
 
 # Oracle replay of the greedy left-to-right merge fold as nested
@@ -341,7 +340,7 @@ _BPE_D = "\x1e"
 
 def _bpe_apply_sql() -> str:
     s = "s"
-    for left, right, _cnt in PINNED_BPE_MERGES:
+    for left, right in PINNED_BPE_MERGES:
         pat = f"{_BPE_D}{left}{_BPE_D}{_BPE_D}{right}{_BPE_D}"
         rep = f"{_BPE_D}{left}{right}{_BPE_D}"
         s = f"replace({s}, '{pat}', '{rep}')"

@@ -247,7 +247,7 @@ GROUP BY r.source, r.n_total, r.keep_rate
 )
 def q_temperature_mixture_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-alpha source mixture (operators/sampling
-    temperature_rates/temperature_sample): keep-rates derived from the
+    temperature_rates): keep-rates derived from the
     corpus's own source distribution (∝ p_s^(alpha-1), rarest source
     kept whole), then the usual deterministic md5-threshold filter.
     The per-source audit this query returns is what a mixture job

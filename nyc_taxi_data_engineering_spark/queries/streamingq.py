@@ -123,7 +123,7 @@ def q_events_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once dedup metrics over a corpus with planted
     redeliveries (every 7th event duplicated — identical full rows, as
     a redelivery is). Batch twin of streaming/ingest.dedup_events; the
-    stream==batch test covers the stateful streaming path."""
+    streaming dedup test covers its watermark-bounded streaming path."""
     from pyspark.sql import functions as F
 
     from nyc_taxi_data_engineering_spark.streaming.ingest import dedup_events

@@ -161,26 +161,6 @@ def q_unigram_tokenize_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("word")
 
 
-def viterbi_reference(word: str) -> tuple[int, int]:
-    """Driver-side reference Viterbi (score_micro, n_pieces) for
-    tests: same pinned model, independent implementation."""
-    best: list[tuple[int, int] | None] = [None] * (len(word) + 1)
-    best[0] = (0, 0)
-    for i in range(1, len(word) + 1):
-        for j in range(max(0, i - MAX_PIECE), i):
-            if best[j] is None:
-                continue
-            s = PIECE_SCORES.get(word[j:i])
-            if s is None:
-                continue
-            cand = (best[j][0] + s, best[j][1] + 1)
-            # maximize score; tie -> fewer pieces
-            if best[i] is None or (cand[0], -cand[1]) > (best[i][0], -best[i][1]):
-                best[i] = cand
-    assert best[len(word)] is not None
-    return best[len(word)]
-
-
 def _word_dp_ctes() -> str:
     """The words-with-DP CTE chain (word, n_occurrences, n_pieces,
     score_micro as CTE ``wfin``), shared by both unigram queries."""

@@ -173,10 +173,6 @@ def latest_version(table_path: str) -> int | None:
     return max(versions) if versions else None
 
 
-def is_delta_table(table_path: str) -> bool:
-    return latest_version(table_path) is not None
-
-
 def _read_commit(table_path: str, version: int) -> list[dict]:
     with open(_commit_path(table_path, version)) as f:
         return [json.loads(line) for line in f if line.strip()]
@@ -610,15 +606,6 @@ def delta_log_history(table_path: str) -> list[dict]:
         )
         out.append({"version": v, **info})
     return out
-
-
-def commit_actions(table_path: str, version: int) -> list[dict]:
-    """Public read of one commit's raw action list (add/remove/
-    commitInfo/metaData/... dicts, one per log line). The stable
-    surface for audit queries that need per-commit detail beyond
-    ``delta_log_history`` — callers must not reach into the private
-    ``_read_commit``/``_replay_state`` internals."""
-    return _read_commit(table_path, version)
 
 
 def commit_data_change(table_path: str, version: int) -> bool:
@@ -1127,7 +1114,6 @@ def merge_delta(
     on: str | list[str],
     when_matched: str = "update",
     when_not_matched: str = "insert",
-    txn: tuple[str, int] | None = None,
 ) -> int:
     """MERGE INTO on the pure-Python log (J8 — the reference's
     ``DeltaTable.merge`` surface, ``scd2_delta_vendors.py:143-170``):
@@ -1145,11 +1131,7 @@ def merge_delta(
     Scale shape: one anti-join (carry) + one semi/anti join per clause,
     all keyed equi-joins on the merge keys — the same shuffle a real
     MERGE's find-touched-files + rewrite does, minus file-level
-    pruning. ``txn=(app_id, batch_id)`` stamps the merge commit with
-    the idempotent-writer marker (streaming upsert sinks pair it with
-    :func:`last_txn_version`; a no-op merge commits nothing, which is
-    safe — replaying the same no-op is itself a no-op). Returns the
-    committed (or current, on no-op) version."""
+    pruning. Returns the committed (or current, on no-op) version."""
     if when_matched not in ("update", "delete", "ignore"):
         raise ValueError(f"when_matched must be update|delete|ignore, got {when_matched!r}")
     if when_not_matched not in ("insert", "ignore"):
@@ -1177,9 +1159,7 @@ def merge_delta(
     result = parts[0]
     for p in parts[1:]:
         result = result.unionByName(p)
-    return write_delta(
-        result, table_path, mode="overwrite", operation="MERGE", txn=txn
-    )
+    return write_delta(result, table_path, mode="overwrite", operation="MERGE")
 
 
 def compact_delta(
@@ -1382,37 +1362,6 @@ def add_constraint(
             }
         },
         {"protocol": dict(CONSTRAINT_PROTOCOL)},
-        {"metaData": meta},
-    ]
-    new_version = latest + 1
-    _write_commit(table_path, new_version, actions)
-    _maybe_checkpoint(table_path, new_version)
-    return new_version
-
-
-def drop_constraint(table_path: str, name: str) -> int:
-    """ALTER TABLE ... DROP CONSTRAINT: re-emits metaData without the
-    named constraint. Returns the committed version."""
-    latest = latest_version(table_path)
-    if latest is None:
-        raise DeltaLogError(f"not a Delta table: {table_path}")
-    state = _replay_state(table_path)
-    config = dict(state["metaData"].get("configuration") or {})
-    key = CONSTRAINT_PREFIX + name
-    if key not in config:
-        raise DeltaLogError(f"no such constraint: {name!r}")
-    del config[key]
-    now_ms = int(time.time() * 1000)
-    meta = dict(state["metaData"])
-    meta["configuration"] = config
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DROP CONSTRAINT",
-                "operationParameters": {"name": name},
-            }
-        },
         {"metaData": meta},
     ]
     new_version = latest + 1
@@ -2338,8 +2287,7 @@ def read_change_feed(
 
 
 # ---------------------------------------------------------------------------
-# Generated columns (delta.generationExpression in field metadata) and
-# the symlink-format manifest (external-engine interop)
+# Generated columns (delta.generationExpression in field metadata)
 # ---------------------------------------------------------------------------
 
 GENERATION_KEY = "delta.generationExpression"
@@ -2403,36 +2351,3 @@ def set_generated_column(
     _write_commit(table_path, new_version, actions)
     _maybe_checkpoint(table_path, new_version)
     return new_version
-
-
-def generate_symlink_manifest(table_path: str) -> list[str]:
-    """Write the ``_symlink_format_manifest`` an external engine
-    (Presto/Trino/Athena's SymlinkTextInputFormat) reads to see the
-    CURRENT Delta snapshot as plain parquet: one ``manifest`` text
-    file of absolute file URIs — per partition directory on a
-    partitioned table, one at the root otherwise. Regenerate after
-    every commit you want externally visible (exactly Delta's
-    GENERATE symlink_format_manifest contract). Returns the manifest
-    paths written; stale manifest dirs from dropped partitions are
-    removed."""
-    import shutil as _shutil
-
-    state = _replay_state(table_path)
-    part_cols = state["metaData"].get("partitionColumns") or []
-    root = os.path.join(table_path, "_symlink_format_manifest")
-    _shutil.rmtree(root, ignore_errors=True)
-    groups: dict[str, list[str]] = {}
-    for rel in state["adds"]:
-        sub = os.path.dirname(rel) if part_cols else ""
-        groups.setdefault(sub, []).append(
-            "file://" + os.path.abspath(os.path.join(table_path, rel))
-        )
-    out = []
-    for sub, uris in sorted(groups.items()):
-        d = os.path.join(root, sub) if sub else root
-        os.makedirs(d, exist_ok=True)
-        mpath = os.path.join(d, "manifest")
-        with open(mpath, "w") as f:
-            f.write("\n".join(sorted(uris)) + "\n")
-        out.append(mpath)
-    return out

@@ -4,9 +4,10 @@ The reference defers streaming entirely ("Late-arriving data handled in
 future enhancement", /root/reference/sql/docs/Transformation
 Documentation.md:175); this package upgrades that deferral to real
 Structured Streaming: file-source ingestion of the ``events`` table,
-watermarked tumbling/sliding/session window aggregations, a
-foreachBatch bridge into the batch medallion sinks, and a custom
-stateful operator via ``applyInPandasWithState``.
+watermarked tumbling/sliding/session window aggregations,
+watermark-bounded dedup, stream-static enrichment, a stream-stream
+interval join, and a foreachBatch bridge into the batch medallion
+sinks (exactly-once Delta ingest).
 
 Design rule: every window aggregation is a **builder over an unbound
 DataFrame** (streaming/windows.py), applied identically to

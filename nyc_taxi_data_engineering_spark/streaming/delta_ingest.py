@@ -97,47 +97,3 @@ def ingest_events_to_delta(
     if v is None:
         raise RuntimeError(f"stream drained but no Delta commit at {table_path}")
     return v
-
-
-def delta_upsert_batch(
-    batch: DataFrame,
-    batch_id: int,
-    table_path: str,
-    app_id: str,
-    on: str | list[str],
-) -> bool:
-    """UPSERT one micro-batch (MERGE latest-wins by key) as one Delta
-    commit, exactly-once via the txn watermark — the streaming-CDC
-    landing pattern (foreachBatch + MERGE INTO). Returns False without
-    touching the table when this batch id is at-or-below the committed
-    watermark; a replayed batch after crash recovery is therefore a
-    no-op even though MERGE rewrites data. A genuinely-no-op merge
-    commits nothing (replaying a no-op is safe by construction).
-
-    The batch must be key-unique on ``on`` (compact CDC feeds are;
-    pre-aggregate latest-per-key upstream otherwise — MERGE with
-    duplicate source keys would insert duplicates). The first batch
-    bootstraps the table."""
-    from nyc_taxi_data_engineering_spark.sources.delta_log import (
-        is_delta_table,
-        merge_delta,
-        write_delta,
-    )
-
-    if not is_delta_table(table_path):
-        write_delta(
-            batch, table_path, mode="overwrite", operation="MERGE",
-            txn=(app_id, batch_id),
-        )
-        return True
-    last = last_txn_version(table_path, app_id)
-    if last is not None and batch_id <= last:
-        return False
-    merge_delta(
-        batch.sparkSession,
-        table_path,
-        batch,
-        on=on,
-        txn=(app_id, batch_id),
-    )
-    return True

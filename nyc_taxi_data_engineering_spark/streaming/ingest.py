@@ -91,45 +91,3 @@ def enrich_events_with_customers(events: DataFrame, customers: DataFrame) -> Dat
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("mktsegment")
     )
     return events.join(F.broadcast(dim), "user_id", "left")
-
-
-def attribute_clicks_left_outer(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
-    """LEFT OUTER stream-stream interval join — the attribution view
-    that also reports clicks that converted to NOTHING (purchase
-    columns null), the half of the funnel the inner join hides.
-
-    Streaming semantics worth pinning: an unmatched click can only be
-    emitted once the purchase-side WATERMARK passes click_ts + horizon
-    (before that a matching purchase could still arrive), and Spark
-    emits outer nulls in a LATER micro-batch than the one that advanced
-    the watermark — so a run that ends right after the last data batch
-    never flushes the tail. Batch input: the identical plan is a plain
-    left outer join. State eviction is the same time-bound story as the
-    inner variant."""
-    c = clicks.select(
-        F.col("user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.select(
-        F.col("user_id").alias("p_user_id"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    if clicks.isStreaming:
-        c = c.withWatermark("click_ts", "2 hours")
-        p = p.withWatermark("purchase_ts", "2 hours")
-    cond = (
-        (c.user_id == p.p_user_id)
-        & (p.purchase_ts >= c.click_ts)
-        & (p.purchase_ts <= c.click_ts + F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}"))
-    )
-    return c.join(p, cond, "leftOuter").select(
-        "user_id",
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
-    )

@@ -1,5 +1,5 @@
-"""Stream wiring: file-source ingestion, memory-sink test harness, and
-the foreachBatch bridge into the batch medallion sinks.
+"""Stream wiring: file-source ingestion and the foreachBatch bridge
+into the batch medallion sinks.
 
 The file source is the local stand-in for Kafka/Kinesis: it replays a
 directory of parquet files as micro-batches (``maxFilesPerTrigger=1``
@@ -39,28 +39,6 @@ def read_events_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def run_available_now(
-    result: DataFrame,
-    name: str,
-    checkpoint_dir: str,
-    output_mode: str = "append",
-) -> StreamingQuery:
-    """Drain the stream into an in-memory table ``name`` and block
-    until everything available has been processed. Append mode only
-    emits windows finalized by the watermark — the late-data tests
-    depend on exactly that."""
-    q = (
-        result.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def foreach_batch_sink(

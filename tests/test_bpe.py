@@ -1,5 +1,5 @@
-"""BPE trainer (operators/bpe.py) on the classic Sennrich corpus with
-the known merge sequence."""
+"""BPE tokenization (operators/bpe.py) on the classic Sennrich corpus
+with its known merge sequence."""
 
 from __future__ import annotations
 
@@ -7,25 +7,9 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.operators import bpe as B
 
-
-def _words(spark):
-    return spark.createDataFrame(
-        [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3)], "w string, wcnt long"
-    )
-
-
-def test_train_bpe_sennrich_sequence(spark):
-    """low:5 lower:2 newest:6 widest:3 -> the canonical first merges
-    (ties broken lexicographically): (e,s,9), (es,t,9), (est,</w>,9),
-    (l,o,7), (lo,w,7)."""
-    merges = B.train_bpe(_words(spark), 5)
-    assert merges == [
-        ("e", "s", 9),
-        ("es", "t", 9),
-        ("est", "</w>", 9),
-        ("l", "o", 7),
-        ("lo", "w", 7),
-    ]
+# The canonical first five merges of low:5 lower:2 newest:6 widest:3
+# (ties broken lexicographically), Sennrich et al. 2016.
+SENNRICH_MERGES = [("e", "s"), ("es", "t"), ("est", "</w>"), ("l", "o"), ("lo", "w")]
 
 
 def test_merge_pair_greedy_non_overlapping(spark):
@@ -37,16 +21,7 @@ def test_merge_pair_greedy_non_overlapping(spark):
 
 
 def test_apply_bpe_tokenizes_with_learned_merges(spark):
-    merges = B.train_bpe(_words(spark), 5)
     docs = spark.createDataFrame([(0, "low newest")], "doc_id long, text string")
-    row = B.apply_bpe(docs, merges).first()
+    row = B.apply_bpe(docs, SENNRICH_MERGES).first()
     assert row["bpe_tokens"] == ["low", "</w>", "n", "e", "w", "est</w>"]
     assert row["n_bpe_tokens"] == 6
-
-
-def test_word_counts_matches_manual(spark):
-    docs = spark.createDataFrame(
-        [(0, "low low newest"), (1, "newest  widest")], "doc_id long, text string"
-    )
-    got = {r["w"]: r["wcnt"] for r in B.word_counts(docs).collect()}
-    assert got == {"low": 2, "newest": 2, "widest": 1}

@@ -58,23 +58,12 @@ def test_containment_short_in_long(spark):
     assert sorted((r["inner_id"], r["outer_id"]) for r in both.collect()) == [(0, 1), (1, 0)]
 
 
-def test_containment_threshold_and_df_cap(spark):
+def test_containment_threshold(spark):
     # containment 0->1 = 2/3 (shingles of 'a b c d e': {abc,bcd,cde};
     # doc1 'a b c d x' has {abc,bcd,cdx} -> common 2, inner size 3)
     df = D.shingle_containment_pairs(_docs(spark, ["a b c d e", "a b c d x"]), threshold=0.5)
     vals = {(r["inner_id"], r["outer_id"]): r["containment"] for r in df.collect()}
     assert vals == {(0, 1): round(2 / 3, 6), (1, 0): round(2 / 3, 6)}
-    capped = D.shingle_containment_pairs(
-        _docs(spark, ["a b c", "a b c", "a b c"]), threshold=0.5, df_cap=2
-    )
-    assert capped.count() == 0
-
-
-def test_df_cap_drops_hot_shingles(spark):
-    # the shingle 'a b c' appears in all 3 docs; cap at 2 removes it
-    texts = ["a b c", "a b c", "a b c"]
-    assert D.shingle_jaccard_pairs(_docs(spark, texts), threshold=0.1).count() == 3
-    assert D.shingle_jaccard_pairs(_docs(spark, texts), threshold=0.1, df_cap=2).count() == 0
 
 
 def test_minhash_lsh_finds_identical_pair(spark):

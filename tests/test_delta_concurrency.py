@@ -74,7 +74,7 @@ def _barriered_latest_version(n_writers: int, monkeypatch):
 def _commit_infos(path: str) -> list[dict]:
     infos = []
     for v in range(latest_version(path) + 1):
-        for a in delta_log.commit_actions(path, v):
+        for a in delta_log._read_commit(path, v):
             if "commitInfo" in a:
                 infos.append(a["commitInfo"])
     return infos
@@ -153,7 +153,7 @@ def test_concurrent_overwrites_one_winner_losers_roll_back(spark, tmp_path, monk
     # removed) — no orphans.
     referenced = set()
     for v in range(latest_version(path) + 1):
-        for a in delta_log.commit_actions(path, v):
+        for a in delta_log._read_commit(path, v):
             if "add" in a:
                 referenced.add(a["add"]["path"])
     on_disk = {

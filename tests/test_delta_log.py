@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.sources import delta_log as D
-from nyc_taxi_data_engineering_spark.sources import read_delta
 
 
 @pytest.fixture()
@@ -38,11 +37,6 @@ def test_snapshot_and_time_travel(spark, table):
     assert _ids(D.read_delta_log(spark, table, version_as_of=0)) == [1, 2]
     assert _ids(D.read_delta_log(spark, table, version_as_of=1)) == [1, 2, 3]
     assert _ids(D.read_delta_log(spark, table, version_as_of=2)) == [9]
-
-
-def test_read_delta_falls_back_to_log_reader(spark, table):
-    assert _ids(read_delta(spark, table)) == [9]
-    assert _ids(read_delta(spark, table, version_as_of=1)) == [1, 2, 3]
 
 
 def test_history_newest_first(table):
@@ -729,7 +723,7 @@ def test_append_retries_after_losing_version_race(spark, tmp_path, monkeypatch):
         spark.createDataFrame([(3, "c")], "id long, v string"), tbl, mode="append"
     )
     assert got == 2
-    rows = {r["id"] for r in read_delta(spark, tbl).collect()}
+    rows = {r["id"] for r in D.read_delta_log(spark, tbl).collect()}
     assert rows == {1, 2, 3}
     with open(os.path.join(tbl, "_delta_log", f"{2:020d}.json")) as f:
         commit_info = json.loads(f.readline())["commitInfo"]
@@ -802,7 +796,7 @@ def test_concurrent_thread_appends_both_land(spark, tmp_path):
     for t in ts:
         t.join()
     assert sorted(v for v in results.values() if isinstance(v, int)) == [1, 2], results
-    assert {r["id"] for r in read_delta(spark, tbl).collect()} == {0, 1, 2}
+    assert {r["id"] for r in D.read_delta_log(spark, tbl).collect()} == {0, 1, 2}
 
 
 def test_restore_reverts_schema_and_is_undoable(spark, tmp_path):
@@ -818,7 +812,7 @@ def test_restore_reverts_schema_and_is_undoable(spark, tmp_path):
         merge_schema=True,
     )  # v1: schema evolved
     assert D.restore_delta(tbl, 0) == 2
-    got = read_delta(spark, tbl)
+    got = D.read_delta_log(spark, tbl)
     assert got.columns == ["id", "v"]  # evolved column gone again
     assert {r["id"] for r in got.collect()} == {1}
     ids = set()
@@ -835,7 +829,7 @@ def test_restore_reverts_schema_and_is_undoable(spark, tmp_path):
     assert {r["id"] for r in v1.collect()} == {2}
     # restore the restore: back to v1's content
     assert D.restore_delta(tbl, 1) == 3
-    assert {r["id"] for r in read_delta(spark, tbl).collect()} == {2}
+    assert {r["id"] for r in D.read_delta_log(spark, tbl).collect()} == {2}
 
 
 def test_restore_beyond_vacuum_retention_raises(spark, tmp_path):
@@ -846,13 +840,13 @@ def test_restore_beyond_vacuum_retention_raises(spark, tmp_path):
     with pytest.raises(D.DeltaLogError, match="vacuumed"):
         D.restore_delta(tbl, 0)
     # table still healthy at the retained snapshot
-    assert {r["id"] for r in read_delta(spark, tbl).collect()} == {2}
+    assert {r["id"] for r in D.read_delta_log(spark, tbl).collect()} == {2}
 
 
 def test_check_constraints_lifecycle(spark, tmp_path):
     """ADD CONSTRAINT validates existing data, bumps the writer
     protocol, blocks violating writes (NULL = violation), survives
-    overwrites AND checkpoints, and DROP re-arms the write."""
+    overwrites AND checkpoints."""
     tbl = str(tmp_path / "constrained")
     D.write_delta(
         spark.createDataFrame([(1, 10.0), (2, 5.5)], "id long, amount double"), tbl
@@ -903,14 +897,6 @@ def test_check_constraints_lifecycle(spark, tmp_path):
     D.write_checkpoint(tbl)
     cfg2 = D._replay_state(tbl)["metaData"]["configuration"]
     assert cfg2 == cfg
-    # drop re-arms
-    D.drop_constraint(tbl, "positive")
-    D.write_delta(
-        spark.createDataFrame([(9, -1.0)], "id long, amount double"), tbl, mode="append"
-    )
-    assert 9 in {r["id"] for r in read_delta(spark, tbl).collect()}
-    with pytest.raises(D.DeltaLogError, match="no such constraint"):
-        D.drop_constraint(tbl, "positive")
 
 
 def test_shallow_clone_zero_copy_and_divergence(spark, tmp_path):
@@ -925,7 +911,7 @@ def test_shallow_clone_zero_copy_and_divergence(spark, tmp_path):
     assert D.clone_delta(src, dst) == 0
     # zero copy: no parquet under the clone root
     assert not glob.glob(os.path.join(dst, "**", "*.parquet"), recursive=True)
-    assert _ids(read_delta(spark, dst)) == [1, 2]
+    assert _ids(D.read_delta_log(spark, dst)) == [1, 2]
     # fresh identity, inherited schema
     src_meta = D._replay_state(src)["metaData"]
     dst_meta = D._replay_state(dst)["metaData"]
@@ -933,15 +919,15 @@ def test_shallow_clone_zero_copy_and_divergence(spark, tmp_path):
     assert dst_meta["schemaString"] == src_meta["schemaString"]
     # diverge: append to clone (lands under clone root), source unchanged
     D.write_delta(spark.createDataFrame([(3, "c")], "id long, s string"), dst, mode="append")
-    assert _ids(read_delta(spark, dst)) == [1, 2, 3]
-    assert _ids(read_delta(spark, src)) == [1, 2]
+    assert _ids(D.read_delta_log(spark, dst)) == [1, 2, 3]
+    assert _ids(D.read_delta_log(spark, src)) == [1, 2]
     # overwrite the clone: tombstones the absolute refs, source data intact
     D.write_delta(spark.createDataFrame([(9, "z")], "id long, s string"), dst, mode="overwrite")
-    assert _ids(read_delta(spark, dst)) == [9]
-    assert _ids(read_delta(spark, src)) == [1, 2]
+    assert _ids(D.read_delta_log(spark, dst)) == [9]
+    assert _ids(D.read_delta_log(spark, src)) == [1, 2]
     # vacuum the clone: deletes nothing of the source's
     D.vacuum_delta(dst, keep_last=1)
-    assert _ids(read_delta(spark, src)) == [1, 2]
+    assert _ids(D.read_delta_log(spark, src)) == [1, 2]
     # time travel on the clone still resolves the (not-vacuumed) source files
     assert _ids(D.read_delta_log(spark, dst, version_as_of=0)) == [1, 2]
     # partitioned source rejected
@@ -1477,49 +1463,3 @@ def test_generated_column_compute_validate_and_guard(spark, tmp_path):
     ok = spark.range(20, 21).selectExpr("id AS k", "CAST(id * 2 AS BIGINT) AS dbl")
     D.write_delta(ok, path, mode="append")
     assert D.read_delta_log(spark, path).count() == 16
-
-
-def test_symlink_manifest_tracks_snapshot(spark, tmp_path):
-    """The symlink manifest lists EXACTLY the active files, follows
-    the snapshot through delete + compact, and splits per partition
-    directory on a partitioned table."""
-    import os as _os
-
-    path = str(tmp_path / "man_tbl")
-    df = spark.range(100).selectExpr("CAST(id % 2 AS INT) AS p", "id AS k")
-    D.write_delta(df, path, mode="overwrite", partition_by=["p"])
-
-    def listed():
-        uris = []
-        for m in D.generate_symlink_manifest(path):
-            with open(m) as f:
-                uris += [u.strip() for u in f if u.strip()]
-        return sorted(uris)
-
-    def active():
-        st = D._replay_state(path)
-        return sorted(
-            "file://" + _os.path.abspath(_os.path.join(path, rel)) for rel in st["adds"]
-        )
-
-    assert listed() == active()
-    manifests = D.generate_symlink_manifest(path)
-    assert any("/p=0/" in m for m in manifests) and any("/p=1/" in m for m in manifests)
-
-    # external view stays exact through a DV delete (files unchanged)
-    # and a compaction (files replaced)
-    D.delete_delta(spark, path, "k % 10 = 0")
-    assert listed() == active()
-    flat = str(tmp_path / "man_flat")
-    D.write_delta(spark.range(50).selectExpr("id AS k"), flat, mode="overwrite")
-    D.compact_delta(spark, flat, target_files=1)
-    def listed_flat():
-        uris = []
-        for m in D.generate_symlink_manifest(flat):
-            with open(m) as f:
-                uris += [u.strip() for u in f if u.strip()]
-        return sorted(uris)
-    st = D._replay_state(flat)
-    assert listed_flat() == sorted(
-        "file://" + _os.path.abspath(_os.path.join(flat, rel)) for rel in st["adds"]
-    )

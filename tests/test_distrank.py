@@ -124,30 +124,6 @@ def test_no_single_partition_window_in_plan(spark):
             assert "_dr_bucket" in line, f"unexpected window: {line}"
 
 
-def test_desc_lead_matches_window(spark):
-    rows = [(float(i % 9), i % 2, i) for i in range(150)]
-    df = _mk(spark, rows)
-    from nyc_taxi_data_engineering_spark.operators.distrank import descending_lead
-
-    want = sorted(
-        df.select(
-            "id",
-            F.row_number()
-            .over(Window.orderBy(F.col("v").desc(), "id"))
-            .cast("bigint")
-            .alias("rn"),
-        ).collect()
-    )
-    got = sorted(
-        global_row_number(
-            df, [F.col("v").desc(), "id"], n_buckets=4, lead=descending_lead("v")
-        )
-        .select("id", "rn")
-        .collect()
-    )
-    assert got == want
-
-
 def test_string_lead_matches_window(spark):
     from nyc_taxi_data_engineering_spark.operators.distrank import string_lead
 

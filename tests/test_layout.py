@@ -1,7 +1,6 @@
 """Layout-operator tests: Z-order clustering must yield file-level
 min/max pruning on BOTH clustered columns (vs a 1-column sort, which
-helps only its own column), and compaction must hit the target file
-count."""
+helps only its own column), and the Hilbert curve must walk its grid."""
 
 from __future__ import annotations
 
@@ -10,7 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_engineering_spark.operators.layout import compact_parquet, zorder_write
+from nyc_taxi_data_engineering_spark.operators.layout import zorder_cluster
 
 # 16 files → a 4-bit z-prefix splits 2/2 across the two dims (~0.3-0.4
 # span each). At 8 files the 3-bit prefix gives one dim only 1 bit and
@@ -46,7 +45,7 @@ def test_zorder_prunes_both_dimensions(spark, tmp_path):
         .drop("id")
     )
     zpath, spath = str(tmp_path / "z"), str(tmp_path / "s")
-    zorder_write(df, zpath, ["x", "y"], N_FILES)
+    zorder_cluster(df, ["x", "y"], N_FILES).write.parquet(zpath)
     df.repartitionByRange(N_FILES, "x").sortWithinPartitions("x").write.parquet(spath)
 
     sx, sy = _per_file_span_frac(spark, spath, "x"), _per_file_span_frac(spark, spath, "y")
@@ -59,20 +58,11 @@ def test_zorder_prunes_both_dimensions(spark, tmp_path):
 def test_zorder_preserves_rows(spark, tmp_path):
     df = spark.range(1000).withColumn("x", F.col("id") % 37).withColumn("y", F.col("id") % 11)
     path = str(tmp_path / "zr")
-    zorder_write(df, path, ["x", "y"], 4)
+    zorder_cluster(df, ["x", "y"], 4).write.parquet(path)
     back = spark.read.parquet(path)
     assert back.count() == 1000
     assert back.agg(F.sum("id")).collect()[0][0] == 999 * 1000 // 2
     assert "_z" not in back.columns
-
-
-def test_compaction_reduces_file_count(spark, tmp_path):
-    src, dst = str(tmp_path / "frag"), str(tmp_path / "compact")
-    spark.range(10_000).repartition(64).write.parquet(src)  # 64 tiny files
-    n = compact_parquet(spark, src, dst, target_file_bytes=10 * 1024 * 1024)
-    files = glob.glob(os.path.join(dst, "*.parquet"))
-    assert n == 1 and len(files) == 1
-    assert spark.read.parquet(dst).count() == 10_000
 
 
 def test_hilbert_curve_is_a_gapless_unit_step_walk(spark):

@@ -14,6 +14,27 @@ from nyc_taxi_data_engineering_spark.queries.lmprep import (
     CHUNK_TOKENS,
     UNIGRAM_TOPK,
 )
+from nyc_taxi_data_engineering_spark.queries.unigramq import MAX_PIECE, PIECE_SCORES
+
+
+def viterbi_reference(word: str) -> tuple[int, int]:
+    """Driver-side reference Viterbi (score_micro, n_pieces) for
+    tests: same pinned model, independent implementation."""
+    best: list[tuple[int, int] | None] = [None] * (len(word) + 1)
+    best[0] = (0, 0)
+    for i in range(1, len(word) + 1):
+        for j in range(max(0, i - MAX_PIECE), i):
+            if best[j] is None:
+                continue
+            s = PIECE_SCORES.get(word[j:i])
+            if s is None:
+                continue
+            cand = (best[j][0] + s, best[j][1] + 1)
+            # maximize score; tie -> fewer pieces
+            if best[i] is None or (cand[0], -cand[1]) > (best[i][0], -best[i][1]):
+                best[i] = cand
+    assert best[len(word)] is not None
+    return best[len(word)]
 
 
 def test_chunks_cover_every_token_exactly(spark, sf_dir):
@@ -106,10 +127,7 @@ def test_unigram_viterbi_matches_reference_dp(spark, sf_dir):
     driver-side DP on every corpus word (score AND piece count,
     including the fewer-pieces tie-break), and the pinned model must
     make multi-char pieces actually win."""
-    from nyc_taxi_data_engineering_spark.queries.unigramq import (
-        q_unigram_tokenize_words,
-        viterbi_reference,
-    )
+    from nyc_taxi_data_engineering_spark.queries.unigramq import q_unigram_tokenize_words
 
     rows = q_unigram_tokenize_words(spark, sf_dir).collect()
     assert len(rows) > 10

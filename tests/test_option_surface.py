@@ -1,4 +1,5 @@
-"""Source test: an operator takes only the options its callers set.
+"""Source tests: an operator takes only the options its callers set,
+and every package definition has a caller outside the tests.
 
 A parameter with a default that every non-test caller leaves at one
 value (never passed, or always passed the same expression) is a
@@ -7,7 +8,12 @@ twins all assume that one value, and a caller passing another could
 silently desynchronize a Spark operator from its oracle. Such a value
 belongs in the body as a module constant. The exemptions below are
 the parameters a test needs to reach a branch at small data, the
-package API, and deployment settings."""
+package API, and deployment settings.
+
+A function or class that only tests reach is code no query, pipeline
+or tool runs: it is tested but never gated against the oracle, and it
+is a second path beside whatever the queries use. It belongs in the
+test that needs it, or nowhere."""
 
 from __future__ import annotations
 
@@ -24,16 +30,12 @@ EXEMPT = {
     "get_spark.shuffle_partitions": "package API (__all__)",
     "ingest_events_to_delta.app_id": "deployment setting: the stream's app ID in the Delta txn",
     "read_events_stream.max_files_per_trigger": "stream setting; streaming tests read all files per trigger",
-    "run_available_now.output_mode": "streaming tests drive complete/update/append sinks",
-    "read_delta.version_as_of": "Delta time travel, exercised by the Delta log tests",
     "read_delta_appends.to_version": "Delta change-feed bound, exercised by the Delta log tests",
     "read_change_feed.version_to": "Delta change-feed bound, exercised by the Delta log tests",
     "compact_delta.target_files": "Delta OPTIMIZE target, exercised by the Delta log tests",
     "vacuum_delta.keep_last": "Delta VACUUM retention, exercised by the Delta log tests",
     "connected_components.max_iter": "cap: a test reaches the non-convergence raise with 1",
     "candidate_pairs.max_block_size": "cap: small test blocks cannot reach 10,000",
-    "oversized_blocks.max_block_size": "cap: small test blocks cannot reach 10,000",
-    "compact_parquet.target_file_bytes": "cap: a test file set cannot reach 128 MB",
     "global_row_number.n_buckets": "tests pin several buckets on a few rows",
     "with_hilbert.bits": "a test enumerates a 2^3 grid exhaustively",
     "cooccurrence_pairs.degree_cap": "cap: tests drop a 3-entity context with 2",
@@ -42,22 +44,18 @@ EXEMPT = {
     "cooccurrence_pairs_sql.min_shared": "twin of cooccurrence_pairs.min_shared",
     "shingle_jaccard_pairs.threshold": "threshold: tests reach pairs on short docs below 0.8",
     "shingle_containment_pairs.threshold": "threshold: tests reach pairs on short docs below 0.8",
-    "shingle_jaccard_pairs.df_cap": "hot-shingle skew lever (shingle_df_histogram sizes it); tests cap at 2",
-    "shingle_containment_pairs.df_cap": "hot-shingle skew lever; a test caps at 2",
     "prefix_filter_jaccard_pairs.threshold_num": "threshold: a test compares against Jaccard at 1/2",
     "prefix_filter_jaccard_pairs.threshold_den": "threshold: a test compares against Jaccard at 1/2",
     "incremental_dedup_status.neardup_min": "threshold: a test gates near-dups at 1.0",
     "range_join.bucket_seconds": "tests check exactness at 1800 s and 86400 s buckets",
-    "range_join.how": "a test reaches the left join and the rejected full join",
-    "salted_join.how": "a test reaches the rejected dim-preserving join",
-    "profile.exact_distinct": "HLL lever for wide profiles; a test reaches the approx path",
-    "scrub.token": "a test reaches replacement escaping with a metacharacter token",
-    "scrub_sql.token": "twin of scrub.token",
     "assign_split.seed": "tests check seed sensitivity of the split",
     "assign_split_sql.seed": "twin of assign_split.seed",
     "weighted_sample.seed": "a test draws over 30 seeds",
     "weighted_sample_sql.seed": "twin of weighted_sample.seed",
 }
+
+# "module.name": why a package definition that no non-test code reaches stays.
+UNREFERENCED = {}
 
 
 def _non_test_sources() -> list[pathlib.Path]:
@@ -145,3 +143,66 @@ def test_every_default_is_varied_by_a_caller():
     stale = sorted(set(EXEMPT) - set(one))
     assert not stale, f"exemptions no longer needed: {stale}"
     assert all(reason.strip() for reason in EXEMPT.values())
+
+
+def _mentions(node: ast.AST) -> set[str]:
+    return {
+        n.id if isinstance(n, ast.Name) else n.attr
+        for n in ast.walk(node)
+        if isinstance(n, (ast.Name, ast.Attribute))
+    }
+
+
+def _is_registered_query(node: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "query"
+        for d in node.decorator_list
+    )
+
+
+def unreferenced_definitions() -> list[str]:
+    """``module.name`` for every module-level package function and class
+    that no non-test code reaches. The roots are the registered queries,
+    the module-level statements of package modules, and all of
+    ``tools/``, ``perfbench/``, ``bench.py`` and ``__spark_entry__.py``;
+    a definition is reached when a root or a reached definition names it
+    (as a name or an attribute). Matching is by name, so of two
+    definitions that share a name, both are reached or neither."""
+    defs = collections.defaultdict(list)  # name -> ["module.name", ast node]
+    roots: set[str] = set()
+    for p in PKG.rglob("*.py"):
+        parts = p.relative_to(PKG).with_suffix("").parts
+        module = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+        for n in ast.parse(p.read_text()).body:
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                defs[n.name].append((f"{module}.{n.name}", n))
+                for d in n.decorator_list:
+                    roots |= _mentions(d)
+                if _is_registered_query(n):
+                    roots.add(n.name)
+            else:
+                roots |= _mentions(n)
+    for p in _non_test_sources():
+        if PKG not in p.parents:
+            roots |= _mentions(ast.parse(p.read_text()))
+    reached: set[str] = set()
+    todo = [r for r in roots if r in defs]
+    while todo:
+        name = todo.pop()
+        if name not in reached:
+            reached.add(name)
+            todo += [m for _, n in defs[name] for m in _mentions(n) if m in defs]
+    return sorted(q for name, ds in defs.items() if name not in reached for q, _ in ds)
+
+
+def test_every_definition_is_reached_by_non_test_code():
+    dead = unreferenced_definitions()
+    unexplained = [d for d in dead if d not in UNREFERENCED]
+    assert not unexplained, (
+        "package definitions that only tests reach — delete them (a test "
+        "oracle moves into its test), or allow with a reason: "
+        f"{unexplained}"
+    )
+    stale = sorted(set(UNREFERENCED) - set(dead))
+    assert not stale, f"allowances no longer needed: {stale}"
+    assert all(reason.strip() for reason in UNREFERENCED.values())

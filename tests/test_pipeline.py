@@ -22,12 +22,7 @@ from nyc_taxi_data_engineering_spark.plans.sql_runner import (
     run_sql_workflow,
 )
 from nyc_taxi_data_engineering_spark.queries.validation import lineitem_checks
-from nyc_taxi_data_engineering_spark.sources import (
-    latest_partition,
-    read_csv,
-    write_csv,
-    write_json_metrics,
-)
+from nyc_taxi_data_engineering_spark.sources import write_json_metrics
 from tests.conftest import TEST_SF_DIR
 
 
@@ -192,21 +187,10 @@ def test_sql_runner_error_identity_in_concurrent_batch(spark, sf_dir):
         run_sql_workflow(spark, [steps[0], steps[2], steps[1]])
 
 
-def test_csv_json_roundtrip(spark, tmp_path):
+def test_json_metrics_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
-    write_csv(df, str(tmp_path / "csv"))
-    back = read_csv(spark, str(tmp_path / "csv"))
-    assert {(r["id"], r["name"]) for r in back.collect()} == {(1, "a"), (2, "b")}
     write_json_metrics(df, str(tmp_path / "json"))
     assert spark.read.json(str(tmp_path / "json")).count() == 2
-
-
-def test_latest_partition(spark):
-    df = spark.createDataFrame(
-        [("2024-01-01", 1), ("2024-01-02", 2), ("2024-01-02", 3)], "run_date string, v int"
-    )
-    latest = latest_partition(df, "run_date")
-    assert sorted(r["v"] for r in latest.collect()) == [2, 3]
 
 
 def test_write_jdbc_roundtrip_embedded_derby(spark, tmp_path):

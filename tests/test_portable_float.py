@@ -15,18 +15,10 @@ import duckdb
 import pytest
 
 from nyc_taxi_data_engineering_spark.functions import (
-    assert_quantum_above_ulp,
     dec_to_double_sql,
     portable_round,
     portable_round_sql,
 )
-
-
-def test_assert_quantum_above_ulp_bounds():
-    assert_quantum_above_ulp(1e3, 6)  # quantum 1e-6 >> ulp(1e3) ~ 1e-13
-    with pytest.raises(ValueError, match="below ULP"):
-        # the ANOVA/Haar failure shape: round(x, 6) at |x| ~ 1e14
-        assert_quantum_above_ulp(1e14, 6)
 
 
 def test_portable_round_formula_matches_python():

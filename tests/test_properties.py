@@ -242,7 +242,7 @@ def test_apply_bpe_matches_python_reference(spark, words, merges):
 
     text = " ".join(words)
     docs = spark.createDataFrame([(0, text)], "doc_id long, text string")
-    got = apply_bpe(docs, [(l, r, 0) for l, r in merges]).collect()[0]
+    got = apply_bpe(docs, merges).collect()[0]
     want: list[str] = []
     for w in words:
         syms = list(w) + [BPE_EOW]

@@ -1,14 +1,11 @@
 """Tests for the explicit scale levers: salted joins/aggs must be
-result-identical to their unsalted forms while spreading hot keys, and
-bucketed tables must join without a shuffle (the plan, not just the
-rows, is the contract)."""
+result-identical to their unsalted forms while spreading hot keys."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.operators import skew
-from nyc_taxi_data_engineering_spark.sources import write_bucketed
 
 
 def _skewed_fact(spark):
@@ -61,30 +58,6 @@ def test_salted_agg_equals_plain_agg(spark):
         ).collect()
     }
     assert salted == plain
-
-
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
-    """Two tables bucketed on the join key must sort-merge join with
-    ZERO exchanges — the co-located-join contract that replaces the
-    reference's Redshift distkey design."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice"
-    )
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    write_bucketed(li, "li_b", ["l_orderkey"], 4)
-    write_bucketed(od.withColumnRenamed("o_orderkey", "l_orderkey"), "od_b", ["l_orderkey"], 4)
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("li_b").join(spark.table("od_b"), "l_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS od_b")
 
 
 def test_approx_count_distinct_error_bound(spark, sf_dir):

@@ -7,13 +7,7 @@ from nyc_taxi_data_engineering_spark.operators.lifecycle import (
     InvalidTransition,
     lifecycle_transition,
 )
-from nyc_taxi_data_engineering_spark.operators.scd2 import (
-    Scd2Table,
-    approve_current,
-    audit_versions_between,
-    scd2_apply,
-    scd2_verify,
-)
+from nyc_taxi_data_engineering_spark.operators.scd2 import scd2_apply, scd2_verify
 
 KEY, TRACKED = "vendor_id", ["vendor_name", "city"]
 T1, T2, T3 = "2024-01-01 00:00:00", "2024-02-01 00:00:00", "2024-03-01 00:00:00"
@@ -40,35 +34,6 @@ def test_scd2_merge_semantics(spark):
     assert scd2_verify(t2, KEY).count() == 0
 
 
-def test_scd2_table_time_travel_and_history(spark, tmp_path):
-    tbl = Scd2Table(spark, str(tmp_path / "vendors"), KEY, TRACKED)
-    tbl.merge(batch(spark, [(1, "Acme", "NYC")]), T1)
-    tbl.merge(batch(spark, [(1, "Acme Corp", "NYC")]), T2)
-    assert tbl.latest_snapshot() == 2
-    assert tbl.read(version_as_of=1).count() == 1  # S4 time travel
-    assert tbl.read().count() == 2
-    cur = tbl.read_current().collect()
-    assert len(cur) == 1 and cur[0]["vendor_name"] == "Acme Corp"
-    ops = [h["operation"] for h in tbl.history()]  # S5 history audit
-    assert ops == ["SCD2_INIT", "SCD2_MERGE"]
-
-
-def test_approve_and_audit_range(spark):
-    b1 = batch(spark, [(1, "Acme", "NYC"), (2, "Globex", "LA")])
-    t = scd2_apply(None, b1, KEY, TRACKED, T1)
-    t = scd2_apply(t, batch(spark, [(1, "Acme Corp", "NYC")]), KEY, TRACKED, T2)
-    keys = spark.createDataFrame([(1,)], "vendor_id int")
-    approved = approve_current(t, keys, KEY, "steward", T3, "quarterly review")
-    rows = {(r[KEY], r["version_no"]): r for r in approved.collect()}
-    assert rows[(1, 2)]["approval_status"] == "APPROVED"
-    assert rows[(1, 2)]["approved_by"] == "steward"
-    assert rows[(1, 1)]["approval_status"] is None  # not current
-    assert rows[(2, 1)]["approval_status"] is None  # not in keys
-
-    audit = audit_versions_between(t, 1, KEY, T1, T2).collect()
-    assert [r["version_no"] for r in audit] == [1, 2]
-
-
 def test_lifecycle_strict_guard(spark):
     """An unknown target state raises; a matched row whose state may
     not move to the target (RETIRED -> DEPRECATED) is skipped."""
@@ -81,48 +46,6 @@ def test_lifecycle_strict_guard(spark):
     states = {r["id"]: r["lifecycle_state"] for r in res.master.collect()}
     assert states == {1: "RETIRED", 2: "DEPRECATED"}
     assert res.history.count() == 1
-
-
-def test_scd2_table_incremental_bucket_rewrite(spark, tmp_path):
-    """A merge must rewrite only the buckets containing changed keys
-    (O(changed), not O(table)), reuse unchanged buckets from prior
-    snapshots, and write nothing at all for a no-change merge."""
-    import os
-
-    tbl = Scd2Table(spark, str(tmp_path / "vendors"), KEY, TRACKED, n_buckets=8)
-    rows = [(i, f"Vendor {i}", "NYC") for i in range(1, 41)]
-    tbl.merge(batch(spark, rows), T1)
-    init = tbl.history()[0]
-    assert init["rows"] == 40 and len(init["rewritten_buckets"]) > 1
-
-    # change ONE key -> only its bucket rewritten, all others reused
-    tbl.merge(batch(spark, [(7, "Vendor 7 Corp", "NYC")]), T2)
-    h2 = tbl.history()[1]
-    assert len(h2["rewritten_buckets"]) == 1
-    assert h2["rows"] == 41
-    [b7] = h2["rewritten_buckets"]
-    reused = {b: s for b, s in ((int(k), v) for k, v in h2["manifest"].items()) if b != b7}
-    assert set(reused.values()) == {1}
-    assert os.listdir(os.path.join(str(tmp_path / "vendors"), "snap=000002")) == [
-        f"_scd2_bucket={b7}"
-    ] or f"_scd2_bucket={b7}" in os.listdir(
-        os.path.join(str(tmp_path / "vendors"), "snap=000002")
-    )
-
-    # the merged table is correct across reused + rewritten buckets
-    assert tbl.read().count() == 41
-    cur = {r[KEY]: r["vendor_name"] for r in tbl.read_current().collect()}
-    assert len(cur) == 40 and cur[7] == "Vendor 7 Corp" and cur[8] == "Vendor 8"
-    assert scd2_verify(tbl.read(), KEY).count() == 0
-    # time travel still sees the pre-merge table
-    assert tbl.read(version_as_of=1).count() == 40
-
-    # no-change merge: nothing written, manifest reused
-    tbl.merge(batch(spark, [(8, "Vendor 8", "NYC")]), T3)
-    h3 = tbl.history()[2]
-    assert h3["rewritten_buckets"] == [] and h3["rows"] == 41
-    assert not os.path.exists(os.path.join(str(tmp_path / "vendors"), "snap=000003"))
-    assert tbl.read().count() == 41
 
 
 def test_scd2_rollback_skips_keys_without_target_version(spark):

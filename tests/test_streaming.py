@@ -2,7 +2,7 @@
 builders the oracle-checked batch twins use, so these tests close the
 loop — stream output must equal batch output on identical data, the
 watermark must drop late rows across a checkpointed restart, and the
-custom stateful operator must reproduce the batch aggregate."""
+Delta sink must land each micro-batch exactly once."""
 
 from __future__ import annotations
 
@@ -13,12 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.streaming import tumbling_event_stats
-from nyc_taxi_data_engineering_spark.streaming.runner import (
-    EVENTS_SCHEMA,
-    read_events_stream,
-    run_available_now,
-)
-from nyc_taxi_data_engineering_spark.streaming.stateful import running_user_totals
+from nyc_taxi_data_engineering_spark.streaming.runner import EVENTS_SCHEMA, read_events_stream
 from nyc_taxi_data_engineering_spark.streaming.windows import with_watermark
 
 
@@ -32,6 +27,21 @@ def _mk_events(spark, rows):
 
 def _write_batch(df, path):
     df.coalesce(1).write.mode("append").parquet(path)
+
+
+def _drain_to_memory(result, name, checkpoint_dir, output_mode="append"):
+    """Drain the stream into the in-memory table ``name`` and block
+    until everything available has been processed. Append mode only
+    emits windows finalized by the watermark."""
+    q = (
+        result.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 @pytest.fixture()
@@ -53,7 +63,7 @@ def test_stream_equals_batch_tumbling(spark, stream_dirs):
         (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
         for r in tumbling_event_stats(spark.read.parquet(src)).collect()
     }
-    run_available_now(
+    _drain_to_memory(
         tumbling_event_stats(with_watermark(read_events_stream(spark, src))),
         "t_tumbling",
         ckpt,
@@ -101,39 +111,6 @@ def test_watermark_drops_late_rows_across_restart(spark, stream_dirs, tmp_path):
     assert not any(r["sum_value"] >= 100.0 for r in emitted)
 
 
-def test_stateful_running_totals_match_batch(spark, stream_dirs):
-    src, ckpt = stream_dirs
-    events = _mk_events(
-        spark,
-        [(0, 1, "click", 1.5), (10, 1, "view", 2.5), (20, 2, "click", 7.0), (30, 1, "click", 3.0)],
-    )
-    _write_batch(events, src)
-
-    run_available_now(
-        running_user_totals(read_events_stream(spark, src)),
-        "t_state",
-        ckpt,
-        output_mode="update",
-    )
-    # latest state row per user must equal the batch aggregate
-    got = {
-        r["user_id"]: (r["n_events"], r["sum_value"], r["last_ts"])
-        for r in spark.sql(
-            "SELECT user_id, n_events, sum_value, last_ts FROM ("
-            "  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) AS rn"
-            "  FROM t_state) WHERE rn = 1"
-        ).collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], r["s"], r["m"])
-        for r in spark.read.parquet(src)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"), F.max("ts").alias("m"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_foreach_batch_bridges_to_parquet(spark, stream_dirs, tmp_path):
     src, ckpt = stream_dirs
     out = os.path.join(str(tmp_path), "out")
@@ -161,7 +138,7 @@ def test_streaming_dedup_drops_cross_batch_redelivery(spark, stream_dirs):
     # redeliver event_id 0 verbatim in a second file (= second micro-batch)
     _write_batch(first.filter(F.col("event_id") == 0), src)
 
-    run_available_now(
+    _drain_to_memory(
         dedup_events(read_events_stream(spark, src, max_files_per_trigger=1)),
         "t_dedup",
         ckpt,
@@ -182,7 +159,7 @@ def test_stream_static_enrichment_equals_batch(spark, stream_dirs):
     customers = spark.createDataFrame(
         [(10, "AUTOMOBILE"), (11, "BUILDING")], "c_custkey long, c_mktsegment string"
     )
-    run_available_now(
+    _drain_to_memory(
         enrich_events_with_customers(read_events_stream(spark, src), customers),
         "t_enrich",
         ckpt,
@@ -230,7 +207,7 @@ def test_stream_stream_interval_join_equals_batch(spark, stream_dirs):
         (r["click_id"], r["purchase_id"])
         for r in attribute_purchases_to_clicks(*split(spark.read.parquet(src))).collect()
     }
-    run_available_now(
+    _drain_to_memory(
         attribute_purchases_to_clicks(*split(read_events_stream(spark, src))),
         "t_ssjoin",
         ckpt,
@@ -241,35 +218,6 @@ def test_stream_stream_interval_join_equals_batch(spark, stream_dirs):
         for r in spark.sql("SELECT * FROM t_ssjoin").collect()
     }
     assert stream_pairs == batch_pairs == {(0, 1)}
-
-
-def test_incremental_rollup_equals_batch_recompute(spark, stream_dirs):
-    """The maintained rollup after N micro-batches must equal the
-    from-scratch aggregate over all ingested data — regardless of how
-    rows were chunked into batches."""
-    from nyc_taxi_data_engineering_spark.streaming.rollup import RollupTable
-
-    src, ckpt = stream_dirs
-    table = os.path.join(os.path.dirname(ckpt), "rollup")
-    # two files -> two micro-batches (maxFilesPerTrigger=1)
-    _write_batch(_mk_events(spark, [(0, 1, "click", 1.5), (10, 2, "view", 2.0)]), src)
-    _write_batch(_mk_events(spark, [(20, 1, "click", 3.25), (30, 1, "view", 4.0)]), src)
-
-    rt = RollupTable(spark, table, ["user_id", "event_type"], "value")
-    rt.sink(read_events_stream(spark, src, max_files_per_trigger=1), ckpt)
-
-    got = {
-        (r["user_id"], r["event_type"]): (r["n_events"], float(r["sum_value"]))
-        for r in rt.read().collect()
-    }
-    want = {
-        (r["user_id"], r["event_type"]): (r["n"], float(r["s"]))
-        for r in spark.read.parquet(src)
-        .groupBy("user_id", "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert got == want and len(got) == 3
 
 
 def test_streaming_delta_ingest_exactly_once(spark, stream_dirs, tmp_path):
@@ -341,162 +289,3 @@ def test_txn_watermark_survives_checkpoint(spark, tmp_path):
     # a txn bump after the checkpoint wins over the checkpointed one
     D.write_delta(df, tbl, mode="append", txn=("app-a", 9))
     assert D.last_txn_version(tbl, "app-a") == 9
-
-
-def test_streaming_delta_upsert_exactly_once(spark, tmp_path):
-    """foreachBatch MERGE upsert: per-batch latest-wins by key, the
-    first batch bootstraps the table, replayed batch ids are skipped
-    via the txn watermark, and a second app's batches interleave on
-    their own watermark."""
-    from nyc_taxi_data_engineering_spark.sources import delta_log as D
-    from nyc_taxi_data_engineering_spark.streaming.delta_ingest import (
-        delta_upsert_batch,
-    )
-
-    tbl = str(tmp_path / "cdc")
-    b0 = spark.createDataFrame([(1, "a0"), (2, "b0")], "k long, v string")
-    b1 = spark.createDataFrame([(2, "b1"), (3, "c1")], "k long, v string")
-    assert delta_upsert_batch(b0, 0, tbl, "cdc-app", on="k") is True  # bootstrap
-    assert delta_upsert_batch(b1, 1, tbl, "cdc-app", on="k") is True  # merge
-    got = {r["k"]: r["v"] for r in D.read_delta_log(spark, tbl).collect()}
-    assert got == {1: "a0", 2: "b1", 3: "c1"}
-    # crash recovery: both batch ids replay -> skipped, table unchanged
-    v_before = D.latest_version(tbl)
-    assert delta_upsert_batch(b0, 0, tbl, "cdc-app", on="k") is False
-    assert delta_upsert_batch(b1, 1, tbl, "cdc-app", on="k") is False
-    assert D.latest_version(tbl) == v_before
-    assert {r["k"]: r["v"] for r in D.read_delta_log(spark, tbl).collect()} == got
-    # an independent app id has its own watermark
-    b_other = spark.createDataFrame([(1, "z9")], "k long, v string")
-    assert delta_upsert_batch(b_other, 0, tbl, "other-app", on="k") is True
-    assert {r["k"]: r["v"] for r in D.read_delta_log(spark, tbl).collect()}[1] == "z9"
-    # MERGE commits carry the txn marker in-log
-    assert D.last_txn_version(tbl, "cdc-app") == 1
-    assert D.last_txn_version(tbl, "other-app") == 0
-
-
-def test_stream_stream_left_outer_emits_unmatched_after_watermark(spark, stream_dirs):
-    """The left-outer interval join must emit a NULL-matched row for a
-    click that converted to nothing — but only after the watermark
-    passes click_ts + horizon, and only in a micro-batch AFTER the one
-    that advanced the watermark. Three single-file micro-batches: data,
-    a far-future heartbeat that advances the watermark, and a second
-    heartbeat that gives Spark the batch in which to flush the outer
-    row. The final streamed set must equal the batch left outer join."""
-    from nyc_taxi_data_engineering_spark.streaming.ingest import (
-        attribute_clicks_left_outer,
-    )
-
-    src, ckpt = stream_dirs
-    _write_batch(
-        _mk_events(
-            spark,
-            [
-                (0, 1, "click", 0.0),      # converts (+30min purchase)
-                (30, 1, "purchase", 5.0),
-                (5, 2, "click", 0.0),      # converts to NOTHING
-            ],
-        ),
-        src,
-    )
-    # heartbeats 24h/25h later on BOTH sides: the global watermark is
-    # the MIN over every watermark operator, so a click-only heartbeat
-    # would leave the purchase-side watermark at -1.5h and the outer
-    # rows would never flush (the first version of this test proved it)
-    _write_batch(
-        _mk_events(spark, [(24 * 60, 9, "click", 0.0), (24 * 60, 9, "purchase", 0.0)]),
-        src,
-    )
-    _write_batch(
-        _mk_events(spark, [(25 * 60, 9, "click", 0.0), (25 * 60, 9, "purchase", 0.0)]),
-        src,
-    )
-
-    def split(df):
-        return (
-            df.filter(F.col("event_type") == "click"),
-            df.filter(F.col("event_type") == "purchase"),
-        )
-
-    batch_rows = {
-        (r["click_id"], r["purchase_id"])
-        for r in attribute_clicks_left_outer(*split(spark.read.parquet(src))).collect()
-        # the heartbeats are matched user-9 pairs and _mk_events
-        # restarts event_ids per file, so key on user: compare only the
-        # users whose clicks the watermark finalized
-        if r["user_id"] in (1, 2)
-    }
-    run_available_now(
-        attribute_clicks_left_outer(
-            *split(read_events_stream(spark, src, max_files_per_trigger=1))
-        ),
-        "t_ssjoin_lo",
-        ckpt,
-        output_mode="append",
-    )
-    stream_rows = {
-        (r["click_id"], r["purchase_id"])
-        for r in spark.sql("SELECT * FROM t_ssjoin_lo").collect()
-        if r["user_id"] in (1, 2)
-    }
-    assert stream_rows == batch_rows == {(0, 1), (2, None)}
-
-
-def test_transform_with_state_matches_batch(spark, stream_dirs):
-    """The Spark 4 transformWithStateInPandas surface, tested BOTH ways
-    so nothing is skipped: with google.protobuf available, running
-    totals through the new StatefulProcessor must equal the batch
-    aggregate (and therefore the applyInPandasWithState twin); without
-    it (this container), the documented contract is that execution
-    fails LOUDLY with the missing-module error — the plan builds fine,
-    so a silent skip here would hide an operator that can never run."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    from nyc_taxi_data_engineering_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        running_user_totals_tws,
-    )
-
-    src, ckpt = stream_dirs
-    events = _mk_events(
-        spark,
-        [(0, 1, "click", 1.0), (5, 2, "view", 2.5), (9, 1, "click", 4.0), (12, 2, "view", 0.5)],
-    )
-    _write_batch(events, src)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        stream = running_user_totals_tws(read_events_stream(spark, src))
-        if not has_protobuf:
-            # the protobuf ImportError happens inside the state-server
-            # worker; the JVM surfaces it as a TransformWithState
-            # worker-crash StreamingQueryException — loud, query dead
-            with pytest.raises(
-                Exception, match=r"(?i)protobuf|google|TransformWithState"
-            ):
-                run_available_now(stream, "tws_totals", ckpt, output_mode="update")
-            return
-        run_available_now(stream, "tws_totals", ckpt, output_mode="update")
-        latest = {
-            r["user_id"]: r
-            for r in spark.table("tws_totals").orderBy("last_ts").collect()
-        }
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    batch = {
-        r["user_id"]: r
-        for r in events.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert set(latest) == set(batch)
-    for uid, b in batch.items():
-        assert latest[uid]["n_events"] == b["n"]
-        assert abs(latest[uid]["sum_value"] - b["s"]) < 1e-9

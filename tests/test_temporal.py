@@ -1,18 +1,11 @@
 """Unit tests for temporal joins (operators/temporal.py): interval
-containment, boundary semantics (start inclusive, end exclusive), and
-nearest-prior selection."""
+containment and boundary semantics (start inclusive, end exclusive)."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
-from nyc_taxi_data_engineering_spark.operators.temporal import (
-    asof_join,
-    point_in_time_join,
-    range_join,
-)
+from nyc_taxi_data_engineering_spark.operators.temporal import point_in_time_join, range_join
 
 
 def _ts(s):
@@ -41,23 +34,6 @@ def test_point_in_time_interval_and_boundaries(spark):
         for r in point_in_time_join(events, versions, "k", "k", "ts").collect()
     }
     assert got == {100: "v1", 101: "v2", 102: "v2"}
-
-
-def test_asof_join_picks_nearest_prior(spark):
-    quotes = spark.createDataFrame(
-        [(1, _ts("2024-01-01"), 10.0), (1, _ts("2024-01-05"), 20.0), (1, _ts("2024-01-09"), 30.0)],
-        "k long, qts timestamp, px double",
-    )
-    trades = spark.createDataFrame(
-        [(7, 1, _ts("2024-01-06")), (8, 1, _ts("2024-01-09"))],
-        "trade_id long, k long, tts timestamp",
-    )
-    got = {
-        r["trade_id"]: r["px"]
-        for r in asof_join(trades, quotes, "k", "tts", "qts", "trade_id").collect()
-    }
-    # trade 7 sees the 01-05 quote; trade 8 sees the equal-timestamp 01-09 quote
-    assert got == {7: 20.0, 8: 30.0}
 
 
 def test_range_join_overlapping_intervals_and_boundaries(spark):
@@ -98,39 +74,3 @@ def test_range_join_coarse_bucket_still_exact(spark):
     )
     got = [r["event_id"] for r in range_join(ev, wins, "ts", "lo", "hi", 86400).collect()]
     assert got == [1]
-
-
-def test_range_join_left_keeps_unmatched_rows(spark):
-    """how='left' must null-extend rows outside every interval — the
-    containment predicate is part of the join, not a post-filter."""
-    from nyc_taxi_data_engineering_spark.operators.temporal import range_join
-    import pytest
-
-    events = spark.createDataFrame(
-        [(1, "2024-01-01 00:30:00"), (2, "2024-01-01 05:00:00")],
-        "event_id int, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    windows = spark.createDataFrame(
-        [("w1", "2024-01-01 00:00:00", "2024-01-01 01:00:00")],
-        "win_id string, win_start string, win_end string",
-    ).select(
-        "win_id",
-        F.col("win_start").cast("timestamp").alias("win_start"),
-        F.col("win_end").cast("timestamp").alias("win_end"),
-    )
-    out = range_join(events, windows, "ts", "win_start", "win_end", how="left")
-    got = {r["event_id"]: r["win_id"] for r in out.collect()}
-    assert got == {1: "w1", 2: None}
-
-    with pytest.raises(ValueError, match="range_join how="):
-        range_join(events, windows, "ts", "win_start", "win_end", how="full")
-
-
-def test_salted_join_rejects_dim_preserving_how(spark):
-    from nyc_taxi_data_engineering_spark.operators.skew import salted_join
-    import pytest
-
-    fact = spark.createDataFrame([(1, 10)], "k int, v int")
-    dim = spark.createDataFrame([(1, "a")], "k int, name string")
-    with pytest.raises(ValueError, match="salted_join how="):
-        salted_join(fact, dim, "k", salt_n=4, fingerprint_cols=["v"], how="right")

@@ -47,20 +47,6 @@ def test_fingerprint_stability(spark):
     assert a == _one(spark, "abcdefghijklmnop", T.fingerprint("text"))
 
 
-def test_word_shingles(spark):
-    got = _one(spark, "a b c d", T.word_shingles("text"))
-    assert got == ["a b c", "b c d"]
-    # text shorter than the window -> single whole-text shingle
-    assert _one(spark, "a b", T.word_shingles("text")) == ["a b"]
-
-
-def test_minhash_signature_shape(spark):
-    sig = _one(spark, "a b c d e f", T.minhash_signature(T.word_shingles("text"), 4))
-    assert len(sig) == 4 and all(len(h) == 32 for h in sig)
-    # different seeds -> (almost surely) different minima
-    assert len(set(sig)) > 1
-
-
 def test_bm25_ranks_tf_and_brevity(spark):
     """More query-term occurrences rank higher; at equal tf the shorter
     doc wins (length normalization)."""

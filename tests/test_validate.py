@@ -1,16 +1,8 @@
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from nyc_taxi_data_engineering_spark.operators.validate import (
-    cast_projection,
-    clean_column_names,
-    require_columns,
-    validate_split,
-)
-from nyc_taxi_data_engineering_spark.schemas import TRIP_SCHEMA
+from nyc_taxi_data_engineering_spark.operators.validate import validate_split
 
 
 def trips(spark):
@@ -54,28 +46,3 @@ def test_validate_split_reasons(spark):
     assert reasons[102] == "distance_positive"
     assert reasons[103] == "dropoff_after_pickup"
     assert reasons[None] == "pulocation_not_null"
-
-
-def test_cast_projection_enforces_trip_schema(spark):
-    raw = spark.createDataFrame(
-        [("1", "3.5", "bad-extra-col")], "vendorid string, trip_distance string, junk string"
-    )
-    out = cast_projection(raw, TRIP_SCHEMA)
-    assert [f.name for f in out.schema.fields] == [f.name for f in TRIP_SCHEMA.fields]
-    row = out.collect()[0]
-    assert row["vendorid"] == 1 and row["trip_distance"] == 3.5
-    assert row["fare_amount"] is None  # absent -> typed NULL
-    assert dict(out.dtypes)["fare_amount"] == "double"
-
-
-def test_clean_column_names(spark):
-    df = spark.createDataFrame([(1, 2, 3, 4)], ["  Trip Distance ", "Fare$$Amount", "a", "A"])
-    out = clean_column_names(df)
-    assert out.columns == ["trip_distance", "fare_amount", "a", "a_1"]
-
-
-def test_require_columns(spark):
-    df = spark.createDataFrame([(1,)], ["a"])
-    require_columns(df, ["a"])
-    with pytest.raises(ValueError, match="missing required columns"):
-        require_columns(df, ["a", "b"])

@@ -100,7 +100,7 @@ EMPTY_CUTS = [(t, "SELECT * FROM {src}") for t in _DIMS] + [
 # - supplier 0 supplies ~50% of lineitems,
 # - user 0 emits ~50% of events,
 # - the token 'zzhotzz' appears in ~90% of documents (df ~ 0.9·N blows
-#   through every df_cap/anchor-choice heuristic),
+#   through every hot-shingle/anchor-choice heuristic),
 # - ~50% of embeddings are the IDENTICAL vector (one LSH/IVF bucket
 #   holds half the corpus; cosine ties everywhere).
 # Rewrites keep FKs valid (key 0 exists in every dim) — unlike tiny,
@@ -163,8 +163,8 @@ SKEW_CUTS = [
 #   the DECIMAL(38,12) transport on both engines; at 1e3 the GD
 #   probes' iterates pass ~4.5e3, where the 12-dp portable_round grid
 #   drops below 1 ulp and stops pinning the cross-engine float chains
-#   (the |x| < 2^52 * 1e-12 domain that assert_quantum_above_ulp
-#   guards). Unit-ish embeddings are the probes' documented domain;
+#   (outside the |x| < 2^52 * 1e-12 domain where a 1e-12 quantum
+#   stays above 1 ulp). Unit-ish embeddings are the probes' documented domain;
 #   2.0 stresses above-unit magnitude while staying inside it,
 # - customer: empty name, unicode name, whitespace+apostrophe name
 #   (MDM normalize/tokenize/similarity edge cases),
