@@ -168,7 +168,7 @@ def unreferenced_definitions() -> list[str]:
     a definition is reached when a root or a reached definition names it
     (as a name or an attribute). Matching is by name, so of two
     definitions that share a name, both are reached or neither."""
-    defs = collections.defaultdict(list)  # name -> ["module.name", ast node]
+    defs = collections.defaultdict(list)  # name -> [("module.name", node)]
     roots: set[str] = set()
     for p in PKG.rglob("*.py"):
         parts = p.relative_to(PKG).with_suffix("").parts
