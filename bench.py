@@ -36,7 +36,8 @@ sys.path.insert(0, REPO)
 # big-memory workloads (scale probes, sf10+) export their own value.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
-from nyc_taxi_data_engineering_spark.queries import bench_queries  # noqa: E402
+from nyc_taxi_data_engineering_spark.queries import bench_queries, run  # noqa: E402
+from nyc_taxi_data_engineering_spark.queries.runner import noop_write  # noqa: E402
 from nyc_taxi_data_engineering_spark.session import get_spark  # noqa: E402
 
 FAST_CUTOFF_S = 1.0  # first-rep walls under this earn the larger rep count
@@ -122,14 +123,13 @@ def host_canary_mc(procs: int = 8) -> float:
     return time.perf_counter() - t0
 
 
-def run_query(fn, spark, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+def run_query(spark, name: str, sf_dir: str) -> float:
+    _, record = run(spark, name, sf_dir, noop_write)
+    return record["build_s"] + record["exec_s"]
 
 
 def run_query_reps(
-    fn, spark, sf_dir: str, reps: int, reps_fast: int, force_full: bool = False
+    spark, name: str, sf_dir: str, reps: int, reps_fast: int, force_full: bool = False
 ) -> list[float]:
     """The base reps' median decides the budget (the first rep alone
     is codegen-inflated): sub-``FAST_CUTOFF_S`` queries are
@@ -138,24 +138,17 @@ def run_query_reps(
     seconds.
 
     Rep isolation (optimization r13, VERDICT r12 "What's wrong" #1):
-    every rep starts from a CLEAN cache — operator-registered session
-    caches are unpersisted and the catalog cache cleared OUTSIDE the
-    timed region — so persist()-based optimizations (ALS ratings
-    layout, CC edge lists, simhash proxies) are measured on full
-    executions every rep instead of rep 1 silently feeding reps 2..N a
-    warm cache. Medians for persist-touched queries are therefore
-    cold-build walls from r13 on (r12's warm-rep medians understated
-    them; the rep arrays in BENCH_DETAIL carry both regimes' evidence)."""
-    from nyc_taxi_data_engineering_spark.operators import release_session_caches
-
-    def one() -> float:
-        release_session_caches()
-        spark.catalog.clearCache()
-        return run_query(fn, spark, sf_dir)
-
-    walls = [one() for _ in range(reps)]
+    every rep starts from a CLEAN cache — ``queries.run`` releases every
+    cache and pin in the context after each rep, OUTSIDE the timed
+    region — so persist()-based optimizations (ALS ratings layout, CC
+    edge lists, simhash proxies) are measured on full executions every
+    rep instead of rep 1 silently feeding reps 2..N a warm cache.
+    Medians for persist-touched queries are therefore cold-build walls
+    from r13 on (r12's warm-rep medians understated them; the rep
+    arrays in BENCH_DETAIL carry both regimes' evidence)."""
+    walls = [run_query(spark, name, sf_dir) for _ in range(reps)]
     if force_full or statistics.median(walls) < FAST_CUTOFF_S:
-        walls.extend(one() for _ in range(reps_fast - reps))
+        walls.extend(run_query(spark, name, sf_dir) for _ in range(reps_fast - reps))
     return walls
 
 
@@ -172,8 +165,8 @@ def main() -> None:
     qs = bench_queries()
 
     # Warm-up: JVM JIT + codegen + parquet footer caches.
-    warm = qs.get("daily_vendor_revenue") or next(iter(qs.values()))
-    run_query(warm, spark, sf_dir)
+    warm = "daily_vendor_revenue" if "daily_vendor_revenue" in qs else next(iter(qs))
+    run_query(spark, warm, sf_dir)
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     reps_fast = max(reps, int(os.environ.get("SPARK_GRAFT_BENCH_REPS_FAST", "7")))
@@ -181,25 +174,21 @@ def main() -> None:
     detail: dict[str, list[float]] = {}
     for name in sorted(qs):
         walls = run_query_reps(
-            qs[name], spark, sf_dir, reps, reps_fast, force_full=name in FORCE_FULL_REPS
+            spark, name, sf_dir, reps, reps_fast, force_full=name in FORCE_FULL_REPS
         )
         timings[name] = round(statistics.median(walls), 3)
         detail[name] = [round(w, 3) for w in walls]
 
     total = round(sum(timings.values()), 3)
 
-    # Second board (heavy families), same regime. Cache isolation now
-    # lives in run_query_reps (every rep starts clean), which also
-    # isolates QUERIES from each other — the pin()-heavy graph /
-    # clustering queries leave checkpointed state that would distort
-    # whoever runs next.
-    from nyc_taxi_data_engineering_spark.queries import all_queries
-
-    reg = all_queries()
+    # Second board (heavy families), same regime. The runner's release
+    # after every rep also isolates QUERIES from each other — the
+    # pin()-heavy graph / clustering queries' checkpointed state is
+    # freed before whoever runs next.
     board2: dict[str, float] = {}
     board2_detail: dict[str, list[float]] = {}
     for name in BOARD2:
-        walls = run_query_reps(reg[name], spark, sf_dir, reps, reps_fast)
+        walls = run_query_reps(spark, name, sf_dir, reps, reps_fast)
         board2[name] = round(statistics.median(walls), 3)
         board2_detail[name] = [round(w, 3) for w in walls]
 
@@ -218,7 +207,7 @@ def main() -> None:
             "supplier_copurchase_pairs",
             "key_skew_diagnostics",
         ):
-            walls = run_query_reps(reg[name], spark, skew_dir, reps, reps_fast)
+            walls = run_query_reps(spark, name, skew_dir, reps, reps_fast)
             skew_board[name] = round(statistics.median(walls), 3)
             skew_detail[name] = [round(w, 3) for w in walls]
     # The driver captures only the LAST 2000 bytes of stdout and parses
@@ -250,11 +239,12 @@ def main() -> None:
         # historical record — ADVICE r10).
         "host_canary_s": canary_s,
         "host_canary_mc_s": canary_mc_s,
-        # r13 rep hygiene marker: every rep starts from a clean cache
-        # (run_query_reps), so medians of persist-touched queries are
-        # cold-build walls — r12-and-earlier medians let reps 2..N
-        # reuse rep 1's persisted intermediates.
-        "rep_isolation": "clearCache",
+        # rep hygiene marker: every rep starts from a clean cache, so
+        # medians of persist-touched queries are cold-build walls —
+        # r12-and-earlier medians let reps 2..N reuse rep 1's persisted
+        # intermediates. "clearCache" (r13) freed caches but kept pins;
+        # "release" (queries.run) frees pins too.
+        "rep_isolation": "release",
         "run_id": run_id,
     }
     if skew_board:

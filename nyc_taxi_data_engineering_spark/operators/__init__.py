@@ -4,9 +4,7 @@ Each module hosts one operator family from SURVEY.md §2; composition
 happens in plans/ (pipelines) and queries/ (the correctness surface).
 """
 
-import threading
-
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -66,58 +64,36 @@ def iterate(state, step, rounds: int, *, until: Column | None = None):
 
 
 # ---------------------------------------------------------------------------
-# Session cache registry — the engine's ONE persist lifecycle. Every
-# operator or query that keeps a reusable intermediate (shingle sets, edge
-# lists, ALS ratings, contingency tables, the kNN co-purchase graph, ...)
-# calls ``session_cache(df)``; nothing in the package calls ``.cache()`` or
-# ``.persist()`` directly, and :func:`pin` is the only eager lineage cut.
-# A bare persist() lives for the whole session — a long-lived job would
-# hold storage memory forever (guide §5 "unpersist when done").
+# Persist lifecycle. An operator or query that reads an intermediate
+# several times (shingle sets, edge lists, ALS ratings, contingency
+# tables, the kNN co-purchase graph, ...) calls ``.persist()`` on it (an
+# InMemoryRelation keeps the size statistics and output partitioning the
+# planner uses; a pin keeps neither); :func:`pin` is the one eager
+# lineage cut. Neither is tracked: the release below frees every cached
+# plan and every pin the SparkContext holds, whoever made it.
 #
-# Contract: the application calls ``release_session_caches()`` after the
-# terminal action of each query (bench.py and perfbench do so between
-# operations, outside their timers). Releasing is always SAFE — a released
-# DataFrame recomputes from lineage — so the registry can be drained at
-# any query boundary. Until the next release, Spark's CacheManager serves
-# any identical plan from the cached data, so queries that rebuild the
-# same intermediate (the kNN co-purchase edges) share one build.
-#
-# Thread safety: ``_SESSION_LOCK`` guards every append and every drain, so
-# queries built on several driver threads may share the registry; a
-# drain releases whatever is registered at that moment, including the
-# caches of a query still running on another thread.
+# Contract: a released persisted frame recomputes from its lineage; a
+# released pin is unreadable (its checkpoint blocks are gone), so a frame
+# built on a pin must be collected before the release. ``queries.run``
+# releases after each query's terminal action. Call the release only at
+# a boundary where no other query runs in the session. Until it runs,
+# Spark's CacheManager serves any identical plan from the cached data, so
+# queries that rebuild the same intermediate (the kNN co-purchase edges)
+# share one build.
 # ---------------------------------------------------------------------------
-
-_SESSION_CACHES: list[DataFrame] = []
-_SESSION_LOCK = threading.Lock()
-
-
-def session_cache(df: DataFrame) -> DataFrame:
-    """``df.persist()`` + registration for :func:`release_session_caches`.
-    Returns the persisted DataFrame (MEMORY_AND_DISK_DESER, the same level
-    as ``.cache()`` — the InMemoryRelation keeps size stats and
-    outputPartitioning, the planner levers the r12 optimizations rely
-    on). Thread-safe."""
-    df = df.persist()
-    with _SESSION_LOCK:
-        _SESSION_CACHES.append(df)
-    return df
 
 
 def release_session_caches() -> int:
-    """Unpersist every registered cache (LIFO) and wait for each eviction
-    to finish (``blocking=True``), so no release runs into a following
-    timed operation; returns how many were released. Idempotent — an
-    already-unpersisted DataFrame is a no-op. Thread-safe: the registry
-    is drained under ``_SESSION_LOCK``."""
-    with _SESSION_LOCK:
-        drained = _SESSION_CACHES[::-1]
-        _SESSION_CACHES.clear()
-    n = 0
-    for df in drained:
-        try:
-            df.unpersist(blocking=True)
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return n
+    """Unpersist every persistent RDD of the active SparkContext, pins
+    included, waiting for each eviction to finish (``blocking=True``) so
+    no release runs into a following timed operation; then empty the
+    CacheManager. Returns how many RDDs were unpersisted. Idempotent;
+    a no-op without an active session."""
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return 0
+    rdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
+    for rdd in rdds:
+        rdd.unpersist(True)
+    spark.catalog.clearCache()
+    return len(rdds)

@@ -52,7 +52,7 @@ from nyc_taxi_data_engineering_spark.functions import (
     portable_round,
     portable_round_sql,
 )
-from nyc_taxi_data_engineering_spark.operators import iterate, pin, session_cache
+from nyc_taxi_data_engineering_spark.operators import iterate, pin
 
 ALS_ITERS = 2  # full alternations (user sweep + item sweep each)
 ALS_LAMBDA = 0.125  # exact binary fraction -> bit-identical regularizer
@@ -92,7 +92,7 @@ def prepare_ratings(ratings: DataFrame) -> DataFrame:
     and the serving queries' already-purchased anti-join probes the same
     in-memory table instead of re-running the ratings build.
 
-    ``session_cache`` (a persist) rather than ``pin`` on purpose: an
+    A persist rather than ``pin`` on purpose: an
     InMemoryRelation keeps size stats AND outputPartitioning, so the
     planner can broadcast the small side and elide the agg exchange; a
     pinned LogicalRDD has neither (UnknownPartitioning, no stats), which
@@ -101,7 +101,7 @@ def prepare_ratings(ratings: DataFrame) -> DataFrame:
     values bit-identical — the 12-dp decimal sums are order-independent).
     The lineage is one agg deep, so the cache-manager plan walk the pin
     docstring warns about for per-round state does not apply here."""
-    return session_cache(ratings.select("u", "i", "r").repartition("u"))
+    return ratings.select("u", "i", "r").repartition("u").persist()
 
 
 def _solve_side(

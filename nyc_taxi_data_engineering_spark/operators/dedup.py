@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.functions import text as T
-from nyc_taxi_data_engineering_spark.operators import iterate, pin, session_cache
+from nyc_taxi_data_engineering_spark.operators import iterate, pin
 
 MINHASH_HASHES = 16
 LSH_BANDS = 4  # 4 bands x 4 rows: P(candidate) = 1-(1-j^4)^4
@@ -98,7 +98,7 @@ def shingle_jaccard_pairs(
     ``xxhash64(shingle)``, an 8-byte long instead of a ~20-char string,
     shrinking shuffle bytes and comparison cost (64-bit collisions are
     negligible at any realistic shingle cardinality)."""
-    sets = session_cache(_shingle_sets(docs))
+    sets = _shingle_sets(docs).persist()
     sizes = sets.select("doc_id", F.size("shingles").alias("n"))
     inv = sets.select("doc_id", F.explode("shingles").alias("s")).select(
         "doc_id", F.xxhash64("s").alias("s")
@@ -140,7 +140,7 @@ def shingle_containment_pairs(
     union — no second self-join. Emits (inner_id, outer_id,
     common_shingles, containment) rows with containment ≥ threshold;
     a mutual near-dup pair yields both directions."""
-    sets = session_cache(_shingle_sets(docs))
+    sets = _shingle_sets(docs).persist()
     sizes = sets.select("doc_id", F.size("shingles").alias("n"))
     inv = sets.select("doc_id", F.explode("shingles").alias("s")).select(
         "doc_id", F.xxhash64("s").alias("s")
@@ -496,7 +496,7 @@ def simhash_neardup_pairs(sim: DataFrame, max_hamming: int = 3) -> DataFrame:
     # 17.6 -> 5.1 s on image_dedup_clusters at sf0.01. The persisted
     # proxy is (id, simhash): 16 bytes/row at ANY corpus scale, the
     # canonical fingerprints-only intermediate.
-    sim = session_cache(sim.select("doc_id", "simhash"))
+    sim = sim.select("doc_id", "simhash").persist()
     combos = list(combinations(range(SIMHASH_BLOCKS), SIMHASH_BLOCKS - max_hamming))
     pack_shift = max(SIMHASH_BLOCK_SIZES)
     blocks = [
@@ -586,7 +586,7 @@ def connected_components(
         .distinct()
         .repartition("src")
     )
-    sym = session_cache(sym)
+    sym = sym.persist()
     ids = sym.select(F.col("src").alias("id")).distinct()
     if nodes is not None:
         ids = ids.unionByName(nodes.select(F.col(node_col).alias("id"))).distinct()
@@ -658,7 +658,7 @@ def prefix_filter_jaccard_pairs(
     IEEE doubles vs DuckDB decimals). The final jaccard filter uses
     the same rounded-value comparison as shingle_jaccard_pairs."""
     threshold = threshold_num / threshold_den
-    sets = session_cache(_shingle_sets(docs))
+    sets = _shingle_sets(docs).persist()
     sizes = sets.select("doc_id", F.size("shingles").alias("n"))
     inv = sets.select("doc_id", F.explode("shingles").alias("tok")).select(
         "doc_id", F.col("tok"), F.xxhash64("tok").alias("s")

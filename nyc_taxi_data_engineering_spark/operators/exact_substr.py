@@ -32,7 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_engineering_spark.operators import session_cache
 
 SPAN_K = 32  # window width: spans shorter than this are not reported
 SPAN_MIN_DOCS = 2  # a gram must appear in >= this many distinct docs
@@ -144,14 +143,12 @@ def crossdoc_span_scrub(docs: DataFrame) -> DataFrame:
     # stats) — cache it so the corpus-wide detection pipeline runs once
     # (tiny: one row per duplicated span; at corpus scale swap for
     # persist(DISK_ONLY), same policy as the shingle-set cache)
-    sp = session_cache(
-        spans.select(
-            "doc_id",
-            F.col("span_start").alias("s"),
-            (F.col("span_start") + F.col("span_len")).alias("e"),
-            F.col("span_md5").alias("m"),
-        )
-    )
+    sp = spans.select(
+        "doc_id",
+        F.col("span_start").alias("s"),
+        (F.col("span_start") + F.col("span_len")).alias("e"),
+        F.col("span_md5").alias("m"),
+    ).persist()
     keeper = sp.groupBy("m").agg(F.min("doc_id").alias("keeper"))
     cuts = sp.join(keeper, "m").filter(F.col("doc_id") != F.col("keeper")).select(
         "doc_id", "s", "e"

@@ -41,7 +41,7 @@ from nyc_taxi_data_engineering_spark.functions import (
 )
 from pyspark.sql.types import IntegralType
 
-from nyc_taxi_data_engineering_spark.operators import iterate, pin as _pin, session_cache
+from nyc_taxi_data_engineering_spark.operators import iterate, pin as _pin
 
 PAGERANK_DAMPING = 0.85
 PAGERANK_ITERS = 3
@@ -424,7 +424,7 @@ def bfs_hops(edges: DataFrame, source, max_hops: int) -> DataFrame:
     # Spark's ReusedExchange was already deduping the per-round edge
     # shuffle, and the remaining per-round cost is the edge scan
     # itself, which is edge-proportional by construction.
-    edges = session_cache(edges.repartition("src"))
+    edges = edges.repartition("src").persist()
     for _ in range(max_hops):
         nxt = (
             dist.join(edges, dist["node"] == edges["src"])
@@ -688,7 +688,7 @@ def cheapest_paths(edges: DataFrame, source, rounds: int) -> DataFrame:
         .select("node", F.lit(0).cast("long").alias("cost"))
     )
     edges = edges.select("src", "dst", F.col("cost").cast("long").alias("ecost"))
-    edges = session_cache(edges.repartition("src"))
+    edges = edges.repartition("src").persist()
     for _ in range(rounds):
         nxt = dist.join(edges, dist["node"] == edges["src"]).select(
             F.col("dst").alias("node"), (F.col("cost") + F.col("ecost")).alias("cost")
@@ -1054,10 +1054,11 @@ def harmonic_centrality(edges: DataFrame, max_hops: int) -> DataFrame:
     all sources at once. No windows, no collect; the distance table is
     the only state and it is bounded by reachable pairs."""
     scale = _harmonic_scale(max_hops)
-    sym = session_cache(
+    sym = (
         edges.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .unionByName(edges.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
         .repartition("node")
+        .persist()
     )
     dist = sym.select("node").distinct().select(
         F.col("node").alias("src"), "node", F.lit(0).cast("int").alias("hops")

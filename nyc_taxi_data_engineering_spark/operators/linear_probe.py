@@ -54,8 +54,8 @@ def prepare_probe_corpus(x: DataFrame) -> DataFrame:
 
     Deliberately recompute-over-cache (optimization r13, measured):
     three persist variants of this corpus were A/B'd at sf0.1 —
-    ``session_cache(corpus.repartition("vec_id"))`` (the r12
-    ALS-ratings lever), a plain ``session_cache``, and per-round lazy
+    ``corpus.repartition("vec_id").persist()`` (the r12
+    ALS-ratings lever), a plain ``persist()``, and per-round lazy
     residual caches — and every
     one measured 1.1-1.4x SLOWER than re-deriving the projection from
     the columnar scan, because the exploded corpus is a cheap
@@ -101,7 +101,7 @@ def train_linear_probe(x: DataFrame, y: DataFrame) -> DataFrame:
         )
         # residuals feed BOTH the gradient join and the bias sum; pin
         # so the second consumer is a flat scan instead of a second
-        # full x-pass. (r13 measured the lazy session_cache alternative:
+        # full x-pass. (r13 measured the lazy persist alternative:
         # without the eager truncation the composed calibration plans
         # re-inline the round tree per consumer — probe_calibration_ece
         # ballooned to 2.9k broadcast-exchange nodes and 2x the wall —

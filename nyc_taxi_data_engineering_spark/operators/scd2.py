@@ -68,6 +68,11 @@ def scd2_apply(
     differs; changed keys expire their current row at ``effective_ts``
     and insert version_no+1; unchanged keys and keys absent from the
     batch carry over untouched.
+
+    Chained merges must go through ``operators.iterate`` or ``pin``:
+    each merge reads ``target`` four times (history, and the current
+    rows for staging, expiry and carry-over), so a lazy chain re-plans
+    and re-runs every earlier merge once per reader.
     """
     if target is None:
         return scd2_init(batch, key, tracked, effective_ts)

@@ -25,8 +25,6 @@ bucket hash, so DuckDB evaluates the identical sketch.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 

@@ -65,5 +65,6 @@ from nyc_taxi_data_engineering_spark.queries.registry import (  # noqa: E402
     bench_queries,
     registry,
 )
+from nyc_taxi_data_engineering_spark.queries.runner import run  # noqa: E402
 
-__all__ = ["all_queries", "all_oracles", "bench_queries", "registry"]
+__all__ = ["all_queries", "all_oracles", "bench_queries", "registry", "run"]

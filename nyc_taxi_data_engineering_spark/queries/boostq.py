@@ -43,11 +43,10 @@ the whole train is one lazy plan.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table
-from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
 ROUNDS = 3
@@ -217,7 +216,7 @@ def _train_df(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
         "o_orderkey", "o_totalprice", "o_orderdate", "o_orderpriority"
     )
     base = orders.select(*[F.expr(c) for c in _base_cols()])
-    base = session_cache(base)  # boosting re-reads the matrix once per round
+    base = base.persist()  # boosting re-reads the matrix once per round
     state: DataFrame | None = None
     src = base
     for t in range(1, ROUNDS + 1):

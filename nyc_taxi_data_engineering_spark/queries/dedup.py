@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from nyc_taxi_data_engineering_spark.catalog import load_table_parallel as load_table
 from nyc_taxi_data_engineering_spark.functions import text as T
 from nyc_taxi_data_engineering_spark.operators import dedup as D
-from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
 _H = D.MINHASH_HASHES
@@ -437,7 +436,7 @@ def q_oph_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant (minhash_lsh_pairs) stays registered as the reference
     implementation; this is the scale path the sf10 probe motivated
     (33 s/decade of signature compute at k=16)."""
-    bins_df = session_cache(D.oph_minhash_bins(load_table(spark, sf_dir, "documents")))
+    bins_df = D.oph_minhash_bins(load_table(spark, sf_dir, "documents")).persist()
     return D.oph_lsh_pairs(bins_df)
 
 

@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 from nyc_taxi_data_engineering_spark.catalog import load_table_parallel as load_table
 from nyc_taxi_data_engineering_spark.functions import portable_round
 from nyc_taxi_data_engineering_spark.functions import text as T
-from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.operators.sampling import hash_bucket, hash_bucket_sql
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
@@ -114,7 +113,7 @@ def q_dsir_importance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     target domain, everything as raw. See module docstring for the
     exactness and 100 TB design notes."""
     docs = load_table(spark, sf_dir, "documents")
-    feats = session_cache(doc_features(docs))
+    feats = doc_features(docs).persist()
     raw_b = feats.groupBy("bucket").agg(F.count(F.lit(1)).alias("r_cnt"))
     tgt_b = (
         feats.filter(F.col("source") == DSIR_TARGET_SOURCE)

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table
 from nyc_taxi_data_engineering_spark.functions import stable_sum, stable_sum_sql
-from nyc_taxi_data_engineering_spark.operators import iterate, session_cache
+from nyc_taxi_data_engineering_spark.operators import iterate
 from nyc_taxi_data_engineering_spark.operators.skew import salted_agg
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
@@ -593,7 +593,7 @@ def q_funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # grows with users, so no single-partition window (r12). Cached so
     # the count pass and the rank pass share ONE events scan (the
     # key_skew/theil_sen cache pattern).
-    conv = session_cache(conv)
+    conv = conv.persist()
     n_tot = conv.agg(F.count(F.lit(1)).alias("n"))
     ranked = (
         global_row_number(conv, ["hours", "user_id"], out="rn")
@@ -966,7 +966,7 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_next"
         ),
     )
-    tm = session_cache(tm)
+    tm = tm.persist()
 
     def renorm(raw: DataFrame) -> DataFrame:
         # Renormalize each iteration: dangling states (next_type-only)

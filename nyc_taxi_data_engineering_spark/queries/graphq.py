@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 # fan_out vs 1.3-1.4 s without; at cluster scale fan_out is a no-op for
 # multi-row-group inputs, so this only removes local overhead).
 from nyc_taxi_data_engineering_spark.catalog import load_table
-from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.operators.cooccur import cooccurrence_pairs_sql
 from nyc_taxi_data_engineering_spark.operators.graph import pagerank, pagerank_sql
 from nyc_taxi_data_engineering_spark.queries.registry import query
@@ -239,10 +238,11 @@ def _knn_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase NEIGHBOR graph: pair mining with the degree_cap lever,
     then a per-node top-K window (partitioned by node — never global),
     union-symmetrized and deduped. The bounded-degree similarity-graph
-    input the eight triangle and community queries share: session-cached,
-    so until the caller's ``release_session_caches()`` every later query
-    over the same tier reads the first one's cached edges (the
-    CacheManager matches the identical plan)."""
+    input the eight triangle and community queries share: persisted, so
+    until the next ``release_session_caches()`` every later query over
+    the same tier reads the first one's cached edges (the CacheManager
+    matches the identical plan). ``queries.run`` releases after each
+    query, so harness queries build their own."""
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
@@ -270,11 +270,9 @@ def _knn_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= TRIANGLE_TOPK)
         .select("node", "partner")
     )
-    return session_cache(
-        topk.select(
-            F.least("node", "partner").alias("a"), F.greatest("node", "partner").alias("b")
-        ).distinct()
-    )
+    return topk.select(
+        F.least("node", "partner").alias("a"), F.greatest("node", "partner").alias("b")
+    ).distinct().persist()
 
 
 @query(

@@ -9,7 +9,7 @@ tokenizer definition with the Spark side via functions/text.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table, load_table_parallel

@@ -19,7 +19,7 @@ deterministic because all supplier names have equal length.)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table_parallel as load_table
 from nyc_taxi_data_engineering_spark.operators import multimodal as M
-from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
 
@@ -547,9 +546,7 @@ def q_video_neardup_clips(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from nyc_taxi_data_engineering_spark.operators.dedup import simhash_neardup_pairs
 
-    fh = session_cache(
-        M.video_frame_dhashes(M.attach_video(_docs_with_planted_twins(spark, sf_dir)))
-    )
+    fh = M.video_frame_dhashes(M.attach_video(_docs_with_planted_twins(spark, sf_dir))).persist()
     per_frame = [
         simhash_neardup_pairs(
             fh.filter(F.col("frame") == f).select(

@@ -9,7 +9,6 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 
 from nyc_taxi_data_engineering_spark.catalog import load_table
-from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.operators.profiling import profile, sql_profile_oracle
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
@@ -241,8 +240,6 @@ def q_order_price_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from pyspark.sql import Window  # noqa: E402
-
 from nyc_taxi_data_engineering_spark.operators.sampling import (  # noqa: E402
     hash_bucket,
     hash_bucket_sql,
@@ -281,12 +278,10 @@ def q_mi_order_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution multiplies the QUANTIZED pmi so both engines sum
     identical terms."""
     orders = load_table(spark, sf_dir, "orders")
-    xy = session_cache(
-        orders.groupBy(
-            F.col("o_orderpriority").alias("priority"),
-            F.col("o_orderstatus").alias("status"),
-        ).agg(F.count(F.lit(1)).alias("nxy"))
-    )
+    xy = orders.groupBy(
+        F.col("o_orderpriority").alias("priority"),
+        F.col("o_orderstatus").alias("status"),
+    ).agg(F.count(F.lit(1)).alias("nxy")).persist()
     mx = xy.groupBy("priority").agg(F.sum("nxy").alias("nx"))
     my = xy.groupBy("status").agg(F.sum("nxy").alias("ny"))
     tot = xy.agg(F.sum("nxy").alias("n_tot"))
@@ -355,12 +350,10 @@ def q_psi_split_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bin"),
         hash_bucket(F.col("o_orderkey"), "psi", 2).alias("arm"),
     )
-    cells = session_cache(
-        binned.groupBy("bin").agg(
-            F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
-            F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
-        )
-    )
+    cells = binned.groupBy("bin").agg(
+        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).alias("n_a"),
+        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).alias("n_b"),
+    ).persist()
     tot = cells.agg(F.sum("n_a").alias("ta"), F.sum("n_b").alias("tb"))
     p_a = (F.col("n_a") + 1).cast("double") / (F.col("ta") + _PSI_BINS)
     p_b = (F.col("n_b") + 1).cast("double") / (F.col("tb") + _PSI_BINS)
@@ -411,7 +404,7 @@ def q_key_skew_diagnostics(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. Entropy terms are 6-dp-quantized pre-sum (decimal transport)
     so both engines add identical numbers."""
     li = load_table(spark, sf_dir, "lineitem")
-    per = session_cache(li.groupBy("l_suppkey").agg(F.count(F.lit(1)).alias("cnt")))
+    per = li.groupBy("l_suppkey").agg(F.count(F.lit(1)).alias("cnt")).persist()
     tot = per.agg(
         F.count(F.lit(1)).alias("n_keys"),
         F.sum("cnt").alias("n_rows"),

@@ -19,7 +19,6 @@ from pyspark.sql import functions as F
 from nyc_taxi_data_engineering_spark.catalog import load_table
 from nyc_taxi_data_engineering_spark.functions import stable_sum, stable_sum_sql
 from nyc_taxi_data_engineering_spark.operators import sampling as S
-from nyc_taxi_data_engineering_spark.operators import session_cache
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
 SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -317,10 +316,11 @@ def q_split_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized re-aggregations of the TINY cell table, never a
     second corpus scan."""
     docs = load_table(spark, sf_dir, "documents")
-    cells = session_cache(
+    cells = (
         S.assign_split(docs, "doc_id", SPLITS, SPLIT_SEED)
         .groupBy("split", "source")
         .agg(F.count(F.lit(1)).alias("obs"))
+        .persist()
     )
     rt = cells.groupBy("split").agg(F.sum("obs").alias("split_total"))
     ct = cells.groupBy("source").agg(F.sum("obs").alias("source_total"))

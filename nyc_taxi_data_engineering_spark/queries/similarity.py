@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table_parallel as load_table
 from nyc_taxi_data_engineering_spark.functions import portable_round, portable_round_sql
-from nyc_taxi_data_engineering_spark.operators import pin, session_cache
+from nyc_taxi_data_engineering_spark.operators import pin
 from nyc_taxi_data_engineering_spark.operators.kmeans import (
     KMEANS_ITERS,
     KMEANS_K,
@@ -566,7 +566,7 @@ def q_semantic_dedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sides of the pairwise join) — cache it once instead of
     # re-deriving norms from the parquet scan per branch; at cluster
     # scale swap for persist(DISK_ONLY), same as the shingle-set cache
-    corpus = session_cache(_planted_corpus(spark, sf_dir))
+    corpus = _planted_corpus(spark, sf_dir).persist()
     cent = corpus.filter(
         F.col("vec_id").between(N_QUERIES, N_QUERIES + k - 1)
     ).select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"), F.col("nrm").alias("cnrm"))
@@ -924,11 +924,9 @@ def q_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested SQL CTEs, so assignment ties, float fold order, and the
     exact centroid doubles are all under the hash gate.
     Output: (cluster_id, dim, centroid, n_members) — k·64 rows."""
-    emb = session_cache(
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    ).persist()
     assign, cent_long = lloyd_kmeans(emb)
     counts = assign.groupBy("c_id").agg(F.count(F.lit(1)).alias("n_members"))
     return cent_long.join(counts, "c_id").select(
@@ -1389,11 +1387,9 @@ def q_kmeans_silhouette_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
     SAME two Lloyd rounds + closing assignment as kmeans_embeddings.
     (A singleton cluster scores ~1 here, not full-silhouette's 0 —
     its vector IS its centroid; documented variant semantics.)"""
-    emb = session_cache(
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    ).persist()
     assign, cent_long = lloyd_kmeans(emb)
     cent = (
         cent_long.groupBy("c_id")

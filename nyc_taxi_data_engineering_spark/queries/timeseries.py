@@ -14,7 +14,7 @@ from nyc_taxi_data_engineering_spark.functions import (
     stable_sum,
     stable_sum_sql,
 )
-from nyc_taxi_data_engineering_spark.operators import pin, session_cache
+from nyc_taxi_data_engineering_spark.operators import pin
 from nyc_taxi_data_engineering_spark.operators.timeseries import forward_fill, gap_fill
 from nyc_taxi_data_engineering_spark.queries.registry import query
 
@@ -665,13 +665,11 @@ def q_revenue_seasonal_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep's one real finding). Bound: |dow_avg| < 2^53/1e6 ≈ 9e9,
     holds through ~sf50."""
     orders = load_table(spark, sf_dir, "orders")
-    daily = session_cache(
-        orders.groupBy(F.col("o_orderdate").alias("d")).agg(
-            F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
-            .cast("decimal(14,2)")
-            .alias("x")
-        )
-    )
+    daily = orders.groupBy(F.col("o_orderdate").alias("d")).agg(
+        F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
+        .cast("decimal(14,2)")
+        .alias("x")
+    ).persist()
     glob = daily.agg(F.count("x").alias("n"), F.sum("x").alias("s"))
     dow = daily.groupBy(F.weekday("d").alias("dow")).agg(
         F.count(F.lit(1)).alias("n_days"), F.sum("x").alias("sd")
@@ -851,7 +849,7 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     trend statistics for daily order revenue. One row."""
 
     orders = load_table(spark, sf_dir, "orders")
-    daily = session_cache(
+    daily = (
         orders.groupBy(F.col("o_orderdate").alias("d"))
         .agg(
             F.sum(F.col("o_totalprice").cast("decimal(14,2)"))
@@ -860,6 +858,7 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("x")
         )
         .select("x", F.datediff(F.col("d"), F.lit("1970-01-01")).alias("dd"))
+        .persist()
     )
     a = daily.select(F.col("x").alias("xa"), F.col("dd").alias("dda"))
     b = daily.select(F.col("x").alias("xb"), F.col("dd").alias("ddb"))
@@ -870,14 +869,12 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank), so lazily the non-equi day-pair join — the registry's only
     # CartesianProduct-class plan — re-executed once per consumer.
     # One InMemoryRelation now pays for all of them.
-    pairs = session_cache(
-        a.join(b, F.col("dda") < F.col("ddb")).select(
-            ((F.col("xb") - F.col("xa")) / (F.col("ddb") - F.col("dda")).cast("double")).alias(
-                "slope"
-            ),
-            F.signum(F.col("xb") - F.col("xa")).cast("bigint").alias("sgn"),
-        )
-    )
+    pairs = a.join(b, F.col("dda") < F.col("ddb")).select(
+        ((F.col("xb") - F.col("xa")) / (F.col("ddb") - F.col("dda")).cast("double")).alias(
+            "slope"
+        ),
+        F.signum(F.col("xb") - F.col("xa")).cast("bigint").alias("sgn"),
+    ).persist()
     np_df = pairs.agg(F.count(F.lit(1)).alias("n_pairs"), F.sum("sgn").alias("s_stat"))
     # median slope by distributed rank (operators/distrank): the pair
     # grain is days² — no single-partition sort. Ties in slope make the

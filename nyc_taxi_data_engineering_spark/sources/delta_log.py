@@ -1689,9 +1689,7 @@ def delete_delta(spark: SparkSession, table_path: str, predicate: str) -> int:
     reader's ``_metadata`` hidden columns — only MATCHING positions
     ever reach the driver (bounded by the delete's selectivity, the
     same bound the commit itself must hold since the DV is in the
-    action). Partitioned tables are not supported by this engine's DV
-    path (add-file paths must be flat); prune-by-partition + rewrite
-    covers that case.
+    action).
 
     Interplay proven in tests: time-travel to a pre-delete version
     sees the rows again (the OLD add has no DV); RESTORE flips DVs

@@ -34,7 +34,7 @@ import duckdb
 import pytest
 
 from nyc_taxi_data_engineering_spark.catalog import TABLES, table_path
-from nyc_taxi_data_engineering_spark.queries import registry
+from nyc_taxi_data_engineering_spark.queries import registry, run
 from tools.adversarial_tier import (
     CUTS,
     EMPTY_CUTS,
@@ -117,7 +117,7 @@ def weird_duck(weird_dir):
 
 def _check(name: str, spark, sf_dir: str, duck) -> None:
     spec = _REG[name]
-    spark_pdf = spec.fn(spark, sf_dir).toPandas()
+    spark_pdf, _ = run(spark, name, sf_dir, lambda df: df.toPandas())
     if spec.oracle is None:
         assert len(spark_pdf) >= 0  # rows-only: it ran without erroring
         return

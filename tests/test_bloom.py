@@ -4,8 +4,6 @@ probe plan shape."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from nyc_taxi_data_engineering_spark.operators.bloom import (
     BLOOM_BITS,
     BLOOM_HASHES,

@@ -1,48 +1,56 @@
-"""Session-cache lifecycle: operators.session_cache is the engine's only
-persist mechanism — every operator and query that keeps a reusable
-intermediate registers it there, so callers release all executor storage
-at query boundaries with release_session_caches() (bench.py and perfbench
-drain it between operations; test_oracle_parity checks that the drain
-leaves the CacheManager empty after every registered query)."""
+"""Persist lifecycle: operators.release_session_caches frees every
+cached plan and every pin() checkpoint in the SparkContext. queries.run
+calls it after each registered query (test_oracle_parity checks that
+nothing is left), so operators persist with a plain ``.persist()`` and
+no registry tracks them."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_engineering_spark.operators import (
-    _SESSION_CACHES,
-    release_session_caches,
-    session_cache,
-)
+from nyc_taxi_data_engineering_spark.operators import pin, release_session_caches
 
 
-def test_session_cache_registers_and_releases(spark):
-    release_session_caches()  # drain whatever earlier tests left
-    df = session_cache(spark.range(100).select(F.col("id")))
+def _held(spark) -> tuple[bool, int]:
+    """(CacheManager empty, persistent RDDs in the SparkContext)."""
+    empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    return empty, spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_released_persist_recomputes(spark):
+    df = spark.range(100).select(F.col("id")).persist()
     assert df.count() == 100
     assert df.storageLevel.useMemory  # persisted
-    assert len(_SESSION_CACHES) == 1
-    n = release_session_caches()
-    assert n == 1
-    assert not _SESSION_CACHES
+    assert release_session_caches() >= 1
+    assert _held(spark) == (True, 0)
     assert not df.storageLevel.useMemory  # released
     # released frames recompute from lineage — values unaffected
     assert df.count() == 100
 
 
-def test_release_is_idempotent_and_lifo(spark):
+def test_released_pin_is_gone(spark):
+    pinned = pin(spark.range(10))
+    assert pinned.count() == 10
     release_session_caches()
-    a = session_cache(spark.range(10))
-    b = session_cache(spark.range(20))
+    assert _held(spark) == (True, 0)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        pinned.collect()
+
+
+def test_release_is_idempotent(spark):
+    a = spark.range(10).persist()
+    b = pin(spark.range(20))
     assert a.count() == 10 and b.count() == 20
-    assert release_session_caches() == 2
+    assert release_session_caches() >= 2
     assert release_session_caches() == 0
+    assert _held(spark) == (True, 0)
 
 
-def test_operators_register_their_persists(spark):
-    """Operator persists (here ALS ratings, the CC edge list and the
-    simhash proxy) flow through the registry so a session can release
-    them instead of leaking them for the session's life."""
+def test_operator_persists_are_freed(spark):
+    """Operator persists and pins (here ALS ratings, the CC edge list and
+    its pinned rounds, and the simhash proxy) are freed by the release
+    instead of leaking for the session's life."""
     from nyc_taxi_data_engineering_spark.operators.als import prepare_ratings
     from nyc_taxi_data_engineering_spark.operators.dedup import (
         connected_components,
@@ -63,29 +71,27 @@ def test_operators_register_their_persists(spark):
     )
     pairs = simhash_neardup_pairs(sim)
     assert pairs.count() == 1
-    assert len(_SESSION_CACHES) >= 3
-    assert release_session_caches() >= 3
-    assert not _SESSION_CACHES
+    empty, held = _held(spark)
+    assert not empty and held >= 3
+    assert release_session_caches() == held
+    assert _held(spark) == (True, 0)
 
 
 def test_no_persist_outside_the_registry():
-    """session_cache is the only persist and pin() the only eager lineage
-    cut: no engine module may call .cache(), .persist( or
-    .localCheckpoint( itself, or its storage would escape
-    release_session_caches()."""
+    """pin() is the engine's one eager lineage cut: no other engine module
+    calls .localCheckpoint( itself. (Persists need no such rule: the
+    context-wide release frees them wherever they are made.)"""
     import pathlib
-    import re
 
     import nyc_taxi_data_engineering_spark as pkg
 
     root = pathlib.Path(pkg.__file__).parent
     owner = root / "operators" / "__init__.py"
-    call = re.compile(r"\.(cache\(\)|persist\(|localCheckpoint\()")
     hits = [
         f"{p.relative_to(root)}:{i}"
         for p in sorted(root.rglob("*.py"))
         if p != owner
         for i, line in enumerate(p.read_text().splitlines(), 1)
-        if call.search(line)
+        if ".localCheckpoint(" in line
     ]
     assert not hits, hits

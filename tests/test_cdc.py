@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from nyc_taxi_data_engineering_spark.operators.cdc import apply_cdc, latest_changes
 
 

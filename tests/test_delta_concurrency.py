@@ -24,7 +24,6 @@ Certifies the protocol behaviors the per-query tiers cannot reach:
 from __future__ import annotations
 
 import glob
-import json
 import os
 import threading
 from concurrent.futures import ThreadPoolExecutor

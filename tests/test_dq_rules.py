@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from nyc_taxi_data_engineering_spark.operators.integrity import ri_gate
 from nyc_taxi_data_engineering_spark.plans.dq_rules import evaluate_rules, load_rules
 from nyc_taxi_data_engineering_spark.plans.governance import governance_gate

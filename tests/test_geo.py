@@ -42,7 +42,7 @@ def test_points_inside_pinned_box(spark, sf_dir):
 def test_radius_pairs_match_brute_force(spark, sf_dir):
     """Losslessness: cell-join pairs == brute crossJoin pairs (same ids,
     same bit-identical distances) on the full sf0.01 customer set."""
-    pts = _points(spark, sf_dir).cache()
+    pts = _points(spark, sf_dir)
     fast = radius_pairs(pts, "c_custkey", 1.0, 0.01, 0.012)
     b = pts.select(
         F.col("c_custkey").alias("id_b"),
@@ -59,7 +59,6 @@ def test_radius_pairs_match_brute_force(spark, sf_dir):
     assert fast.count() == brute.count()
     assert fast.exceptAll(brute).count() == 0
     assert brute.exceptAll(fast).count() == 0
-    pts.unpersist()
 
 
 def test_radius_pairs_rejects_undersized_cells(spark, sf_dir):

@@ -1,6 +1,7 @@
 """operators.iterate, the one fixed-point driver, on small synthetic
-frames: which rounds it pins, counted as SQL executions by the plan
-record (tools/plan_audit.py), and when a convergence loop stops."""
+frames: which rounds it pins, counted as the SQL executions a call
+starts (queries.runner.started_executions), and when a convergence loop
+stops."""
 
 from __future__ import annotations
 
@@ -8,11 +9,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.operators import iterate
-from tools.plan_audit import plan_record
+from nyc_taxi_data_engineering_spark.queries.runner import started_executions
 
 
 def _executions(spark, run) -> int:
-    return plan_record(spark, run, None)[0]["executions"]
+    return len(started_executions(spark, run)[1])
 
 
 def _plus_one(df, _):

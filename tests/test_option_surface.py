@@ -1,5 +1,7 @@
 """Source tests: an operator takes only the options its callers set,
-and every package definition has a caller outside the tests.
+every package definition has a caller outside the tests, no module
+imports a name it does not use, and registered queries are released
+only by the query runner.
 
 A parameter with a default that every non-test caller leaves at one
 value (never passed, or always passed the same expression) is a
@@ -13,7 +15,13 @@ package API, and deployment settings.
 A function or class that only tests reach is code no query, pipeline
 or tool runs: it is tested but never gated against the oracle, and it
 is a second path beside whatever the queries use. It belongs in the
-test that needs it, or nowhere."""
+test that needs it, or nowhere.
+
+An unused import is dead code no linter on this project reports, so
+this file is the check. A harness that frees caches itself
+(``release_session_caches``, ``clearCache``, ``unpersist``) is a second
+cache lifecycle beside ``queries.run``, which releases after every
+query."""
 
 from __future__ import annotations
 
@@ -206,3 +214,59 @@ def test_every_definition_is_reached_by_non_test_code():
     stale = sorted(set(UNREFERENCED) - set(dead))
     assert not stale, f"allowances no longer needed: {stale}"
     assert all(reason.strip() for reason in UNREFERENCED.values())
+
+
+def _scanned(*roots: pathlib.Path) -> list[pathlib.Path]:
+    return [q for r in roots for q in (r.rglob("*.py") if r.is_dir() else [r])]
+
+
+def unused_imports() -> list[str]:
+    """``path:line name`` for every imported name its module never reads
+    (names listed in ``__all__`` are read), over the package, ``tools/``,
+    ``tests/``, ``bench.py`` and ``__spark_entry__.py``."""
+    out = []
+    for p in _scanned(PKG, ROOT / "tools", ROOT / "tests", ROOT / "bench.py", ROOT / "__spark_entry__.py"):
+        tree = ast.parse(p.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Assign) and "__all__" in _mentions(n):
+                used |= {c.value for c in ast.walk(n.value) if isinstance(c, ast.Constant)}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import) or (isinstance(n, ast.ImportFrom) and n.module != "__future__"):
+                for a in n.names:
+                    name = a.asname or a.name.split(".")[0]
+                    if name != "*" and name not in used:
+                        out.append(f"{p.relative_to(ROOT)}:{n.lineno} {name}")
+    return out
+
+
+def test_no_unused_import():
+    unused = unused_imports()
+    assert not unused, f"imported names never used — delete the import: {unused}"
+
+
+# the cache lifecycle's own unit tests call the release directly
+RUNNER_EXEMPT = {ROOT / "tests" / "test_cache_registry.py"}
+RELEASE_CALLS = {"release_session_caches", "clearCache", "unpersist"}
+
+
+def release_calls_outside_the_runner() -> list[str]:
+    """``path:line call`` for every cache release that ``tools/``,
+    ``bench.py`` or ``tests/`` make themselves instead of through
+    ``queries.run``."""
+    out = []
+    for p in _scanned(ROOT / "tools", ROOT / "bench.py", ROOT / "tests"):
+        if p in RUNNER_EXEMPT:
+            continue
+        for n in ast.walk(ast.parse(p.read_text())):
+            if isinstance(n, ast.Call):
+                f = n.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name in RELEASE_CALLS:
+                    out.append(f"{p.relative_to(ROOT)}:{n.lineno} {name}")
+    return out
+
+
+def test_queries_are_released_only_by_the_runner():
+    calls = release_calls_outside_the_runner()
+    assert not calls, f"run the query through queries.run, which releases it: {calls}"

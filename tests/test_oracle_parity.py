@@ -8,8 +8,7 @@ import os
 
 import pytest
 
-from nyc_taxi_data_engineering_spark.operators import release_session_caches
-from nyc_taxi_data_engineering_spark.queries import registry
+from nyc_taxi_data_engineering_spark.queries import registry, run
 from tools.oracle_check import compare
 from tools.plan_audit import drift, load_golden, plan_record
 
@@ -33,15 +32,13 @@ def test_rotation_window_is_explicit():
 @pytest.mark.parametrize("name", sorted(_REG))
 def test_oracle_parity(name, spark, sf_dir, duck):
     spec = _REG[name]
-    record, spark_pdf = plan_record(spark, lambda: spec.fn(spark, sf_dir).toPandas(), spec.oracle)
-    # one persist lifecycle: releasing the session registry at the query
-    # boundary must leave no cached plan behind
-    release_session_caches()
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    leaked = not cache_manager.isEmpty()
-    if leaked:
-        spark.catalog.clearCache()  # keep the leak attributed to this query
-    assert not leaked, f"{name}: cached data left after release_session_caches()"
+    spark_pdf, ran = run(spark, name, sf_dir, lambda df: df.toPandas())
+    record = plan_record(spark, ran["executions"], spec.oracle)
+    # one persist lifecycle: the runner's release leaves no cached plan
+    # and no persistent RDD, pins included
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), f"{name}: cached plan left"
+    held = spark.sparkContext._jsc.getPersistentRDDs().size()
+    assert held == 0, f"{name}: {held} persistent RDDs left after the runner's release"
     # execution and round counts depend on the data: compare at the golden's tier only
     if os.path.basename(os.path.normpath(sf_dir)) == _GOLDEN_TIER:
         msgs = drift(name, record, _GOLDEN)

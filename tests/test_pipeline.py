@@ -13,7 +13,6 @@ from nyc_taxi_data_engineering_spark.plans.governance import governance_gate
 from nyc_taxi_data_engineering_spark.plans.lineage import LineageHop, lineage_table
 from nyc_taxi_data_engineering_spark.plans.orchestrator import (
     Pipeline,
-    PipelineHalt,
     StageOutput,
 )
 from nyc_taxi_data_engineering_spark.plans.pipeline import PipelineConfig, run_pipeline

@@ -8,11 +8,13 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.operators import pin
+from nyc_taxi_data_engineering_spark.queries.runner import started_executions
 from tools.plan_audit import drift, plan_record
 
 
 def _record(spark, build, oracle=None):
-    return plan_record(spark, lambda: build().toPandas(), oracle)[0]
+    _, executions = started_executions(spark, lambda: build().toPandas())
+    return plan_record(spark, executions, oracle)
 
 
 def test_round_inside_a_pin_is_counted(spark):

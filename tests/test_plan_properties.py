@@ -8,17 +8,18 @@ from __future__ import annotations
 
 import pytest
 
-from nyc_taxi_data_engineering_spark.queries.registry import registry
+from nyc_taxi_data_engineering_spark.queries import run
 
 
 def _plan(spark, sf_dir, name: str) -> str:
     # Plan pins must be order-independent: a cached sub-plan left behind
-    # by an earlier test (the parity suite runs every query in the same
-    # session) would substitute InMemoryRelation for a FileScan and
-    # flip scan-count assertions. Start from a clean cache manager.
-    spark.catalog.clearCache()
-    df = registry()[name].fn(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+    # would substitute InMemoryRelation for a FileScan and flip
+    # scan-count assertions. The runner releases every cache after each
+    # query, here and in the parity suite that shares this session.
+    def executed_plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    return run(spark, name, sf_dir, executed_plan)[0]
 
 
 def test_flagship_pushdown_and_broadcast(spark, sf_dir):

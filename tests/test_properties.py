@@ -13,7 +13,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.functions import text as T
-from nyc_taxi_data_engineering_spark.operators import scd2
+from nyc_taxi_data_engineering_spark.operators import iterate, scd2
 
 SETTINGS = dict(
     max_examples=12,
@@ -39,15 +39,14 @@ def test_scd2_invariants_hold_for_any_batch_sequence(spark, batches):
     """After any sequence of merges: exactly one current row per key,
     version numbers contiguous from 1, and exactly the keys ever seen
     are present."""
-    target = None
-    for i, batch in enumerate(batches):
-        df = spark.createDataFrame(batch, "k int, val string")
-        if target is None:
-            target = scd2.scd2_init(df, key="k", tracked=["val"], effective_ts=f"2024-01-0{i + 1}")
-        else:
-            target = scd2.scd2_apply(
-                target, df, key="k", tracked=["val"], effective_ts=f"2024-01-0{i + 1}"
-            )
+    frames = [spark.createDataFrame(batch, "k int, val string") for batch in batches]
+    target = iterate(
+        scd2.scd2_init(frames[0], key="k", tracked=["val"], effective_ts="2024-01-01"),
+        lambda t, i: scd2.scd2_apply(
+            t, frames[i + 1], key="k", tracked=["val"], effective_ts=f"2024-01-0{i + 2}"
+        ),
+        len(frames) - 1,
+    )
     rows = target.collect()
     by_key: dict[int, list] = {}
     for r in rows:

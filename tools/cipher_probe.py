@@ -27,14 +27,14 @@ import json
 import os
 import random
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from nyc_taxi_data_engineering_spark.queries import all_queries  # noqa: E402
+from nyc_taxi_data_engineering_spark.queries import run  # noqa: E402
+from nyc_taxi_data_engineering_spark.queries.runner import noop_write  # noqa: E402
 from nyc_taxi_data_engineering_spark.session import get_spark  # noqa: E402
 
 ALPHA = "".join(chr(c) for c in range(0x20, 0x7F))
@@ -70,23 +70,21 @@ def main() -> None:
     t10 = os.path.join(REPO, ".scale_data", "cipher_sf10")
     build(spark, 10, t1)
     build(spark, 100, t10)
-    reg = all_queries()
 
-    def run(name: str, sf_dir: str) -> float:
-        t0 = time.perf_counter()
-        reg[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 3)
+    def wall(name: str, sf_dir: str) -> float:
+        _, record = run(spark, name, sf_dir, noop_write)
+        return round(record["build_s"] + record["exec_s"], 3)
 
     out = {}
     for name in QUERIES:
-        run(name, t1)  # warm the Python workers + plans
-        s1, s10 = run(name, t1), run(name, t10)
+        wall(name, t1)  # warm the Python workers + plans
+        s1, s10 = wall(name, t1), wall(name, t10)
         out[name] = {
             "sf1": s1,
             "sf10": s10,
             "slope": round(s10 / s1, 2),
-            "rows_sf1": reg[name](spark, t1).count(),
-            "rows_sf10": reg[name](spark, t10).count(),
+            "rows_sf1": run(spark, name, t1, lambda df: df.count())[0],
+            "rows_sf10": run(spark, name, t10, lambda df: df.count())[0],
         }
         print(name, out[name], file=sys.stderr)
     print(json.dumps({"metric": "cipher_tier_sf10", "queries": out}))

@@ -13,7 +13,6 @@ Usage: python tools/oracle_check.py [--tolerant] [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -126,8 +125,7 @@ def main() -> int:
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    from nyc_taxi_data_engineering_spark.operators import release_session_caches
-    from nyc_taxi_data_engineering_spark.queries import registry
+    from nyc_taxi_data_engineering_spark.queries import registry, run
     from nyc_taxi_data_engineering_spark.session import get_spark
 
     reg = registry()
@@ -143,13 +141,11 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            spark_pdf = spec.fn(spark, sf_dir).toPandas()
+            spark_pdf, _ = run(spark, name, sf_dir, lambda df: df.toPandas())
         except Exception as e:  # noqa: BLE001
             failed.append(name)
             print(f"FAIL {name}: spark error: {e}")
             continue
-        finally:
-            release_session_caches()  # query boundary: free its caches
         if spec.oracle is None:
             print(f"SKIP {name}: no oracle (rows-only) — spark rows={len(spark_pdf)}")
             continue

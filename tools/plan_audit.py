@@ -1,9 +1,9 @@
 """Per-query plan record: the engine's one audit.
 
-``plan_record(spark, run, oracle)`` runs ``run()`` (a query's build and
-its terminal action) and reads the physical plan of every SQL execution
-that started meanwhile, each eager ``pin()`` and ``count()`` included,
-from the SQL status store. The record counts:
+``plan_record(spark, executions, oracle)`` reads from the SQL status
+store the physical plan of every SQL execution a query started, each
+eager ``pin()`` and ``count()`` included, as ``queries.run`` records
+them. The record counts:
 
   executions     SQL executions the query started;
   native_round   native ``round(`` expressions (a column merely *named*
@@ -140,32 +140,20 @@ def _oracle_rounds(sql: str | None) -> int:
     return walk(tree["statements"])
 
 
-def _last_execution_id(store) -> int:
-    n = store.executionsCount()
-    return store.executionsList(n - 1, 1).head().executionId() if n else -1
-
-
-def plan_record(spark, run, oracle: str | None) -> tuple[dict[str, int], object]:
-    """Run ``run()`` and return ``(record, its result)``. Executions are
-    diffed by ID, never by list size: the store keeps only the last
-    ``spark.sql.ui.retainedExecutions``."""
-    bus = spark.sparkContext._jsc.sc().listenerBus()
+def plan_record(spark, executions, oracle: str | None) -> dict[str, int]:
+    """The record of the SQL executions ``executions`` (IDs, as
+    ``queries.run`` records them) and of the query's DuckDB ``oracle``."""
     store = spark._jsparkSession.sharedState().statusStore()
-    bus.waitUntilEmpty()
-    first = _last_execution_id(store) + 1
-    result = run()
-    bus.waitUntilEmpty()
-    last = _last_execution_id(store)
     record = dict.fromkeys(FIELDS, 0)
-    record["executions"] = last - first + 1
-    for eid in range(first, last + 1):
+    record["executions"] = len(executions)
+    for eid in executions:
         ui = store.execution(eid)
         if ui.isEmpty():
             raise RuntimeError(f"SQL execution {eid} left the status store before it was read")
         for k, v in _count_plan(ui.get().physicalPlanDescription()).items():
             record[k] += v
     record["oracle_round"] = _oracle_rounds(oracle)
-    return record, result
+    return record
 
 
 def load_golden() -> tuple[str, dict[str, dict[str, int]]]:
@@ -204,8 +192,7 @@ def main() -> None:
     ap.add_argument("names", nargs="*", help="queries to sweep, in this order (default: all)")
     args = ap.parse_args()
 
-    from nyc_taxi_data_engineering_spark.operators import release_session_caches
-    from nyc_taxi_data_engineering_spark.queries import registry
+    from nyc_taxi_data_engineering_spark.queries import registry, run
     from tests.conftest import TEST_SF_DIR, build_session
 
     reg = registry()
@@ -217,10 +204,8 @@ def main() -> None:
             ap.error(f"the golden is at {golden_tier}; re-pin every query at {tier}")
     spark = build_session(tempfile.mkdtemp(prefix="plan_audit_"))
     for name in args.names or list(reg):
-        spec = reg[name]
-        golden[name], _ = plan_record(spark, lambda: spec.fn(spark, TEST_SF_DIR).toPandas(), spec.oracle)
-        release_session_caches()
-        spark.catalog.clearCache()
+        _, ran = run(spark, name, TEST_SF_DIR, lambda df: df.toPandas())
+        golden[name] = plan_record(spark, ran["executions"], reg[name].oracle)
         print(name, json.dumps(golden[name]), flush=True)
     write_golden(tier, golden)
     print(f"# {len(golden)} records at {tier} -> {os.path.relpath(GOLDEN_PATH, REPO)}")

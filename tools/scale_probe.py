@@ -52,7 +52,6 @@ import os
 import shutil
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -60,7 +59,8 @@ sys.path.insert(0, REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 from nyc_taxi_data_engineering_spark import catalog  # noqa: E402
-from nyc_taxi_data_engineering_spark.queries import all_queries, bench_queries  # noqa: E402
+from nyc_taxi_data_engineering_spark.queries import bench_queries, run  # noqa: E402
+from nyc_taxi_data_engineering_spark.queries.runner import noop_write  # noqa: E402
 from nyc_taxi_data_engineering_spark.session import get_spark  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
@@ -160,28 +160,24 @@ def build(
         print(f"built {table} ({out_dir})", file=sys.stderr)
 
 
-def _run(fn, spark, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
+def _run(spark, name: str, sf_dir: str) -> float:
+    _, record = run(spark, name, sf_dir, noop_write)
+    return record["build_s"] + record["exec_s"]
 
 
-def _probe(qs, spark, small_dir, big_dir, reps, small_label, big_label):
-    warm = qs.get("daily_vendor_revenue") or next(iter(qs.values()))
-    _run(warm, spark, small_dir)
-    _run(warm, spark, big_dir)
+def _probe(names, spark, small_dir, big_dir, reps, small_label, big_label):
+    """Median walls per query on both tiers. Every rep starts cold, like
+    bench.py's: the runner frees the previous rep's pins and caches, so
+    pin()-heavy queries (graph/community family) leave no block-manager
+    pressure to distort whoever runs next (wave-6 STL read 11.4 s
+    in-probe vs 1.1 s in a clean session before queries were released)."""
+    warm = "daily_vendor_revenue" if "daily_vendor_revenue" in names else names[0]
+    _run(spark, warm, small_dir)
+    _run(spark, warm, big_dir)
     small, big = {}, {}
-    for name in sorted(qs):
-        # Drop the PREVIOUS query's pinned/cached state before timing the
-        # next one: pin()-heavy queries (graph/community family) leave
-        # cached tables in the block manager, and the resulting memory
-        # pressure measurably distorts small later queries (wave-6 STL
-        # read 11.4 s in-probe vs 1.1 s in a clean session). Within one
-        # query's reps the cache stays — a query's own pins are part of
-        # its plan, not leakage.
-        spark.catalog.clearCache()
-        small[name] = round(statistics.median(_run(qs[name], spark, small_dir) for _ in range(reps)), 3)
-        big[name] = round(statistics.median(_run(qs[name], spark, big_dir) for _ in range(reps)), 3)
+    for name in sorted(names):
+        small[name] = round(statistics.median(_run(spark, name, small_dir) for _ in range(reps)), 3)
+        big[name] = round(statistics.median(_run(spark, name, big_dir) for _ in range(reps)), 3)
         print(f"{name}: {small_label}={small[name]}s {big_label}={big[name]}s", file=sys.stderr)
     return small, big
 
@@ -270,11 +266,9 @@ def main() -> None:
         out_big = os.path.join(REPO, ".scale_data", big_label)
         names = [n for n in os.environ.get("SPARK_GRAFT_SCALE_QUERIES", "").split(",") if n]
         names = names or SF100_QUERIES + [e for e in extra if e not in SF100_QUERIES]
-        reg = all_queries()
-        qs = {n: reg[n] for n in names}
         build(spark, 100, OUT10, tables=("documents",), file_scale=4)
         build(spark, big_reps, out_big, tables=("documents",), file_scale=max(1, big_reps // 64))
-        small, big = _probe(qs, spark, OUT10, out_big, reps, "sf10", big_label)
+        small, big = _probe(names, spark, OUT10, out_big, reps, "sf10", big_label)
         data_factor = big_reps / 100.0  # x data vs the sf10 tier
         result = {
             "metric": f"{big_label}_bench_seconds",
@@ -297,11 +291,9 @@ def main() -> None:
         reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "1"))
         names = [n for n in os.environ.get("SPARK_GRAFT_SCALE_QUERIES", "").split(",") if n]
         names = names or GRAPH_QUERIES + [e for e in extra if e not in GRAPH_QUERIES]
-        reg = all_queries()
-        qs = {n: reg[n] for n in names}
         build(spark, 10, OUT, tables=GRAPH_TABLES)
         build(spark, 100, OUT10, tables=GRAPH_TABLES, file_scale=4)
-        small, big = _probe(qs, spark, OUT, OUT10, reps, "sf1", "sf10")
+        small, big = _probe(names, spark, OUT, OUT10, reps, "sf1", "sf10")
         from nyc_taxi_data_engineering_spark.queries.graphq import COPURCHASE_DEGREE_CAP
 
         cap_stats = {
@@ -324,11 +316,10 @@ def main() -> None:
     elif tier == "sf10":
         # one decade beyond sf1, documents/embeddings only: slopes are
         # measured sf1 -> sf10 so each tier is a clean 10x step
-        reg = all_queries()
-        qs = {n: reg[n] for n in SF10_QUERIES + [e for e in extra if e not in SF10_QUERIES]}
+        names = SF10_QUERIES + [e for e in extra if e not in SF10_QUERIES]
         build(spark, 10, OUT, tables=SF10_TABLES)
         build(spark, 100, OUT10, tables=SF10_TABLES, file_scale=4)
-        small, big = _probe(qs, spark, OUT, OUT10, reps, "sf1", "sf10")
+        small, big = _probe(names, spark, OUT, OUT10, reps, "sf1", "sf10")
         result = {
             "metric": "sf10_bench_seconds",
             "value": round(sum(big.values()), 3),
@@ -344,11 +335,9 @@ def main() -> None:
     else:
         replicas = int(os.environ.get("SPARK_GRAFT_SCALE_REPLICAS", "10"))
         build(spark, replicas)
-        qs = bench_queries()
-        if extra:
-            reg = all_queries()
-            qs.update({n: reg[n] for n in extra})
-        small, big = _probe(qs, spark, SRC, OUT, reps, "sf0.1", "sf1")
+        names = list(bench_queries())
+        names += [e for e in extra if e not in names]
+        small, big = _probe(names, spark, SRC, OUT, reps, "sf0.1", "sf1")
         result = {
             "metric": "sf1_bench_seconds",
             "value": round(sum(big.values()), 3),

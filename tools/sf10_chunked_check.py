@@ -57,14 +57,15 @@ def check(spark, con, name: str, spec, sf_dir: str, tmp_root: str) -> list[str]:
         hash_bucket,
         hash_bucket_sql,
     )
+    from nyc_taxi_data_engineering_spark.queries import run
     from tools.oracle_check import compare
 
-    df = spec.fn(spark, sf_dir)
-    key = _key_col(df)
     snap = os.path.join(tmp_root, f"chunked_{name}")
     shutil.rmtree(snap, ignore_errors=True)
-    df.write.mode("overwrite").parquet(snap)  # materialize Spark ONCE
+    # materialize Spark ONCE
+    run(spark, name, sf_dir, lambda df: df.write.mode("overwrite").parquet(snap))
     res = spark.read.parquet(snap)
+    key = _key_col(res)
     n_rows = res.count()
     nchunks = max(1, math.ceil(n_rows / TARGET_CHUNK_ROWS))
 
