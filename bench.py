@@ -75,6 +75,8 @@ BOARD2 = [
     "pagerank_purchase_sinks",
 ]
 
+SKEW_PROBE = ("events_user_stats_salted", "supplier_copurchase_pairs", "key_skew_diagnostics")
+
 
 def host_canary() -> float:
     """Single-core host-speed canary (VERDICT r10 task 3): the
@@ -123,19 +125,23 @@ def host_canary_mc(procs: int = 8) -> float:
     return time.perf_counter() - t0
 
 
-def run_query(spark, name: str, sf_dir: str) -> float:
+def run_query(spark, name: str, sf_dir: str) -> dict:
+    """One rep: the runner's record (build and exec seconds and jobs)."""
     _, record = run(spark, name, sf_dir, noop_write)
+    return record
+
+
+def wall(record: dict) -> float:
     return record["build_s"] + record["exec_s"]
 
 
 def run_query_reps(
-    spark, name: str, sf_dir: str, reps: int, reps_fast: int, force_full: bool = False
-) -> list[float]:
+    spark, name: str, sf_dir: str, reps: int, reps_fast: int, force_full: bool
+) -> list[dict]:
     """The base reps' median decides the budget (the first rep alone
     is codegen-inflated): sub-``FAST_CUTOFF_S`` queries are
     noise-dominated, so they extend to ``reps_fast`` total — as do
-    drift-flagged ``force_full`` queries. Returns every rep's wall
-    seconds.
+    drift-flagged ``force_full`` queries. Returns every rep's record.
 
     Rep isolation (optimization r13, VERDICT r12 "What's wrong" #1):
     every rep starts from a CLEAN cache — ``queries.run`` releases every
@@ -146,10 +152,23 @@ def run_query_reps(
     Medians for persist-touched queries are therefore cold-build walls
     from r13 on (r12's warm-rep medians understated them; the rep
     arrays in BENCH_DETAIL carry both regimes' evidence)."""
-    walls = [run_query(spark, name, sf_dir) for _ in range(reps)]
-    if force_full or statistics.median(walls) < FAST_CUTOFF_S:
-        walls.extend(run_query(spark, name, sf_dir) for _ in range(reps_fast - reps))
-    return walls
+    records = [run_query(spark, name, sf_dir) for _ in range(reps)]
+    if force_full or statistics.median(map(wall, records)) < FAST_CUTOFF_S:
+        records.extend(run_query(spark, name, sf_dir) for _ in range(reps_fast - reps))
+    return records
+
+
+def run_board(spark, names, sf_dir: str, reps: int, reps_fast: int, forced) -> tuple[dict, dict, dict]:
+    """``(median wall, every rep's wall, every rep's [build_jobs,
+    exec_jobs])`` per query, each keyed by query name; the queries in
+    ``forced`` run the full rep count."""
+    medians, walls, jobs = {}, {}, {}
+    for name in names:
+        records = run_query_reps(spark, name, sf_dir, reps, reps_fast, name in forced)
+        medians[name] = round(statistics.median(map(wall, records)), 3)
+        walls[name] = [round(wall(r), 3) for r in records]
+        jobs[name] = [[r["build_jobs"], r["exec_jobs"]] for r in records]
+    return medians, walls, jobs
 
 
 def main() -> None:
@@ -170,14 +189,7 @@ def main() -> None:
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     reps_fast = max(reps, int(os.environ.get("SPARK_GRAFT_BENCH_REPS_FAST", "7")))
-    timings: dict[str, float] = {}
-    detail: dict[str, list[float]] = {}
-    for name in sorted(qs):
-        walls = run_query_reps(
-            spark, name, sf_dir, reps, reps_fast, force_full=name in FORCE_FULL_REPS
-        )
-        timings[name] = round(statistics.median(walls), 3)
-        detail[name] = [round(w, 3) for w in walls]
+    timings, detail, jobs = run_board(spark, sorted(qs), sf_dir, reps, reps_fast, FORCE_FULL_REPS)
 
     total = round(sum(timings.values()), 3)
 
@@ -185,12 +197,7 @@ def main() -> None:
     # after every rep also isolates QUERIES from each other — the
     # pin()-heavy graph / clustering queries' checkpointed state is
     # freed before whoever runs next.
-    board2: dict[str, float] = {}
-    board2_detail: dict[str, list[float]] = {}
-    for name in BOARD2:
-        walls = run_query_reps(spark, name, sf_dir, reps, reps_fast)
-        board2[name] = round(statistics.median(walls), 3)
-        board2_detail[name] = [round(w, 3) for w in walls]
+    board2, board2_detail, board2_jobs = run_board(spark, BOARD2, sf_dir, reps, reps_fast, ())
 
     # Skew probe (VERDICT r11 task 8): the hot-key tier certifies the
     # salting levers' ANSWERS (pytest -m adversarial); this records
@@ -198,18 +205,12 @@ def main() -> None:
     # record. Skipped silently when the local-only .scale_data/skew
     # tier isn't built (it is gitignored; `python
     # tools/adversarial_tier.py --build --skew` creates it).
-    skew_board: dict[str, float] = {}
-    skew_detail: dict[str, list[float]] = {}
     skew_dir = os.path.join(REPO, ".scale_data", "skew")
-    if os.path.isdir(skew_dir):
-        for name in (
-            "events_user_stats_salted",
-            "supplier_copurchase_pairs",
-            "key_skew_diagnostics",
-        ):
-            walls = run_query_reps(spark, name, skew_dir, reps, reps_fast)
-            skew_board[name] = round(statistics.median(walls), 3)
-            skew_detail[name] = [round(w, 3) for w in walls]
+    skew_board, skew_detail, skew_jobs = (
+        run_board(spark, SKEW_PROBE, skew_dir, reps, reps_fast, ())
+        if os.path.isdir(skew_dir)
+        else ({}, {}, {})
+    )
     # The driver captures only the LAST 2000 bytes of stdout and parses
     # the final line as JSON: r9's line (rep arrays + board2 detail)
     # overflowed that window, the head of the line was cut, and
@@ -254,6 +255,11 @@ def main() -> None:
         "reps_detail": detail,
         "board2_reps_detail": board2_detail,
         "skew_reps_detail": skew_detail,
+        # Spark jobs per rep, [build_jobs, exec_jobs] from the runner's
+        # record: the build's share counts the eager pins' jobs.
+        "jobs_detail": jobs,
+        "board2_jobs_detail": board2_jobs,
+        "skew_jobs_detail": skew_jobs,
         # First-rep (cold) wall per query, explicit (VERDICT r12 task 1):
         # with rep isolation every rep is cache-cold, so "cold" here
         # distinguishes the codegen/JIT-cold FIRST rep from the

@@ -14,6 +14,7 @@ import enum
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Driver-generated TPC-H-ish tables (one parquet file/dir each).
 TABLES = (
@@ -54,28 +55,65 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def parquet_row_count(path: str) -> int:
-    """Exact row count from parquet FOOTER metadata only — a
-    driver-side read of a few KB per file, no Spark job, no data
-    pages. The right way to size anything off COUNT(*) (e.g. the
-    SemDeDup √n codebook): at 100 TB a counting scan is a full pass,
-    the footers are already summed. Accepts a single file or a
-    directory of part files."""
+def parquet_footers(path: str):
+    """Footer metadata of a Parquet table, one ``FileMetaData`` per part
+    file in path order: a driver-side read of a few KB per file, no
+    Spark job, no data pages. ``path`` is a single file or a directory
+    of part files. The engine's one way to read a footer."""
     import pyarrow.parquet as pq
 
     if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            for root, _dirs, files in os.walk(path)
-            for f in files
+        files = sorted(
+            os.path.join(root, f)
+            for root, _dirs, names in os.walk(path)
+            for f in names
             if f.endswith(".parquet")
         )
-    return pq.ParquetFile(path).metadata.num_rows
+    else:
+        files = [path]
+    return (pq.read_metadata(f) for f in files)
+
+
+def parquet_row_count(path: str) -> int:
+    """Exact row count from the footers only. The right way to size
+    anything off COUNT(*) (e.g. the SemDeDup √n codebook): at 100 TB a
+    counting scan is a full pass, the footers are already summed."""
+    return sum(footer.num_rows for footer in parquet_footers(path))
+
+
+def parquet_schema(path: str) -> StructType:
+    """The Spark schema of a Parquet table, read from the footer of its
+    first part file: the schema ``spark.read.parquet`` would infer,
+    without the Spark job that infers it. Spark's inference (with
+    ``mergeSchema`` off) also reads one part file and assumes the others
+    agree. Types map as Spark's reader maps them: INT96 to TIMESTAMP,
+    TIMESTAMP_NANOS to LONG (what ``nanosAsLong`` infers), timestamps
+    not adjusted to UTC to TIMESTAMP_NTZ. A column type with no Spark
+    mapping raises, naming the column."""
+    import pyarrow as pa
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    footer = next(parquet_footers(path), None)
+    if footer is None:
+        raise FileNotFoundError(f"no Parquet part file under {path}")
+    int96 = {c.path for c in footer.schema if c.physical_type == "INT96"}
+    fields = []
+    for f in footer.schema.to_arrow_schema():
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            f = f.with_type(pa.timestamp("us", "UTC") if f.name in int96 else pa.int64())
+        try:
+            fields += from_arrow_schema(pa.schema([f]), prefer_timestamp_ntz=True).fields
+        except PySparkTypeError as e:
+            raise TypeError(f"{path}: column {f.name!r} has type {f.type}, which Spark cannot read") from e
+    return StructType(fields)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan (reference S1). Native reader: predicate pushdown,
-    column pruning, and partition discovery come free via Catalyst.
+    """Parquet scan (reference S1) with the schema declared from the
+    footer (``parquet_schema``), so opening a table starts no Spark job.
+    Native reader: predicate pushdown, column pruning, and partition
+    discovery come free via Catalyst.
 
     The ``events`` table's ``ts`` needs normalizing to session-TZ
     TIMESTAMP regardless of how the writer encoded it:
@@ -90,13 +128,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       stored wall-clock value as the same UTC instant the DuckDB
       oracle sees. Normalizing here — once, at the scan — keeps every
       downstream query free of per-site casts."""
+    path = table_path(sf_dir, name)
+    schema = parquet_schema(path)
     if name == "events":
         # engine sessions set this at build time (session.py); only a
         # foreign session (e.g. the driver's) needs it set here, so the
         # loader is a no-op on session state in the common path
         if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = spark.read.schema(schema).parquet(path)
         ts_type = dict(df.dtypes).get("ts")
         from pyspark.sql import functions as F
 
@@ -105,7 +145,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return spark.read.schema(schema).parquet(path)
 
 
 def fan_out(df: DataFrame, spark: SparkSession) -> DataFrame:

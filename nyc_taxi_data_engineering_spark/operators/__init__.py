@@ -92,8 +92,16 @@ def release_session_caches() -> int:
     spark = SparkSession.getActiveSession()
     if spark is None:
         return 0
+    sc = spark.sparkContext._jsc.sc()
     rdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
     for rdd in rdds:
-        rdd.unpersist(True)
+        if rdd.rdd().isLocallyCheckpointed():
+            # a pin. RDD.unpersist would WARN that it "cannot be
+            # recomputed after unpersisting", once per released pin;
+            # freeing its blocks directly leaves its storage level set,
+            # which is harmless: a freed pin cannot be read either way
+            sc.unpersistRDD(rdd.id(), True)
+        else:
+            rdd.unpersist(True)
     spark.catalog.clearCache()
     return len(rdds)

@@ -40,11 +40,19 @@ def started_executions(spark, call):
     return result, range(first, _last_execution_id(store) + 1)
 
 
+def next_job_id(spark) -> int:
+    """The ID the context's next Spark job will get. Job IDs are handed
+    out in order when a job is submitted, whichever thread submits it."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
 def run(spark, name: str, sf_dir: str, action):
     """Build registered query ``name`` over ``sf_dir``, apply ``action``
     to the frame and return ``(its result, record)``. The record holds
     ``build_s`` (the query function, eager pins included), ``exec_s``
-    (the action) and ``executions`` (the SQL execution IDs both started).
+    (the action), ``build_jobs`` and ``exec_jobs`` (how many Spark jobs
+    each submitted) and ``executions`` (the SQL execution IDs both
+    started).
     Every cache and pin in the context is released afterwards, also when
     the build or the action raises, so ``action`` must leave nothing that
     reads the frame later: collect it, count it or write it. Pass a
@@ -53,13 +61,24 @@ def run(spark, name: str, sf_dir: str, action):
     fn = registry()[name].fn
 
     def build_and_act():
+        j0 = next_job_id(spark)
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t1 = time.perf_counter()
-        return action(df), t1 - t0, time.perf_counter() - t1
+        j1 = next_job_id(spark)
+        t2 = time.perf_counter()
+        result = action(df)
+        t3 = time.perf_counter()
+        record = {
+            "build_s": t1 - t0,
+            "exec_s": t3 - t2,
+            "build_jobs": j1 - j0,
+            "exec_jobs": next_job_id(spark) - j1,
+        }
+        return result, record
 
     try:
-        (result, build_s, exec_s), executions = started_executions(spark, build_and_act)
+        (result, record), executions = started_executions(spark, build_and_act)
     finally:
         release_session_caches()
-    return result, {"build_s": build_s, "exec_s": exec_s, "executions": executions}
+    return result, {**record, "executions": executions}

@@ -8,6 +8,15 @@ Scale notes (100 TB design intent, tested on local[N]):
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle and are cluster-location-independent.
 - Arrow enabled for every pandas interchange (Pandas UDFs, toPandas).
+- DataFrame origin capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  every PySpark DataFrame and Column call takes ``inspect.stack()`` and
+  makes extra JVM round trips to record its Python call site, which
+  cost more than half of the JVM calls made while a query is built.
+  PySpark reads the setting once per process, on its first such call,
+  so it is set in the builder. Errors keep their error class and
+  message; they lose only the "== DataFrame ==" fragment naming the
+  Python line that built the failing expression.
 """
 
 from __future__ import annotations
@@ -73,6 +82,7 @@ def get_spark(
         # only for foreign sessions, e.g. the driver's).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.ui.enabled", "false")
     )

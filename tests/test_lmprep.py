@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_engineering_spark.catalog import load_table
 from nyc_taxi_data_engineering_spark.functions import text as T
-from nyc_taxi_data_engineering_spark.queries import all_queries
+from nyc_taxi_data_engineering_spark.queries import run
 from nyc_taxi_data_engineering_spark.queries.lmprep import (
     CHUNK_STRIDE,
     CHUNK_TOKENS,
@@ -41,59 +41,72 @@ def test_chunks_cover_every_token_exactly(spark, sf_dir):
     """Stitching chunk [start, start+n) spans back together must cover
     [1, n_doc_tokens] with no gap: consecutive chunks overlap by
     W - S tokens and the last chunk ends exactly at the doc length."""
-    chunks = all_queries()["doc_chunks_rag"](spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.size(T.tokens(F.col("text"))).alias("n_doc_tokens")
     )
-    per_doc = (
-        chunks.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.max(F.col("start_token") + F.col("n_tokens") - 1).alias("last_covered"),
-            F.min("start_token").alias("first_start"),
-            F.max("n_tokens").alias("max_chunk"),
+
+    def violations(chunks) -> tuple[int, int]:
+        per_doc = (
+            chunks.groupBy("doc_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_chunks"),
+                F.max(F.col("start_token") + F.col("n_tokens") - 1).alias("last_covered"),
+                F.min("start_token").alias("first_start"),
+                F.max("n_tokens").alias("max_chunk"),
+            )
+            .join(docs, "doc_id")
         )
-        .join(docs, "doc_id")
-    )
-    bad = per_doc.filter(
-        (F.col("first_start") != 1)
-        | (F.col("last_covered") != F.col("n_doc_tokens"))
-        | (F.col("max_chunk") > CHUNK_TOKENS)
-    )
-    assert bad.count() == 0
-    # consecutive starts differ by exactly the stride
-    stride_bad = (
-        chunks.select(
-            "doc_id",
-            (F.col("start_token") - F.col("chunk_id") * CHUNK_STRIDE).alias("base"),
+        bad = per_doc.filter(
+            (F.col("first_start") != 1)
+            | (F.col("last_covered") != F.col("n_doc_tokens"))
+            | (F.col("max_chunk") > CHUNK_TOKENS)
         )
-        .filter(F.col("base") != 1)
-        .count()
-    )
+        # consecutive starts differ by exactly the stride
+        stride_bad = (
+            chunks.select(
+                "doc_id",
+                (F.col("start_token") - F.col("chunk_id") * CHUNK_STRIDE).alias("base"),
+            )
+            .filter(F.col("base") != 1)
+            .count()
+        )
+        return bad.count(), stride_bad
+
+    (bad, stride_bad), _ = run(spark, "doc_chunks_rag", sf_dir, violations)
+    assert bad == 0
     assert stride_bad == 0
 
 
 def test_chunk_hash_matches_text(spark, sf_dir):
-    chunks = all_queries()["doc_chunks_rag"](spark, sf_dir)
-    assert chunks.filter(F.md5(F.col("chunk_text")) != F.col("chunk_hash")).count() == 0
+    mismatched, _ = run(
+        spark,
+        "doc_chunks_rag",
+        sf_dir,
+        lambda chunks: chunks.filter(F.md5(F.col("chunk_text")) != F.col("chunk_hash")).count(),
+    )
+    assert mismatched == 0
 
 
 def test_unigram_token_accounting(spark, sf_dir):
     """Per-doc token counts must add back up to the corpus token count,
     and with K below the true vocab size the OOV path must actually
     fire (the constant is sized for that on the synthetic corpus)."""
-    scores = all_queries()["unigram_lm_scores"](spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     corpus_tokens = (
         docs.select(F.explode(T.tokens(F.col("text"))).alias("t"))
         .filter(F.length("t") > 0)
         .count()
     )
-    row = scores.agg(
-        F.sum("n_tokens").alias("total"),
-        F.sum("n_oov").alias("oov"),
-        F.countDistinct("ppl_bucket").alias("buckets"),
-    ).collect()[0]
+    row, _ = run(
+        spark,
+        "unigram_lm_scores",
+        sf_dir,
+        lambda scores: scores.agg(
+            F.sum("n_tokens").alias("total"),
+            F.sum("n_oov").alias("oov"),
+            F.countDistinct("ppl_bucket").alias("buckets"),
+        ).collect()[0],
+    )
     assert row["total"] == corpus_tokens
     vocab = (
         docs.select(F.explode(T.tokens(F.col("text"))).alias("t"))
@@ -109,17 +122,25 @@ def test_unigram_token_accounting(spark, sf_dir):
 
 def test_unigram_scores_positive_and_bounded(spark, sf_dir):
     """-ln p is positive and can't exceed -ln(1/N) for any token."""
-    scores = all_queries()["unigram_lm_scores"](spark, sf_dir)
-    assert scores.filter(F.col("avg_neg_logp") <= 0).count() == 0
+    import math
+
     docs = load_table(spark, sf_dir, "documents")
     n = (
         docs.select(F.explode(T.tokens(F.col("text"))).alias("t"))
         .filter(F.length("t") > 0)
         .count()
     )
-    import math
-
-    assert scores.filter(F.col("avg_neg_logp") > math.log(n)).count() == 0
+    (non_positive, above_bound), _ = run(
+        spark,
+        "unigram_lm_scores",
+        sf_dir,
+        lambda scores: (
+            scores.filter(F.col("avg_neg_logp") <= 0).count(),
+            scores.filter(F.col("avg_neg_logp") > math.log(n)).count(),
+        ),
+    )
+    assert non_positive == 0
+    assert above_bound == 0
 
 
 def test_unigram_viterbi_matches_reference_dp(spark, sf_dir):

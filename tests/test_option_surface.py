@@ -1,7 +1,7 @@
 """Source tests: an operator takes only the options its callers set,
 every package definition has a caller outside the tests, no module
-imports a name it does not use, and registered queries are released
-only by the query runner.
+imports a name it does not use, and registered queries are built and
+released only by the query runner.
 
 A parameter with a default that every non-test caller leaves at one
 value (never passed, or always passed the same expression) is a
@@ -21,7 +21,8 @@ An unused import is dead code no linter on this project reports, so
 this file is the check. A harness that frees caches itself
 (``release_session_caches``, ``clearCache``, ``unpersist``) is a second
 cache lifecycle beside ``queries.run``, which releases after every
-query."""
+query; one that builds a registered query itself leaves that query's
+persists and pins held."""
 
 from __future__ import annotations
 
@@ -250,23 +251,53 @@ RUNNER_EXEMPT = {ROOT / "tests" / "test_cache_registry.py"}
 RELEASE_CALLS = {"release_session_caches", "clearCache", "unpersist"}
 
 
-def release_calls_outside_the_runner() -> list[str]:
-    """``path:line call`` for every cache release that ``tools/``,
-    ``bench.py`` or ``tests/`` make themselves instead of through
-    ``queries.run``."""
+def _calls_outside_the_runner(label) -> list[str]:
+    """``path:line what`` for every call in ``tools/``, ``bench.py`` or
+    ``tests/`` that ``label`` names (it returns None for the others)."""
     out = []
     for p in _scanned(ROOT / "tools", ROOT / "bench.py", ROOT / "tests"):
         if p in RUNNER_EXEMPT:
             continue
         for n in ast.walk(ast.parse(p.read_text())):
-            if isinstance(n, ast.Call):
-                f = n.func
-                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-                if name in RELEASE_CALLS:
-                    out.append(f"{p.relative_to(ROOT)}:{n.lineno} {name}")
+            if isinstance(n, ast.Call) and (what := label(n.func)):
+                out.append(f"{p.relative_to(ROOT)}:{n.lineno} {what}")
     return out
+
+
+def release_calls_outside_the_runner() -> list[str]:
+    """Every cache release that ``tools/``, ``bench.py`` or ``tests/``
+    make themselves instead of through ``queries.run``."""
+
+    def release(f):
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+        return name if name in RELEASE_CALLS else None
+
+    return _calls_outside_the_runner(release)
+
+
+def direct_builds_outside_the_runner() -> list[str]:
+    """Every registered query that ``tools/``, ``bench.py`` or ``tests/``
+    build themselves (``spec.fn(spark, ...)``, ``all_queries()[name](...)``)
+    instead of through ``queries.run``: its persists and pins outlive it
+    until some later runner call releases them."""
+
+    def build(f):
+        if isinstance(f, ast.Attribute) and f.attr == "fn":
+            return ".fn("
+        if isinstance(f, ast.Subscript) and isinstance(f.value, ast.Call):
+            callee = f.value.func
+            if isinstance(callee, ast.Name) and callee.id in ("all_queries", "registry"):
+                return f"{callee.id}()[...]("
+        return None
+
+    return _calls_outside_the_runner(build)
 
 
 def test_queries_are_released_only_by_the_runner():
     calls = release_calls_outside_the_runner()
+    assert not calls, f"run the query through queries.run, which releases it: {calls}"
+
+
+def test_queries_are_built_only_by_the_runner():
+    calls = direct_builds_outside_the_runner()
     assert not calls, f"run the query through queries.run, which releases it: {calls}"

@@ -168,7 +168,7 @@ def test_chunking_matches_python_reference_for_any_text(spark, texts, tmp_path_f
     exact window multiples)."""
     import uuid
 
-    from nyc_taxi_data_engineering_spark.queries import all_queries
+    from nyc_taxi_data_engineering_spark.queries import run
 
     d = tmp_path_factory.mktemp("chunks") / f"{uuid.uuid4().hex}"
     docs = spark.createDataFrame(
@@ -176,7 +176,7 @@ def test_chunking_matches_python_reference_for_any_text(spark, texts, tmp_path_f
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     docs.write.parquet(str(d / "documents.parquet"))
-    out = all_queries()["doc_chunks_rag"](spark, str(d)).collect()
+    out, _ = run(spark, "doc_chunks_rag", str(d), lambda df: df.collect())
     got = {(r["doc_id"], r["chunk_id"], r["start_token"], r["chunk_text"]) for r in out}
     want = {
         (i, cid, start, txt)

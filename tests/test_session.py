@@ -1,5 +1,6 @@
-"""session.driver_memory: the local JVM heap default is measured from the
-host, and the environment still overrides it."""
+"""session.get_spark: the local JVM heap default is measured from the
+host, and the environment still overrides it; DataFrame origin capture
+is off."""
 
 from __future__ import annotations
 
@@ -32,3 +33,16 @@ def test_environment_overrides_the_measured_default(monkeypatch):
     assert driver_memory() == "3g"
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "5g")
     assert driver_memory() == "5g"
+
+
+def test_origin_capture_is_off(spark):
+    """PySpark records no Python call site per DataFrame call, and
+    errors keep their error class."""
+    from pyspark.errors import AnalysisException
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert not is_debugging_enabled()
+    with pytest.raises(AnalysisException) as err:
+        spark.range(1).select("missing").collect()
+    assert err.value.getCondition() == "UNRESOLVED_COLUMN.WITH_SUGGESTION"
+    assert "== DataFrame ==" not in str(err.value)

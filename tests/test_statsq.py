@@ -6,13 +6,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_engineering_spark.queries.registry import registry
-
-_REG = registry()
+from nyc_taxi_data_engineering_spark.queries import run
 
 
 def test_bootstrap_ci_brackets_estimate_and_is_ordered(spark, sf_dir):
-    row = _REG["revenue_bootstrap_ci"].fn(spark, sf_dir).first()
+    row, _ = run(spark, "revenue_bootstrap_ci", sf_dir, lambda df: df.first())
     assert row["ci_lo"] <= row["ci_hi"]
     # half-sample estimates straddle the truth for a sum statistic
     assert row["ci_lo"] <= row["estimate"] * 1.15
@@ -21,10 +19,8 @@ def test_bootstrap_ci_brackets_estimate_and_is_ordered(spark, sf_dir):
 
 
 def test_kaplan_meier_log_survival_monotone_nonincreasing(spark, sf_dir):
-    rows = (
-        _REG["kaplan_meier_customers"].fn(spark, sf_dir)
-        .orderBy("duration_days")
-        .collect()
+    rows, _ = run(
+        spark, "kaplan_meier_customers", sf_dir, lambda df: df.orderBy("duration_days").collect()
     )
     assert rows, "KM curve should be non-empty"
     ls = [r["log_survival"] for r in rows]
@@ -36,7 +32,7 @@ def test_kaplan_meier_log_survival_monotone_nonincreasing(spark, sf_dir):
 
 
 def test_ab_test_moments_match_naive_computation(spark, sf_dir):
-    row = _REG["ab_test_events"].fn(spark, sf_dir).first()
+    row, _ = run(spark, "ab_test_events", sf_dir, lambda df: df.first())
     from nyc_taxi_data_engineering_spark.catalog import load_table
 
     ev = load_table(spark, sf_dir, "events").toPandas()
@@ -52,7 +48,7 @@ def test_ab_test_moments_match_naive_computation(spark, sf_dir):
 
 
 def test_cuped_theta_matches_covariance_ratio(spark, sf_dir):
-    row = _REG["cuped_adjusted_ab"].fn(spark, sf_dir).first()
+    row, _ = run(spark, "cuped_adjusted_ab", sf_dir, lambda df: df.first())
     from nyc_taxi_data_engineering_spark.catalog import load_table
     import pandas as pd
 
@@ -67,7 +63,7 @@ def test_cuped_theta_matches_covariance_ratio(spark, sf_dir):
 
 
 def test_gini_split_best_threshold_separates_labels(spark, sf_dir):
-    rows = _REG["gini_split_search_orders"].fn(spark, sf_dir).collect()
+    rows, _ = run(spark, "gini_split_search_orders", sf_dir, lambda df: df.collect())
     # the parent impurity bounds every weighted split impurity from above
     n_pos = sum(r["pos_left"] + r["pos_right"] for r in rows[:1])
     n_tot = sum(r["n_left"] + r["n_right"] for r in rows[:1])
@@ -77,7 +73,7 @@ def test_gini_split_best_threshold_separates_labels(spark, sf_dir):
 
 
 def test_assoc_rules_metric_ranges(spark, sf_dir):
-    rows = _REG["assoc_rules_suppliers"].fn(spark, sf_dir).collect()
+    rows, _ = run(spark, "assoc_rules_suppliers", sf_dir, lambda df: df.collect())
     assert rows
     for r in rows:
         assert 0.0 < r["support"] <= 1.0
@@ -89,8 +85,9 @@ def test_assoc_rules_metric_ranges(spark, sf_dir):
 def test_nb_confusion_covers_every_test_doc_once(spark, sf_dir):
     from nyc_taxi_data_engineering_spark.catalog import load_table
 
-    cm = _REG["nb_lang_confusion"].fn(spark, sf_dir)
-    n_pred = cm.agg(F.sum("n_docs")).first()[0]
+    n_pred, _ = run(
+        spark, "nb_lang_confusion", sf_dir, lambda cm: cm.agg(F.sum("n_docs")).first()[0]
+    )
     docs = load_table(spark, sf_dir, "documents")
     n_test = docs.filter(F.col("doc_id") % 3 == 0).count()
     assert n_pred == n_test  # argmax assigns exactly one class per doc
@@ -105,7 +102,6 @@ def test_shapley_efficiency_axiom(spark, sf_dir):
     from nyc_taxi_data_engineering_spark.queries.shapleyq import (
         q_shapley_attribution_events,
     )
-    from nyc_taxi_data_engineering_spark.queries.registry import registry
 
     rows = q_shapley_attribution_events(spark, sf_dir).collect()
     assert [r["channel"] for r in rows] == ["click", "error", "signup", "view"]

@@ -259,10 +259,10 @@ def test_holt_winters_state_is_finite_and_seasonal_slots_fill(spark, sf_dir):
     seasonal terms start at 0, so early steps match Holt exactly)."""
     import math
 
-    from nyc_taxi_data_engineering_spark.queries.registry import registry
+    from nyc_taxi_data_engineering_spark.queries import run
 
-    hw = registry()["holt_winters_forecast"].fn(spark, sf_dir).collect()[0]
-    h = registry()["holt_linear_forecast"].fn(spark, sf_dir).collect()[0]
+    hw, _ = run(spark, "holt_winters_forecast", sf_dir, lambda df: df.collect()[0])
+    h, _ = run(spark, "holt_linear_forecast", sf_dir, lambda df: df.collect()[0])
     assert hw["n_days"] == h["n_days"] > 100
     for c in ("final_level", "final_trend", "mae", "forecast_1", "forecast_7"):
         assert math.isfinite(hw[c]), c
